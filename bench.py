@@ -127,7 +127,25 @@ def contention_verdict(
     return None
 
 
+def baseline_timeout_s(environ=os.environ) -> float:
+    """SPARK_GRAFT_BASELINE_TIMEOUT_S: the DuckDB baseline's hard cap in
+    seconds (default 600). Parsed once before any lane runs, so a malformed
+    value stops the bench with a config error instead of being recorded as
+    a failed baseline attempt after the Spark lanes."""
+    raw = environ.get("SPARK_GRAFT_BASELINE_TIMEOUT_S", "600")
+    try:
+        value = float(raw)
+    except ValueError:
+        value = float("nan")
+    if not 0 < value < float("inf"):
+        raise SystemExit(
+            f"SPARK_GRAFT_BASELINE_TIMEOUT_S={raw!r}: expected a positive number of seconds"
+        )
+    return value
+
+
 def main() -> None:
+    baseline_timeout = baseline_timeout_s()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "concurrent")
@@ -742,9 +760,7 @@ def main() -> None:
                         # bigger cap — measurement harness only, the timed
                         # region and query set are untouched (r11, see
                         # OPTIMIZATION_r11.md "sf1 lane").
-                        timeout=float(
-                            os.environ.get("SPARK_GRAFT_BASELINE_TIMEOUT_S", "600")
-                        ),
+                        timeout=baseline_timeout,
                     )
                     duck = json.loads(proc.stdout.strip().splitlines()[-1])
                 except (subprocess.TimeoutExpired, ValueError, IndexError) as te:

@@ -6,7 +6,7 @@ plus an LSM KV store. Here the entire binder/optimizer/executor stack collapses
 into Catalyst; this package provides the *surface*:
 
 - :mod:`templatedb_spark.session`   — tuned SparkSession factory (AQE, Arrow, shuffle sizing)
-- :mod:`templatedb_spark.catalog`   — table registration (parquet/CSV/in-memory), `main` namespace
+- :mod:`templatedb_spark.catalog`   — table registration (parquet/CSV), `main` namespace
 - :mod:`templatedb_spark.engine`    — `Engine.sql()` entry with reference-semantics shims
 - :mod:`templatedb_spark.operators` — relational helpers + LLM-data-pipeline operators
   (dedup, similarity search, text stats, multimodal)

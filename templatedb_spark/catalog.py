@@ -77,9 +77,3 @@ def register_csv_dir(spark: SparkSession, csv_dir: str, header: bool = True) -> 
         out[p.stem] = df
     return out
 
-
-def register_memory_table(spark: SparkSession, name: str, rows: list[tuple], schema) -> DataFrame:
-    """In-memory table (reference: storage/memory.rs InMemoryTable)."""
-    df = spark.createDataFrame(rows, schema)
-    df.createOrReplaceTempView(name)
-    return df

@@ -17,6 +17,12 @@ INSERT time — the reference errors on out-of-range values
 Everything executes as Spark SQL against the session catalog (default
 namespace `main`, mirroring main_entry/db.rs:23-34); the enforcement shim is
 binder-level, exactly where the reference does it (insert.rs range checks).
+
+A table is a temp view over a union: an empty base from CREATE TABLE, then
+one relation per INSERT. CREATE TABLE and INSERT ... VALUES build their rows
+through `sources.memory`, so the view is a union of JVM-side LocalRelations
+(the empty base drops out at optimization) and a SELECT over it starts no
+Python worker. An INSERT ... SELECT appends the query's own plan.
 """
 
 from __future__ import annotations
@@ -26,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from templatedb_spark.sources.memory import empty_df, local_df
 
 # reference LogicalType (types.rs:9-26) → (spark type, logical min, logical max)
 _TYPE_MAP: dict[str, tuple[str, int | None, int | None]] = {
@@ -101,8 +109,7 @@ class Catalog:
             defs.append(ColumnDef(col.lower(), t, spark_t, lo, hi))
         self.tables[name] = defs
         schema = ", ".join(f"{d.name} {d.spark_type}" for d in defs)
-        empty = self.spark.createDataFrame([], schema)
-        empty.createOrReplaceTempView(name)
+        empty_df(self.spark, schema).createOrReplaceTempView(name)
 
     def create_table_as(self, name: str, df: DataFrame) -> None:
         """CTAS (reference: create_table.slt:31-38)."""
@@ -173,7 +180,7 @@ class Catalog:
                 return v
 
             rows = [tuple(coerce(c, v) for c, v in zip(in_cols, row)) for row in rows]
-            src = self.spark.createDataFrame(rows, schema)
+            src = local_df(self.spark, rows, schema)
 
         # reorder + NULL-fill + cast to declared spark types
         exprs = []

@@ -12,7 +12,8 @@ Parity with the reference's v2 table functions (SURVEY.md §2.1):
   LogicalType variant names (types/types.rs:9-26 + AsRefStr Display).
 
 On Spark these are tiny driver-side metadata views (same as the reference, which
-walks its catalog hash maps). When a DDL :class:`~templatedb_spark.ddl.Catalog`
+walks its catalog hash maps), built as JVM-side LocalRelations
+(`sources.memory.local_df`). When a DDL :class:`~templatedb_spark.ddl.Catalog`
 is supplied, its *declared* logical types are reported (so ``tinyint unsigned``
 shows as ``UTinyint``, not the widened storage type); otherwise types derive
 from the Spark schema.
@@ -22,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from templatedb_spark.sources.memory import local_df
 
 # reference type text (ddl._TYPE_MAP keys) → LogicalType variant name
 LOGICAL_TYPE_DISPLAY = {
@@ -95,7 +98,7 @@ def query_tables(spark: SparkSession, catalog=None) -> DataFrame:
             StructField("table_oid", LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def query_columns(spark: SparkSession, table: str | None = None, catalog=None) -> DataFrame:
@@ -114,4 +117,4 @@ def query_columns(spark: SparkSession, table: str | None = None, catalog=None) -
             StructField("column_types", StringType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)

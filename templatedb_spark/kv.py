@@ -46,54 +46,11 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from templatedb_spark.sources.memory import empty_df, local_df
+
 _SCHEMA = "key string, value string, op string, version long"
 _KV_BUCKETS = 16
 _LAYOUTS = ("hash", "range")
-
-
-def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Driver-local rows → DataFrame through the Arrow path.
-
-    `createDataFrame(list)` parallelizes PICKLED python rows: every
-    downstream evaluation spins Python workers to unpickle them (measured
-    r10: ~400 ms per tiny KV batch on local[32] vs ~60 ms via Arrow — the
-    dominant per-trigger cost of the streaming KV chains). Routing the same
-    rows through pandas + Arrow creates a JVM-side relation: no Python
-    workers at eval, guide §4's "eliminate the JVM↔Python boundary" applied
-    to the control-plane writes. Falls back to the classic path when Arrow
-    conversion cannot represent the values (e.g. lone-surrogate keys from
-    the crash fuzz) — same semantics, old speed.
-    """
-    import pandas as pd
-
-    if not rows:
-        return empty_df(spark, schema)
-    names = [f.split()[0] for f in schema.split(",")]
-    try:
-        # session.py pins arrow.pyspark.enabled=true at build; setting it
-        # HERE would silently mutate the caller's shared session conf on
-        # every control-plane write (ADVICE r10). A session that disabled
-        # Arrow converts through the classic pandas path — same semantics,
-        # pre-r10 speed.
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=names, dtype=object), schema
-        )
-    except Exception:
-        df = spark.createDataFrame(rows, schema)
-    # driver-local rows are by definition driver-sized: one task beats the
-    # default defaultParallelism × 1-row slices (32 scheduled tasks each)
-    return df.coalesce(1)
-
-
-def empty_df(spark: SparkSession, schema: str) -> DataFrame:
-    """0-row DataFrame as a JVM LocalRelation. `createDataFrame([], schema)`
-    parallelizes an empty PICKLED rdd across defaultParallelism slices — 32
-    no-op Python-worker tasks per evaluation (measured ~6 s of scheduler
-    wait per empty-KV snapshot scan on local[32])."""
-    cols = [f.strip().split(None, 1) for f in schema.split(",")]
-    return spark.range(0).select(
-        *[F.lit(None).cast(t).alias(n) for n, t in cols]
-    )
 
 
 def _range_intersects(rng, start: str | None, end: str | None) -> bool:

@@ -29,6 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from templatedb_spark.sources.memory import local_df
 from templatedb_spark.streaming.cdc import CDC_KEY_OFFSET
 from templatedb_spark.suite import QuerySpec, register
 
@@ -1189,8 +1190,6 @@ def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
     if not bumps:
         return
     rows = [(f"{reg:02d}", str(m), "put") for reg, m in sorted(bumps.items())]
-    from templatedb_spark.kv import local_df
-
     kv.write_batch_df(
         local_df(spark, rows, "key string, value string, op string"),
         tag=f"{qname}:b{batch_id}",
@@ -1347,8 +1346,6 @@ def _cms_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
         f"{j}:{b:03d}": cur.get(f"{j}:{b:03d}", 0) + cnt
         for (j, b), cnt in sorted(partial.items())
     }
-    from templatedb_spark.kv import local_df
-
     kv.write_batch_df(
         local_df(
             spark,
@@ -1531,8 +1528,6 @@ def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             n0, rev0 = cur.get(key, (0, Decimal("0")))
             cur[key] = (n0 + dn, rev0 + drev)
             rows.append((f"{key[0]}|{key[1]}", f"{cur[key][0]}|{cur[key][1]}", "put"))
-        from templatedb_spark.kv import local_df
-
         kv.write_batch_df(
             local_df(spark, rows, "key string, value string, op string"),
             tag=f"{qname}:b{batch_id}",  # SUM-merge: replay would double-count

@@ -3,6 +3,8 @@ insert_table.slt / csv.slt cases (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
 from templatedb_spark.ddl import Catalog, DuplicateTableError, RangeError
@@ -112,3 +114,60 @@ def test_insert_implicit_cast(cat, spark):
     cat.create_table("tc", [("v", "bigint")])
     cat.insert("tc", [(5,)])
     assert spark.table("tc").schema["v"].dataType.simpleString() == "bigint"
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# CREATE TABLE and INSERT ... VALUES build JVM-side LocalRelations: a scan of
+# the table must not reach a pickled-rows RDD (which starts Python workers)
+def test_values_tables_are_local_relations(cat, spark):
+    cat.create_table(
+        "tl", [("i", "int"), ("u", "int unsigned"), ("d", "date"), ("s", "varchar")]
+    )
+    cat.insert("tl", [(1, 4294967295, "2024-02-29", "a"), (-2, 0, None, None)])
+    cat.insert("tl", [(3, 7)], columns=["u", "i"])
+    plan = _optimized_plan(spark.table("tl"))
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+    assert "LocalRelation" in plan
+    rows = sorted(tuple(r) for r in spark.table("tl").collect())
+    assert rows == [
+        (-2, 0, None, None),
+        (1, 4294967295, datetime.date(2024, 2, 29), "a"),
+        (7, 3, None, None),
+    ]
+
+
+# a row Arrow cannot convert (a lone surrogate, as the KV crash fuzz writes)
+# takes the classic pickled path and inserts exactly what that path yields
+def test_insert_arrow_fallback_matches_classic(cat, spark):
+    rows = [(1, "lone \ud800 surrogate"), (2, "plain")]
+    cat.create_table("tf", [("k", "int"), ("s", "varchar")])
+    cat.insert("tf", rows)
+    table = spark.table("tf")
+    assert "LogicalRDD" in _optimized_plan(table)  # the fallback ran
+    classic = spark.createDataFrame(rows, "k int, s string")
+    assert sorted(tuple(r) for r in table.collect()) == sorted(
+        tuple(r) for r in classic.collect()
+    )
+
+
+# the helper parses its schema with Spark's DDL parser: decimal(p,s) holds a
+# comma, which a split on commas cut in two (local_df silently fell back to
+# the pickled path, empty_df raised)
+def test_memory_helpers_parse_decimal_schema(spark):
+    from decimal import Decimal
+
+    from templatedb_spark.sources.memory import empty_df, local_df
+
+    schema = "k string, v decimal(38,0), w decimal(20,2)"
+    df = local_df(spark, [("a", Decimal(5), Decimal("1.25"))], schema)
+    assert "LogicalRDD" not in _optimized_plan(df)
+    assert [tuple(r) for r in df.collect()] == [("a", Decimal(5), Decimal("1.25"))]
+    empty = empty_df(spark, schema)
+    assert empty.schema == df.schema
+    assert empty.collect() == []
+    # the optimizer turns the empty base into an empty LocalRelation, which
+    # drops out of a union
+    assert "Union" not in _optimized_plan(empty.unionByName(df))
