@@ -344,15 +344,10 @@ def main() -> None:
     # once at the target sf before timing it). This JIT-compiles every codegen
     # path, spins up the Arrow python workers, and warms the page cache /
     # cached intermediates, the same things DuckDB's warmup run warms.
-    # SPARK_GRAFT_BENCH_WARM=small reverts to the round-1 sf0.001 warmup.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     specs = all_specs()
     times: dict[str, float] = {}
-
-    warm_dir = sf_dir
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM") == "small":
-        warm_dir = "/root/testdata/sf0.001"
 
     # Longest-processing-time-first submission: start the known-heavy queries
     # at t=0 so the many sub-second queries pack in behind them instead of the
@@ -494,7 +489,7 @@ def main() -> None:
     # cold-start inside the timed window). Runs through the same two-tier
     # shape as the timed pass so the warm chains see the same low-contention
     # regime they'll be measured in.
-    if mode != "seq" and Path(warm_dir).is_dir():
+    if mode != "seq" and Path(sf_dir).is_dir():
 
         def warm_one(item) -> None:
             name, spec = item
@@ -502,7 +497,7 @@ def main() -> None:
                 spark.sparkContext.setLocalProperty(
                     "spark.scheduler.pool", pool_of.get(name, "light")
                 )
-                spec.spark(spark, warm_dir).write.format("noop").mode(
+                spec.spark(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
             except Exception:

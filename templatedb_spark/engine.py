@@ -61,18 +61,6 @@ def extract_select_aliases(sql: str) -> dict[str, str]:
     return sqlparse.select_aliases(sql)
 
 
-def substitute_where_aliases(
-    sql: str, aliases: dict[str, str], shadowed: set[str] = frozenset()
-) -> str:
-    """Replace alias names with their expressions inside the WHERE clause only.
-    Names in `shadowed` (real columns of in-scope tables) are left alone —
-    the reference binder resolves columns BEFORE aliases
-    (binder/expression/mod.rs:205-224)."""
-    from templatedb_spark import sqlparse
-
-    return sqlparse.substitute_where_aliases(sql, aliases, shadowed)
-
-
 class Engine:
     """Session + catalog + sql() entry. The reference's `Database::run(sql)`
     (src/query_engine/src/db.rs:125-168) equivalent, where stages 2-6 are Catalyst.

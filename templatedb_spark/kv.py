@@ -23,14 +23,22 @@ Version discovery is a MANIFEST edit log (see KVTable._load_manifest) — the
 reference's VersionSet MANIFEST (manager/version_set.rs:178) — so read-path
 metadata is one small-file read, not an O(versions) directory walk.
 
-Scale: deltas are partitioned parquet, and every version is sub-partitioned
-into `_KV_BUCKETS` key-hash buckets (crc32(key) % B — the same function
-evaluated JVM-side at write time and in Python at read time). A point `get`
-therefore opens ONLY its key's bucket directory under each version — 1/B of
-the files — mirroring how the LSM's bloom-filtered SSTables prune reads
-(reference: sstable/filter_block.rs); the merge is one window over key
-(hash-shuffled by key, no global sort except for ordered scans). Compaction
-bounds the number of deltas merged per read, same role it plays in the LSM.
+Scale: every version is a directory `version=N` sub-partitioned into
+bucket dirs `bucket=B`, one parquet file each. The hash layout (default)
+buckets by crc32(key) % `_KV_BUCKETS` — the same function evaluated JVM-side
+at write time and in Python at read time; the range layout records each
+bucket's key range in the manifest. Reads take version and bucket back as
+partition columns, so key predicates are pushed into the parquet scan. A
+point `get` opens ONLY its key's bucket directory under each version — 1/B
+of the files, mirroring how the LSM's bloom-filtered SSTables prune reads
+(reference: sstable/filter_block.rs) — and takes the key's newest row in one
+Spark job. Scans and snapshots merge with one window over key (hash-shuffled
+by key, no global sort except for ordered scans); a version whose every
+bucket is read is passed as ONE root, so a read over up to 32 such
+versions (spark.sql.sources.parallelPartitionDiscovery.threshold) starts no
+file-listing job. Hash-layout writes shuffle by bucket without a partition
+count, so AQE sizes them (see KVTable._write_version_df). Compaction bounds
+the number of deltas merged per read, same role it plays in the LSM.
 """
 
 from __future__ import annotations
@@ -622,40 +630,39 @@ class KVTable:
         returns None — unless allow_empty (MergeKVTable commits complete
         states, and an all-deleted state is a legitimate empty version).
 
-        hash layout: crc32(key) % B shuffle; the global key range rides the
-        write job as an Observation (zero extra jobs) unless the caller
-        already knows it (driver-side dict batches).
+        hash layout: crc32(key) % B shuffle with no partition count, which
+        AQE sizes to the data; the global key range rides the write job as
+        an Observation (zero extra jobs) unless the caller already knows it
+        (driver-side dict batches).
         range layout: repartitionByRange(key) + sortWithinPartitions(key) —
         each bucket is a key-sorted, range-disjoint run (the sorted
         SSTable); per-bucket smallest/largest are harvested from the
         parquet footers afterwards (see _bucket_key_ranges). The extra
         range-boundary sampling job is the LSM's sort cost.
 
-        n_rows_hint (r10, guide §6 output sizing): when the caller knows the
-        batch's row count, the write width adapts — a tiny version writes
-        from 1 task into 1 (range) or per-key-hash (hash) bucket files
-        instead of paying a fixed _KV_BUCKETS-task shuffle for 32 rows
-        (measured: each 16-task micro-write stage cost ~400 ms of pure task
-        overhead in the streaming KV chains). Bucket semantics are
-        unchanged: hash bucket VALUES are always crc32(key) so point-read
-        pruning is identical; range bucket COUNT per version is already
+        n_rows_hint (r10, guide §6 output sizing) sizes range-layout writes
+        only: a tiny version writes from 1 task into 1 bucket instead of
+        paying a fixed _KV_BUCKETS-task shuffle for 32 rows (measured: each
+        16-task micro-write stage cost ~400 ms of pure task overhead in the
+        streaming KV chains). The range bucket COUNT per version is already
         per-version metadata, so fewer buckets for fewer rows just means
         coarser (still correct) pruning on micro-versions. Unknown hint
-        (distributed batches, compactions) keeps the full-width layout."""
+        (distributed batches, compactions) keeps the full-width range
+        layout."""
         import shutil
 
         root = Path(f"{self.path}/version={v}")
         self._clear_orphan(v)
-        # ~32 rows/bucket floor: a 200-row batch still fans to 7 disjoint
-        # range buckets (pruning stays real); a 30-row sketch batch writes
-        # one file from one task
-        width = (
-            _KV_BUCKETS
-            if n_rows_hint is None
-            else min(_KV_BUCKETS, max(1, (n_rows_hint + 31) // 32))
-        )
         obs: Observation | None = None
         if self.layout == "range":
+            # ~32 rows/bucket floor: a 200-row batch still fans to 7 disjoint
+            # range buckets (pruning stays real); a 30-row sketch batch
+            # writes one file from one task
+            width = (
+                _KV_BUCKETS
+                if n_rows_hint is None
+                else min(_KV_BUCKETS, max(1, (n_rows_hint + 31) // 32))
+            )
             out = (
                 rows.repartitionByRange(width, F.col("key"))
                 .sortWithinPartitions("key")
@@ -668,12 +675,10 @@ class KVTable:
                 out = out.observe(
                     obs, F.min("key").alias("kmin"), F.max("key").alias("kmax")
                 )
-            if width == 1:
-                # single-slice driver batch: one task writes every bucket
-                # file sequentially — same dirs, same crc32 bucket values
-                out = out.coalesce(1)
-            else:
-                out = out.repartition(width, F.col("bucket"))
+            # no partition count: AQE coalesces whole hash partitions, so
+            # each bucket still lands in one task (one file per bucket dir)
+            # while the task count follows the data size
+            out = out.repartition(F.col("bucket"))
         out.write.mode("errorifexists").partitionBy("bucket").parquet(str(root))
         buckets = sorted(
             int(b.name.split("=")[1]) for b in root.glob("bucket=*") if b.is_dir()
@@ -764,9 +769,9 @@ class KVTable:
         admits is the one driver-side step; this is the 100 TB path).
 
         `n_rows_hint`: callers that know the batch is driver-sized (sketch
-        merges, bounded view states) pass the row count so the version
-        write narrows instead of paying the full bucket-shuffle width (see
-        _write_version_df).
+        merges, bounded view states) pass the row count so a range-layout
+        version write narrows instead of paying the full bucket-range width;
+        hash-layout writes are sized by AQE (see _write_version_df).
 
         Contract matches write_batch: op in ('put','del'), and at most one
         row per key per batch — the caller's responsibility (the streaming
@@ -897,10 +902,10 @@ class KVTable:
         pruning may be lost, correctness never)."""
         return _range_intersects((meta.get("kmin"), meta.get("kmax")), start, end)
 
-    def _version_bucket_paths(
-        self, v: int, meta: dict, start: str | None = None, end: str | None = None
-    ) -> list[str]:
-        """Bucket dirs of one version, pruned to [start, end) when the
+    def _version_buckets(
+        self, meta: dict, start: str | None = None, end: str | None = None
+    ) -> list[int]:
+        """Bucket ids of one version, pruned to [start, end) when the
         manifest recorded per-bucket key ranges (range layout) — the LSM
         skipping SSTables whose smallest/largest miss the query. Buckets
         without a recorded range stay in (conservative)."""
@@ -908,7 +913,44 @@ class KVTable:
         branges = meta.get("bucket_ranges")
         if branges and (start is not None or end is not None):
             bs = [b for b in bs if _range_intersects(branges.get(b), start, end)]
-        return [f"{self.path}/version={v}/bucket={b}" for b in bs]
+        return bs
+
+    def _version_bucket_paths(
+        self, v: int, meta: dict, start: str | None = None, end: str | None = None
+    ) -> list[str]:
+        """Bucket leaf dirs of one version, pruned as in _version_buckets."""
+        return [
+            f"{self.path}/version={v}/bucket={b}"
+            for b in self._version_buckets(meta, start, end)
+        ]
+
+    def _version_roots(self, v: int, buckets: list[int], meta: dict) -> list[str]:
+        """Read roots for `buckets` of version v: the version dir itself when
+        they are every bucket the manifest lists for it, else the bucket leaf
+        dirs. One root per version instead of up to B keeps a multi-version
+        read under spark.sql.sources.parallelPartitionDiscovery.threshold, so
+        opening the read starts no file-listing job."""
+        if buckets and set(buckets) == set(meta["buckets"]):
+            return [f"{self.path}/version={v}"]
+        return [f"{self.path}/version={v}/bucket={b}" for b in buckets]
+
+    def _live_versions(
+        self,
+        as_of: int | None = None,
+        start: str | None = None,
+        end: str | None = None,
+    ) -> list[tuple[int, dict]]:
+        # resolved purely from the manifest: no directory stats on the read
+        # path. start/end prune WHOLE VERSIONS whose recorded key range
+        # misses [start, end) — sound for merge-on-read because a version
+        # with no in-range key contributes no row to any in-range key's
+        # merge window (the LSM's smallest/largest SSTable skip).
+        state = self._load_manifest()
+        return [
+            (v, state[v])
+            for v in sorted(state)
+            if (as_of is None or v <= as_of) and self._intersects(state[v], start, end)
+        ]
 
     def _delta_paths(
         self,
@@ -917,41 +959,46 @@ class KVTable:
         start: str | None = None,
         end: str | None = None,
     ) -> list[str]:
-        # resolved purely from the manifest: no directory stats on the read
-        # path. start/end prune WHOLE VERSIONS whose recorded key range
-        # misses [start, end) — sound for merge-on-read because a version
-        # with no in-range key contributes no row to any in-range key's
-        # merge window (the LSM's smallest/largest SSTable skip).
-        state = self._load_manifest()
-        vs = sorted(state)
-        if as_of is not None:
-            vs = [v for v in vs if v <= as_of]
+        """Bucket leaf dirs a read must open: `bucket` picks one bucket per
+        version (hash-layout point read), None every bucket surviving the
+        range pruning."""
         out: list[str] = []
-        for v in vs:
-            meta = state[v]
-            if (start is not None or end is not None) and not self._intersects(
-                meta, start, end
-            ):
-                continue
+        for v, meta in self._live_versions(as_of, start, end):
             if bucket is None:
                 out.extend(self._version_bucket_paths(v, meta, start, end))
             elif bucket in meta["buckets"]:
                 out.append(f"{self.path}/version={v}/bucket={bucket}")
         return out
 
-    def _read_deltas(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        df = self.spark.read.schema(_SCHEMA).parquet(*paths)
-        # reading bucket leaf dirs directly skips partition discovery, and the
-        # version lives in the dir name — re-derive it from the file path
-        return df.withColumn(
-            "version",
-            F.regexp_extract(F.input_file_name(), r"version=(\d+)", 1).cast("long"),
-        )
+    def _delta_roots(
+        self,
+        as_of: int | None = None,
+        start: str | None = None,
+        end: str | None = None,
+    ) -> list[str]:
+        """The dirs of _delta_paths(as_of, start=start, end=end), as read
+        roots (see _version_roots)."""
+        return [
+            root
+            for v, meta in self._live_versions(as_of, start, end)
+            for root in self._version_roots(
+                v, self._version_buckets(meta, start, end), meta
+            )
+        ]
 
-    def _deltas(self, as_of: int | None = None) -> DataFrame | None:
-        return self._read_deltas(self._delta_paths(as_of))
+    def _read_deltas(self, roots: list[str]) -> DataFrame | None:
+        if not roots:
+            return None
+        # version and bucket are partition columns parsed from the dir names
+        # under basePath. The partition value overrides the `version` data
+        # column, which a hardlink-cloned version still carries from its old
+        # number (see compact_range). Both are deterministic, so key
+        # predicates reach the parquet scan as pushed filters.
+        return (
+            self.spark.read.schema(_SCHEMA + ", bucket int")
+            .option("basePath", self.path)
+            .parquet(*roots)
+        )
 
     def snapshot(
         self,
@@ -965,7 +1012,7 @@ class KVTable:
         scans); the caller still applies the exact row filter — pruning is
         a superset guarantee, not the predicate."""
         start, end = key_range if key_range else (None, None)
-        deltas = self._read_deltas(self._delta_paths(as_of, start=start, end=end))
+        deltas = self._read_deltas(self._delta_roots(as_of, start, end))
         if deltas is None:
             return empty_df(self.spark, "key string, value string")
         w = Window.partitionBy("key").orderBy(F.col("version").desc())
@@ -975,15 +1022,15 @@ class KVTable:
             .select("key", "value")
         )
 
-    def _point_read_df(self, key: str, as_of: int | None = None) -> DataFrame | None:
-        """Pruned merge-on-read for one key: scans ONLY the key's bucket dir
-        under each version (1/B of the table's files — the LSM point-read
-        shape, db_trait.rs:17-34), with the key predicate pushed to parquet;
-        versions whose recorded key range excludes the key are skipped
-        entirely (the smallest/largest SSTable check before the bloom).
-        Hash layout finds the bucket by hashing the key; range layout finds
-        it through the manifest's per-bucket ranges (the same start/end
-        parameters drive _version_bucket_paths)."""
+    def _point_deltas(self, key: str, as_of: int | None = None) -> DataFrame | None:
+        """Every row for `key` at or below as_of, read from ONLY the key's
+        bucket dir under each version (1/B of the table's files — the LSM
+        point-read shape, db_trait.rs:17-34), with the key predicate pushed
+        to parquet; versions whose recorded key range excludes the key are
+        skipped entirely (the smallest/largest SSTable check before the
+        bloom). Hash layout finds the bucket by hashing the key; range
+        layout finds it through the manifest's per-bucket ranges (the same
+        start/end parameters drive _version_bucket_paths)."""
         deltas = self._read_deltas(
             self._delta_paths(
                 as_of,
@@ -992,22 +1039,19 @@ class KVTable:
                 end=key + "\x00",
             )
         )
-        if deltas is None:
-            return None
-        w = Window.partitionBy("key").orderBy(F.col("version").desc())
-        return (
-            deltas.filter(F.col("key") == key)
-            .withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") == "put"))
-            .select("key", "value")
-        )
+        return None if deltas is None else deltas.filter(F.col("key") == key)
 
     def get(self, key: str, as_of: int | None = None) -> str | None:
-        df = self._point_read_df(key, as_of)
-        if df is None:
+        # the newest row decides (newest sequence wins, a tombstone shadows):
+        # a top-1 over the key's rows is one job and one stage, where a
+        # row_number window would add an exchange and a second job
+        deltas = self._point_deltas(key, as_of)
+        if deltas is None:
             return None
-        rows = df.collect()
-        return rows[0].value if rows else None
+        rows = (
+            deltas.orderBy(F.col("version").desc()).limit(1).select("op", "value").collect()
+        )
+        return rows[0].value if rows and rows[0].op == "put" else None
 
     def scan(self, start: str | None = None, end: str | None = None, as_of: int | None = None) -> DataFrame:
         """Ordered range scan [start, end) — the LSM `iter` (db_iter.rs).
@@ -1182,28 +1226,25 @@ class KVTable:
         def rewrite_one(item: tuple) -> tuple[int, dict | None]:
             o, nv, hit, miss, meta_o = item
             branges = meta_o.get("bucket_ranges")
-            rows = self._read_deltas(
-                [f"{self.path}/version={o}/bucket={b}" for b in hit]
-            )
+            rows = self._read_deltas(self._version_roots(o, hit, meta_o))
             self._clear_orphan(nv)
             wrote: list[int] = []
             if rows is not None:
-                # preserve each kept row's ORIGINAL bucket id (derived from
-                # its file path) so cloned and rewritten buckets share one
+                # preserve each kept row's ORIGINAL bucket id (the partition
+                # column) so cloned and rewritten buckets share one
                 # consistent id space — and, for range layout, so every
-                # bucket keeps its range-disjointness
+                # bucket keeps its range-disjointness. The un-numbered
+                # repartition lets AQE size the write (see _write_version_df)
                 kept = rows.filter(~in_range(F.col("key"))).select(
                     "key",
                     "value",
                     "op",
                     F.lit(nv).cast("long").alias("version"),
-                    F.regexp_extract(F.input_file_name(), r"bucket=(\d+)", 1)
-                    .cast("int")
-                    .alias("bucket"),
+                    "bucket",
                 )
-                kept = kept.repartition(
-                    max(len(hit), 1), F.col("bucket")
-                ).sortWithinPartitions("bucket", "key")
+                kept = kept.repartition(F.col("bucket")).sortWithinPartitions(
+                    "bucket", "key"
+                )
                 kept.write.mode("errorifexists").partitionBy("bucket").parquet(
                     f"{self.path}/version={nv}"
                 )
@@ -1366,12 +1407,18 @@ class MergeKVTable(KVTable):
             # version means no in-range keys exist at all
             return empty_df(self.spark, "key string, value string")
         start, end = key_range if key_range else (None, None)
-        df = self._read_deltas(self._version_bucket_paths(v, state[v], start, end))
+        df = self._read_deltas(
+            self._version_roots(v, self._version_buckets(state[v], start, end), state[v])
+        )
         if df is None:
             return empty_df(self.spark, "key string, value string")
         return df.select("key", "value")
 
-    def _point_read_df(self, key: str, as_of: int | None = None) -> DataFrame | None:
+    def _point_deltas(self, key: str, as_of: int | None = None) -> DataFrame | None:
+        """Rows for `key` from ONLY the latest complete state at or below
+        as_of: an older version may still hold a key that state deleted
+        (complete states carry no tombstones), so KVTable.get's newest-row
+        read must not see older versions here."""
         state = self._load_manifest()
         vs = sorted(v for v in state if as_of is None or v <= as_of)
         if not vs:
@@ -1390,8 +1437,7 @@ class MergeKVTable(KVTable):
             paths = self._version_bucket_paths(v, state[v], key, key + "\x00")
         if not paths:
             return None
-        df = self._read_deltas(paths)
-        return df.filter(F.col("key") == key).select("key", "value")
+        return self._read_deltas(paths).filter(F.col("key") == key)
 
     def compact_range(self, start: str | None = None, end: str | None = None) -> int:
         """Every version is already a COMPLETE merged state (merge-on-write),

@@ -32,18 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from templatedb_spark.operators.tpch import _REV, _dec, _rev_col
 from templatedb_spark.suite import QuerySpec, register, table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2):
-    return F.col(col).cast(f"decimal({prec},{scale})")
-
-
-_REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
-
-
-def _rev_col():
-    return _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", 4, 2))
 
 
 def _supply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -165,13 +165,6 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # State-store provider A/B knob (VERDICT r10 #3): rocksdb routes the
     # chain's state through RocksDBStateStoreProvider with changelog
-    # checkpointing. Measured r11 (paired interleaved best-of-4, sf0.1, see
-    # OPTIMIZATION_r11.md): RocksDB LOST on every JVM-state chain at this
-    # scale — per-trigger native store open/load dominates the tiny state —
-    # so the default stays the HDFS-backed provider; the knob remains for
-    # cluster-scale states where RocksDB is the right choice.
-    # State-store provider A/B knob (VERDICT r10 #3): rocksdb routes the
-    # chain's state through RocksDBStateStoreProvider with changelog
     # checkpointing. Measured r11 (stream_probe, paired): RocksDB was a
     # wash-to-marginal at this state size (join 3.6→3.5 s, ingest −15%,
     # sessionize a wash) — per-trigger native store open/load replaces the
@@ -692,11 +685,10 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     ).cache()
     try:
-        # count() materializes the cache before the three writes AND gives
-        # the exact per-version row count, so each micro-version writes at
-        # a width matched to its size instead of the full bucket fan-out
-        # (r10 — see kv._write_version_df n_rows_hint; grows back to the
-        # full width as the feed grows).
+        # count() materializes the cache before the three writes. Its
+        # per-version row count only sizes range-layout writes; this
+        # hash-layout table's writes are sized by AQE (see
+        # kv._write_version_df n_rows_hint).
         per_version = (net_all.count() + 2) // 3
         # the three versions hold DISJOINT key sets (user_id % 3 routing),
         # so their write jobs run concurrently (kv.write_batches_df, guide

@@ -107,7 +107,7 @@ def test_point_read_scans_single_bucket(kv):
     kv.write_batch(puts={f"k{i}": str(i) for i in range(64)})
     kv.write_batch(puts={f"k{i}": str(i * 10) for i in range(0, 64, 2)})
     key = "k3"
-    df = kv._point_read_df(key)
+    df = kv._point_deltas(key)
     files = df.inputFiles()
     assert files, "point read found no files"
     want = f"bucket={bucket_of(key)}/"
@@ -119,6 +119,110 @@ def test_point_read_scans_single_bucket(kv):
     assert len(buckets) > 4
     assert kv.get("k4") == "40"  # overwritten by the even-keys batch
     assert kv.get("k3") == "3"  # odd key untouched by batch 2
+
+
+def _group_jobs(spark, fn):
+    """Run fn under a fresh Spark job group; return (fn's result, the ids
+    of the jobs the group ran). Jobs started by other Python threads (the
+    concurrent compact_range rewrites) do not inherit the group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"kvtest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_get_runs_one_spark_job(spark):
+    """get takes the key's newest row with a top-1 read: one Spark job over
+    every version that holds the key, for a value and for a tombstone."""
+    from templatedb_spark.kv import bucket_of
+
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d)
+        for i in range(3):
+            kv.write_batch(puts={"k": f"v{i}", f"o{i}": "x"})
+        assert len(kv._delta_paths(bucket=bucket_of("k"), start="k", end="k\x00")) == 3
+        val, jobs = _group_jobs(spark, lambda: kv.get("k"))
+        assert (val, len(jobs)) == ("v2", 1)
+        kv.delete("k")
+        val, jobs = _group_jobs(spark, lambda: kv.get("k"))
+        assert (val, len(jobs)) == (None, 1)
+        assert kv.get("k", as_of=1) == "v1"
+
+
+def test_scan_pushes_key_bounds_and_lists_no_files(spark):
+    """A hash-layout scan passes each fully-read version as one root, so
+    more bucket dirs than the parallel-listing threshold open without a
+    file-listing job; version and bucket come from the dir names, so the
+    key bounds reach the parquet scan as pushed filters."""
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d)
+        for i in range(3):
+            kv.write_batch(puts={f"k{j:03d}": str(i) for j in range(64)})
+        threshold = int(
+            spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+        )
+        assert len(kv._delta_paths()) > threshold
+        df, jobs = _group_jobs(spark, lambda: kv.scan("k010", "k020"))
+        assert jobs == []
+        assert [(r.key, r.value) for r in df.collect()] == [
+            (f"k{j:03d}", "2") for j in range(10, 20)
+        ]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "input_file_name" not in plan
+        pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+        assert pushed
+        for ln in pushed:
+            assert "GreaterThanOrEqual(key,k010)" in ln and "LessThan(key,k020)" in ln, ln
+
+
+def test_bucket_dirs_hold_one_file_after_aqe_sized_writes(spark):
+    """Hash-bucket writes shuffle by bucket with no partition count: AQE
+    sizes the write (no stage pays a fixed B-task fan-out; the test session
+    runs 8 shuffle partitions) and each bucket dir still gets exactly one
+    parquet file, for a write, a compact() and a compact_range."""
+    import glob
+
+    from templatedb_spark.kv import _KV_BUCKETS
+
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d)
+        kv.write_batch(puts={f"k{j:03d}": "a" for j in range(50)})
+        kv.write_batch(puts={f"k{j:03d}": "b" for j in range(0, 50, 3)}, deletes=["k001"])
+        _, jobs = _group_jobs(spark, kv.compact)
+        st = spark.sparkContext.statusTracker()
+        stages = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+        assert jobs and max(i.numTasks for i in stages if i is not None) < _KV_BUCKETS
+        kv.write_batch(puts={f"k{j:03d}": "c" for j in range(40, 60)})
+        kv.compact_range("k010", "k020")
+        dirs = glob.glob(f"{d}/version=*/bucket=*")
+        assert len(dirs) > _KV_BUCKETS
+        for b in dirs:
+            assert len(glob.glob(f"{b}/*.parquet")) == 1, b
+        assert kv.get("k001") is None
+        assert kv.get("k003") == "b"
+        assert kv.get("k045") == "c"
+        assert kv.approximate_size() == 59
+
+
+def test_merge_get_ignores_keys_deleted_in_latest_state(spark):
+    """MergeKVTable keeps reading only its latest complete state: an older
+    version still holds the deleted key, and complete states carry no
+    tombstone that a newest-row read could find."""
+    with tempfile.TemporaryDirectory() as d:
+        kv = MergeKVTable(spark, d)
+        v1 = kv.write_batch(puts={"k": "v", "o": "x"})
+        kv.write_batch(deletes=["k"])
+        assert len(kv._versions()) == 2
+        assert kv.get("k") is None
+        assert kv.get("k", as_of=v1) == "v"
+        assert kv.get("o") == "x"
 
 
 def test_same_key_put_and_delete_in_one_batch(kv):
