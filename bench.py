@@ -341,9 +341,12 @@ def main() -> None:
 
     # warmup: one pass of the whole suite at the TARGET sf — the exact twin of
     # the DuckDB baseline protocol (tools/bench_baseline.py warms each query
-    # once at the target sf before timing it). This JIT-compiles every codegen
-    # path, spins up the Arrow python workers, and warms the page cache /
-    # cached intermediates, the same things DuckDB's warmup run warms.
+    # once at the target sf before timing it). This compiles the suite's
+    # generated classes (the timed pass reuses them only because the engine
+    # session sizes the codegen cache to the suite: at Spark's default 100
+    # entries it recompiled ~3.6k classes), spins up the Arrow python
+    # workers, and warms the page cache / cached intermediates, the same
+    # things DuckDB's warmup run warms.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     specs = all_specs()
@@ -483,10 +486,11 @@ def main() -> None:
 
     # warmup pass, untimed: the exact twin of the DuckDB baseline protocol
     # (tools/bench_baseline.py warms each query once at the target sf before
-    # timing). JIT-compiles every codegen path, spins up the Arrow python
-    # workers, warms the page cache AND runs one full trigger cycle per
-    # streaming/KV chain (VERDICT r7 #6: the driver's cold run paid chain
-    # cold-start inside the timed window). Runs through the same two-tier
+    # timing). Compiles the generated classes the timed pass reuses (held by
+    # the session's suite-sized codegen cache, see session.py), spins up the
+    # Arrow python workers, warms the page cache AND runs one full trigger
+    # cycle per streaming/KV chain (VERDICT r7 #6: the driver's cold run paid
+    # chain cold-start inside the timed window). Runs through the same two-tier
     # shape as the timed pass so the warm chains see the same low-contention
     # regime they'll be measured in.
     if mode != "seq" and Path(sf_dir).is_dir():

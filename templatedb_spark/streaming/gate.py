@@ -130,15 +130,11 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
     constant: partitions = staged-bytes / 32 MB clamped to [4, ambient]
     (the same 32 MB/partition rule the bench session itself uses), so any
     real-scale stage hits the ambient cluster-sized count and ONLY the
-    state-store floor regime shrinks. Python-parallelism-bound chains
-    (sessionize, the near-dup signature maps) deliberately stay on the
-    ambient session — lowering their partition count serializes the Python
-    side (measured: sessionize 3.49 → 4.82 s at 4, 7.80 s at 2).
-
-    newSession() shares the SparkContext (and therefore the FAIR pool
-    local properties) but isolates conf and the temp-view catalog, so
-    concurrent suite queries planning on the ambient session never observe
-    the override."""
+    state-store floor regime shrinks. Python-parallelism-bound chains never
+    shrink: lowering their partition count serializes the Python side
+    (measured: sessionize 3.49 → 4.82 s at 4, 7.80 s at 2), so sessionize
+    takes `_python_state_session` and the near-dup signature maps stay on
+    the ambient session."""
     from pathlib import Path
 
     try:
@@ -159,7 +155,36 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
     # partition; floor 1 measured mixed (window_late kept winning,
     # dedup_ingest and the join's min regressed), so 2 keeps cross-task
     # overlap while halving the store count.
-    parts = min(ambient, max(2, staged // (32 << 20)))
+    return _state_session(spark, min(ambient, max(2, staged // (32 << 20))))
+
+
+def _python_state_session(spark: SparkSession) -> SparkSession:
+    """Clone the session for a Python-stateful trigger chain (sessionize's
+    applyInPandasWithState).
+
+    The OPPOSITE regime from the JVM-state chains `_stream_session`
+    shrinks: the chain is bound by serial per-group Python calls inside
+    each state partition, so more partitions = more concurrent Python
+    workers, until per-instance state-store overhead wins again (measured
+    r4 with disk checkpoints: 8→32→64 monotonically worse). With the r11
+    tmpfs checkpoints, paired A/B at sf0.1, two windows: 16 beats ambient-8
+    by ~10-20% (2.97 vs 3.31 s; 4.03 vs 5.00 s mins) and 32 loses again.
+    Rule: double the ambient count, never below ambient, capped at core
+    count — at real scale ambient is already ≥ cores and this is a no-op."""
+    ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
+    cores = spark.sparkContext.defaultParallelism
+    return _state_session(spark, min(2 * ambient, max(ambient, cores)))
+
+
+def _state_session(spark: SparkSession, parts: int) -> SparkSession:
+    """The clone both chain kinds share: `parts` shuffle partitions (one
+    state store each), the events-feed ts read mode, the state-store
+    provider knob and a fresh checkpoint root.
+
+    newSession() shares the SparkContext (and therefore the FAIR pool
+    local properties) but isolates conf and the temp-view catalog, so
+    concurrent suite queries planning on the ambient session never observe
+    the override."""
     s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", str(parts))
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -243,17 +268,14 @@ register(
 # ---------------------------------------------------------------------------
 # Second gated streaming spec: the CUSTOM STATEFUL operator
 # (applyInPandasWithState gap-sessionization, streaming/stateful.py) under
-# the same oracle discipline. (Negative result, measured r4: raising the
-# state-store partition count via a cloned session — 8→32→64 — made the
-# drain SLOWER, 4.1→4.7→5.9 s at sf0.1: per-instance state-store and task
-# overhead beats the extra python parallelism at this group count. The
-# session default stands.) The stream drains the 3-micro-batch staging
-# (state spans batch boundaries — a session opened in batch 1 closes in
-# batch 3 only if a later event arrives past the gap), emitting sessions AS
-# THEY CLOSE; each user's final session stays open in the state store. The
-# oracle is therefore the batch sessionization SQL minus every user's last
-# session — divergence in state carry-over, gap logic, or emit timing
-# hash-mismatches.
+# the same oracle discipline, on the `_python_state_session` clone (its
+# partition rule is measured there). The stream drains the 3-micro-batch
+# staging (state spans batch boundaries — a session opened in batch 1
+# closes in batch 3 only if a later event arrives past the gap), emitting
+# sessions AS THEY CLOSE; each user's final session stays open in the state
+# store. The oracle is therefore the batch sessionization SQL minus every
+# user's last session — divergence in state carry-over, gap logic, or emit
+# timing hash-mismatches.
 # ---------------------------------------------------------------------------
 def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -267,26 +289,11 @@ def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extend-and-close within the same successor batch
     _stage_microbatches(sf_dir, stage, n_batches=3)
     name = f"gate_sessions_{os.path.basename(stage).split('_')[-1]}"
-    # Python-stateful partition rule (r11): this chain is bound by serial
-    # per-group Python calls inside each state partition, the OPPOSITE
-    # regime from the JVM-state chains `_stream_session` shrinks — more
-    # partitions = more concurrent Python workers, until per-instance
-    # state-store overhead wins again. With the r11 tmpfs checkpoints the
-    # old r4 measurement (8→32→64 monotonically worse) no longer holds:
-    # paired A/B at sf0.1, two windows, 16 beats ambient-8 by ~10-20%
-    # (2.97 vs 3.31 s; 4.03 vs 5.00 s mins) and 32 loses again. Rule:
-    # double the ambient count, never below ambient, capped at core count
-    # — at real scale ambient is already ≥ cores and this is a no-op.
-    amb = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-    cores = spark.sparkContext.defaultParallelism
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", str(min(2 * amb, max(amb, cores))))
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s2 = _python_state_session(spark)
     q = (
         stream_sessionize(read_events_stream(s2, stage))
         .writeStream.format("memory")
         .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())  # tmpfs: see _ckpt_dir
         .outputMode("append")
         .trigger(availableNow=True)
         .start()

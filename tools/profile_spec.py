@@ -2,7 +2,9 @@
 
 Runs each named spec (noop sink) in a UI-enabled warm session, then dumps
 per-stage wall/task metrics from the UI REST API — the closest local[] gets
-to the Spark UI's Stages tab (guide §7.1) without a browser.
+to the Spark UI's Stages tab (guide §7.1) without a browser — and the Janino
+compiles of the measured (warm) run: a spec that still compiles when warm
+generates different code from run to run.
 
 Usage: python tools/profile_spec.py name [name ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -24,7 +26,7 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import EngineConfig, build_session, codegen_compiles
     from templatedb_spark.suite import all_specs
 
     spark = build_session(
@@ -54,9 +56,11 @@ def main() -> None:
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
             seen = {s["stageId"] for s in json.load(r)}
         spark.sparkContext.setJobDescription(f"profile:{name}")
+        compiles0, compile_ms0 = codegen_compiles(spark)
         t0 = time.time()
         noop(specs[name].spark(spark, sf_dir))
         wall = time.time() - t0
+        compiles, compile_ms = codegen_compiles(spark)
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
             stages = json.load(r)
         fresh = [s for s in stages if s["stageId"] not in seen]
@@ -78,6 +82,10 @@ def main() -> None:
             )
         tot_run = sum(s.get("executorRunTime") or 0 for s in fresh)
         print(f"sum executorRunTime {tot_run} ms across {len(fresh)} stages")
+        print(
+            f"warm janino compiles {compiles - compiles0} "
+            f"({compile_ms - compile_ms0:.1f} ms)"
+        )
     spark.stop()
 
 

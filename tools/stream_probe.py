@@ -1,7 +1,8 @@
 """Per-trigger durationMs decomposition for the state-store streaming chains
-(VERDICT r10 #3): rebuilds each gated chain directly (same stagers and stream
-builders as streaming/gate.py) so the StreamingQuery handle is available, and
-prints every trigger's durationMs map plus the state-operator commit times.
+(VERDICT r10 #3): rebuilds each gated chain directly (same stagers, session
+clones and stream builders as streaming/gate.py) so the StreamingQuery handle
+is available, and prints every trigger's durationMs map plus the
+state-operator commit times.
 
 Usage: python tools/stream_probe.py [default|rocksdb] [chain ...]
        chains: join winlate ingest sessionize   (default: all)
@@ -50,18 +51,13 @@ def main() -> None:
     spark = build_session(EngineConfig(master=f"local[{cpus}]", shuffle_partitions=8))
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if provider == "rocksdb":
-        # cover the ambient-session chains (sessionize) too
-        from templatedb_spark.streaming.events import rocksdb_state_conf
 
-        for k, v in rocksdb_state_conf().items():
-            spark.conf.set(k, v)
-
-    def run(name: str, stage_fn, builder, n_warm: int = 1, n_meas: int = 2):
+    def run(name: str, stage_fn, builder, n_warm: int = 1, n_meas: int = 2,
+            clone=lambda stage: gate._stream_session(spark, stage)):
         for rep in range(n_warm + n_meas):
             stage = tempfile.mkdtemp(prefix=f"probe_{name}_")
             stage_fn(stage)
-            s2 = gate._stream_session(spark, stage)
+            s2 = clone(stage)
             df = builder(s2, stage)
             t0 = time.time()
             q = (
@@ -123,15 +119,11 @@ def main() -> None:
             lambda s2, d: stream_dedup_ingest(read_documents_stream(s2, d)),
         )
     if "sessionize" in chains:
-        # sessionize runs on the AMBIENT session in the gate (python
-        # parallelism); keep that here, only the provider differs.
-        def build(s2, d):
-            return stream_sessionize(read_events_stream(spark, d))
-
         run(
             "sessionize",
             lambda d: gate._stage_microbatches(sf_dir, d, n_batches=3),
-            build,
+            lambda s2, d: stream_sessionize(read_events_stream(s2, d)),
+            clone=lambda stage: gate._python_state_session(spark),
         )
 
     spark.stop()
