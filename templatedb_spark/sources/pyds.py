@@ -404,12 +404,9 @@ _register_spec()
 # double-committed task, or a manifest/visibility bug all hash-mismatch.
 # ---------------------------------------------------------------------------
 def pyds_jsondir_roundtrip(spark: SparkSession, sf_dir: str):
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
+    from templatedb_spark.streaming.drain import output_dir
     from templatedb_spark.suite import table
 
     register_python_sources(spark)
@@ -423,8 +420,7 @@ def pyds_jsondir_roundtrip(spark: SparkSession, sf_dir: str):
         spark._jsparkSession.setActiveSession(spark._jsparkSession)
     except Exception:
         pass  # private-API drift: the write then only works main-thread
-    out = tempfile.mkdtemp(prefix="jsondir_spec_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = output_dir("jsondir_spec_")  # `back` below reads it lazily
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.col("o_totalprice").cast("double").alias("price")
     ).filter(F.col("o_orderkey") % 50 == 0)
@@ -486,15 +482,19 @@ _KVGEN_STREAM_PER_BATCH = 250
 
 
 def pyds_stream_source(spark: SparkSession, sf_dir: str):
+    import shutil
+    import time
+
     from pyspark.sql import functions as F
 
-    from templatedb_spark.streaming.gate import _ckpt_dir as _gate_ckpt
+    from templatedb_spark.streaming.drain import checkpoint_dir
 
     register_python_sources(spark)
     # uuid, not pid/thread: a bench worker thread can run this spec twice
     # (warmup + timed), and a reused memory-sink queryName must never risk
     # appending into a previous drain's table
     name = f"pyds_stream_{uuid.uuid4().hex[:12]}"
+    ckpt = checkpoint_dir(spark)
     q = (
         spark.readStream.format("kvgen")
         .option("numRows", _KVGEN_STREAM_ROWS)
@@ -503,10 +503,7 @@ def pyds_stream_source(spark: SparkSession, sf_dir: str):
         .load()
         .writeStream.format("memory")
         .queryName(name)
-        # tmpfs checkpoint: 3 micro-batches × (offset+commit WAL fsyncs) were
-        # pure disk latency for a drain whose checkpoint dies with the call
-        # (see streaming/gate._ckpt_dir)
-        .option("checkpointLocation", _gate_ckpt())
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         # availableNow pins the drain's end at the FIRST latestOffset (one
         # batch of a backlog whose clock advances per poll), so the bounded
@@ -515,14 +512,15 @@ def pyds_stream_source(spark: SparkSession, sf_dir: str):
         .trigger(processingTime="0 seconds")
         .start()
     )
-    import time
-
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        q.processAllAvailable()
-        if spark.table(name).count() >= _KVGEN_STREAM_ROWS:
-            break
-    q.stop()
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            q.processAllAvailable()
+            if spark.table(name).count() >= _KVGEN_STREAM_ROWS:
+                break
+    finally:
+        q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     q.awaitTermination()
     return spark.table(name).select(
         F.col("key").cast("long").alias("key"),

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from templatedb_spark.streaming.drain import run
+
 # Same key mapping as the batch twin (operators/pipeline.cdc_apply).
 CDC_KEY_OFFSET = 1400
 
@@ -103,17 +105,9 @@ def stream_cdc_to_kv(
         # that replay into a recognized no-op instead of a duplicate version
         kv.write_batch_df(changes, tag=f"{query_name}:b{batch_id}")
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        # durable progress: a restarted query resumes from the checkpoint's
-        # source offsets (already-drained files are never re-read) and batch
-        # ids continue, so the KV's exactly-once tags stay unique across
-        # restarts — the production deployment shape
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
+    # with checkpoint_dir, progress is durable: a restarted query resumes
+    # from the checkpoint's source offsets (already-drained files are never
+    # re-read) and batch ids continue, so the KV's exactly-once tags stay
+    # unique across restarts — the production deployment shape
+    run(changes_stream.writeStream.foreachBatch(apply_batch), query_name, checkpoint_dir)
     return kv

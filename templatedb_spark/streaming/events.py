@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from templatedb_spark.streaming.drain import run, run_memory
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -200,14 +202,7 @@ def sink_rollup_to_kv(rollup: DataFrame, kv, query_name: str = "rollup_to_kv"):
                 }
             )
 
-    q = (
-        rollup.writeStream.foreachBatch(write)
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run(rollup.writeStream.foreachBatch(write).outputMode("complete"), query_name)
     return kv
 
 
@@ -223,16 +218,7 @@ def run_available_now(
     `complete` mode emits every window including ones the watermark has not
     finalized (append mode would hold back the tail of a finite backlog).
     """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    return spark.table(query_name).collect()
+    return run_memory(stream_df, query_name, output_mode=output_mode).collect()
 
 
 def windowed_exact_rollup(

@@ -4,12 +4,15 @@ DuckDB oracle (VERDICT r3 #8 — the stream==batch twins were pytest-only).
 `stream_cdc_kv_state` runs the REAL streaming pipeline end to end inside the
 spec callable:
 
-  1. stage the events feed as three ts-ordered micro-batch parquet files
+  1. stage the events feed as two ts-ordered micro-batch parquet files
      (deterministic split — same shape as tests/test_streaming.py's twin);
   2. drain them through `streaming/cdc.py`'s availableNow foreachBatch query
-     (maxFilesPerTrigger=1 → three genuine micro-batches), each applied to a
+     (maxFilesPerTrigger=1 → two genuine micro-batches), each applied to a
      KVTable as one atomic MVCC version;
   3. return the final merged KV state, parsed back to typed columns.
+
+Every gate drains through `streaming/drain.py`, which owns the stage dir,
+the checkpoint (both deleted when the drain returns) and the run.
 
 Because micro-batches arrive in feed order and application is atomic,
 the final state must equal the net-effect compaction of the WHOLE feed —
@@ -24,88 +27,64 @@ original doubles, not formatted strings.
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from templatedb_spark.sources.memory import local_df
 from templatedb_spark.streaming.cdc import CDC_KEY_OFFSET
+from templatedb_spark.streaming.drain import drain, output_dir, run, run_memory
 from templatedb_spark.suite import QuerySpec, register
 
-# Trigger-count lever (measured r5, BASELINE.md): each extra micro-batch
-# costs ~1.1-1.3 s/trigger solo. 2 is the semantic minimum (state/versioning
-# must span at least one batch boundary: a session opened in batch 1 must
-# close in batch 2; the KV MVCC chain must apply >1 atomic version).
-# Default stays 3 — two distinct boundaries exercise carry-over →
-# carry-over → close chains, and the adjacent-pair benches showed NO
-# makespan win at 2 (17.1 s vs 18.2 s, steal-clean): the 16-worker pool
-# packs the suite around the streaming chain.
-import os as _os
-
-# Default trigger count for the gated chains. r8: 3 → 2, the semantic
-# minimum for every cross-batch state contract EXCEPT sessionize's
-# carry-then-close chain (which keeps an explicit 3 — a session must be
-# EXTENDED across one boundary and CLOSED across another). The serial
-# trigger chains are the bench makespan's critical path (BENCH_r07 gate
-# breach); each trigger a chain doesn't run is ~1-1.5 s off that path, and
-# the r10 precedent (KV-merge gates 3 → 2, VERDICT r6 #4's lever) showed a
-# third trigger buys no additional coverage once one batch boundary proves
-# the cross-batch contract. The replay fuzz (42→70 seeds) still randomizes
-# 1-5 batch decompositions per operator, so multi-boundary behavior stays
-# under test there.
-_N_MICROBATCHES = max(2, int(_os.environ.get("SPARK_GRAFT_STREAM_TRIGGERS", "2")))
+# Trigger count of the gated chains: 2, the semantic minimum for every
+# cross-batch state contract EXCEPT sessionize's carry-then-close chain
+# (which keeps an explicit 3 — a session must be EXTENDED across one
+# boundary and CLOSED across another). The serial trigger chains are the
+# bench makespan's critical path (BENCH_r07 gate breach); each trigger a
+# chain doesn't run is ~1-1.5 s off that path, and the r10 precedent
+# (KV-merge gates 3 → 2, VERDICT r6 #4's lever) showed a third trigger buys
+# no additional coverage once one batch boundary proves the cross-batch
+# contract. The replay fuzz (42→70 seeds) still randomizes 1-5 batch
+# decompositions per operator, so multi-boundary behavior stays under test
+# there.
+_N_MICROBATCHES = 2
 
 
-def _stage_microbatches(sf_dir: str, out_dir: str, n_batches: int | None = None) -> None:
-    """Split the events feed into N ts-ordered parquet files with mtimes
-    forcing the file-source pickup order (pure pyarrow — preserves the
-    shipped ts physical type so read_events_stream's schema probe sees the
-    same layout as the original file)."""
-    import os
-
-    import pyarrow.compute as pc
+def _write_batches(out_dir: str, parts) -> None:
+    """Write the pyarrow tables `parts` as part-{i}.parquet with ascending
+    mtimes: the file source picks files up in mtime order, one per trigger
+    (maxFilesPerTrigger=1), so part i is micro-batch i."""
     import pyarrow.parquet as pq
 
-    n_batches = _N_MICROBATCHES if n_batches is None else n_batches
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = t.slice(i * step, step)
+    for i, part in enumerate(parts):
         p = f"{out_dir}/part-{i}.parquet"
         pq.write_table(part, p)
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
 
 
-def _ckpt_dir() -> str:
-    """Fresh checkpoint dir for ONE gated drain, on the fastest usable tier.
+def _sorted(t, *keys: str):
+    """The pyarrow table `t` sorted ascending by `keys`."""
+    import pyarrow.compute as pc
 
-    The gated chains are self-contained availableNow drains: the checkpoint
-    (offset/commit WALs + state-store deltas) is written, read within the
-    same call, and deleted — durability past the call has zero value, yet
-    every trigger was paying fsync-to-disk latency for it (measured r11,
-    stream_probe durationMs: state commitTimeMs 80-870 ms/batch + walCommit/
-    commitOffsets ~40 ms each with /tmp on /dev/vda; moving the checkpoint
-    to tmpfs cut the interval-join drain 3.6-4.2 → 2.8 s, ingest 1.3 → 1.0 s
-    — guide §5/§6: don't pay durable-I/O costs for data with no durability
-    requirement). A REAL deployment with restart semantics points this at
-    reliable storage: set SPARK_GRAFT_STREAM_CKPT to any path (or to "disk"
-    to force the historical java-tmp behavior).
-    """
-    import atexit
-    import shutil
+    return t.take(pc.sort_indices(t, sort_keys=[(k, "ascending") for k in keys]))
 
-    base = _os.environ.get("SPARK_GRAFT_STREAM_CKPT", "")
-    if base == "disk":
-        base = tempfile.gettempdir()
-    elif not base:
-        shm = "/dev/shm"
-        base = shm if _os.access(shm, _os.W_OK) else tempfile.gettempdir()
-    d = tempfile.mkdtemp(prefix="gate_ckpt_", dir=base)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+
+def _split(t, n_batches: int) -> list:
+    """`t` cut into n_batches equal consecutive slices (the last may be short)."""
+    step = (t.num_rows + n_batches - 1) // n_batches
+    return [t.slice(i * step, step) for i in range(n_batches)]
+
+
+def _stage_microbatches(sf_dir: str, out_dir: str, n_batches: int | None = None) -> None:
+    """Split the events feed into N ts-ordered parquet files (pure pyarrow —
+    preserves the shipped ts physical type so read_events_stream's schema
+    probe sees the same layout as the original file)."""
+    import pyarrow.parquet as pq
+
+    n_batches = _N_MICROBATCHES if n_batches is None else n_batches
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    _write_batches(out_dir, _split(_sorted(t, "ts", "event_id"), n_batches))
 
 
 # NEGATIVE RESULT (r11, measured): moving the gated specs' scratch KVTable
@@ -113,8 +92,8 @@ def _ckpt_dir() -> str:
 # paired win (tight disk/shm/disk interleaves at sf0.1: 2.53/2.84, 2.85/3.44
 # under heavy host-window drift). Mechanism: Spark's parquet commit is a
 # rename into the page cache with NO fsync, so /tmp writes were never paying
-# disk latency; the checkpoint win (_ckpt_dir) comes from the state-store
-# delta + WAL fsyncs, which KV version writes don't do.
+# disk latency; the checkpoint win (drain.checkpoint_tier) comes from the
+# state-store delta + WAL fsyncs, which KV version writes don't do.
 def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
     """Clone the session with a state-store-sized shuffle partition count
     for a JVM-state trigger chain.
@@ -178,8 +157,10 @@ def _python_state_session(spark: SparkSession) -> SparkSession:
 
 def _state_session(spark: SparkSession, parts: int) -> SparkSession:
     """The clone both chain kinds share: `parts` shuffle partitions (one
-    state store each), the events-feed ts read mode, the state-store
-    provider knob and a fresh checkpoint root.
+    state store each) and the events-feed ts read mode. The state-store
+    provider is whatever the session's SparkConf names (newSession()
+    inherits it; events.rocksdb_state_conf is the RocksDB choice), and the
+    checkpoint comes from the drain, per query.
 
     newSession() shares the SparkContext (and therefore the FAIR pool
     local properties) but isolates conf and the temp-view catalog, so
@@ -188,23 +169,18 @@ def _state_session(spark: SparkSession, parts: int) -> SparkSession:
     s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", str(parts))
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # State-store provider A/B knob (VERDICT r10 #3): rocksdb routes the
-    # chain's state through RocksDBStateStoreProvider with changelog
-    # checkpointing. Measured r11 (stream_probe, paired): RocksDB was a
-    # wash-to-marginal at this state size (join 3.6→3.5 s, ingest −15%,
-    # sessionize a wash) — per-trigger native store open/load replaces the
-    # delta-file cost the tmpfs checkpoint already removed — so the default
-    # stays the HDFS-backed provider; the knob remains for cluster-scale
-    # state where RocksDB is the right choice (events.rocksdb_state_conf).
-    if _os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "") == "rocksdb":
-        from templatedb_spark.streaming.events import rocksdb_state_conf
-
-        for k, v in rocksdb_state_conf().items():
-            s2.conf.set(k, v)
-    # every query this clone starts checkpoints under a fresh per-chain dir
-    # (name-keyed subdirs; gate query names embed the unique stage path)
-    s2.conf.set("spark.sql.streaming.checkpointLocation", _ckpt_dir())
     return s2
+
+
+def _cdc_state(kv_rows: DataFrame) -> DataFrame:
+    """KV rows (key, 'event_type|value') of a CDC chain → the typed (key,
+    event_type, value) state the CDC oracles compute."""
+    parts = F.split(F.col("value"), r"\|", 2)
+    return kv_rows.select(
+        F.col("key").cast("long").alias("key"),
+        parts.getItem(0).alias("event_type"),
+        parts.getItem(1).cast("double").alias("value"),
+    )
 
 
 def stream_cdc_kv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,32 +188,17 @@ def stream_cdc_kv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from templatedb_spark.streaming.cdc import changes_from_events, stream_cdc_to_kv
     from templatedb_spark.streaming.events import read_events_stream
 
-    import atexit
-    import shutil
-
-    stage = tempfile.mkdtemp(prefix="cdc_stage_")
-    _stage_microbatches(sf_dir, stage)
-    kv_dir = tempfile.mkdtemp(prefix="cdc_kv_")
-    # the returned DataFrame lazily reads this dir — clean at process exit
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
     # auto_compact_every=N_MICROBATCHES puts threshold-driven compaction (the
     # reference's leveled trigger, db_impl/mod.rs:950-975) under this oracle:
     # the final batch's commit reaches the threshold and compacts inside the
     # same write lock, so the audited state is read from the compacted base —
     # any auto-compaction bug (lost delta, wrong merge order) hash-mismatches.
-    kv = KVTable(spark, kv_dir, auto_compact_every=_N_MICROBATCHES)
-    stream = changes_from_events(read_events_stream(_stream_session(spark, stage), stage))
-    stream_cdc_to_kv(stream, kv, f"gate_cdc_{abs(hash(stage))}")
-    # the drain is complete and the returned DataFrame reads only the KV
-    # dir — drop the staged micro-batches so repeated runs don't litter /tmp
-    shutil.rmtree(stage, ignore_errors=True)
-    snap = kv.snapshot()  # (key string, value string)
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    kv = KVTable(spark, output_dir("cdc_kv_"), auto_compact_every=_N_MICROBATCHES)
+    with drain(spark, "cdc", lambda d: _stage_microbatches(sf_dir, d)) as dr:
+        s2 = _stream_session(spark, dr.stage)
+        stream = changes_from_events(read_events_stream(s2, dr.stage))
+        stream_cdc_to_kv(stream, kv, dr.name, checkpoint_dir=dr.ckpt)
+    return _cdc_state(kv.snapshot())
 
 
 _STREAM_CDC_ORACLE = f"""
@@ -277,32 +238,19 @@ register(
 # user's last session — divergence in state carry-over, gap logic, or emit
 # timing hash-mismatches.
 # ---------------------------------------------------------------------------
-def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
+def _sessionize_stream(spark: SparkSession, stage: str) -> DataFrame:
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.streaming.stateful import stream_sessionize
 
-    stage = tempfile.mkdtemp(prefix="sess_stage_")
+    return stream_sessionize(read_events_stream(_python_state_session(spark), stage))
+
+
+def stream_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit 3: the carry-then-close chain — a session extended across
     # boundary 1 must CLOSE across boundary 2; 2 batches can only prove
     # extend-and-close within the same successor batch
-    _stage_microbatches(sf_dir, stage, n_batches=3)
-    name = f"gate_sessions_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _python_state_session(spark)
-    q = (
-        stream_sessionize(read_events_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    t = s2.table(name)  # memory-sink temp view lives in the clone's catalog
+    with drain(spark, "sess", lambda d: _stage_microbatches(sf_dir, d, n_batches=3)) as dr:
+        t = run_memory(_sessionize_stream(spark, dr.stage), dr.name, dr.ckpt)
     return t.select(
         F.col("user_id").cast("long").alias("user_id"),
         "session_start",
@@ -367,24 +315,12 @@ register(
 # (chaining a streaming agg after a stream-stream join is deliberately
 # avoided; the join is the audited subject).
 # ---------------------------------------------------------------------------
-def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
+def _interval_join_stream(spark: SparkSession, stage: str) -> DataFrame:
     from templatedb_spark.streaming.events import (
         read_events_stream,
         stream_stream_interval_join,
     )
 
-    stage = tempfile.mkdtemp(prefix="ssj_stage_")
-    # 2 micro-batches, not _N_MICROBATCHES: join state has no carry-over →
-    # carry-over → close chain (that argument is about SESSION state) — one
-    # batch boundary already exercises the full cross-batch join-state
-    # contract (batch-2 probes hitting batch-1 state, watermark retention).
-    # Measured ~1.3 s/trigger; this spec is the suite's longest chain, so
-    # the third trigger bought no coverage at real makespan cost.
-    _stage_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_ssjoin_{os.path.basename(stage).split('_')[-1]}"
     s2 = _stream_session(spark, stage)
     # skip the trailing NO-DATA micro-batch: an INNER symmetric-hash join
     # emits every match eagerly inside the data batches; the extra batch
@@ -397,20 +333,20 @@ def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream_window_late MUST keep no-data batches: their final windows
     # only emit when the watermark advances past them.)
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    q = (
-        stream_stream_interval_join(read_events_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return (
-        s2.table(name)  # memory-sink temp view lives in the clone's catalog
-        .groupBy(F.col("e_user").alias("user_id"), "error_id")
-        .agg(F.count(F.lit(1)).alias("n_recent_clicks"))
+    return stream_stream_interval_join(read_events_stream(s2, stage))
+
+
+def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # 2 micro-batches: join state has no carry-over → carry-over → close
+    # chain (that argument is about SESSION state) — one batch boundary
+    # already exercises the full cross-batch join-state contract (batch-2
+    # probes hitting batch-1 state, watermark retention). Measured ~1.3
+    # s/trigger; this spec is the suite's longest chain, so the third
+    # trigger bought no coverage at real makespan cost.
+    with drain(spark, "ssj", lambda d: _stage_microbatches(sf_dir, d, n_batches=2)) as dr:
+        t = run_memory(_interval_join_stream(spark, dr.stage), dr.name, dr.ckpt)
+    return t.groupBy(F.col("e_user").alias("user_id"), "error_id").agg(
+        F.count(F.lit(1)).alias("n_recent_clicks")
     )
 
 
@@ -460,15 +396,12 @@ assert _NEARDUP_SLICE_MOD & (_NEARDUP_SLICE_MOD - 1) == 0, (
 
 
 def _stage_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
-    """Split documents into N doc_id-ordered parquet files, mtimes forcing
-    the file-source pickup order (pure pyarrow, same discipline as the
-    events stager). The gate stages the deterministic doc_id % 4 == 0 slice
-    (oracle restricted identically): the audited subject is cross-batch band
-    STATE correctness, which one quarter of the corpus exercises fully,
-    while the md5-signature volume — the measured cost driver — stays off
-    the suite's critical path."""
-    import os
-
+    """Split documents into N doc_id-ordered parquet files (pure pyarrow,
+    same discipline as the events stager). The gate stages the deterministic
+    doc_id % 4 == 0 slice (oracle restricted identically): the audited
+    subject is cross-batch band STATE correctness, which one quarter of the
+    corpus exercises fully, while the md5-signature volume — the measured
+    cost — stays off the suite's critical path."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -476,50 +409,30 @@ def _stage_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> No
     t = t.filter(
         pc.equal(pc.bit_wise_and(t["doc_id"], _NEARDUP_SLICE_MOD - 1), 0)
     )
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = t.slice(i * step, step)
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(part, p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    _write_batches(out_dir, _split(_sorted(t, "doc_id"), n_batches))
 
 
-def stream_neardup_pairs_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
+def _neardup_gate(spark: SparkSession, sf_dir: str, prefix: str, mode: str) -> DataFrame:
+    """Drain the staged slice through the near-dup operator in `mode`. A
+    pair found via several shared bands repeats with the SAME match count —
+    distinct() collapses it (the operator's documented contract)."""
     from templatedb_spark.streaming.neardup import (
         read_documents_stream,
         stream_neardup_pairs,
     )
 
-    stage = tempfile.mkdtemp(prefix="ndp_stage_")
-    _stage_doc_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_neardup_{os.path.basename(stage).split('_')[-1]}"
-    q = (
-        stream_neardup_pairs(read_documents_stream(spark, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    # a pair found via several shared bands repeats with the SAME match
-    # count — distinct() collapses it (the operator's documented contract)
-    return (
-        spark.table(name)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.col("matches").cast("long").alias("matches"),
-        )
-        .distinct()
-    )
+    with drain(spark, prefix, lambda d: _stage_doc_microbatches(sf_dir, d)) as dr:
+        stream = stream_neardup_pairs(read_documents_stream(spark, dr.stage), mode=mode)
+        t = run_memory(stream, dr.name, dr.ckpt)
+    return t.select(
+        F.col("doc_a").cast("long").alias("doc_a"),
+        F.col("doc_b").cast("long").alias("doc_b"),
+        F.col("matches").cast("long").alias("matches"),
+    ).distinct()
+
+
+def stream_neardup_pairs_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _neardup_gate(spark, sf_dir, "ndp", "exact")
 
 
 def _neardup_oracle() -> str:
@@ -572,41 +485,7 @@ register(
 # 248|252 — rep 120 is elected in batch 1, its match arrives in batch 2.
 # ---------------------------------------------------------------------------
 def stream_neardup_reps_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from templatedb_spark.streaming.neardup import (
-        read_documents_stream,
-        stream_neardup_pairs,
-    )
-
-    stage = tempfile.mkdtemp(prefix="ndr_stage_")
-    _stage_doc_microbatches(sf_dir, stage, n_batches=2)
-    name = f"gate_neardup_reps_{os.path.basename(stage).split('_')[-1]}"
-    q = (
-        stream_neardup_pairs(
-            read_documents_stream(spark, stage), mode="representatives"
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt_dir())
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    # same pair elected via several shared bands carries the same match
-    # count — distinct() collapses it (same contract as the exact twin)
-    return (
-        spark.table(name)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.col("matches").cast("long").alias("matches"),
-        )
-        .distinct()
-    )
+    return _neardup_gate(spark, sf_dir, "ndr", "representatives")
 
 
 def _neardup_reps_oracle() -> str:
@@ -662,10 +541,10 @@ register(
 # resurrection, lost out-of-range history, manifest mis-publish) changes
 # the final state and hash-mismatches.
 # ---------------------------------------------------------------------------
-def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
+def _range_compacted_kv(spark: SparkSession, sf_dir: str, prefix: str, layout: str):
+    """The events CDC feed's net effect written as three disjoint-key KV
+    versions, then compact_range("145", "155"): the table both compaction
+    gates audit (they differ in the layout and in the final read)."""
     from templatedb_spark.kv import KVTable
     from templatedb_spark.streaming.cdc import (
         changes_from_events,
@@ -674,9 +553,7 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from templatedb_spark.suite import table
 
-    kv_dir = tempfile.mkdtemp(prefix="cr_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
+    kv = KVTable(spark, output_dir(f"{prefix}_kv_"), layout=layout)
     feed = changes_from_events(table(spark, sf_dir, "events"))
     # Per-key compaction commutes with disjoint-key routing, so the whole-feed
     # net effect is computed ONCE and cached; the three atomic versions each
@@ -693,9 +570,8 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     try:
         # count() materializes the cache before the three writes. Its
-        # per-version row count only sizes range-layout writes; this
-        # hash-layout table's writes are sized by AQE (see
-        # kv._write_version_df n_rows_hint).
+        # per-version row count only sizes range-layout writes; hash-layout
+        # writes are sized by AQE (see kv._write_version_df n_rows_hint).
         per_version = (net_all.count() + 2) // 3
         # the three versions hold DISJOINT key sets (user_id % 3 routing),
         # so their write jobs run concurrently (kv.write_batches_df, guide
@@ -713,13 +589,11 @@ def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         net_all.unpersist()
     kv.compact_range("145", "155")  # lexicographic: keys 1450-1549
-    snap = kv.snapshot()
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    return kv
+
+
+def kv_compact_range_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cdc_state(_range_compacted_kv(spark, sf_dir, "cr", "hash").snapshot())
 
 
 register(
@@ -751,53 +625,8 @@ register(
 # hash-mismatches.
 # ---------------------------------------------------------------------------
 def kv_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
-    from templatedb_spark.kv import KVTable
-    from templatedb_spark.streaming.cdc import (
-        changes_from_events,
-        compact_net_effect,
-        kv_value_col,
-    )
-    from templatedb_spark.suite import table
-
-    kv_dir = tempfile.mkdtemp(prefix="rl_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir, layout="range")
-    feed = changes_from_events(table(spark, sf_dir, "events"))
-    # one whole-feed compaction, cached, routed to 3 disjoint-key versions
-    # (same latency cut as kv_compact_range_state — see its comment)
-    net_all = compact_net_effect(feed).select(
-        "key",
-        F.when(F.col("event_type") != "error", kv_value_col()).alias("value"),
-        F.when(F.col("event_type") == "error", F.lit("del"))
-        .otherwise(F.lit("put"))
-        .alias("op"),
-    ).cache()
-    try:
-        # same width-matched CONCURRENT writes as kv_compact_range_state
-        # (disjoint key routing — see its comment; kv.write_batches_df)
-        per_version = (net_all.count() + 2) // 3
-        kv.write_batches_df(
-            [
-                net_all.filter(F.col("key") % 3 == i).select(
-                    F.col("key").cast("string").alias("key"), "value", "op"
-                )
-                for i in range(3)
-            ],
-            n_rows_hint=per_version,
-        )
-    finally:
-        net_all.unpersist()
-    kv.compact_range("145", "155")  # lexicographic: keys 1450-1549
-    snap = kv.scan(start="142", end="152")  # straddles the 1450 boundary
-    parts = F.split(F.col("value"), r"\|", 2)
-    return snap.select(
-        F.col("key").cast("long").alias("key"),
-        parts.getItem(0).alias("event_type"),
-        parts.getItem(1).cast("double").alias("value"),
-    )
+    kv = _range_compacted_kv(spark, sf_dir, "rl", "range")
+    return _cdc_state(kv.scan(start="142", end="152"))  # straddles the 1450 boundary
 
 
 _KV_RANGE_SCAN_ORACLE = f"""
@@ -849,8 +678,6 @@ def _stage_ingest_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) ->
     normalization here only decides ROUTING; the audited fingerprint parity
     is Spark-vs-DuckDB, both of which compute md5 over their own
     regexp_replace)."""
-    import os
-
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -870,23 +697,20 @@ def _stage_ingest_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) ->
     )
     norm = aug["text"].str.lower().str.replace(r"\s+", " ", regex=True)
     aug["batch_idx"] = aug.groupby(norm).cumcount().clip(upper=n_batches - 1)
-    for i in range(n_batches):
-        part = aug[aug.batch_idx == i][["doc_id", "text", "batch_idx"]]
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(pa.Table.from_pandas(part, preserve_index=False), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    cols = ["doc_id", "text", "batch_idx"]
+    _write_batches(
+        out_dir,
+        [
+            pa.Table.from_pandas(aug[aug.batch_idx == i][cols], preserve_index=False)
+            for i in range(n_batches)
+        ],
+    )
 
 
-def stream_dedup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
+def _ingest_stream(spark: SparkSession, stage: str) -> DataFrame:
     from templatedb_spark.streaming.ingest import stream_dedup_ingest
     from templatedb_spark.streaming.neardup import read_documents_stream
 
-    stage = tempfile.mkdtemp(prefix="ing_stage_")
-    _stage_ingest_microbatches(sf_dir, stage)
-    name = f"gate_ingest_{os.path.basename(stage).split('_')[-1]}"
     s2 = _stream_session(spark, stage)
     # dropDuplicatesWithinWatermark emits every FIRST-SEEN row eagerly in
     # its data batch; the trailing no-data batch only evicts expired state
@@ -895,17 +719,12 @@ def stream_dedup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the sink rows unchanged — same argument as the interval-join
     # gate; oracle-gated.
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    q = (
-        stream_dedup_ingest(read_documents_stream(s2, stage))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return s2.table(name)
+    return stream_dedup_ingest(read_documents_stream(s2, stage))
+
+
+def stream_dedup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    with drain(spark, "ing", lambda d: _stage_ingest_microbatches(sf_dir, d)) as dr:
+        return run_memory(_ingest_stream(spark, dr.stage), dr.name, dr.ckpt)
 
 
 _INGEST_DEDUP_ORACLE = r"""
@@ -968,10 +787,7 @@ def _stage_late_microbatches(sf_dir: str, out_dir: str, n_batches: int = 3) -> N
     """ts-ordered 3-way split of events, with the globally earliest row
     (min (ts, event_id)) moved from batch 1 to the tail of the last batch —
     the deterministic late straggler."""
-    import os
-
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     # 3 batches, NOT the 2-trigger default: the watermark used to filter
@@ -980,48 +796,25 @@ def _stage_late_microbatches(sf_dir: str, out_dir: str, n_batches: int = 3) -> N
     # batch 1 still runs with the initial watermark; only at batch 2 does
     # batch 0's max event time take effect). The provably-dropped straggler
     # therefore needs at least 3 batches: wm(batch 2) = max_ts(batch 0) - 10min.
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    order = pc.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(order)
-    late = t.slice(0, 1)  # the global (ts, event_id) minimum
-    rest = t.slice(1)
-    n = rest.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        part = rest.slice(i * step, step)
-        if i == n_batches - 1:
-            part = pa.concat_tables([part, late])
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(part, p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    t = _sorted(pq.read_table(f"{sf_dir}/events.parquet"), "ts", "event_id")
+    parts = _split(t.slice(1), n_batches)
+    # the global (ts, event_id) minimum goes last
+    parts[-1] = pa.concat_tables([parts[-1], t.slice(0, 1)])
+    _write_batches(out_dir, parts)
 
 
-def stream_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
+def _window_late_stream(spark: SparkSession, stage: str) -> DataFrame:
     from templatedb_spark.streaming.events import (
         read_events_stream,
         windowed_exact_rollup,
     )
 
-    stage = tempfile.mkdtemp(prefix="winlate_stage_")
-    _stage_late_microbatches(sf_dir, stage)
-    name = f"gate_winlate_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    agg = windowed_exact_rollup(read_events_stream(s2, stage))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)  # memory sink holds the rows now
-    return s2.table(name)
+    return windowed_exact_rollup(read_events_stream(_stream_session(spark, stage), stage))
+
+
+def stream_window_late(spark: SparkSession, sf_dir: str) -> DataFrame:
+    with drain(spark, "winlate", lambda d: _stage_late_microbatches(sf_dir, d)) as dr:
+        return run_memory(_window_late_stream(spark, dr.stage), dr.name, dr.ckpt)
 
 
 _STREAM_WINDOW_LATE_ORACLE = """
@@ -1069,49 +862,30 @@ register(
 # is a count/hash mismatch. Aggregates are integer-exact.
 # ---------------------------------------------------------------------------
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.suite import table
 
-    import atexit
-
-    stage = tempfile.mkdtemp(prefix="enrich_stage_")
-    _stage_microbatches(sf_dir, stage)
-    name = f"gate_enrich_{os.path.basename(stage).split('_')[-1]}"
-    s2 = _stream_session(spark, stage)
-    # the static dim must come from the SAME session as the stream side
-    dim = F.broadcast(
-        table(s2, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
-        )
-    )
-    enriched = (
-        read_events_stream(s2, stage)
-        .join(dim, "user_id")  # stream-static inner join, broadcast per trigger
-        .select("event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey")
-    )
     # parquet FILE sink, not memory: enriched rows are corpus-sized (1:1 with
     # the stream), so the sink must stay off the driver — the memory sink
     # OOMed the sf10 engine probe at 10M rows, the exactly-once file sink
     # ships them executor-side (the production enrichment topology end to
     # end). The rollup then reads the committed files as batch.
-    sink = tempfile.mkdtemp(prefix="enrich_sink_")
-    ckpt = _ckpt_dir()  # tmpfs: the drain deletes it right after (see _ckpt_dir)
-    atexit.register(shutil.rmtree, sink, ignore_errors=True)
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    sink = output_dir("enrich_sink_")
+    with drain(spark, "enrich", lambda d: _stage_microbatches(sf_dir, d)) as dr:
+        s2 = _stream_session(spark, dr.stage)
+        # the static dim must come from the SAME session as the stream side
+        dim = F.broadcast(
+            table(s2, sf_dir, "customer").select(
+                F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
+            )
+        )
+        enriched = (
+            read_events_stream(s2, dr.stage)
+            .join(dim, "user_id")  # stream-static inner join, broadcast per trigger
+            .select("event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey")
+        )
+        writer = enriched.writeStream.format("parquet").option("path", sink)
+        run(writer.outputMode("append"), dr.name, dr.ckpt)
     return (
         spark.read.parquet(sink)
         .groupBy("c_mktsegment", "event_type")
@@ -1197,11 +971,25 @@ def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
     cur.update(bumps)
 
 
-def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
+def _sketch_drain(spark: SparkSession, prefix: str, stage_fn, read_stream, apply):
+    """Drain the staged feed on the state-store clone into a fresh KV, one
+    foreachBatch `apply(spark, kv, cache, qname, batch_df, batch_id)` per
+    micro-batch (`cache` is the committed-state cache: see _hll_apply);
+    returns the KV."""
     from templatedb_spark.kv import KVTable
+
+    kv = KVTable(spark, output_dir(f"{prefix}_kv_"))
+    cache: dict = {"cur": None}
+    with drain(spark, prefix, stage_fn) as dr:
+        stream = read_stream(_stream_session(spark, dr.stage), dr.stage)
+        writer = stream.writeStream.foreachBatch(
+            lambda bdf, bid: apply(spark, kv, cache, dr.name, bdf, bid)
+        )
+        run(writer, dr.name, dr.ckpt)
+    return kv
+
+
+def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from templatedb_spark.operators.textstats import (
         hll_fill_registers,
         hll_finalize,
@@ -1209,31 +997,17 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from templatedb_spark.streaming.events import read_events_stream
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="hll_stage_")
     # 2 triggers = the semantic minimum for a cross-batch merge (batch 1
     # max-merges into batch 0's committed registers); the third trigger
     # proved nothing extra and was ~1/3 of this serial chain's wall clock
     # (VERDICT r6 #4's fewer-larger-micro-batches lever).
-    _stage_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="hll_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_hll_{abs(hash(stage))}"
-
-    # committed-state cache: see _hll_apply
-    cache: dict = {"cur": None}
-
-    q = (
-        read_events_stream(_stream_session(spark, stage), stage)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: _hll_apply(spark, kv, cache, qname, bdf, bid)
-        )
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
+    kv = _sketch_drain(
+        spark,
+        "hll",
+        lambda d: _stage_microbatches(sf_dir, d, n_batches=2),
+        read_events_stream,
+        _hll_apply,
     )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
     regs = kv.snapshot().select(
         F.col("key").cast("long").alias("reg"),
         F.col("value").cast("long").alias("m"),
@@ -1280,19 +1054,10 @@ register(
 def _stage_full_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
     """doc_id-ordered N-way split of the raw documents table (full corpus —
     unlike the near-dup stagers there is no slice and no augmentation)."""
-    import os
-
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(t.slice(i * step, step), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    _write_batches(out_dir, _split(_sorted(t, "doc_id"), n_batches))
 
 
 def _cms_cell_structs():
@@ -1358,37 +1123,18 @@ def _cms_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
 
 
 def stream_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
-    from templatedb_spark.kv import KVTable
     from templatedb_spark.operators.textstats import _CMS_K
     from templatedb_spark.streaming.neardup import read_documents_stream
-    from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="cms_stage_")
     # 2 triggers: minimum that proves the SUM-merge reads committed state
     # (and that a replayed tag cannot double-count) — see stream_hll_users
-    _stage_full_doc_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="cms_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_cms_{abs(hash(stage))}"
-
-    # committed-state cache: see _cms_apply
-    cache: dict = {"cur": None}
-
-    q = (
-        read_documents_stream(_stream_session(spark, stage), stage)
-        .writeStream.foreachBatch(
-            lambda bdf, bid: _cms_apply(spark, kv, cache, qname, bdf, bid)
-        )
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
+    kv = _sketch_drain(
+        spark,
+        "cms",
+        lambda d: _stage_full_doc_microbatches(sf_dir, d, n_batches=2),
+        read_documents_stream,
+        _cms_apply,
     )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
     sketch = kv.snapshot().select(
         F.split(F.col("key"), ":").getItem(0).cast("int").alias("j"),
         F.split(F.col("key"), ":").getItem(1).cast("int").alias("b"),
@@ -1459,38 +1205,25 @@ register(
 # ---------------------------------------------------------------------------
 def _stage_order_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
     """o_orderkey-ordered N-way split of orders (the arriving fact deltas)."""
-    import os
-
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{sf_dir}/orders.parquet")
-    t = t.take(pc.sort_indices(t, sort_keys=[("o_orderkey", "ascending")]))
-    n = t.num_rows
-    step = (n + n_batches - 1) // n_batches
-    for i in range(n_batches):
-        p = f"{out_dir}/part-{i}.parquet"
-        pq.write_table(t.slice(i * step, step), p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    _write_batches(out_dir, _split(_sorted(t, "o_orderkey"), n_batches))
+
+
+def _orders_stream(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
+    """File-source stream over the staged orders, one file per trigger."""
+    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
 
 
 def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
     from decimal import Decimal
 
     from templatedb_spark.kv import KVTable
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="mvj_stage_")
-    # 2 triggers: the cross-batch delta merge is proven by batch 1 summing
-    # into batch 0's committed view (same lever as the sketch gates)
-    _stage_order_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="mvj_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_mvj_{abs(hash(stage))}"
-
+    kv = KVTable(spark, output_dir("mvj_kv_"))
     dim = F.broadcast(
         table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -1499,8 +1232,8 @@ def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (re)start; tag check first so a replay can never reach the cache
     cache: dict = {"cur": None}
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if kv.has_tag(f"{qname}:b{batch_id}"):
+    def apply_batch(batch_df, tag: str) -> None:
+        if kv.has_tag(tag):
             return  # replayed batch: already committed, cache untouched
         delta = (
             batch_df.join(dim, batch_df.o_custkey == dim.c_custkey)
@@ -1529,23 +1262,17 @@ def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((f"{key[0]}|{key[1]}", f"{cur[key][0]}|{cur[key][1]}", "put"))
         kv.write_batch_df(
             local_df(spark, rows, "key string, value string, op string"),
-            tag=f"{qname}:b{batch_id}",  # SUM-merge: replay would double-count
+            tag=tag,  # SUM-merge: replay would double-count
             n_rows_hint=len(rows),
         )
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(apply_batch)
-        .queryName(qname)
-        .option("checkpointLocation", _ckpt_dir())  # tmpfs: see _ckpt_dir
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
+    # 2 triggers: the cross-batch delta merge is proven by batch 1 summing
+    # into batch 0's committed view (same lever as the sketch gates)
+    with drain(spark, "mvj", lambda d: _stage_order_microbatches(sf_dir, d)) as dr:
+        writer = _orders_stream(spark, sf_dir, dr.stage).writeStream.foreachBatch(
+            lambda bdf, bid: apply_batch(bdf, f"{dr.name}:b{bid}")
+        )
+        run(writer, dr.name, dr.ckpt)
     parts = F.split(F.col("key"), r"\|", 2)
     vals = F.split(F.col("value"), r"\|", 2)
     return kv.snapshot().select(
@@ -1633,40 +1360,20 @@ def _mvjw_apply(kv, dim: DataFrame, batch_df: DataFrame, tag: str) -> None:
 
 
 def stream_mv_join_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-
     from templatedb_spark.kv import KVTable
     from templatedb_spark.suite import table
 
-    stage = tempfile.mkdtemp(prefix="mvjw_stage_")
-    _stage_order_microbatches(sf_dir, stage, n_batches=2)
-    kv_dir = tempfile.mkdtemp(prefix="mvjw_kv_")
-    atexit.register(shutil.rmtree, kv_dir, ignore_errors=True)
-    kv = KVTable(spark, kv_dir)
-    qname = f"gate_mvjw_{abs(hash(stage))}"
-
-    # stream + dim + batch plans all live in the state-store-sized clone
-    s2 = _stream_session(spark, stage)
-    dim = F.broadcast(
-        table(s2, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    )
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        _mvjw_apply(kv, dim, batch_df, f"{qname}:b{batch_id}")
-
-    schema = s2.read.parquet(f"{sf_dir}/orders.parquet").schema
-    q = (
-        s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(apply_batch)
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
+    kv = KVTable(spark, output_dir("mvjw_kv_"))
+    with drain(spark, "mvjw", lambda d: _stage_order_microbatches(sf_dir, d)) as dr:
+        # stream + dim + batch plans all live in the state-store-sized clone
+        s2 = _stream_session(spark, dr.stage)
+        dim = F.broadcast(
+            table(s2, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        )
+        writer = _orders_stream(s2, sf_dir, dr.stage).writeStream.foreachBatch(
+            lambda bdf, bid: _mvjw_apply(kv, dim, bdf, f"{dr.name}:b{bid}")
+        )
+        run(writer, dr.name, dr.ckpt)
     parts = F.split(F.col("key"), r"\|", 2)
     vals = F.split(F.col("value"), r"\|", 2)
     return kv.snapshot().select(

@@ -1,8 +1,9 @@
 """Per-trigger durationMs decomposition for the state-store streaming chains
-(VERDICT r10 #3): rebuilds each gated chain directly (same stagers, session
-clones and stream builders as streaming/gate.py) so the StreamingQuery handle
-is available, and prints every trigger's durationMs map plus the
-state-operator commit times.
+(VERDICT r10 #3): runs each gated chain from streaming/gate.py's own stager
+and stream function (session clone and no-data setting included) through the
+same drain, keeps the StreamingQuery handle, and prints every trigger's
+durationMs map plus the state-operator commit times. `rocksdb` builds the session with
+events.rocksdb_state_conf, which every gate clone inherits.
 
 Usage: python tools/stream_probe.py [default|rocksdb] [chain ...]
        chains: join winlate ingest sessionize   (default: all)
@@ -14,9 +15,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -33,44 +32,33 @@ def main() -> None:
         "sessionize",
     ]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if provider == "rocksdb":
-        os.environ["SPARK_GRAFT_STATE_PROVIDER"] = "rocksdb"
 
     from templatedb_spark.session import EngineConfig, build_session
     from templatedb_spark.streaming import gate
-    from templatedb_spark.streaming.events import (
-        read_events_stream,
-        stream_stream_interval_join,
-        windowed_exact_rollup,
-    )
-    from templatedb_spark.streaming.ingest import stream_dedup_ingest
-    from templatedb_spark.streaming.neardup import read_documents_stream
-    from templatedb_spark.streaming.stateful import stream_sessionize
+    from templatedb_spark.streaming.drain import drain, run
+    from templatedb_spark.streaming.events import rocksdb_state_conf
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(EngineConfig(master=f"local[{cpus}]", shuffle_partitions=8))
+    extra = rocksdb_state_conf() if provider == "rocksdb" else {}
+    spark = build_session(
+        EngineConfig(master=f"local[{cpus}]", shuffle_partitions=8, extra=extra)
+    )
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def run(name: str, stage_fn, builder, n_warm: int = 1, n_meas: int = 2,
-            clone=lambda stage: gate._stream_session(spark, stage)):
+    if provider == "rocksdb":  # the clones must inherit the SparkConf provider
+        clone_conf = gate._stream_session(spark, sf_dir).conf
+        assert "RocksDB" in clone_conf.get("spark.sql.streaming.stateStore.providerClass")
+
+    def probe(name: str, stage_fn, make_stream, n_warm: int = 1, n_meas: int = 2):
         for rep in range(n_warm + n_meas):
-            stage = tempfile.mkdtemp(prefix=f"probe_{name}_")
-            stage_fn(stage)
-            s2 = clone(stage)
-            df = builder(s2, stage)
-            t0 = time.time()
-            q = (
-                df.writeStream.format("memory")
-                .queryName(f"probe_{name}_{rep}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.time() - t0
+            with drain(spark, f"probe_{name}", stage_fn) as dr:
+                df = make_stream(spark, dr.stage)
+                t0 = time.time()
+                writer = df.writeStream.format("memory").outputMode("append")
+                q = run(writer, dr.name, dr.ckpt)
+                wall = time.time() - t0
             progress = [json.loads(p.json) for p in q.recentProgress]
-            shutil.rmtree(stage, ignore_errors=True)
             if rep < n_warm:
                 continue
             print(f"\n== {name} provider={provider} rep={rep} wall={wall:.3f}s")
@@ -101,29 +89,28 @@ def main() -> None:
                     print(f"    state: {keep} custom={interesting}")
 
     if "join" in chains:
-        run(
+        probe(
             "join",
             lambda d: gate._stage_microbatches(sf_dir, d, n_batches=2),
-            lambda s2, d: stream_stream_interval_join(read_events_stream(s2, d)),
+            gate._interval_join_stream,
         )
     if "winlate" in chains:
-        run(
+        probe(
             "winlate",
             lambda d: gate._stage_late_microbatches(sf_dir, d),
-            lambda s2, d: windowed_exact_rollup(read_events_stream(s2, d)),
+            gate._window_late_stream,
         )
     if "ingest" in chains:
-        run(
+        probe(
             "ingest",
             lambda d: gate._stage_ingest_microbatches(sf_dir, d),
-            lambda s2, d: stream_dedup_ingest(read_documents_stream(s2, d)),
+            gate._ingest_stream,
         )
     if "sessionize" in chains:
-        run(
+        probe(
             "sessionize",
             lambda d: gate._stage_microbatches(sf_dir, d, n_batches=3),
-            lambda s2, d: stream_sessionize(read_events_stream(s2, d)),
-            clone=lambda stage: gate._python_state_session(spark),
+            gate._sessionize_stream,
         )
 
     spark.stop()
