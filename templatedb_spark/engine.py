@@ -53,14 +53,6 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     return out
 
 
-def extract_select_aliases(sql: str) -> dict[str, str]:
-    """Map select-list alias → source expression (textual).
-    Token-based (quote/paren-aware) since round 4 — see sqlparse.py."""
-    from templatedb_spark import sqlparse
-
-    return sqlparse.select_aliases(sql)
-
-
 class Engine:
     """Session + catalog + sql() entry. The reference's `Database::run(sql)`
     (src/query_engine/src/db.rs:125-168) equivalent, where stages 2-6 are Catalyst.

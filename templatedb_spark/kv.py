@@ -36,9 +36,15 @@ Spark job. Scans and snapshots merge with one window over key (hash-shuffled
 by key, no global sort except for ordered scans); a version whose every
 bucket is read is passed as ONE root, so a read over up to 32 such
 versions (spark.sql.sources.parallelPartitionDiscovery.threshold) starts no
-file-listing job. Hash-layout writes shuffle by bucket without a partition
-count, so AQE sizes them (see KVTable._write_version_df). Compaction bounds
-the number of deltas merged per read, same role it plays in the LSM.
+file-listing job. Compaction bounds the number of deltas merged per read,
+same role it plays in the LSM.
+
+Both backends share one protocol. Every version — a batch write, a
+compaction base, a compact_range rewrite, a MergeKVTable state — is written
+by KVTable._write_version and committed by one manifest record; every read
+opens what KVTable._resolve picks from the manifest; both compactions
+publish through KVTable._publish. MergeKVTable differs only in the rows a
+version holds (_version_rows) and in reading just its latest version.
 """
 
 from __future__ import annotations
@@ -46,8 +52,10 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 import threading
 import zlib
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -118,6 +126,28 @@ def _bucket_col() -> Column:
     return F.pmod(F.crc32(F.col("key").cast("binary")), F.lit(_KV_BUCKETS)).cast("int")
 
 
+def _kv_cols() -> list[Column]:
+    """key, value and op as strings (a caller's change batch may carry
+    other types)."""
+    return [F.col(c).cast("string").alias(c) for c in ("key", "value", "op")]
+
+
+def _bucket_ids(root: Path) -> list[int]:
+    """Bucket ids of one version dir, from its bucket=B subdirs."""
+    return sorted(int(b.name.split("=")[1]) for b in root.glob("bucket=*") if b.is_dir())
+
+
+def _concurrently(calls: list) -> list:
+    """Run independent Spark writes one thread each (guide §2.6: the next
+    write's tasks back-fill the tail of the previous one) and return their
+    results in order. A lone call runs inline, in the caller's thread and
+    so in its job group."""
+    if len(calls) <= 1:
+        return [c() for c in calls]
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        return [f.result() for f in [pool.submit(c) for c in calls]]
+
+
 def _obs_range(obs: Observation) -> tuple[str | None, str | None]:
     """Key range observed during a write job, tolerant of plans where the
     CollectMetrics node was optimized away — AQE's empty-relation propagation
@@ -133,6 +163,11 @@ def _obs_range(obs: Observation) -> tuple[str | None, str | None]:
 
 class KVTable:
     """Ordered, versioned key-value table over parquet delta files."""
+
+    # True when every version holds the whole live state (MergeKVTable):
+    # reads open only the newest version, and an all-deleted state is a
+    # legitimate empty version
+    _complete_states = False
 
     def __init__(
         self,
@@ -466,15 +501,7 @@ class KVTable:
                 ):
                     orphans.append(p)
                     continue
-                state[v] = {
-                    "buckets": sorted(
-                        int(b.name.split("=")[1])
-                        for b in p.glob("bucket=*")
-                        if b.is_dir()
-                    ),
-                    "kmin": None,
-                    "kmax": None,
-                }
+                state[v] = {"buckets": _bucket_ids(p), "kmin": None, "kmax": None}
         for p in orphans:
             self._quarantine(p)
         if state:
@@ -504,8 +531,6 @@ class KVTable:
         next write_batch re-derives the same v from the manifest and the
         errorifexists write fails forever — the one crash window the round-4
         review found in the manifest design."""
-        import shutil
-
         d = Path(f"{self.path}/version={v}")
         if d.exists():
             shutil.rmtree(d, ignore_errors=True)
@@ -616,60 +641,68 @@ class KVTable:
             out[b] = (min(mins), max(maxs))
         return out
 
-    def _write_version_df(
+    def _write_version(
         self,
         rows: DataFrame,
         v: int,
         known_range: tuple[str, str] | None = None,
-        allow_empty: bool = False,
         n_rows_hint: int | None = None,
+        allow_empty: bool = False,
+        rewrite_of: tuple[int, list[int]] | None = None,
     ) -> dict | None:
-        """Shuffle + write one version directory in the table's layout and
-        return its manifest meta ({"buckets", "kmin", "kmax"
-        [, "bucket_ranges"]}). An empty batch removes the directory and
-        returns None — unless allow_empty (MergeKVTable commits complete
-        states, and an all-deleted state is a legitimate empty version).
+        """Write version v from (key, value, op) `rows` — the one version
+        write of both backends — and return its manifest meta ({"buckets",
+        "kmin", "kmax"[, "bucket_ranges"]}): project the (key, value, op,
+        version) rows, shuffle them in the table's layout, run the single
+        errorifexists parquet write, list the written buckets and harvest
+        the key range. An empty version removes its directory and returns
+        None, unless allow_empty (a full compaction's base and a
+        MergeKVTable state are published even when nothing is live).
 
         hash layout: crc32(key) % B shuffle with no partition count, which
-        AQE sizes to the data; the global key range rides the write job as
-        an Observation (zero extra jobs) unless the caller already knows it
-        (driver-side dict batches).
+        AQE sizes to the data; the key range rides the write job as an
+        Observation (zero extra jobs) unless the caller knows it
+        (driver-side dict batches, rewrites of a recorded version).
         range layout: repartitionByRange(key) + sortWithinPartitions(key) —
         each bucket is a key-sorted, range-disjoint run (the sorted
         SSTable); per-bucket smallest/largest are harvested from the
         parquet footers afterwards (see _bucket_key_ranges). The extra
-        range-boundary sampling job is the LSM's sort cost.
+        range-boundary sampling job is the LSM's sort cost. n_rows_hint
+        narrows a small range write to ~32 rows per bucket, so a 30-row
+        sketch batch writes one file from one task instead of paying a
+        _KV_BUCKETS-task shuffle (~400 ms of task overhead per micro-write
+        in the streaming KV chains); the bucket count is per-version
+        metadata, so fewer buckets only coarsen pruning. Hash writes ignore
+        the hint.
 
-        n_rows_hint (r10, guide §6 output sizing) sizes range-layout writes
-        only: a tiny version writes from 1 task into 1 bucket instead of
-        paying a fixed _KV_BUCKETS-task shuffle for 32 rows (measured: each
-        16-task micro-write stage cost ~400 ms of pure task overhead in the
-        streaming KV chains). The range bucket COUNT per version is already
-        per-version metadata, so fewer buckets for fewer rows just means
-        coarser (still correct) pruning on micro-versions. Unknown hint
-        (distributed batches, compactions) keeps the full-width range
-        layout."""
-        import shutil
-
+        rewrite_of=(o, carried) makes this a compact_range rewrite of
+        version o: every row keeps the bucket id it was read with, so
+        rewritten and carried buckets share one id space and a range bucket
+        stays range-disjoint, and o's `carried` bucket dirs are hardlinked
+        in unchanged (see _link)."""
         root = Path(f"{self.path}/version={v}")
         self._clear_orphan(v)
+        out = rows.select(
+            *_kv_cols(),
+            F.lit(v).cast("long").alias("version"),
+            *(["bucket"] if rewrite_of else []),
+        )
         obs: Observation | None = None
-        if self.layout == "range":
-            # ~32 rows/bucket floor: a 200-row batch still fans to 7 disjoint
-            # range buckets (pruning stays real); a 30-row sketch batch
-            # writes one file from one task
+        if rewrite_of:
+            out = out.repartition(F.col("bucket")).sortWithinPartitions("bucket", "key")
+        elif self.layout == "range":
             width = (
                 _KV_BUCKETS
                 if n_rows_hint is None
                 else min(_KV_BUCKETS, max(1, (n_rows_hint + 31) // 32))
             )
             out = (
-                rows.repartitionByRange(width, F.col("key"))
+                out.repartitionByRange(width, F.col("key"))
                 .sortWithinPartitions("key")
                 .withColumn("bucket", F.spark_partition_id())
             )
         else:
-            out = rows.withColumn("bucket", _bucket_col())
+            out = out.withColumn("bucket", _bucket_col())
             if known_range is None:
                 obs = Observation()
                 out = out.observe(
@@ -680,39 +713,102 @@ class KVTable:
             # while the task count follows the data size
             out = out.repartition(F.col("bucket"))
         out.write.mode("errorifexists").partitionBy("bucket").parquet(str(root))
-        buckets = sorted(
-            int(b.name.split("=")[1]) for b in root.glob("bucket=*") if b.is_dir()
-        )
+        if rewrite_of:
+            self._link(rewrite_of[0], v, rewrite_of[1])
+        buckets = _bucket_ids(root)
         if not buckets:
             if allow_empty:
                 return {"buckets": []}
             shutil.rmtree(root, ignore_errors=True)
             return None
-        if self.layout == "range":
-            meta: dict = {"buckets": buckets}
-            ranges = self._bucket_key_ranges(v, buckets)
-            if ranges:
-                meta["bucket_ranges"] = ranges
-                meta["kmin"] = min(r[0] for r in ranges.values())
-                meta["kmax"] = max(r[1] for r in ranges.values())
-            elif known_range is not None:
-                meta["kmin"], meta["kmax"] = known_range
-            return meta
-        kmin, kmax = known_range if known_range is not None else _obs_range(obs)
+        ranges = self._bucket_key_ranges(v, buckets) if self.layout == "range" else None
+        if ranges:
+            return {
+                "buckets": buckets,
+                "bucket_ranges": ranges,
+                "kmin": min(r[0] for r in ranges.values()),
+                "kmax": max(r[1] for r in ranges.values()),
+            }
+        kmin, kmax = known_range or (_obs_range(obs) if obs else (None, None))
         return {"buckets": buckets, "kmin": kmin, "kmax": kmax}
 
-    def _commit_version(
-        self, v: int, kmin: str | None = None, kmax: str | None = None
-    ) -> None:
-        """Record a just-written delta dir in the manifest (the commit),
-        with the version's key range when the writer knows it."""
-        root = Path(f"{self.path}/version={v}")
-        buckets = sorted(
-            int(b.name.split("=")[1]) for b in root.glob("bucket=*") if b.is_dir()
+    def _link(self, o: int, v: int, buckets: list[int] | None = None) -> None:
+        """Hardlink version=o's files under version=v (same filesystem —
+        both live in the table dir): the whole version for buckets=None,
+        else only those bucket dirs. The version of a row is read from the
+        directory name (see _read), so the link IS the renumbered version.
+        Linking into an existing version dir is fine: the Spark write that
+        created it owns disjoint bucket ids."""
+        src, dst = Path(f"{self.path}/version={o}"), Path(f"{self.path}/version={v}")
+        for r in [src] if buckets is None else [src / f"bucket={b}" for b in buckets]:
+            for sdir, _dirs, files in os.walk(r):
+                ddir = dst / Path(sdir).relative_to(src)
+                ddir.mkdir(parents=True, exist_ok=True)
+                for fn in files:
+                    os.link(Path(sdir) / fn, ddir / fn)
+
+    def _commit(
+        self,
+        batches: list[DataFrame],
+        tag: str | None = None,
+        n_rows_hint: int | None = None,
+        known_range: tuple[str, str] | None = None,
+    ) -> list[int]:
+        """The commit path of every batch write: one version per change
+        batch, numbered in list order up front, written concurrently (see
+        _concurrently), and committed by appending the manifest records IN
+        VERSION ORDER after every write landed. The append-is-the-commit
+        contract holds: a crash anywhere leaves either nothing (the dirs are
+        orphans, invisible, reclaimed on number reuse) or a clean prefix of
+        the batches, exactly the states a sequential caller could observe.
+        An empty batch commits nothing and its number is skipped (numbering
+        need not be dense: reads order by the recorded versions). `tag` is
+        recorded with the version (single-batch callers). The hints describe
+        the change rows, so they are dropped where a version holds a whole
+        state instead. Returns the committed versions."""
+        v0 = self.latest_version() + 1
+        changes: list[DataFrame | None] = list(batches)
+        if self._complete_states:
+            # a whole-state version of an empty batch still holds the
+            # previous state, so its write cannot tell that the batch was
+            # empty: check first (a dict batch, whose range is known, is not)
+            if known_range is None:
+                changes = [None if c.isEmpty() else c for c in changes]
+            known_range = n_rows_hint = None
+        rows = self._version_rows(changes)
+        todo = [(v0 + i, r) for i, r in enumerate(rows) if r is not None]
+        metas = _concurrently(
+            [
+                functools.partial(
+                    self._write_version,
+                    r,
+                    v,
+                    known_range=known_range,
+                    n_rows_hint=n_rows_hint,
+                    allow_empty=self._complete_states,
+                )
+                for v, r in todo
+            ]
         )
-        self._append_manifest(
-            self._add_record(v, {"buckets": buckets, "kmin": kmin, "kmax": kmax})
-        )
+        committed: list[int] = []
+        for (v, _), meta in zip(todo, metas):
+            if meta is None:
+                continue  # empty batch: no data dirs — no commit
+            if tag is not None:
+                meta["tag"] = tag
+            self._append_manifest(self._add_record(v, meta))
+            committed.append(v)
+        if committed:
+            self._maybe_auto_compact()
+        return committed
+
+    def _version_rows(
+        self, changes: list[DataFrame | None]
+    ) -> list[DataFrame | None]:
+        """The rows each change batch's version holds; None stays None (a
+        batch known to be empty commits nothing). A merge-on-read version
+        holds the changes themselves, and its write finds an empty one."""
+        return changes
 
     # -- versions -----------------------------------------------------------
     def _versions(self) -> list[int]:
@@ -732,28 +828,19 @@ class KVTable:
         sequential record apply (last op for a key wins). The put row is
         dropped at write time, so a version never contains two rows for one
         key and the merge-on-read window has no tie to break; MergeKVTable
-        applies the same rule, so both backends agree deterministically.
+        applies the same rows, so both backends agree deterministically.
         """
-        v = self.latest_version() + 1
         dels = set(deletes or [])
-        rows = [(k, val, "put", v) for k, val in (puts or {}).items() if k not in dels]
-        rows += [(k, None, "del", v) for k in dels]
+        rows = [(k, val, "put") for k, val in (puts or {}).items() if k not in dels]
+        rows += [(k, None, "del") for k in dels]
         if not rows:
             return self.latest_version()
-        df = local_df(self.spark, rows, _SCHEMA)
-        # the layout-specific shuffle co-locates buckets → exactly one file
-        # per bucket dir; without it every input slice writes its own sliver
-        # into every bucket (32 slices × 16 buckets = hundreds of tiny files
-        # per version). Driver-side batch: the key range is free.
-        keys = [r[0] for r in rows]
-        meta = self._write_version_df(
-            df, v, known_range=(min(keys), max(keys)), n_rows_hint=len(rows)
-        )
-        if meta is None:
-            return self.latest_version()
-        self._append_manifest(self._add_record(v, meta))
-        self._maybe_auto_compact()
-        return v
+        keys = [r[0] for r in rows]  # driver-side batch: the key range is free
+        return self._commit(
+            [local_df(self.spark, rows, "key string, value string, op string")],
+            n_rows_hint=len(rows),
+            known_range=(min(keys), max(keys)),
+        )[0]
 
     @_locked
     def write_batch_df(
@@ -771,7 +858,7 @@ class KVTable:
         `n_rows_hint`: callers that know the batch is driver-sized (sketch
         merges, bounded view states) pass the row count so a range-layout
         version write narrows instead of paying the full bucket-range width;
-        hash-layout writes are sized by AQE (see _write_version_df).
+        hash-layout writes are sized by AQE (see _write_version).
 
         Contract matches write_batch: op in ('put','del'), and at most one
         row per key per batch — the caller's responsibility (the streaming
@@ -796,27 +883,8 @@ class KVTable:
             hit = self._tag_version(tag)
             if hit is not None:
                 return hit  # replayed micro-batch: already committed
-        v = self.latest_version() + 1
-        out = changes.select(
-            F.col("key").cast("string").alias("key"),
-            F.col("value").cast("string").alias("value"),
-            F.col("op").cast("string").alias("op"),
-            F.lit(v).cast("long").alias("version"),
-        )
-        # hash layout: an Observation piggybacks the key-range aggregate on
-        # the write job itself (zero extra Spark jobs — the streaming commit
-        # path stays one job per micro-batch); range layout harvests exact
-        # per-bucket ranges from the parquet footers instead. Either way
-        # this is the LSM recording each file's smallest/largest key as it
-        # seals the SSTable.
-        meta = self._write_version_df(out, v, n_rows_hint=n_rows_hint)
-        if meta is None:  # empty batch: no data dirs were produced — no commit
-            return self.latest_version()
-        if tag is not None:
-            meta["tag"] = tag
-        self._append_manifest(self._add_record(v, meta))
-        self._maybe_auto_compact()
-        return v
+        vs = self._commit([changes], tag=tag, n_rows_hint=n_rows_hint)
+        return vs[0] if vs else self.latest_version()
 
     @_locked
     def write_batches_df(
@@ -825,58 +893,17 @@ class KVTable:
         n_rows_hint: int | None = None,
     ) -> list[int]:
         """Commit several INDEPENDENT change batches as consecutive versions
-        with their Spark write jobs running CONCURRENTLY (guide §2.6 —
-        overlap independent jobs so the next write's tasks back-fill the
-        tail of the previous one). Semantically identical to calling
-        write_batch_df once per batch in list order: version numbers are
-        allocated in that order up front, each batch's delta directory is
-        written by its own thread, and the manifest records are appended
-        IN VERSION ORDER only after every write landed — so the append-is-
-        the-commit contract holds and a crash anywhere leaves either
-        nothing (all dirs orphaned, invisible, reclaimed on number reuse)
-        or a clean prefix of the batches committed, exactly the states a
-        sequential caller could observe. Callers are responsible for the
-        batches being truly independent (disjoint keys, as the write_batch
-        contract already requires at most one row per key per batch) —
-        otherwise ordering between them is meaningless anyway, since each
-        batch is its own atomic version and later versions shadow earlier
-        ones per key regardless of wall-clock write order.
-
-        An empty batch commits nothing (its version number is skipped —
-        numbering is not required to be dense anywhere: reads order by the
-        recorded version values, recovery walks recorded dirs). Returns the
-        committed version per non-empty batch."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if not batches:
-            return []
-        v0 = self.latest_version() + 1
-        outs = [
-            b.select(
-                F.col("key").cast("string").alias("key"),
-                F.col("value").cast("string").alias("value"),
-                F.col("op").cast("string").alias("op"),
-                F.lit(v0 + i).cast("long").alias("version"),
-            )
-            for i, b in enumerate(batches)
-        ]
-        with ThreadPoolExecutor(max_workers=len(outs)) as pool:
-            metas = list(
-                pool.map(
-                    lambda iv: self._write_version_df(
-                        iv[1], v0 + iv[0], n_rows_hint=n_rows_hint
-                    ),
-                    enumerate(outs),
-                )
-            )
-        committed: list[int] = []
-        for i, meta in enumerate(metas):
-            if meta is None:
-                continue  # empty batch: no data dirs — no commit
-            self._append_manifest(self._add_record(v0 + i, meta))
-            committed.append(v0 + i)
-        self._maybe_auto_compact()
-        return committed
+        whose Spark write jobs run CONCURRENTLY (guide §2.6). Semantically
+        identical to calling write_batch_df once per batch in list order
+        (see _commit): the same version numbers, an empty batch's number
+        skipped, the same states. Callers keep the batches independent
+        (disjoint keys, as the write_batch contract already requires at
+        most one row per key per batch) — otherwise ordering between them
+        is meaningless anyway, since each batch is its own atomic version
+        and later versions shadow earlier ones per key regardless of
+        wall-clock write order. Returns the committed version per non-empty
+        batch."""
+        return self._commit(batches, n_rows_hint=n_rows_hint)
 
     def _tag_version(self, tag: str) -> int | None:
         """Version committed under `tag`, or None (see write_batch_df)."""
@@ -895,105 +922,63 @@ class KVTable:
         return self.write_batch(deletes=[key])
 
     # -- reads --------------------------------------------------------------
-    @staticmethod
-    def _intersects(meta: dict, start: str | None, end: str | None) -> bool:
-        """Does version range [kmin, kmax] (inclusive actual keys) intersect
-        the query range [start, end)? Unknown metadata → True (conservative:
-        pruning may be lost, correctness never)."""
-        return _range_intersects((meta.get("kmin"), meta.get("kmax")), start, end)
-
-    def _version_buckets(
-        self, meta: dict, start: str | None = None, end: str | None = None
-    ) -> list[int]:
-        """Bucket ids of one version, pruned to [start, end) when the
-        manifest recorded per-bucket key ranges (range layout) — the LSM
-        skipping SSTables whose smallest/largest miss the query. Buckets
-        without a recorded range stay in (conservative)."""
-        bs = meta["buckets"]
-        branges = meta.get("bucket_ranges")
-        if branges and (start is not None or end is not None):
-            bs = [b for b in bs if _range_intersects(branges.get(b), start, end)]
-        return bs
-
-    def _version_bucket_paths(
-        self, v: int, meta: dict, start: str | None = None, end: str | None = None
-    ) -> list[str]:
-        """Bucket leaf dirs of one version, pruned as in _version_buckets."""
-        return [
-            f"{self.path}/version={v}/bucket={b}"
-            for b in self._version_buckets(meta, start, end)
-        ]
-
-    def _version_roots(self, v: int, buckets: list[int], meta: dict) -> list[str]:
-        """Read roots for `buckets` of version v: the version dir itself when
-        they are every bucket the manifest lists for it, else the bucket leaf
-        dirs. One root per version instead of up to B keeps a multi-version
-        read under spark.sql.sources.parallelPartitionDiscovery.threshold, so
-        opening the read starts no file-listing job."""
-        if buckets and set(buckets) == set(meta["buckets"]):
-            return [f"{self.path}/version={v}"]
-        return [f"{self.path}/version={v}/bucket={b}" for b in buckets]
-
-    def _live_versions(
+    def _resolve(
         self,
         as_of: int | None = None,
         start: str | None = None,
         end: str | None = None,
-    ) -> list[tuple[int, dict]]:
-        # resolved purely from the manifest: no directory stats on the read
-        # path. start/end prune WHOLE VERSIONS whose recorded key range
-        # misses [start, end) — sound for merge-on-read because a version
-        # with no in-range key contributes no row to any in-range key's
-        # merge window (the LSM's smallest/largest SSTable skip).
-        state = self._load_manifest()
-        return [
-            (v, state[v])
-            for v in sorted(state)
-            if (as_of is None or v <= as_of) and self._intersects(state[v], start, end)
-        ]
-
-    def _delta_paths(
-        self,
-        as_of: int | None = None,
         bucket: int | None = None,
-        start: str | None = None,
-        end: str | None = None,
-    ) -> list[str]:
-        """Bucket leaf dirs a read must open: `bucket` picks one bucket per
-        version (hash-layout point read), None every bucket surviving the
-        range pruning."""
-        out: list[str] = []
-        for v, meta in self._live_versions(as_of, start, end):
-            if bucket is None:
-                out.extend(self._version_bucket_paths(v, meta, start, end))
-            elif bucket in meta["buckets"]:
-                out.append(f"{self.path}/version={v}/bucket={bucket}")
-        return out
+    ) -> dict[int, list[int] | None]:
+        """What a read opens, resolved purely from the manifest (no
+        directory stats on the read path): {version: bucket ids, or None for
+        every bucket}, ascending. Versions above as_of are skipped, and a
+        complete-state table reads only the newest one left. A version whose
+        recorded key range misses [start, end) is pruned — sound for
+        merge-on-read because it contributes no row to any in-range key's
+        merge window (the LSM's smallest/largest SSTable skip) — and so is
+        every bucket whose recorded range misses it (range layout). `bucket`
+        keeps only that bucket (hash-layout point read). Unknown ranges
+        never prune: pruning may be lost, correctness never."""
+        state = self._load_manifest()
+        vs = [v for v in sorted(state) if as_of is None or v <= as_of]
+        if self._complete_states:
+            vs = vs[-1:]
+        plan: dict[int, list[int] | None] = {}
+        for v in vs:
+            meta = state[v]
+            if not _range_intersects((meta.get("kmin"), meta.get("kmax")), start, end):
+                continue
+            ranges = meta.get("bucket_ranges") or {}
+            bs = [
+                b
+                for b in meta["buckets"]
+                if bucket in (None, b) and _range_intersects(ranges.get(b), start, end)
+            ]
+            if bs:
+                plan[v] = None if len(bs) == len(meta["buckets"]) else bs
+        return plan
 
-    def _delta_roots(
-        self,
-        as_of: int | None = None,
-        start: str | None = None,
-        end: str | None = None,
-    ) -> list[str]:
-        """The dirs of _delta_paths(as_of, start=start, end=end), as read
-        roots (see _version_roots)."""
-        return [
+    def _read(self, plan: dict[int, list[int] | None]) -> DataFrame | None:
+        """The rows of a _resolve plan. A whole version is ONE root instead
+        of up to B bucket dirs, which keeps a multi-version read under
+        spark.sql.sources.parallelPartitionDiscovery.threshold, so opening
+        it starts no file-listing job. version and bucket are partition
+        columns parsed from the dir names under basePath; the partition
+        value overrides the `version` data column, which a hardlinked
+        version still carries from its old number (see compact_range). Both
+        are deterministic, so key predicates reach the parquet scan as
+        pushed filters."""
+        roots = [
             root
-            for v, meta in self._live_versions(as_of, start, end)
-            for root in self._version_roots(
-                v, self._version_buckets(meta, start, end), meta
+            for v, bs in plan.items()
+            for root in (
+                [f"{self.path}/version={v}"]
+                if bs is None
+                else [f"{self.path}/version={v}/bucket={b}" for b in bs]
             )
         ]
-
-    def _read_deltas(self, roots: list[str]) -> DataFrame | None:
         if not roots:
             return None
-        # version and bucket are partition columns parsed from the dir names
-        # under basePath. The partition value overrides the `version` data
-        # column, which a hardlink-cloned version still carries from its old
-        # number (see compact_range). Both are deterministic, so key
-        # predicates reach the parquet scan as pushed filters.
         return (
             self.spark.read.schema(_SCHEMA + ", bucket int")
             .option("basePath", self.path)
@@ -1007,14 +992,17 @@ class KVTable:
     ) -> DataFrame:
         """Merged (key, value) state at a version — MVCC read (snapshot.rs:9-32).
 
-        key_range=[start, end) restricts the merge to versions whose
-        recorded key range intersects it (version-level pruning for range
-        scans); the caller still applies the exact row filter — pruning is
-        a superset guarantee, not the predicate."""
+        key_range=[start, end) restricts the read to versions and buckets
+        whose recorded key range intersects it (see _resolve); the caller
+        still applies the exact row filter — pruning is a superset
+        guarantee, not the predicate. A complete-state version needs no
+        merge window."""
         start, end = key_range if key_range else (None, None)
-        deltas = self._read_deltas(self._delta_roots(as_of, start, end))
+        deltas = self._read(self._resolve(as_of, start, end))
         if deltas is None:
             return empty_df(self.spark, "key string, value string")
+        if self._complete_states:
+            return deltas.select("key", "value")
         w = Window.partitionBy("key").orderBy(F.col("version").desc())
         return (
             deltas.withColumn("rn", F.row_number().over(w))
@@ -1029,16 +1017,12 @@ class KVTable:
         to parquet; versions whose recorded key range excludes the key are
         skipped entirely (the smallest/largest SSTable check before the
         bloom). Hash layout finds the bucket by hashing the key; range
-        layout finds it through the manifest's per-bucket ranges (the same
-        start/end parameters drive _version_bucket_paths)."""
-        deltas = self._read_deltas(
-            self._delta_paths(
-                as_of,
-                bucket=bucket_of(key) if self.layout == "hash" else None,
-                start=key,
-                end=key + "\x00",
-            )
-        )
+        layout finds it through the manifest's per-bucket ranges. A
+        complete-state table reads only its newest version: an older one may
+        still hold a key that state deleted (complete states carry no
+        tombstones)."""
+        bucket = bucket_of(key) if self.layout == "hash" else None
+        deltas = self._read(self._resolve(as_of, key, key + "\x00", bucket))
         return None if deltas is None else deltas.filter(F.col("key") == key)
 
     def get(self, key: str, as_of: int | None = None) -> str | None:
@@ -1056,7 +1040,7 @@ class KVTable:
     def scan(self, start: str | None = None, end: str | None = None, as_of: int | None = None) -> DataFrame:
         """Ordered range scan [start, end) — the LSM `iter` (db_iter.rs).
         Versions whose manifest key range misses [start, end) are pruned
-        before any file is opened (see _delta_paths); the exact row filter
+        before any file is opened (see _resolve); the exact row filter
         below is still applied on what remains."""
         df = self.snapshot(as_of, key_range=(start, end))
         if start is not None:
@@ -1070,37 +1054,25 @@ class KVTable:
         return self.scan(start, end).count()
 
     # -- maintenance --------------------------------------------------------
-    @_locked
+    def _publish(self, state: dict[int, dict], floor: int, old_versions) -> None:
+        """Publish a compaction, in the order crash recovery relies on: the
+        manifest SNAPSHOT first (atomic rename, the version_set.rs
+        WriteSnapshot analogue — a crash afterwards leaves only invisible
+        orphan dirs, never a manifest pointing at deleted data), then the
+        FLOOR marker (a manifest lost mid-cleanup must not resurrect the
+        retired versions, see _bump_floor), and only then the rmtree of
+        every old version the new state no longer lists."""
+        self._write_manifest_snapshot(state)
+        self._bump_floor(floor)
+        for o in old_versions:
+            if o not in state:
+                shutil.rmtree(f"{self.path}/version={o}", ignore_errors=True)
+
     def compact(self) -> int:
-        """Collapse history into a single base version (compact_range parity).
-
-        Manifest discipline (version_set.rs WriteSnapshot analogue): the new
-        base is published as a one-line manifest SNAPSHOT via atomic rename
-        BEFORE old directories are removed — a crash mid-cleanup leaves only
-        invisible orphan dirs, never a manifest pointing at deleted data.
-        """
-        old_versions = self._versions()
-        state = self.snapshot().withColumn("op", F.lit("put"))
-        v = self.latest_version() + 1
-        out = state.withColumn("version", F.lit(v).cast("long")).select(
-            "key", "value", "op", "version"
-        )
-        # same one-file-per-bucket discipline as write_batch — the compacted
-        # base is the version every subsequent read opens. allow_empty keeps
-        # the historical contract that compacting an all-deleted table still
-        # publishes the (empty) base version.
-        meta = self._write_version_df(out, v, allow_empty=True)
-        self._write_manifest_snapshot({v: meta})
-        # floor BEFORE cleanup: if the manifest is lost while the rmtrees
-        # below are still running, recovery must not resurrect the retired
-        # versions (see _bump_floor)
-        self._bump_floor(v)
-        import shutil
-
-        for old in old_versions:
-            if old != v:
-                shutil.rmtree(f"{self.path}/version={old}", ignore_errors=True)
-        return v
+        """Collapse history into a single base version (compact_range parity):
+        compact_range with no bounds, where every version is retired into the
+        merged base. The base is published even when no key is live."""
+        return self.compact_range()
 
     @_locked
     def compact_range(self, start: str | None = None, end: str | None = None) -> int:
@@ -1112,30 +1084,34 @@ class KVTable:
         rewritten history, so no older put can resurrect), while
         out-of-range keys keep their full delta history and its relative
         shadowing order, rewritten under fresh ascending version numbers.
-        With both bounds None this degenerates to compact().
+        Returns the base's version number; an empty table returns -1.
 
-        Layout note: our buckets are HASH buckets (point-read pruning), so a
-        key range maps to every bucket WITHIN a version — but versions whose
-        manifest key range [kmin, kmax] misses [start, end) are skipped
-        without a rewrite: their directories are HARDLINK-cloned under the
-        new version number (metadata-only, no data IO, no Spark job) — the
+        Per old version, from its manifest record: a version whose recorded
+        key range lies wholly inside [start, end) — every version when both
+        bounds are None, which is compact() — is retired without a rewrite
+        (the base holds what is left of its keys). A version that no read of
+        [start, end) would open (see _resolve) is HARDLINK-cloned under its
+        new number (metadata-only, no data IO, no Spark job) — the
         reference's ordered SSTables skipping non-overlapping files
-        (version_edit smallest/largest). The clone, not a rename, keeps the
-        OLD directory untouched until the manifest snapshot publishes, so a
-        crash at any point pre-publish leaves the previous state fully
-        intact. Versions without range metadata (legacy/recovered) are
-        conservatively rewritten. Like compact(), the operation invalidates
-        as_of reads of pre-compaction versions; the manifest snapshot is
-        published via atomic rename BEFORE old dirs are removed, and the
-        FLOOR marker is bumped before cleanup so a lost manifest
-        mid-cleanup cannot resurrect retired versions."""
-        import shutil
+        (version_edit smallest/largest). The rest is rewritten without its
+        in-range rows; in the range layout only its buckets that overlap
+        [start, end) are read and rewritten and the others are hardlinked
+        into the new version (the LSM rewriting only the SSTables the range
+        touches). Versions without range metadata (legacy/recovered) are
+        conservatively rewritten. Clones, not renames, keep the OLD
+        directories untouched until the manifest snapshot publishes, so a
+        crash at any point pre-publish leaves the previous state intact.
 
-        old_versions = self._versions()
-        if not old_versions:
+        Version numbers are assigned in one serial pass (each old version
+        takes the next number whether or not it survives); the base write
+        and the rewrites then run concurrently — they read only
+        pre-compaction dirs and write disjoint new dirs, and nothing
+        publishes until _publish, so the crash states are exactly a serial
+        loop's: invisible orphans. The operation invalidates as_of reads of
+        pre-compaction versions."""
+        mstate = self._load_manifest()
+        if not mstate:
             return -1
-        if start is None and end is None:
-            return self.compact()
 
         def in_range(col: Column) -> Column:
             cond = F.lit(True)
@@ -1145,165 +1121,50 @@ class KVTable:
                 cond = cond & (col < end)
             return cond
 
-        state: dict[int, dict] = {}
-
-        def link_clone(o: int, v: int, buckets: list[int] | None = None) -> None:
-            """Hardlink version=o's files under version=v (same filesystem —
-            both live in the table dir); buckets=None clones the whole
-            version, a list clones only those bucket dirs (range layout's
-            non-overlapping SSTables carried forward file-by-file). The
-            effective version of a row is re-derived from the directory name
-            at read time (_read_deltas), so the clone IS the renumbered
-            version. Links into an existing version dir are fine — the
-            Spark write that created it owns disjoint bucket ids."""
-            if buckets is None:
-                self._clear_orphan(v)
-            src, dst = Path(f"{self.path}/version={o}"), Path(f"{self.path}/version={v}")
-            roots = (
-                [src] if buckets is None else [src / f"bucket={b}" for b in buckets]
+        def rewrite(o: int, hit: list[int] | None, nv: int, meta: dict) -> dict | None:
+            carried = [] if hit is None else [b for b in meta["buckets"] if b not in hit]
+            lo, hi = meta.get("kmin"), meta.get("kmax")
+            # the old range is a superset of the kept rows' range: sound
+            known = (lo, hi) if lo is not None and hi is not None else None
+            rows = self._read({o: hit}).filter(~in_range(F.col("key")))
+            return self._write_version(
+                rows, nv, known_range=known, rewrite_of=(o, carried)
             )
-            for r in roots:
-                for sdir, _dirs, files in os.walk(r):
-                    ddir = dst / Path(sdir).relative_to(src)
-                    ddir.mkdir(parents=True, exist_ok=True)
-                    for fn in files:
-                        os.link(Path(sdir) / fn, ddir / fn)
 
-        # merged in-range base (new lowest version — disjoint keys from the
-        # rewritten history, so relative position is irrelevant)
-        v = self.latest_version() + 1
+        v = max(mstate) + 1
+        hits = self._resolve(start=start, end=end)
         base = (
             self.snapshot(key_range=(start, end))
             .filter(in_range(F.col("key")))
-            .select(
-                "key",
-                "value",
-                F.lit("put").alias("op"),
-                F.lit(v).cast("long").alias("version"),
-            )
+            .withColumn("op", F.lit("put"))
         )
-        # out-of-range history: one version per old version, in the original
-        # ascending order (shadowing among surviving keys preserved — and
-        # preserved ACROSS cloned and rewritten versions, because both take
-        # their new numbers from the same ascending counter). The manifest
-        # is stable inside the write lock — read it once. Version numbers
-        # are assigned in this serial planning pass; the base write and the
-        # per-version rewrites then EXECUTE concurrently (guide §2.6 —
-        # they read only pre-compaction dirs and write disjoint new dirs,
-        # and nothing publishes until the manifest snapshot below, so the
-        # crash states are exactly the serial loop's: invisible orphans).
-        # Measured r11 (paired best-of-6 at sf0.1): kv_compact_range_state's
-        # compaction phase was the spec's largest serial run of mini jobs.
-        mstate = self._load_manifest()
-        nxt = v + 1
+        numbers = [v]
+        writes = [
+            functools.partial(
+                self._write_version, base, v, allow_empty=start is None and end is None
+            )
+        ]
         clones: list[tuple[int, int, dict]] = []
-        rewrites: list[tuple[int, int, list[int], list[int], dict]] = []
-        for o in old_versions:
-            meta_o = mstate.get(o, {"buckets": []})
-            if not self._intersects(meta_o, start, end):
-                # no in-range key can exist in this version: clone, don't
-                # rewrite — carry the (exact) old key range forward
-                clones.append((o, nxt, dict(meta_o)))
-                nxt += 1
-                continue
-            # range layout records per-bucket key ranges: rewrite ONLY the
-            # buckets overlapping [start, end) and hardlink-clone the rest —
-            # the LSM rewriting only the SSTables the range touches. Hash
-            # layout (or absent metadata) rewrites every bucket.
-            branges = meta_o.get("bucket_ranges")
-            if branges and set(branges) >= set(meta_o["buckets"]):
-                hit = [
-                    b
-                    for b in meta_o["buckets"]
-                    if _range_intersects(branges.get(b), start, end)
-                ]
-                miss = [b for b in meta_o["buckets"] if b not in set(hit)]
-            else:
-                hit, miss = list(meta_o["buckets"]), []
-            rewrites.append((o, nxt, hit, miss, meta_o))
-            nxt += 1
-
-        def rewrite_one(item: tuple) -> tuple[int, dict | None]:
-            o, nv, hit, miss, meta_o = item
-            branges = meta_o.get("bucket_ranges")
-            rows = self._read_deltas(self._version_roots(o, hit, meta_o))
-            self._clear_orphan(nv)
-            wrote: list[int] = []
-            if rows is not None:
-                # preserve each kept row's ORIGINAL bucket id (the partition
-                # column) so cloned and rewritten buckets share one
-                # consistent id space — and, for range layout, so every
-                # bucket keeps its range-disjointness. The un-numbered
-                # repartition lets AQE size the write (see _write_version_df)
-                kept = rows.filter(~in_range(F.col("key"))).select(
-                    "key",
-                    "value",
-                    "op",
-                    F.lit(nv).cast("long").alias("version"),
-                    "bucket",
-                )
-                kept = kept.repartition(F.col("bucket")).sortWithinPartitions(
-                    "bucket", "key"
-                )
-                kept.write.mode("errorifexists").partitionBy("bucket").parquet(
-                    f"{self.path}/version={nv}"
-                )
-                vroot = Path(f"{self.path}/version={nv}")
-                wrote = sorted(
-                    int(b.name.split("=")[1])
-                    for b in vroot.glob("bucket=*")
-                    if b.is_dir()
-                )
-            if miss:
-                link_clone(o, nv, buckets=miss)
-            buckets = sorted(set(wrote) | set(miss))
-            if not buckets:
-                shutil.rmtree(f"{self.path}/version={nv}", ignore_errors=True)
-                return nv, None
-            kmeta: dict = {"buckets": buckets}
-            if branges:
-                nr = {b: branges[b] for b in miss if b in branges}
-                wr = self._bucket_key_ranges(nv, wrote) if wrote else {}
-                if wr is not None:
-                    nr.update(wr)
-                    if nr:
-                        kmeta["bucket_ranges"] = nr
-                        kmeta["kmin"] = min(r[0] for r in nr.values())
-                        kmeta["kmax"] = max(r[1] for r in nr.values())
-            if (
-                "kmin" not in kmeta
-                and meta_o.get("kmin") is not None
-                and meta_o.get("kmax") is not None
+        for nv, (o, meta) in enumerate(sorted(mstate.items()), start=v + 1):
+            lo, hi = meta.get("kmin"), meta.get("kmax")
+            if not meta["buckets"] or (
+                (start is None or (lo is not None and lo >= start))
+                and (end is None or (hi is not None and hi < end))
             ):
-                # superset of the kept rows' true range — sound for pruning
-                kmeta["kmin"], kmeta["kmax"] = meta_o["kmin"], meta_o["kmax"]
-            return nv, kmeta
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1 + max(1, len(rewrites))) as pool:
-            base_fut = pool.submit(self._write_version_df, base, v)
-            rw_futs = [pool.submit(rewrite_one, it) for it in rewrites]
-            # no live in-range keys → _write_version_df drops the empty dir
-            # and returns None; numbering stays dense either way
-            meta = base_fut.result()
-            rw_results = [f.result() for f in rw_futs]
-        if meta is not None:
-            state[v] = meta
-        for o, nv, m in clones:
-            link_clone(o, nv)
-            state[nv] = m
-        for nv, kmeta in rw_results:
-            if kmeta is not None:
-                state[nv] = kmeta
-        self._write_manifest_snapshot(state)
-        # floor BEFORE cleanup — every surviving version number is ≥ v, so a
-        # recovery after manifest loss mid-cleanup quarantines the retired
-        # old dirs instead of resurrecting them
-        self._bump_floor(v)
-        for o in old_versions:
-            if o not in state:
-                shutil.rmtree(f"{self.path}/version={o}", ignore_errors=True)
+                continue  # no row outside [start, end): retired
+            if o not in hits:
+                clones.append((o, nv, meta))
+                continue
+            numbers.append(nv)
+            writes.append(functools.partial(rewrite, o, hits[o], nv, meta))
+        state = {
+            nv: meta for nv, meta in zip(numbers, _concurrently(writes)) if meta is not None
+        }
+        for o, nv, meta in clones:
+            self._clear_orphan(nv)
+            self._link(o, nv)
+            state[nv] = meta  # the clone holds exactly o's rows and range
+        self._publish(state, v, mstate)
         return v
 
 
@@ -1318,126 +1179,31 @@ class MergeKVTable(KVTable):
     needs no window; a point get reads one bucket dir of one version. At real
     scale the full-state rewrite becomes a partition-level rewrite of only the
     buckets a batch touches — the bucket layout here is exactly that unit.
+    Writes, reads and compaction run through KVTable's paths; this class
+    supplies only the rows a version holds (_version_rows).
     """
 
-    @_locked
-    def write_batch(self, puts: dict[str, str] | None = None, deletes: list[str] | None = None) -> int:
-        puts = puts or {}
-        deletes = deletes or []
-        if not puts and not deletes:
-            return self.latest_version()
-        v = self.latest_version() + 1
-        prev = self.snapshot()
-        changed = local_df(
-            self.spark, [(k,) for k in set(puts) | set(deletes)], "key string"
-        )
-        state = prev.join(changed, "key", "left_anti")
-        # delete-wins on a key in both maps — same contract as KVTable
-        live = {k: val for k, val in puts.items() if k not in set(deletes)}
-        if live:
-            state = state.unionByName(
-                local_df(self.spark, list(live.items()), "key string, value string")
+    _complete_states = True
+
+    def _version_rows(
+        self, changes: list[DataFrame | None]
+    ) -> list[DataFrame | None]:
+        """Each batch's version holds the complete state after it: the
+        previous state anti-joined with the batch's keys, plus its puts.
+        Every state builds on the one before, so the batches of one
+        write_batches_df call commit exactly the states sequential calls
+        would, while their writes still run concurrently."""
+        state, out = self.snapshot(), []
+        for ch in changes:
+            if ch is None:
+                out.append(None)
+                continue
+            ch = ch.select(*_kv_cols())  # typed keys for the join
+            state = state.join(ch.select("key"), "key", "left_anti").unionByName(
+                ch.filter(F.col("op") == "put").select("key", "value")
             )
-        out = state.select(
-            "key",
-            "value",
-            F.lit("put").alias("op"),
-            F.lit(v).cast("long").alias("version"),
-        )
-        # allow_empty: deleting the last live key legitimately commits an
-        # empty complete-state version (the live state IS empty)
-        meta = self._write_version_df(out, v, allow_empty=True)
-        self._append_manifest(self._add_record(v, meta))
-        self._maybe_auto_compact()
-        return v
-
-    @_locked
-    def write_batch_df(self, changes: DataFrame, tag: str | None = None) -> int:
-        """Distributed-changes twin of write_batch (see KVTable.write_batch_df
-        for the contract): the three-branch MERGE runs entirely as a
-        DataFrame plan — anti-join drops touched keys from the previous
-        state, the batch's puts union in. No driver materialization.
-        `tag` gives the same exactly-once replay skip as the base class —
-        doubly important here, where re-applying a replayed batch is NOT
-        value-idempotent at the version level (each apply rewrites a full
-        state version)."""
-        if tag is not None:
-            hit = self._tag_version(tag)
-            if hit is not None:
-                return hit  # replayed micro-batch: already committed
-        if changes.isEmpty():
-            return self.latest_version()
-        v = self.latest_version() + 1
-        ch = changes.select(
-            F.col("key").cast("string").alias("key"),
-            F.col("value").cast("string").alias("value"),
-            F.col("op").cast("string").alias("op"),
-        )
-        prev = self.snapshot()
-        state = prev.join(ch.select("key"), "key", "left_anti").unionByName(
-            ch.filter(F.col("op") == "put").select("key", "value")
-        )
-        out = state.select(
-            "key",
-            "value",
-            F.lit("put").alias("op"),
-            F.lit(v).cast("long").alias("version"),
-        )
-        meta = self._write_version_df(out, v, allow_empty=True)
-        if tag is not None:
-            meta["tag"] = tag
-        self._append_manifest(self._add_record(v, meta))
-        self._maybe_auto_compact()
-        return v
-
-    def snapshot(
-        self,
-        as_of: int | None = None,
-        key_range: tuple[str | None, str | None] | None = None,
-    ) -> DataFrame:
-        state = self._load_manifest()
-        vs = sorted(state)
-        if as_of is not None:
-            vs = [v for v in vs if v <= as_of]
-        if not vs:
-            return empty_df(self.spark, "key string, value string")
-        v = vs[-1]
-        if key_range and not self._intersects(state[v], *key_range):
-            # every version is complete state — a range miss on the live
-            # version means no in-range keys exist at all
-            return empty_df(self.spark, "key string, value string")
-        start, end = key_range if key_range else (None, None)
-        df = self._read_deltas(
-            self._version_roots(v, self._version_buckets(state[v], start, end), state[v])
-        )
-        if df is None:
-            return empty_df(self.spark, "key string, value string")
-        return df.select("key", "value")
-
-    def _point_deltas(self, key: str, as_of: int | None = None) -> DataFrame | None:
-        """Rows for `key` from ONLY the latest complete state at or below
-        as_of: an older version may still hold a key that state deleted
-        (complete states carry no tombstones), so KVTable.get's newest-row
-        read must not see older versions here."""
-        state = self._load_manifest()
-        vs = sorted(v for v in state if as_of is None or v <= as_of)
-        if not vs:
-            return None
-        v = vs[-1]
-        if not self._intersects(state[v], key, key + "\x00"):
-            return None  # key outside the live state's recorded range
-        if self.layout == "hash":
-            b = bucket_of(key)
-            if b not in state[v]["buckets"]:
-                return None
-            paths = [f"{self.path}/version={v}/bucket={b}"]
-        else:
-            # range layout: the manifest's per-bucket ranges locate the
-            # key's bucket(s); absent ranges degrade to all buckets
-            paths = self._version_bucket_paths(v, state[v], key, key + "\x00")
-        if not paths:
-            return None
-        return self._read_deltas(paths).filter(F.col("key") == key)
+            out.append(state.withColumn("op", F.lit("put")))
+        return out
 
     def compact_range(self, start: str | None = None, end: str | None = None) -> int:
         """Every version is already a COMPLETE merged state (merge-on-write),
@@ -1447,18 +1213,11 @@ class MergeKVTable(KVTable):
 
     @_locked
     def compact(self) -> int:
-        """State is already merged per version — compaction just drops history
-        (manifest snapshot first, then the FLOOR marker, directory cleanup
-        last; see KVTable.compact)."""
-        import shutil
-
+        """State is already merged per version — compaction just drops
+        history (published as in KVTable, see _publish)."""
         state = self._load_manifest()
         if not state:
             return -1
         v = max(state)
-        self._write_manifest_snapshot({v: state[v]})
-        self._bump_floor(v)
-        for old in state:
-            if old != v:
-                shutil.rmtree(f"{self.path}/version={old}", ignore_errors=True)
+        self._publish({v: state[v]}, v, state)
         return v

@@ -539,35 +539,44 @@ register(
 # 100 TB this is the difference between reading one status's files and
 # reading the table (partition pruning happens at PLANNING time from
 # directory metadata, before any I/O; tests/test_scale.py pins it via
-# inputFiles). The layout is written once per (app, sf) behind a lock and
-# reused — real warehouses pay the partitioned write once at ingest.
+# inputFiles). The layout is written once per (app, sf) and reused — real
+# warehouses pay the partitioned write once at ingest.
 # ---------------------------------------------------------------------------
-import tempfile as _tempfile
 import threading as _threading
 
-_PART_LAYOUT_MEMO: dict[tuple[str, str], str] = {}
-_PART_LAYOUT_LOCK = _threading.Lock()
+_LAYOUT_MEMO: dict[tuple[str, str, str], str] = {}
+_LAYOUT_LOCK = _threading.Lock()
+
+
+def _memo_layout(spark: SparkSession, sf_dir: str, prefix: str, write) -> str:
+    """A dir that `write(dir)` fills once per (app, sf_dir, prefix) and every
+    later call reuses. The dir outlives every lazy DataFrame built on it, so
+    it comes from drain.output_dir (removed at process exit). The write runs
+    under the lock: concurrent clients wait for one copy instead of each
+    writing their own."""
+    from templatedb_spark.streaming.drain import output_dir
+
+    key = (spark.sparkContext.applicationId, sf_dir, prefix)
+    with _LAYOUT_LOCK:
+        if key not in _LAYOUT_MEMO:
+            out = output_dir(prefix)
+            write(out)
+            _LAYOUT_MEMO[key] = out
+    return _LAYOUT_MEMO[key]
 
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     from templatedb_spark.suite import table
 
-    import atexit
-    import shutil
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PART_LAYOUT_LOCK:
-        if key not in _PART_LAYOUT_MEMO:
-            out = _tempfile.mkdtemp(prefix="orders_by_status_")
-            table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-                "o_orderstatus"
-            ).parquet(out)
-            _PART_LAYOUT_MEMO[key] = out
-            # the layout must outlive every lazy DataFrame built on it, so
-            # cleanup is process-exit, not eager (repeated bench runs were
-            # accumulating full orders copies in /tmp)
-            atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return _PART_LAYOUT_MEMO[key]
+    return _memo_layout(
+        spark,
+        sf_dir,
+        "orders_by_status_",
+        lambda out: table(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(out),
+    )
 
 
 def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,41 +609,33 @@ register(
 # ORC sink/source roundtrip — the format tier's columnar sibling (parquet is
 # the native suite format; CSV and JSONL have their own sources; ORC is the
 # remaining mainstream warehouse format). The spec writes lineitem's scan
-# columns to an ORC layout once per session (memoized temp dir, process-exit
-# cleanup — the partition_pruned_scan pattern), reads it back, and computes
+# columns to an ORC layout once per session (_memo_layout, as
+# partition_pruned_scan does), reads it back, and computes
 # a DECIMAL-exact rollup; the oracle computes the SAME rollup from the
 # original parquet, so any loss or coercion in the ORC write→read path
 # (types, nulls, row counts) hash-mismatches. Format-independence IS the
 # property under test — which is why the oracle deliberately reads parquet.
 # ---------------------------------------------------------------------------
-_ORC_LAYOUT_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _orc_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile as _tempfile
+    from templatedb_spark.suite import fan_out, table
 
-    from templatedb_spark.suite import table
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORC_LAYOUT_MEMO:
-        out = _tempfile.mkdtemp(prefix="lineitem_orc_")
-        from templatedb_spark.suite import fan_out
-
-        # fan_out before the write: the single-row-group parquet source
-        # would otherwise produce a 1-task write → one ORC file → a scan
-        # whose parallelism is capped by the file count on every read-back
-        # (guide §2.5 / §6); writing defaultParallelism files keeps the
-        # roundtrip's read side as parallel as any real-scale ORC layout.
-        fan_out(
+    # fan_out before the write: the single-row-group parquet source
+    # would otherwise produce a 1-task write → one ORC file → a scan
+    # whose parallelism is capped by the file count on every read-back
+    # (guide §2.5 / §6); writing defaultParallelism files keeps the
+    # roundtrip's read side as parallel as any real-scale ORC layout.
+    return _memo_layout(
+        spark,
+        sf_dir,
+        "lineitem_orc_",
+        lambda out: fan_out(
             table(spark, sf_dir, "lineitem").select(
                 "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice", "l_discount"
             )
-        ).write.mode("overwrite").orc(out)
-        _ORC_LAYOUT_MEMO[key] = out
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return _ORC_LAYOUT_MEMO[key]
+        )
+        .write.mode("overwrite")
+        .orc(out),
+    )
 
 
 def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

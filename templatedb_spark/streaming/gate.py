@@ -571,7 +571,7 @@ def _range_compacted_kv(spark: SparkSession, sf_dir: str, prefix: str, layout: s
     try:
         # count() materializes the cache before the three writes. Its
         # per-version row count only sizes range-layout writes; hash-layout
-        # writes are sized by AQE (see kv._write_version_df n_rows_hint).
+        # writes are sized by AQE (see kv.KVTable._write_version).
         per_version = (net_all.count() + 2) // 3
         # the three versions hold DISJOINT key sets (user_id % 3 routing),
         # so their write jobs run concurrently (kv.write_batches_df, guide
@@ -966,7 +966,6 @@ def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
     kv.write_batch_df(
         local_df(spark, rows, "key string, value string, op string"),
         tag=f"{qname}:b{batch_id}",
-        n_rows_hint=len(rows),
     )
     cur.update(bumps)
 
@@ -1117,7 +1116,6 @@ def _cms_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> N
             "key string, value string, op string",
         ),
         tag=f"{qname}:b{batch_id}",  # SUM-merge: the tag IS correctness
-        n_rows_hint=len(merged),
     )
     cur.update(merged)
 
@@ -1263,7 +1261,6 @@ def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         kv.write_batch_df(
             local_df(spark, rows, "key string, value string, op string"),
             tag=tag,  # SUM-merge: replay would double-count
-            n_rows_hint=len(rows),
         )
 
     # 2 triggers: the cross-batch delta merge is proven by batch 1 summing

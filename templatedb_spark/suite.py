@@ -49,8 +49,8 @@ def _driver_latest_audit() -> dict[str, int]:
     number of entries it records per round (round 1 stopped at 50 of 80), so
     registration order decides what gets hard evidence. We read the prior
     rounds' CORRECTNESS_r*.json artifacts and record each spec's LATEST
-    audited round; all_specs() then fronts (never-audited, changed-this-
-    round, oldest-audit) in that order — the 50/round cap thereby rotates
+    audited round; all_specs() then fronts (never-audited, oldest-audit)
+    in that order — the 50/round cap thereby rotates
     the whole ~218-spec registry every ~4 rounds, so no green row's
     evidentiary value decays more than 4 rounds as refactors touch shared
     helpers (VERDICT r7 #2's age-out discipline).
@@ -95,69 +95,11 @@ def all_specs() -> dict[str, QuerySpec]:
 
     latest_audit = _driver_latest_audit()
     covered = set(latest_audit)
-    # Specs whose semantics, output schema, or oracle changed THIS round:
-    # prior-round audit rows no longer vouch for them, so they re-enter the
-    # front of the driver's capped audit window as if never covered. Rounds
-    # roll: once the driver's artifact for the changing round has recorded
-    # them (r5's changed set is fully present in CORRECTNESS_r05.json), the
-    # subtraction is retired — keeping it would burn audit slots re-checking
-    # rows the changing round already vouched for.
-    # (Builder-session churn sets r6..r10 — the rank/graph-oracle, KV-layout,
-    # CDC-idempotency, 2-trigger-minimum, and IVF-cap refactors — are all
-    # fully recorded in CORRECTNESS_r06/r07.json: retired. Keeping a retired
-    # subtraction burns audit slots re-checking rows the changing round
-    # already vouched for.)
-    # (Driver-round-8 churn — woe_iv_segment, the ANN-oracle funnels, the
-    # 3->2 trigger cuts, the _hll/_cms extraction, the cumsum rewrites — is
-    # fully recorded in CORRECTNESS_r08.json: retired.)
-    # (Driver-round-9 churn — dedup_levenshtein's SymSpell retarget and the
-    # KV chains' shared-compaction restructure — is fully recorded in
-    # CORRECTNESS_r09.json: retired.)
-    # (Driver-round-10 churn — the re-oracled ANN nprobe ladder — is fully
-    # recorded in CORRECTNESS_r10.json: retired.)
-    # Driver-round-11 fronting (VERDICT r10 #1): every spec whose
-    # IMPLEMENTATION was rewritten in the round-10 optimization session but
-    # which missed the r10 oracle sample (the rotation keyed off audit age,
-    # not the session's commits), plus the round-11 rewrites themselves.
-    # Prior rows no longer vouch for a rewritten plan — they re-enter the
-    # front of the capped audit window as if never covered. Retire once
-    # CORRECTNESS_r11.json records them.
-    changed_now = {
-        # r10 rewrites without a driver-side r10 row:
-        "q21_waiting_suppliers",       # EXISTS/NOT-EXISTS → aggregates
-        "attribution_linear",          # single materialized range join
-        "percentiles_price",           # distributed percentile tier
-        # r11: grouped_exact_percentiles NULL-group/COUNT(*) fix + the
-        # directory-aware scale guard touched all three percentile specs
-        "anomaly_mad", "winsorize_stats",
-        "naive_bayes_lang",            # min_by argmax + checkpoint barriers
-        "ks_drift_value",              # min_by argmax
-        "histogram_equidepth",         # window-free rank machinery
-        "gini_revenue",
-        "decile_lift",
-        "revenue_concentration",
-        "perplexity_filter_verdict",
-        "pareto_front",                # size-guarded global_prefix_max
-        # r11: cab-relation materialization rewrote BOTH heldout LM specs
-        "kn_bigram_perplexity",
-        "lm_heldout_perplexity",
-        "dedup_levenshtein",           # one-shuffle candidate generation
-        "kv_compact_range_state",      # width-matched version writes
-        "kv_range_layout_scan",
-        # the 8 streaming gates moved onto the state-store-sized session:
-        "stream_cdc_kv_state", "stream_interval_join_clicks",
-        "stream_window_late", "stream_dedup_ingest", "stream_static_enrich",
-        "stream_hll_users", "stream_cms_tokens", "stream_mv_join_wide",
-    }
-    covered -= changed_now
-    # Front order (VERDICT r7 #2): never-audited / changed-this-round specs
-    # first (covered-subtractions above put changed specs back in this tier),
-    # then covered specs by OLDEST latest-audit round — so the driver's
-    # 50/round cap re-audits the stalest evidence each round and the whole
-    # registry rotates every ~ceil(218/50) = 5 rounds. Registration order
-    # breaks ties (python sort is stable). (The round-2 "never audited"
-    # priority list is retired — all eleven have driver rows; age-based
-    # rotation now covers that concern generally.)
+    # Front order (VERDICT r7 #2): never-audited specs first, then covered
+    # specs by OLDEST latest-audit round — so the audit's 50/round cap
+    # re-audits the stalest evidence each round and the whole registry
+    # rotates every ~ceil(218/50) = 5 rounds. Registration order breaks ties
+    # (python sort is stable).
     ordered = sorted(
         _REGISTRY.items(),
         key=lambda kv: (

@@ -18,6 +18,16 @@ def kv(spark, request):
         yield cls(spark, d)
 
 
+def _leaves(kv, as_of=None, start=None, end=None, bucket=None):
+    """The bucket dirs a read opens: kv._resolve's plan, one path per bucket."""
+    state = kv._load_manifest()
+    return [
+        f"{kv.path}/version={v}/bucket={b}"
+        for v, bs in kv._resolve(as_of, start, end, bucket).items()
+        for b in (state[v]["buckets"] if bs is None else bs)
+    ]
+
+
 def test_put_get(kv):
     kv.put("a", "1")
     kv.put("b", "2")
@@ -147,7 +157,7 @@ def test_get_runs_one_spark_job(spark):
         kv = KVTable(spark, d)
         for i in range(3):
             kv.write_batch(puts={"k": f"v{i}", f"o{i}": "x"})
-        assert len(kv._delta_paths(bucket=bucket_of("k"), start="k", end="k\x00")) == 3
+        assert len(_leaves(kv, bucket=bucket_of("k"), start="k", end="k\x00")) == 3
         val, jobs = _group_jobs(spark, lambda: kv.get("k"))
         assert (val, len(jobs)) == ("v2", 1)
         kv.delete("k")
@@ -168,7 +178,7 @@ def test_scan_pushes_key_bounds_and_lists_no_files(spark):
         threshold = int(
             spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
         )
-        assert len(kv._delta_paths()) > threshold
+        assert len(_leaves(kv)) > threshold
         df, jobs = _group_jobs(spark, lambda: kv.scan("k010", "k020"))
         assert jobs == []
         assert [(r.key, r.value) for r in df.collect()] == [
@@ -392,14 +402,20 @@ def test_write_batch_df_distributed_contract(kv):
     assert kv.latest_version() == v1
 
 
-def test_write_batches_df_concurrent_commits_match_sequential(spark):
+@pytest.fixture(params=["lsm", "merge"])
+def kv_cls(request):
+    return KVTable if request.param == "lsm" else MergeKVTable
+
+
+def test_write_batches_df_concurrent_commits_match_sequential(spark, kv_cls):
     """write_batches_df (r11: concurrent version writes for independent
     batches) must leave EXACTLY the state sequential write_batch_df calls
     would: same version numbering, same merged snapshot, same MVCC reads,
-    empty batches skipped without a commit. Run on both layouts."""
+    empty batches skipped without a commit. Run on both layouts and both
+    backends."""
     for layout in ("hash", "range"):
         with tempfile.TemporaryDirectory() as d:
-            kv = KVTable(spark, d, layout=layout)
+            kv = kv_cls(spark, d, layout=layout)
             kv.put("seed", "s0")
             batches = [
                 spark.createDataFrame(
@@ -419,6 +435,53 @@ def test_write_batches_df_concurrent_commits_match_sequential(spark):
             assert got == want, layout  # seed deleted by batch 1's tombstone
             assert kv.get("seed", as_of=1) == "s0"  # MVCC preserved
             assert kv.get("seed") is None
+
+
+def test_write_batches_df_keeps_untouched_keys(kv):
+    """Later batches of one write_batches_df call apply on top of the table
+    and of each other: a put and a delete in two batches leave the key no
+    batch touched in place, on both backends."""
+    spark = kv.spark
+    kv.write_batch(puts={"a": "1", "b": "2", "c": "3"})
+    schema = "key string, value string, op string"
+    kv.write_batches_df(
+        [
+            spark.createDataFrame([("a", "10", "put")], schema),
+            spark.createDataFrame([("b", None, "del")], schema),
+        ]
+    )
+    assert sorted((r.key, r.value) for r in kv.snapshot().collect()) == [
+        ("a", "10"),
+        ("c", "3"),
+    ]
+    assert kv.get("c") == "3"
+    assert kv.get("b") is None
+
+
+def test_write_batch_df_takes_tag_and_size_hint(kv_range):
+    """Every backend accepts the streaming gates' call shape,
+    write_batch_df(changes, tag=..., n_rows_hint=...), and a replay of the
+    tag is skipped. The hint sizes the version the batch writes: a
+    merge-on-read delta of two rows is one range bucket, while a
+    MergeKVTable version holds the whole state and keeps its width."""
+    kv = kv_range
+    spark = kv.spark
+    kv.write_batch(puts={f"k{i:03d}": "a" for i in range(200)})
+    ch = spark.createDataFrame(
+        [("k005", "b", "put"), ("k150", None, "del")],
+        "key string, value string, op string",
+    )
+    v = kv.write_batch_df(ch, tag="q:b0", n_rows_hint=2)
+    assert kv.write_batch_df(ch, tag="q:b0", n_rows_hint=2) == v
+    assert kv.latest_version() == v
+    assert kv.get("k005") == "b" and kv.get("k150") is None
+    assert kv.get("k100") == "a"
+    assert kv.scan().count() == 199
+    buckets = kv._load_manifest()[v]["buckets"]
+    if isinstance(kv, MergeKVTable):
+        assert len(buckets) > 1
+    else:
+        assert len(buckets) == 1
 
 
 def test_recovery_skips_success_only_dirs_above_committed_marker(spark):
@@ -647,7 +710,7 @@ def test_compact_range_collapses_only_in_range_history(spark):
         from templatedb_spark.kv import bucket_of
 
         assert (
-            kv._delta_paths(bucket=bucket_of("in1"))[0].startswith(f"{d}/version={base_v}")
+            _leaves(kv, bucket=bucket_of("in1"))[0].startswith(f"{d}/version={base_v}")
         )
 
 
@@ -845,14 +908,14 @@ def test_version_pruning_by_key_range(spark):
         kv.write_batch(puts={"a1": "1", "c1": "2"})  # v0: [a1, c1]
         kv.write_batch(puts={"x1": "3", "z1": "4"})  # v1: [x1, z1]
         # scan of the low range must only open v0's files
-        low = kv._delta_paths(start="a", end="d")
+        low = _leaves(kv, start="a", end="d")
         assert low and all("version=0" in p for p in low)
-        high = kv._delta_paths(start="x", end="zz")
+        high = _leaves(kv, start="x", end="zz")
         assert high and all("version=1" in p for p in high)
         # point read: the other version's range excludes the key entirely
         from templatedb_spark.kv import bucket_of
 
-        pt = kv._delta_paths(bucket=bucket_of("a1"), start="a1", end="a1\x00")
+        pt = _leaves(kv, bucket=bucket_of("a1"), start="a1", end="a1\x00")
         assert pt == [f"{d}/version=0/bucket={bucket_of('a1')}"]
         # results are still exact
         assert [r.key for r in kv.scan("a", "d").collect()] == ["a1", "c1"]
@@ -874,7 +937,7 @@ def test_recovered_manifest_degrades_to_unknown_ranges(spark):
         state = kv2._load_manifest()
         assert all(m["kmin"] is None and m["kmax"] is None for m in state.values())
         # no pruning: both versions considered for any range...
-        assert len({p.split("/bucket=")[0] for p in kv2._delta_paths(start="a", end="b")}) == 2
+        assert len({p.split("/bucket=")[0] for p in _leaves(kv2, start="a", end="b")}) == 2
         # ...and the data is still exact
         assert kv2.get("a1") == "1" and kv2.get("z1") == "2"
 
@@ -967,8 +1030,8 @@ def test_range_layout_scan_prunes_buckets(spark):
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d, layout="range")
         kv.write_batch(puts={f"k{i:03d}": str(i) for i in range(200)})
-        all_paths = kv._delta_paths(None)
-        pruned = kv._delta_paths(None, start="k050", end="k060")
+        all_paths = _leaves(kv, None)
+        pruned = _leaves(kv, None, start="k050", end="k060")
         assert len(pruned) < len(all_paths)
         got = [r.key for r in kv.scan(start="k050", end="k060").collect()]
         assert got == [f"k{i:03d}" for i in range(50, 60)]
@@ -987,14 +1050,14 @@ def test_range_layout_point_read_prunes(spark):
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d, layout="range")
         v = kv.write_batch(puts={f"k{i:03d}": str(i) for i in range(200)})
-        paths = kv._delta_paths(None, start="k123", end="k123\x00")
+        paths = _leaves(kv, None, start="k123", end="k123\x00")
         assert len(paths) == 1  # disjoint ranges → exactly one covering bucket
         assert kv.get("k123") == "123"
         assert kv.get("nope") is None
         # version-level pruning still composes: a later far-away batch is
         # skipped entirely when reading a key outside its range
         kv.write_batch(puts={"zzz": "far"})
-        paths2 = kv._delta_paths(None, start="k123", end="k123\x00")
+        paths2 = _leaves(kv, None, start="k123", end="k123\x00")
         assert [p for p in paths2 if f"version={v + 1}" in p] == []
 
 
@@ -1059,7 +1122,7 @@ def test_range_layout_merge_table_prunes(spark):
         v = kv.latest_version()
         meta = kv._load_manifest()[v]
         if meta.get("bucket_ranges"):
-            sub = kv._version_bucket_paths(v, meta, "k000", "k010")
+            sub = _leaves(kv, start="k000", end="k010")
             assert len(sub) < len(meta["buckets"])
         # snapshot(key_range) prunes as a SUPERSET guarantee; scan applies
         # the exact row filter on top of the pruned read

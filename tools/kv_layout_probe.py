@@ -45,11 +45,19 @@ def build(spark, d, layout, n_versions, n_keys):
         )
     return kv
 
+
+def bucket_dirs(kv, start, end, bucket=None):
+    """Bucket dirs a read of [start, end) opens (the resolver's plan)."""
+    state = kv._load_manifest()
+    plan = kv._resolve(None, start, end, bucket)
+    return sum(len(state[v]["buckets"] if bs is None else bs) for v, bs in plan.items())
+
+
 def paths_and_wall(kv, start, end):
     t0 = time.monotonic()
-    paths = kv._delta_paths(None, start=start, end=end)
+    paths = bucket_dirs(kv, start, end)
     rows = kv.scan(start=start, end=end).count()
-    return len(paths), rows, time.monotonic() - t0
+    return paths, rows, time.monotonic() - t0
 
 
 def main():
@@ -69,11 +77,8 @@ def main():
 
             key = f"k{n_keys // 3:06d}"
             t0 = time.monotonic()
-            pp = kv._delta_paths(
-                None,
-                bucket=bucket_of(key) if layout == "hash" else None,
-                start=key,
-                end=key + "\x00",
+            pp = bucket_dirs(
+                kv, key, key + "\x00", bucket_of(key) if layout == "hash" else None
             )
             assert kv.get(key) is not None
             point_wall = time.monotonic() - t0
@@ -91,7 +96,7 @@ def main():
                 else:
                     rewritten += sz
             out["layouts"][layout] = {
-                "point_paths": len(pp),
+                "point_paths": pp,
                 "point_wall_s": round(point_wall, 3),
                 "scan_paths": scan_paths,
                 "scan_rows": scan_rows,
