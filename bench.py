@@ -1,32 +1,117 @@
 """Benchmark harness: runs the full query suite at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
+The core count defaults to the host's.
 
 Execution is forced with the noop sink (full pipeline runs distributed; nothing
-collects to the driver). One warmup query amortizes session/codegen startup.
+collects to the driver). An untimed warm-up pass of the whole suite amortizes
+session/codegen startup.
 
-The suite's queries are independent, so by default they are submitted from a
-pool of driver threads onto a FAIR scheduler — the standard Spark pattern for
+The suite's queries are independent, so they are submitted from a pool of
+driver threads onto a FAIR scheduler — the standard Spark pattern for
 multi-tenant / multi-query workloads. A single query at sf0.1 uses a handful of
-tasks and leaves most of local[32] idle during planning and scheduling gaps;
+tasks and leaves most cores idle during planning and scheduling gaps;
 concurrent submission overlaps those gaps and measures the true suite makespan
-(what a cluster user doing a 55-query batch actually waits). Per-query numbers
-are each query's own submit→finish wall *under that concurrency*, so they
-include contention; `value` is the makespan. Set SPARK_GRAFT_BENCH_MODE=seq for
-the old one-at-a-time numbers.
+(what a cluster user doing a batch of queries actually waits). Per-query
+numbers are each query's own submit→finish wall *under that concurrency*, so
+they include contention; `value` is the makespan.
+
+`main()` runs the protocol as named steps: scratch, pre-run settle, session,
+warmup, timed suite, solo-warm audit, DuckDB baseline, verdict, emit. The two
+timed phases (the Spark suite and the same-window DuckDB baseline) run through
+one phase runner (`run_phase`) that judges each attempt's window against the
+contention budgets, and every wait for a quiet host goes through `settle`.
+
+Four environment knobs configure a run, parsed once by `load_config` before
+any session is built; a malformed value exits with a message naming it:
+SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SCRATCH (tmpfs root for
+per-run scratch, empty for none) and SPARK_GRAFT_BASELINE_TIMEOUT_S.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
 import sys
+import tempfile
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
+
+# Submission threads. r8, with the chain lane beside the flood: 20 is the
+# basin floor — quiet-window pairs 20→26.9/29.0 s (0.93×, steal 0.02%) vs
+# 28→35.0/28.5 s (1.23×, steal 0.79%); 16 batch jobs × 8 partitions already
+# oversubscribe 32 cores 4×, so width past ~20 only adds driver event-loop
+# latency that stretches the latency-bound chains in the lane beside it.
+WORKERS = 20
+# The serial trigger chains run in a dedicated lane of this many threads:
+# quiet-window pairs measured 27.5 s (lane 4) / 28.9 s (lane 6) vs 51 s with
+# no lane; a chains-only probe showed width 4 has the lowest per-chain
+# stretch (8.9 s worst vs 20 s at width 8).
+CHAIN_LANE = 4
+# Contention budgets. Pre-run 1-min load average: /proc/stat steal is blind
+# to same-host self-contention (a concurrent verification sweep produced a
+# 42.96 s artifact that passed the steal budget).
+LOAD_BUDGET = 3.0
+# Steal % per timed phase (r8: 3.0 -> 2.0; windows at 0.03-0.1% steal ran the
+# suite in 27.5-31 s, windows at 1.5-2.8% ran 33.6-45 s). The Spark and DuckDB
+# phases run sequentially, so an asymmetric noise window skews the ratio.
+STEAL_BUDGET = 2.0
+# % of total host CPU burned OUTSIDE this bench's process tree over a timed
+# window: enough to catch a concurrent sweep, lax enough for daemons.
+FOREIGN_BUDGET = 5.0
+# A dirty (or timed-out) phase attempt is re-run warm up to this many times.
+STEAL_RETRIES = 3
+# Settle waits: the pre-run one outlasts any finished workload's load1 decay
+# (r9: the official artifact ran into a leftover sweep's load and recorded no
+# ratio at all); a retry waits out a steal storm (the r8 official run re-ran
+# straight back into a 5% steal window three times).
+PRERUN_SETTLE_S = 900.0
+RETRY_SETTLE_S = 120.0
+
+# Longest-processing-time-first submission: the known-heavy queries start at
+# t=0 so the many sub-second queries pack in behind them. The streaming and KV
+# trigger chains come first (serial by construction — the true critical
+# path); the rest is ordered by the last run's contended profile
+# (bench_results/latest.json), and specs with no prior measurement schedule
+# early (unknown = assume heavy). This static list is the cold-start seed.
+CRITICAL = [
+    "stream_sessionize_closed",  # 3 stateful streaming triggers: longest chain
+    "stream_interval_join_clicks",  # 2-trigger stream-stream join chain
+    "kv_compact_range_state",  # serial 4-write KV chain (r7 gate)
+    "stream_neardup_reps",  # bounded-state rep-election chain (r7)
+    "stream_cdc_kv_state",  # 2 sequential streaming triggers (3->2 r8)
+    "stream_dedup_ingest",  # 2-trigger watermarked exact-dedup chain (3->2 r8)
+    "stream_window_late",  # 3-trigger watermarked window-agg chain — KEPT at 3:
+    # watermark stats lag 2 batches, the provably-dropped straggler
+    # needs batch index 2 (gate.py n_batches=3; 2-batch attempt failed
+    # the oracle in r8 and was reverted)
+    "stream_neardup_pairs",  # 2-trigger stateful minhash chain (r6)
+    "stream_static_enrich",  # 2-trigger stream-static broadcast join chain (3->2 r8)
+    "kv_range_layout_scan",  # serial 3-write range-layout KV chain (r8) —
+    # 3.8 s solo floor, so it enters the lane early (LPT), not last
+    "stream_cms_tokens",  # 2-trigger counter-sketch KV chain (r9, 3->2 r10)
+    "stream_hll_users",  # 2-trigger mergeable-sketch KV chain (r9, 3->2 r10)
+    "pyds_stream_source",  # python streaming-source drain chain (r9)
+    "stream_mv_join",  # 2-trigger incremental join-view chain (r9, 3->2 r10)
+    "stream_mv_join_wide",  # 2-trigger distributed-merge wide-key view chain (r10)
+    "ann_lsh_banded_topk",
+    "dedup_ngram_prefix",
+    "dedup_ngram_jaccard",
+    "dedup_ngram_capped",
+    "dedup_simhash",
+    "dedup_minhash_lsh",
+]
+# The serial KV chains are the critical path's top items: every artifact
+# carries their contended-vs-solo evidence (r9, VERDICT r8 #5).
+PINNED_SOLO = ("kv_compact_range_state", "kv_range_layout_scan")
 
 
 def _cpu_counters() -> tuple[int, int, int] | None:
@@ -97,6 +182,15 @@ def _tree_cpu_ticks(root_pid: int | None = None) -> int | None:
         return None
 
 
+def steal_pct(
+    cpu0: tuple[int, int, int] | None, cpu1: tuple[int, int, int] | None
+) -> float | None:
+    """Host steal % over the window between two _cpu_counters readings."""
+    if not cpu0 or not cpu1 or cpu1[1] <= cpu0[1]:
+        return None
+    return round(100.0 * (cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]), 2)
+
+
 def foreign_cpu_pct(
     cpu0: tuple[int, int, int] | None,
     cpu1: tuple[int, int, int] | None,
@@ -129,9 +223,10 @@ def contention_verdict(
 
 def baseline_timeout_s(environ=os.environ) -> float:
     """SPARK_GRAFT_BASELINE_TIMEOUT_S: the DuckDB baseline's hard cap in
-    seconds (default 600). Parsed once before any lane runs, so a malformed
-    value stops the bench with a config error instead of being recorded as
-    a failed baseline attempt after the Spark lanes."""
+    seconds (default 600; the sf1 lane's DuckDB tail needs a bigger one).
+    Parsed once before any lane runs, so a malformed value stops the bench
+    with a config error instead of being recorded as a failed baseline
+    attempt after the Spark lanes."""
     raw = environ.get("SPARK_GRAFT_BASELINE_TIMEOUT_S", "600")
     try:
         value = float(raw)
@@ -144,800 +239,510 @@ def baseline_timeout_s(environ=os.environ) -> float:
     return value
 
 
-def main() -> None:
-    baseline_timeout = baseline_timeout_s()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "concurrent")
-    # 24 submission threads measured best at 192 specs with the four
-    # streaming chains (r6, steal-clean pairs: 16→24.5 s, 20→21.3 s,
-    # 24→20.95 s): more overlap hides per-query scheduling gaps and the
-    # chains' trigger latency without saturating the driver GIL.
-    # 28 at 213 specs / 15 chains (r10 pairs on a noisy host: 24→30.2/21.0,
-    # 28→27.0/25.2 and 33.6/24.7, 32→34.9 dirty).
-    # r8, WITH the chain lane (chains no longer inside the flood): 20 is
-    # the basin floor — quiet-window pairs 20→26.9/29.0 (0.93×, steal
-    # 0.02%) vs 28→35.0/28.5 (1.23×, steal 0.79%); 16 batch jobs × 8
-    # partitions already oversubscribe 32 cores 4×, so width past ~20 only
-    # adds driver event-loop latency that stretches the latency-bound
-    # chains in the lane beside it.
-    workers = int(os.environ.get("SPARK_GRAFT_BENCH_WORKERS", "20"))
+@dataclass(frozen=True)
+class BenchConfig:
+    sf_dir: str
+    cpus: int
+    scratch_root: str  # "" = no per-run scratch dir
+    baseline_timeout_s: float
 
-    # Scratch on tmpfs (r8): the 15 serial trigger chains checkpoint offset/
-    # commit logs, state-store deltas, KV versions, and staging slices through
-    # tempfile/java.io.tmpdir — on this box /tmp is ext4 on one virtual disk,
-    # so 15 concurrent chains serialize on the journal+fsync path (measured:
-    # chains-only at width 8 dropped 36.1 s → 25.2 s just by moving scratch
-    # to tmpfs). All of it is ephemeral per-run data; a production cluster
-    # would put checkpoints on HDFS/S3 with its own committers, never on the
-    # data disk — RAM-backed scratch is the single-node analog. Cleaned up
-    # after the run.
-    import shutil as _shutil
-    import tempfile as _tempfile
 
-    scratch_root = os.environ.get(
-        "SPARK_GRAFT_SCRATCH",
-        "/dev/shm/spark-graft-bench" if Path("/dev/shm").is_dir() else "",
-    )
-    java_tmp_opt = ""
-    scratch = ""
-    if scratch_root:
-        # Per-run dir under the shared root (ADVICE r8: a blanket rmtree of
-        # a fixed path would delete a concurrently-running bench's live
-        # spark.local.dir). Each run writes a pid file; stale siblings —
-        # crashed runs whose pid is gone — are reclaimed by liveness, never
-        # a live one. On tmpfs stale dirs are resident RAM, so reclaim
-        # matters.
-        root = Path(scratch_root)
-        root.mkdir(parents=True, exist_ok=True)
-        for sib in root.glob("run-*"):
-            try:
-                pid = int((sib / "owner.pid").read_text())
-            except (ValueError, OSError):
-                # ADVICE r9: a sibling between mkdtemp and its owner.pid
-                # write has no pid file yet — "too young to judge" beats
-                # reclaiming a live run. Age-gate on dir mtime.
-                try:
-                    if time.time() - sib.stat().st_mtime < 60:
-                        continue
-                except OSError:
-                    continue  # raced its own cleanup
-                _shutil.rmtree(sib, ignore_errors=True)
-                continue
-            try:
-                os.kill(pid, 0)  # ProcessLookupError iff the owner is gone
-            except ProcessLookupError:
-                _shutil.rmtree(sib, ignore_errors=True)
-            except PermissionError:
-                # alive but another uid's — NOT reclaimable (ADVICE r9: it
-                # is an OSError subclass, the old blanket catch deleted it).
-                # Bound pid-recycling retention: a bench run lasts minutes,
-                # so a day-old dir whose pid "lives" is a recycled pid.
-                try:
-                    if time.time() - sib.stat().st_mtime > 86400:
-                        _shutil.rmtree(sib, ignore_errors=True)
-                except OSError:
-                    pass
-        # Create invisibly (dot-prefix escapes the run-* reclaim glob),
-        # stamp the owner pid, then rename into place — the dir is never
-        # discoverable without its pid file (ADVICE r9 startup race).
-        staging = _tempfile.mkdtemp(prefix=".run-", dir=str(root))
-        (Path(staging) / "owner.pid").write_text(str(os.getpid()))
-        scratch = str(Path(root) / f"run-{os.getpid()}-{Path(staging).name[5:]}")
-        os.rename(staging, scratch)
-        os.environ["TMPDIR"] = scratch
-        _tempfile.tempdir = scratch
-        java_tmp_opt = f"-Djava.io.tmpdir={scratch}"
+def load_config(environ=os.environ) -> BenchConfig:
+    """The run's four knobs, each parsed once; a malformed value exits with
+    a message naming its variable."""
+    from templatedb_spark.session import local_cpus
 
-    from templatedb_spark.session import EngineConfig, build_session
-    from templatedb_spark.suite import all_specs
-
-    # Size the initial shuffle-partition count to the input volume (~32 MB per
-    # partition, the same granularity as files.maxPartitionBytes), clamped to
-    # [8, cpus]. AQE coalesces post-shuffle partitions at runtime, but the
-    # *initial* count still drives task-scheduling overhead — at sf0.1 (~60 MB)
-    # 8 partitions is right; at cluster scale the cap is the core count times
-    # whatever oversubscription the deployment wants.
-    total_bytes = sum(
-        f.stat().st_size for f in Path(sf_dir).glob("*.parquet") if f.is_file()
-    )
-    parts = max(8, min(int(cpus), total_bytes // (32 << 20) or 8))
-    spark = build_session(
-        EngineConfig(
-            master=f"local[{cpus}]",
-            shuffle_partitions=int(parts),
-            # FAIR scheduling so concurrently-submitted queries share the
-            # executor cores instead of queuing whole-job FIFO; weighted pools
-            # (conf/fairscheduler.xml) keep the handful of heavy queries from
-            # being starved by the many sub-second ones.
-            extra={
-                "spark.scheduler.mode": "FAIR",
-                "spark.scheduler.allocation.file": str(
-                    Path(__file__).resolve().parent / "conf" / "fairscheduler.xml"
-                ),
-                # temp checkpoints / shuffle scratch on tmpfs (see above);
-                # empty opt when no tmpfs is available
-                **(
-                    {
-                        "spark.driver.extraJavaOptions": java_tmp_opt,
-                        "spark.local.dir": scratch,
-                    }
-                    if scratch
-                    else {}
-                ),
-            },
+    timeout = baseline_timeout_s(environ)
+    sf_dir = environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if not (sf_dir and Path(sf_dir).is_dir()):
+        raise SystemExit(f"SPARK_GRAFT_SF_DIR={sf_dir!r}: expected a directory of suite tables")
+    try:
+        cpus = local_cpus(environ)
+    except ValueError as e:
+        raise SystemExit(str(e)) from None
+    shm = "/dev/shm/spark-graft-bench" if Path("/dev/shm").is_dir() else ""
+    scratch = environ.get("SPARK_GRAFT_SCRATCH", shm)
+    if scratch and not (Path(scratch).is_absolute() and not Path(scratch).is_file()):
+        raise SystemExit(
+            f"SPARK_GRAFT_SCRATCH={scratch!r}: expected an absolute directory path, or empty for none"
         )
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # events.parquet needs this; set once up front so worker threads never
-    # race on session conf.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return BenchConfig(sf_dir, cpus, scratch, timeout)
 
-    # Load tripwire (round 9): /proc/stat steal% detects noisy NEIGHBORS
-    # (hypervisor steal) but is blind to same-host self-contention — another
-    # process hammering the CPUs inflates both engines without a tick of
-    # steal (observed: a concurrent verification sweep produced a 42.96 s
-    # artifact that passed the steal budget). The 1-min load average BEFORE
-    # the bench creates any load of its own is the honest pre-condition: on
-    # this box nothing else should be running, so a high load1 here means a
-    # foreign workload and the artifact must not claim `clean`.
-    def _load1() -> float | None:
+
+def make_scratch(scratch_root: str) -> str:
+    """Scratch on tmpfs (r8): the serial trigger chains checkpoint offset/
+    commit logs, state-store deltas, KV versions and staging slices through
+    tempfile/java.io.tmpdir; on a single virtual disk 15 concurrent chains
+    serialize on the journal+fsync path (chains-only at width 8 dropped
+    36.1 s → 25.2 s just by moving scratch to tmpfs). A cluster puts
+    checkpoints on HDFS/S3; RAM-backed scratch is the single-node analog.
+
+    Each run gets its own dir under the shared root (ADVICE r8: a blanket
+    rmtree of a fixed path would delete a concurrently-running bench's live
+    spark.local.dir), stamped with its owner pid; stale siblings (crashed
+    runs whose pid is gone) are reclaimed by liveness, never a live one. On
+    tmpfs stale dirs are resident RAM, so reclaim matters. Returns the run
+    dir ("" when scratch_root is empty) and points TMPDIR at it."""
+    if not scratch_root:
+        return ""
+    root = Path(scratch_root)
+    root.mkdir(parents=True, exist_ok=True)
+    for sib in root.glob("run-*"):
         try:
-            with open("/proc/loadavg", encoding="ascii") as _f:
-                return float(_f.read().split()[0])
-        except OSError:
-            return None
+            pid = int((sib / "owner.pid").read_text())
+        except (ValueError, OSError):
+            # ADVICE r9: a sibling between mkdtemp and its owner.pid
+            # write has no pid file yet — "too young to judge" beats
+            # reclaiming a live run. Age-gate on dir mtime.
+            try:
+                if time.time() - sib.stat().st_mtime < 60:
+                    continue
+            except OSError:
+                continue  # raced its own cleanup
+            shutil.rmtree(sib, ignore_errors=True)
+            continue
+        try:
+            os.kill(pid, 0)  # ProcessLookupError iff the owner is gone
+        except ProcessLookupError:
+            shutil.rmtree(sib, ignore_errors=True)
+        except PermissionError:
+            # alive but another uid's — NOT reclaimable (ADVICE r9: it
+            # is an OSError subclass, the old blanket catch deleted it).
+            # Bound pid-recycling retention: a bench run lasts minutes,
+            # so a day-old dir whose pid "lives" is a recycled pid.
+            try:
+                if time.time() - sib.stat().st_mtime > 86400:
+                    shutil.rmtree(sib, ignore_errors=True)
+            except OSError:
+                pass
+    # Create invisibly (dot-prefix escapes the run-* reclaim glob),
+    # stamp the owner pid, then rename into place — the dir is never
+    # discoverable without its pid file (ADVICE r9 startup race).
+    staging = tempfile.mkdtemp(prefix=".run-", dir=str(root))
+    (Path(staging) / "owner.pid").write_text(str(os.getpid()))
+    scratch = str(root / f"run-{os.getpid()}-{Path(staging).name[5:]}")
+    os.rename(staging, scratch)
+    os.environ["TMPDIR"] = scratch
+    tempfile.tempdir = scratch
+    return scratch
 
-    load_budget = float(os.environ.get("SPARK_GRAFT_LOAD_BUDGET", "3.0"))
-    # bounded settle-wait: a bench started right after other heavy work (a
-    # previous bench, a test suite) sees that work's undecayed 1-min average;
-    # waiting out the decay keeps back-to-back runs honest without a human
-    # in the loop. A FOREIGN workload that is still running won't decay —
-    # the loop times out and the artifact records the dirty pre-condition.
-    def _steal_sample(seconds: float = 3.0) -> float | None:
-        c0 = _cpu_counters()
-        time.sleep(seconds)
-        c1 = _cpu_counters()
-        if c0 and c1 and c1[1] > c0[1]:
-            return round(100.0 * (c1[0] - c0[0]) / (c1[1] - c0[1]), 2)
+
+def _load1() -> float | None:
+    try:
+        with open("/proc/loadavg", encoding="ascii") as f:
+            return float(f.read().split()[0])
+    except OSError:
         return None
 
-    # r8: 3.0 -> 2.0. Measured correlation this round: windows at 0.03-0.1%
-    # steal ran the suite in 27.5-31 s; windows at 1.5-2.8% (all under the
-    # old budget, all "clean") ran 33.6-45 s — a 1.5x swing the old budget
-    # waved through. Since the Spark and DuckDB phases run sequentially, an
-    # asymmetric noise window skews the RATIO the judge reads; the tighter
-    # budget plus one extra retry buys a symmetric-or-rerun guarantee.
-    steal_budget = float(os.environ.get("SPARK_GRAFT_STEAL_BUDGET", "2.0"))
-    load1_before = _load1()
-    steal_before = _steal_sample()
-    # Pre-run settle gets its own, much longer budget than the mid-run retry
-    # settles (r9 post-mortem: the official artifact ran into a leftover
-    # sweep's load and recorded no ratio at all — a driver round runs ONCE,
-    # so 15 min of waiting is cheaper than a void artifact. load1 decays with
-    # a 1-min time constant; 900 s outlasts any finished workload's decay
-    # and most transient foreign ones).
-    settle_deadline = time.time() + float(
-        os.environ.get(
-            "SPARK_GRAFT_PRERUN_SETTLE_S",
-            os.environ.get("SPARK_GRAFT_LOAD_SETTLE_S", "900"),
+
+def settle(seconds: float, load_budget: float | None = None) -> float | None:
+    """The one wait for a quiet host: sample until live steal is at most half
+    the steal budget and, when load_budget is given, the 1-min load average
+    is within it, or `seconds` have passed (a foreign workload that is still
+    running won't decay; the artifact then records the dirty window).
+    Returns the last load1 reading."""
+    deadline = time.time() + seconds
+    while True:
+        load1 = _load1()
+        c0 = _cpu_counters()
+        time.sleep(3.0)
+        steal = steal_pct(c0, _cpu_counters())
+        busy = (steal is not None and steal > STEAL_BUDGET / 2) or (
+            load_budget is not None and load1 is not None and load1 > load_budget
         )
-    )
-    while time.time() < settle_deadline and (
-        (load1_before is not None and load1_before > load_budget)
-        # r8: also settle on live hypervisor steal — a 2% pre-run steal
-        # window has produced 1.5x degraded makespans that still passed the
-        # per-phase budget; waiting out the neighbor is cheaper than a rerun
-        or (steal_before is not None and steal_before > steal_budget / 2)
-    ):
-        print(
-            f"PRE-RUN TRIPWIRE: load1 {load1_before} / steal {steal_before}% "
-            "— settling",
-            file=sys.stderr,
-        )
+        if not busy or time.time() >= deadline:
+            return load1
+        print(f"SETTLE: load1 {load1} / steal {steal}% — waiting", file=sys.stderr)
         time.sleep(7)
-        load1_before = _load1()
-        steal_before = _steal_sample()
 
-    # warmup: one pass of the whole suite at the TARGET sf — the exact twin of
-    # the DuckDB baseline protocol (tools/bench_baseline.py warms each query
-    # once at the target sf before timing it). This compiles the suite's
-    # generated classes (the timed pass reuses them only because the engine
-    # session sizes the codegen cache to the suite: at Spark's default 100
-    # entries it recompiled ~3.6k classes), spins up the Arrow python
-    # workers, and warms the page cache / cached intermediates, the same
-    # things DuckDB's warmup run warms.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    specs = all_specs()
-    times: dict[str, float] = {}
+def bench_session(cfg: BenchConfig, scratch: str):
+    """The sized session, with FAIR scheduling so concurrently-submitted
+    queries share the executor cores instead of queuing whole-job FIFO
+    (weighted pools in conf/fairscheduler.xml keep the heavy queries from
+    being starved by the many sub-second ones), and its JVM temp dir and
+    shuffle scratch in the run's scratch dir."""
+    from templatedb_spark.session import sized_session
 
-    # Longest-processing-time-first submission: start the known-heavy queries
-    # at t=0 so the many sub-second queries pack in behind them instead of the
-    # heavies forming a serial tail. The heavy set is DERIVED from the last
-    # run's contended profile (bench_results/latest.json) so the LPT seed
-    # tracks the suite as it evolves; the streaming trigger chains are always
-    # first (serial by construction — the true critical path), and specs with
-    # no prior measurement schedule early (unknown = assume heavy). The
-    # static list is only the cold-start fallback for a fresh checkout.
-    critical = [
-        "stream_sessionize_closed",  # 3 stateful streaming triggers: longest chain
-        "stream_interval_join_clicks",  # 2-trigger stream-stream join chain
-        "kv_compact_range_state",  # serial 4-write KV chain (r7 gate)
-        "stream_neardup_reps",  # bounded-state rep-election chain (r7)
-        "stream_cdc_kv_state",  # 2 sequential streaming triggers (3->2 r8)
-        "stream_dedup_ingest",  # 2-trigger watermarked exact-dedup chain (3->2 r8)
-        "stream_window_late",  # 3-trigger watermarked window-agg chain — KEPT at 3:
-        # watermark stats lag 2 batches, the provably-dropped straggler
-        # needs batch index 2 (gate.py n_batches=3; 2-batch attempt failed
-        # the oracle in r8 and was reverted)
-        "stream_neardup_pairs",  # 2-trigger stateful minhash chain (r6)
-        "stream_static_enrich",  # 2-trigger stream-static broadcast join chain (3->2 r8)
-        "kv_range_layout_scan",  # serial 3-write range-layout KV chain (r8) —
-        # 3.8 s solo floor, so it enters the lane early (LPT), not last
-        "stream_cms_tokens",  # 2-trigger counter-sketch KV chain (r9, 3->2 r10)
-        "stream_hll_users",  # 2-trigger mergeable-sketch KV chain (r9, 3->2 r10)
-        "pyds_stream_source",  # python streaming-source drain chain (r9)
-        "stream_mv_join",  # 2-trigger incremental join-view chain (r9, 3->2 r10)
-        "stream_mv_join_wide",  # 2-trigger distributed-merge wide-key view chain (r10)
-        "ann_lsh_banded_topk",
-        "dedup_ngram_prefix",
-        "dedup_ngram_jaccard",
-        "dedup_ngram_capped",
-        "dedup_simhash",
-        "dedup_minhash_lsh",
-    ]
-    prev_times: dict[str, float] = {}
-    prev_art: dict = {}
-    try:
-        prev_art = json.loads(
-            (Path(__file__).resolve().parent / "bench_results" / "latest.json").read_text()
-        )
-        prev_times = {
-            k: v for k, v in prev_art.get("queries", {}).items() if isinstance(v, (int, float)) and v > 0
-        }
-    except Exception:
-        pass  # cold start: static seed only
+    extra = {
+        "spark.scheduler.mode": "FAIR",
+        "spark.scheduler.allocation.file": str(ROOT / "conf" / "fairscheduler.xml"),
+    }
+    if scratch:
+        extra["spark.driver.extraJavaOptions"] = f"-Djava.io.tmpdir={scratch}"
+        extra["spark.local.dir"] = scratch
+    return sized_session(cfg.sf_dir, cpus=cfg.cpus, extra=extra)
+
+
+def _positive(d) -> dict[str, float]:
+    return {k: v for k, v in (d or {}).items() if isinstance(v, (int, float)) and v > 0}
+
+
+@dataclass
+class SuitePlan:
+    items: list  # (name, spec) in submission order
+    pool_of: dict[str, str]  # FAIR pool per name; the rest run in "light"
+    chains: set[str]  # the serial trigger chains, run in their own lane
+
+    def pool(self, name: str) -> str:
+        return self.pool_of.get(name, "light")
+
+
+def plan_suite(specs: dict, prev_times: dict[str, float]) -> SuitePlan:
+    """LPT order and FAIR pools: each trigger chain gets its own minShare
+    pool (r5 verdict #3 — the chains are serial by construction and share no
+    hot tables, so per-chain pools stop one chain's micro-batch jobs queuing
+    behind another's); other heavies share "heavy"; the rest "light"."""
 
     def lpt_key(name: str):
-        if name in critical:
-            return (0, critical.index(name))
+        if name in CRITICAL:
+            return (0, CRITICAL.index(name))
         t = prev_times.get(name)
         return (1, -1e9) if t is None else (1, -t)
 
     items = sorted(specs.items(), key=lambda kv: lpt_key(kv[0]))
-    # pools: each streaming trigger CHAIN gets its own pool (r5 verdict #3 —
-    # the chains are serial by construction and share no hot tables, so
-    # per-chain minShares stop one chain's micro-batch jobs queuing behind
-    # another's); other heavies share "heavy"; the rest "light"
-    # serial chains (streaming trigger chains + the sequential KV-write
-    # gate): each is a sequence of small jobs that can never parallelize
-    # internally, so each gets a dedicated minShare pool — the true
-    # critical path of the makespan
-    streaming = [
-        n
-        for n in critical
-        if n.startswith(("stream_", "kv_", "pyds_stream"))
-    ]
-    heavy_names = {n for n, _ in sorted(prev_times.items(), key=lambda kv: -kv[1])[:25]}
-    heavy_names |= {n for n, _ in items if n not in prev_times}
-    pool_of = {
-        n: ("critical" if n in critical else "heavy")
-        for n in (set(critical) | heavy_names)
-    }
-    for i, n in enumerate(streaming):
+    chains = [n for n in CRITICAL if n.startswith(("stream_", "kv_", "pyds_stream"))]
+    heavy = {n for n, _ in sorted(prev_times.items(), key=lambda kv: -kv[1])[:25]}
+    heavy |= {n for n, _ in items if n not in prev_times}
+    pool_of = {n: ("critical" if n in CRITICAL else "heavy") for n in set(CRITICAL) | heavy}
+    for i, n in enumerate(chains):
         pool_of[n] = f"stream{i % 15}"
+    return SuitePlan(items, pool_of, set(chains))
 
+
+def two_tier(plan: SuitePlan, run_fn) -> None:
+    """Two-tier submission (r8, VERDICT r7 #1): the serial trigger chains are
+    the makespan's critical path and also thrash EACH OTHER (15-wide
+    all-at-once ran 30-56 s wall, a width-4 lane 24.5 s: each trigger's
+    driver-side planning, foreachBatch callback and state commit are
+    latency-bound). So the chains run in a lane of CHAIN_LANE threads, in
+    LPT order, and the batch flood runs beside it capped at WORKERS - lane;
+    when the last chain drains, the flood widens to the full worker count."""
+    chain_items = [it for it in plan.items if it[0] in plan.chains]
+    batch_items = [it for it in plan.items if it[0] not in plan.chains]
+    if not chain_items:
+        with ThreadPoolExecutor(max_workers=WORKERS) as pool:
+            list(pool.map(run_fn, batch_items))
+        return
+    lane = min(CHAIN_LANE, len(chain_items))
+    sem = threading.Semaphore(max(1, WORKERS - lane))
+    remaining = [len(chain_items)]
+    done_lock = threading.Lock()
+
+    def run_chain(item) -> None:
+        try:
+            run_fn(item)
+        finally:
+            with done_lock:
+                remaining[0] -= 1
+                last = remaining[0] == 0
+            if last:  # lane drained: widen the flood to full width
+                sem.release(lane)
+
+    def run_batch(item) -> None:
+        with sem:
+            run_fn(item)
+
+    with ThreadPoolExecutor(max_workers=lane) as lane_pool, ThreadPoolExecutor(
+        max_workers=WORKERS
+    ) as batch_pool:
+        futs = [lane_pool.submit(run_chain, it) for it in chain_items]
+        futs += [batch_pool.submit(run_batch, it) for it in batch_items]
+        for f in futs:
+            f.result()
+
+
+def _run_noop(spark, pool: str | None, spec, sf_dir: str) -> None:
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+    spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def warmup(spark, plan: SuitePlan, sf_dir: str) -> float:
+    """Untimed pass of the whole suite at the target sf, through the same
+    two-tier shape as the timed pass: the exact twin of the DuckDB
+    baseline's warm-up (tools/bench_baseline.py). It compiles the generated
+    classes the timed pass reuses (held by the session's suite-sized codegen
+    cache, see session.py), spins up the Arrow python workers, warms the
+    page cache and runs one full trigger cycle per streaming/KV chain
+    (VERDICT r7 #6). Returns its wall seconds, stamped into `phases` as
+    evidence that the timed phase measures warm steady state."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+
+    def warm_one(item) -> None:
+        name, spec = item
+        try:
+            _run_noop(spark, plan.pool(name), spec, sf_dir)
+        except Exception:
+            pass  # warmup never fails the bench
+
+    t0 = time.time()
+    two_tier(plan, warm_one)
+    return round(time.time() - t0, 3)
+
+
+def timed_suite(spark, plan: SuitePlan, sf_dir: str) -> dict:
+    """One timed pass: {"total_sec": makespan, "times", "errs", "retried"}.
+    A failing query records -1 and never kills the bench. Failures under
+    concurrency were historically contention-induced (a 1g default JVM heap
+    OOMing, fixed in session.py) and silently shrank the suite, so any query
+    that failed in the pool gets ONE serial retry after the pool drains; its
+    retry wall time joins the makespan (the work is real)."""
+    times: dict[str, float] = {}
     errs: dict[str, str] = {}
     retried: list[str] = []
-
-    # Two-tier submission, v2 (r8, VERDICT r7 #1): the serial trigger chains
-    # are the makespan's critical path — solo floors 2.5-7.5 s but 29-43 s
-    # under the full 28-worker flood (BENCH_r07 = 2.01x, the gate breach).
-    # Measured this round (chains-only probes, tmpfs scratch): the chains
-    # also thrash EACH OTHER — 15-wide all-at-once ran 30-56 s wall, while a
-    # width-8 lane ran 25 s and width-4 24.5 s, because each trigger's
-    # driver-side planning / foreachBatch python callback / state commit is
-    # latency-bound and 15 concurrent chains queue on those shared paths.
-    # So: chains run in a DEDICATED LANE of SPARK_GRAFT_CHAIN_LANE submission
-    # threads (LPT order — the static `critical` order is longest-first),
-    # and the batch flood runs beside it capped at workers - lane; when the
-    # last chain drains, the flood widens to the full worker count.
-    chain_set = set(streaming)
-    # lane width 4: quiet-window pairs measured 27.5 s (lane 4) / 28.9 s
-    # (lane 6) vs 51 s with no lane; the chains-only probe showed width 4
-    # has the lowest per-chain stretch (8.9 s worst vs 20 s at width 8)
-    chain_lane = max(1, int(os.environ.get("SPARK_GRAFT_CHAIN_LANE", "4")))
-
-    def two_tier_run(run_fn) -> None:
-        chain_items = [it for it in items if it[0] in chain_set]
-        batch_items = [it for it in items if it[0] not in chain_set]
-        if not chain_items:
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                list(pool.map(run_fn, batch_items))
-            return
-        lane = min(chain_lane, len(chain_items))
-        base = max(1, workers - lane)
-        sem = threading.Semaphore(base)
-        remaining = [len(chain_items)]
-        done_lock = threading.Lock()
-
-        def run_chain(item) -> None:
-            try:
-                run_fn(item)
-            finally:
-                with done_lock:
-                    remaining[0] -= 1
-                    last = remaining[0] == 0
-                if last:  # lane drained: widen the flood to full width
-                    sem.release(lane)
-
-        def run_batch(item) -> None:
-            with sem:
-                run_fn(item)
-
-        with ThreadPoolExecutor(max_workers=lane) as lane_pool, ThreadPoolExecutor(
-            max_workers=workers
-        ) as batch_pool:
-            futs = [lane_pool.submit(run_chain, it) for it in chain_items]
-            futs += [batch_pool.submit(run_batch, it) for it in batch_items]
-            for f in futs:
-                f.result()
-
-    # warmup pass, untimed: the exact twin of the DuckDB baseline protocol
-    # (tools/bench_baseline.py warms each query once at the target sf before
-    # timing). Compiles the generated classes the timed pass reuses (held by
-    # the session's suite-sized codegen cache, see session.py), spins up the
-    # Arrow python workers, warms the page cache AND runs one full trigger
-    # cycle per streaming/KV chain (VERDICT r7 #6: the driver's cold run paid
-    # chain cold-start inside the timed window). Runs through the same two-tier
-    # shape as the timed pass so the warm chains see the same low-contention
-    # regime they'll be measured in.
-    if mode != "seq" and Path(sf_dir).is_dir():
-
-        def warm_one(item) -> None:
-            name, spec = item
-            try:
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", pool_of.get(name, "light")
-                )
-                spec.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass  # warmup never fails the bench
-
-        warm_t0 = time.time()
-        two_tier_run(warm_one)
-        # stamped into the artifact (phases, below): the cold-start cost
-        # (JIT, Arrow worker spin-up, page cache, one full trigger cycle per
-        # chain) is paid HERE, outside the timed window — evidence that the
-        # timed phase measures warm steady-state on the driver's cold run too
-        warm_sec = round(time.time() - warm_t0, 3)
-    else:
-        warm_sec = None
-
 
     def run_one(item) -> None:
         name, spec = item
         t0 = time.time()
         try:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", pool_of.get(name, "light")
-            )
-            spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            _run_noop(spark, plan.pool(name), spec, sf_dir)
             times[name] = round(time.time() - t0, 3)
             errs.pop(name, None)
-        except Exception as e:  # a failing query records -1, never kills the bench
+        except Exception as e:
             msg = f"{type(e).__name__}: {e}"
             errs[name] = msg.splitlines()[0][:400]
             print(f"BENCH ERROR {name}: {msg}", file=sys.stderr)
             times[name] = -1.0
 
-    # Steal budget (r7, VERDICT r6 #3): host steal has swung the artifact's
-    # absolute numbers 2-4x across rounds (BASELINE.md's 13.9-21.7 s spread;
-    # BENCH_r06's 5-12% window inflated both engines). Each timed phase now
-    # records its own /proc/stat steal%, and a phase dirtier than the budget
-    # is re-run (warm — the rerun measures the same work) up to
-    # SPARK_GRAFT_STEAL_RETRIES times; every attempt is stamped into
-    # `phases` and the artifact carries a `clean` verdict the judge can
-    # trust without hunting for adjacent clean-pair files.
-    # (steal_budget itself is defined up at the pre-run settle loop)
-    steal_retries = int(os.environ.get("SPARK_GRAFT_STEAL_RETRIES", "3"))
-    # foreign-CPU budget (r8, VERDICT r7 #5): % of total host CPU capacity
-    # over the timed window burned by processes OUTSIDE this bench's tree.
-    # 5% of 32 cores ≈ 1.6 cores of foreign work — enough to catch a
-    # concurrent sweep (which burns 10-30 cores), lax enough for kernel
-    # threads and daemons.
-    foreign_budget = float(os.environ.get("SPARK_GRAFT_FOREIGN_BUDGET", "5.0"))
-    phases: list[dict] = []
-    if warm_sec is not None:
+    t0 = time.time()
+    two_tier(plan, run_one)
+    for item in [it for it in plan.items if times.get(it[0], -1.0) < 0]:
+        retried.append(item[0])
+        run_one(item)
+    return {"total_sec": round(time.time() - t0, 3), "times": times, "errs": errs, "retried": retried}
+
+
+def _window():
+    return _cpu_counters(), _tree_cpu_ticks()
+
+
+def run_phase(phase: str, attempt_fn, phases: list[dict], *, window=_window, settle=settle):
+    """Run one timed phase under the contention budgets (r7, VERDICT r6 #3:
+    host steal has swung the artifact's absolute numbers 2-4x across
+    rounds). Each attempt measures its own window (steal %, foreign CPU %),
+    appends one `phases` record and asks contention_verdict; a dirty
+    attempt, or one that raised (a baseline timeout), settles and runs
+    again warm, up to STEAL_RETRIES more times. attempt_fn returns a dict
+    with "total_sec". Returns (the last attempt's dict, None if it raised;
+    whether that attempt ran clean)."""
+    out = None
+    for attempt in range(1, STEAL_RETRIES + 2):
+        if attempt > 1:
+            settle(RETRY_SETTLE_S)
+        (cpu0, tree0) = window()
+        try:
+            out = attempt_fn()
+        except Exception as e:
+            out = None
+            phases.append(
+                {"phase": phase, "attempt": attempt, "total_sec": None, "steal_pct": None,
+                 "foreign_cpu_pct": None, "error": type(e).__name__}
+            )
+            print(f"{phase} attempt {attempt} failed: {type(e).__name__}: {e}", file=sys.stderr)
+            continue
+        (cpu1, tree1) = window()
+        st, fo = steal_pct(cpu0, cpu1), foreign_cpu_pct(cpu0, cpu1, tree0, tree1)
         phases.append(
-            {
-                "phase": "warmup",
-                "attempt": 1,
-                "total_sec": warm_sec,
-                "steal_pct": None,
-                "foreign_cpu_pct": None,
-            }
+            {"phase": phase, "attempt": attempt, "total_sec": out.get("total_sec"),
+             "steal_pct": st, "foreign_cpu_pct": fo}
         )
-
-    def run_suite_once() -> tuple[float, float | None, float | None]:
-        times.clear()
-        errs.clear()
-        retried.clear()
-        cpu0 = _cpu_counters()
-        tree0 = _tree_cpu_ticks()
-        suite_t0 = time.time()
-        if mode == "seq":
-            for item in items:
-                run_one(item)
-        else:
-            two_tier_run(run_one)
-        # Failures under concurrency were historically contention-induced (a
-        # 1g default JVM heap OOMing — fixed in session.py) and silently
-        # shrank the suite. Any query that failed in the pool gets ONE serial
-        # retry after the pool drains; its retry wall time joins the makespan
-        # (the work is real).
-        failed = [it for it in items if times.get(it[0], -1.0) < 0]
-        for item in failed:
-            retried.append(item[0])
-            run_one(item)
-        if mode == "seq":
-            t = round(sum(v for v in times.values() if v >= 0), 3)
-        else:
-            t = round(time.time() - suite_t0, 3)
-        cpu1 = _cpu_counters()
-        tree1 = _tree_cpu_ticks()
-        st = None
-        if cpu0 and cpu1 and cpu1[1] > cpu0[1]:
-            st = round(100.0 * (cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]), 2)
-        fo = foreign_cpu_pct(cpu0, cpu1, tree0, tree1)
-        return t, st, fo
-
-    def _dirty(st: float | None, fo: float | None) -> str | None:
-        return contention_verdict(st, fo, steal_budget, foreign_budget)
-
-    total, steal_pct, foreign_pct = run_suite_once()
-    phases.append(
-        {
-            "phase": "spark_suite",
-            "attempt": 1,
-            "total_sec": total,
-            "steal_pct": steal_pct,
-            "foreign_cpu_pct": foreign_pct,
-        }
-    )
-    for attempt in range(2, steal_retries + 2):
-        why = _dirty(steal_pct, foreign_pct)
+        why = contention_verdict(st, fo, STEAL_BUDGET, FOREIGN_BUDGET)
         if why is None:
-            break
-        print(
-            f"CONTENTION BUDGET: spark_suite attempt {attempt - 1} saw "
-            f"{why} — re-running phase",
-            file=sys.stderr,
-        )
-        # wait out the storm before burning a retry: the r8 official run
-        # re-ran straight back into a 5% steal window three times
-        # (74 s → 52 s → 40 s → 59 s, all dirty); a settle-gated retry
-        # lands in the first quiet window instead
-        retry_deadline = time.time() + float(
-            os.environ.get("SPARK_GRAFT_LOAD_SETTLE_S", "120")
-        )
-        while time.time() < retry_deadline:
-            s = _steal_sample()
-            if s is None or s <= steal_budget / 2:
-                break
-            print(f"RETRY SETTLE: live steal {s}% — waiting", file=sys.stderr)
-            time.sleep(7)
-        total, steal_pct, foreign_pct = run_suite_once()
-        phases.append(
-            {
-                "phase": "spark_suite",
-                "attempt": attempt,
-                "total_sec": total,
-                "steal_pct": steal_pct,
-                "foreign_cpu_pct": foreign_pct,
-            }
-        )
+            return out, True
+        print(f"CONTENTION BUDGET: {phase} attempt {attempt} saw {why} — re-running phase", file=sys.stderr)
+    return out, False
 
-    # Solo-warm audit: rerun one-at-a-time in the same warm session, OUTSIDE
-    # the timed makespan. Contended time − solo-warm time separates scheduler
-    # queueing (expected under 16-thread FAIR submission) from a real
-    # per-query regression. Audited set (r5 verdict #4 — adaptive): the 10
-    # slowest contended specs PLUS any spec whose contended time exceeds
-    # 2.5× its last recorded solo_warm — so queueing-vs-regression evidence
-    # exists for EVERY future mover, not just the current tail.
-    solo_warm: dict[str, float] = {}
-    solo_trigger: list[str] = []
-    if mode != "seq" and os.environ.get("SPARK_GRAFT_BENCH_SOLO", "on") != "off":
-        prev_solo = {
-            k: v
-            for k, v in (prev_art.get("solo_warm") or {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-        slowest = [
-            n for n, t in sorted(times.items(), key=lambda kv: -kv[1]) if t >= 0
-        ][:10]
-        solo_trigger = sorted(
-            n
-            for n, t in times.items()
-            if t > 0 and n in prev_solo and t > 2.5 * prev_solo[n] and n not in slowest
-        )
-        # permanently-audited set (r9, VERDICT r8 #5): the serial KV chains
-        # are the #1 critical-path items and must carry contended-vs-solo
-        # evidence in EVERY artifact, not just when they land in the top 10
-        pinned = [
-            n
-            for n in ("kv_compact_range_state", "kv_range_layout_scan")
-            if n in times and n not in slowest and n not in solo_trigger
-        ]
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-        for name in slowest + solo_trigger + pinned:
-            t0 = time.time()
-            try:
-                specs[name].spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                solo_warm[name] = round(time.time() - t0, 3)
-            except Exception:
-                solo_warm[name] = -1.0
 
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    result = {
+def solo_warm_audit(spark, specs: dict, sf_dir: str, times: dict, prev_solo: dict):
+    """Rerun specs one at a time in the same warm session, OUTSIDE the timed
+    makespan: contended minus solo-warm time separates scheduler queueing
+    from a real per-query regression. Audited (r5 verdict #4): the 10
+    slowest contended specs, every spec whose contended time exceeds 2.5×
+    its last recorded solo_warm, and PINNED_SOLO. Returns (solo_warm, the
+    specs the 2.5× trigger alone added)."""
+    slowest = [n for n, t in sorted(times.items(), key=lambda kv: -kv[1]) if t >= 0][:10]
+    trigger = sorted(
+        n for n, t in times.items()
+        if t > 0 and n in prev_solo and t > 2.5 * prev_solo[n] and n not in slowest
+    )
+    pinned = [n for n in PINNED_SOLO if n in times and n not in slowest + trigger]
+    solo: dict[str, float] = {}
+    for name in slowest + trigger + pinned:
+        t0 = time.time()
+        try:
+            _run_noop(spark, None, specs[name], sf_dir)
+            solo[name] = round(time.time() - t0, 3)
+        except Exception:
+            solo[name] = -1.0
+    return solo, trigger
+
+
+def duckdb_baseline(sf_dir: str, timeout_s: float, phases: list[dict]) -> dict | None:
+    """Same-window DuckDB concurrent baseline, run after spark.stop() so
+    neither engine's window contaminates the other, under the same budgets
+    as the Spark suite; a timeout burns a retry instead of voiding the
+    artifact (r9). Returns tools/bench_baseline.py's result with the last
+    attempt's steal and foreign CPU %, or None when no attempt completed.
+    The baseline subprocess is our child, so its ticks count as our tree's."""
+
+    def attempt() -> dict:
+        script = str(ROOT / "tools" / "bench_baseline.py")
+        proc = subprocess.run(
+            [sys.executable, script, sf_dir, "--concurrent", str(WORKERS)],
+            capture_output=True,
+            text=True,
+            timeout=timeout_s,
+        )
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    duck, _ = run_phase("duckdb_baseline", attempt, phases)
+    if duck is not None:
+        duck["steal_pct"] = phases[-1]["steal_pct"]
+        duck["foreign_cpu_pct"] = phases[-1]["foreign_cpu_pct"]
+    return duck
+
+
+def suite_result(cfg: BenchConfig, suite: dict, solo_warm: dict, solo_trigger: list) -> dict:
+    """The artifact's head: the timed suite, its window and the solo audit."""
+    sf = cfg.sf_dir.rstrip("/").split("sf")[-1]
+    return {
         "metric": "suite_total_wall",
-        "value": total,
+        "value": suite["total_sec"],
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in times.items()},
+        "queries": {k: round(v, 2) for k, v in suite["times"].items()},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": int(cpus),
-        "mode": mode,
-        "workers": workers if mode != "seq" else 1,
-        "failed": sorted(errs),
-        "retried": retried,
-        "err": errs,
-        # host steal% over the timed window (None if /proc/stat unreadable)
-        "steal_pct": steal_pct,
-        # CPU capacity % burned by processes OUTSIDE this bench's process
-        # tree over the timed window — catches same-host self-contention
-        # that steal% can't see (None if /proc attribution unavailable)
-        "foreign_cpu_pct": foreign_pct,
+        "cpus": cfg.cpus,
+        "mode": "concurrent",
+        "workers": WORKERS,
+        "failed": sorted(suite["errs"]),
+        "retried": suite["retried"],
+        "err": suite["errs"],
+        # host steal% and foreign CPU% over the timed window (None if /proc
+        # is unreadable); foreign catches same-host self-contention
+        "steal_pct": suite["steal_pct"],
+        "foreign_cpu_pct": suite["foreign_cpu_pct"],
         # contended-vs-solo accounting: 10 slowest + adaptive 2.5× movers
         "solo_warm": solo_warm,
-        # specs solo-warmed by the adaptive 2.5×-of-last-solo trigger alone
         "solo_trigger": solo_trigger,
     }
-    # drop the dedup family's cached intermediates before teardown (no-op for
-    # this process's lifetime, but keeps the teardown path honest for anyone
-    # looping the bench in one session)
-    from templatedb_spark.operators.dedup import clear_dedup_caches
 
-    clear_dedup_caches(spark)
-    # The driver parses the FINAL stdout line as JSON and stores only a bounded
-    # tail of the raw stream (BENCH_r01 recorded parsed=null because the line
-    # was diluted by late JVM log output). Three defenses: stop the JVM first
-    # so nothing can interleave into the line, emit compact separators to keep
-    # the line short, and persist a file copy for humans.
-    spark.stop()
-    out_dir = Path(__file__).resolve().parent / "bench_results"
-    out_dir.mkdir(exist_ok=True)
-    # Same-window DuckDB concurrent baseline (the honest comparison is a
-    # persisted same-suite artifact refreshed alongside every Spark run, not
-    # a stale prose number). Runs after spark.stop() so neither engine's
-    # window contaminates the other; records its own steal_pct.
-    if os.environ.get("SPARK_GRAFT_BENCH_BASELINE", "on") != "off":
-        import subprocess
 
-        try:
-            # same steal budget + rerun discipline as the spark_suite phase;
-            # a TIMEOUT also burns a retry instead of voiding the artifact
-            # (r9: the baseline hit its hard cap under a leftover sweep's
-            # load and the official file recorded duckdb_conc_total: null —
-            # no ratio at all; a settle-gated retry lands in the quiet
-            # window the same way the steal reruns do)
-            duck = None
-            for attempt in range(1, steal_retries + 2):
-                cpu0d = _cpu_counters()
-                tree0d = _tree_cpu_ticks()
-                try:
-                    proc = subprocess.run(
-                        [
-                            sys.executable,
-                            str(Path(__file__).resolve().parent / "tools" / "bench_baseline.py"),
-                            sf_dir,
-                            "--concurrent",
-                            str(workers),
-                        ],
-                        capture_output=True,
-                        text=True,
-                        # bounded so a hung baseline can never stall the
-                        # bench run: the concurrent DuckDB suite takes
-                        # 20-70 s at sf0.1 solo; 600 s absorbs contention
-                        # stretch without letting a true hang run forever.
-                        # Env-tunable (default unchanged) because the sf1
-                        # lane's DuckDB tail (tfidf ~12 min solo) needs a
-                        # bigger cap — measurement harness only, the timed
-                        # region and query set are untouched (r11, see
-                        # OPTIMIZATION_r11.md "sf1 lane").
-                        timeout=baseline_timeout,
-                    )
-                    duck = json.loads(proc.stdout.strip().splitlines()[-1])
-                except (subprocess.TimeoutExpired, ValueError, IndexError) as te:
-                    phases.append(
-                        {
-                            "phase": "duckdb_baseline",
-                            "attempt": attempt,
-                            "total_sec": None,
-                            "steal_pct": None,
-                            "foreign_cpu_pct": None,
-                            "error": type(te).__name__,
-                        }
-                    )
-                    print(
-                        f"BASELINE attempt {attempt}: {type(te).__name__} — "
-                        "settling then retrying",
-                        file=sys.stderr,
-                    )
-                    if attempt <= steal_retries:
-                        retry_deadline = time.time() + float(
-                            os.environ.get("SPARK_GRAFT_LOAD_SETTLE_S", "120")
-                        )
-                        while time.time() < retry_deadline:
-                            s = _steal_sample()
-                            if s is None or s <= steal_budget / 2:
-                                break
-                            print(
-                                f"RETRY SETTLE: live steal {s}% — waiting",
-                                file=sys.stderr,
-                            )
-                            time.sleep(7)
-                    duck = None
-                    continue
-                cpu1d = _cpu_counters()
-                tree1d = _tree_cpu_ticks()
-                if cpu0d and cpu1d and cpu1d[1] > cpu0d[1]:
-                    dt = cpu1d[1] - cpu0d[1]
-                    duck["steal_pct"] = round(
-                        100.0 * (cpu1d[0] - cpu0d[0]) / dt, 2
-                    )
-                    if tree0d is not None and tree1d is not None:
-                        # the baseline subprocess is our child: its ticks are
-                        # in our tree (cutime after reap), so the same
-                        # foreign attribution applies
-                        foreign = (cpu1d[2] - cpu0d[2]) - (tree1d - tree0d)
-                        duck["foreign_cpu_pct"] = round(
-                            100.0 * max(0, foreign) / dt, 2
-                        )
-                phases.append(
-                    {
-                        "phase": "duckdb_baseline",
-                        "attempt": attempt,
-                        "total_sec": duck.get("total_sec"),
-                        "steal_pct": duck.get("steal_pct"),
-                        "foreign_cpu_pct": duck.get("foreign_cpu_pct"),
-                    }
-                )
-                dwhy = _dirty(duck.get("steal_pct"), duck.get("foreign_cpu_pct"))
-                if dwhy is None:
-                    break
-                print(
-                    f"CONTENTION BUDGET: duckdb_baseline attempt {attempt} saw "
-                    f"{dwhy} — re-running phase",
-                    file=sys.stderr,
-                )
-                # settle-gated retry (see the spark_suite loop)
-                retry_deadline = time.time() + float(
-                    os.environ.get("SPARK_GRAFT_LOAD_SETTLE_S", "120")
-                )
-                while time.time() < retry_deadline:
-                    s = _steal_sample()
-                    if s is None or s <= steal_budget / 2:
-                        break
-                    print(
-                        f"RETRY SETTLE: live steal {s}% — waiting",
-                        file=sys.stderr,
-                    )
-                    time.sleep(7)
-            if duck is None:
-                raise RuntimeError(
-                    "duckdb baseline never completed within its attempts"
-                )
-            (out_dir / "duckdb_conc_latest.json").write_text(
-                json.dumps(duck, indent=2) + "\n"
-            )
-            result["duckdb_conc_total"] = duck.get("total_sec")
-            result["duckdb_conc_steal_pct"] = duck.get("steal_pct")
-        except Exception as e:
-            print(f"BASELINE RUN FAILED: {e}", file=sys.stderr)
-            result["duckdb_conc_total"] = None
-    # final verdict over every timed phase's LAST attempt (phase reruns keep
-    # earlier attempts in the list as evidence)
-    last: dict[str, dict] = {}
-    for p in phases:
-        last[p["phase"]] = p
-    result["steal_budget_pct"] = steal_budget
-    result["foreign_budget_pct"] = foreign_budget
+def verdict(result: dict, phases: list[dict], load1_before: float | None) -> None:
+    """Stamp the budgets and the `clean` verdict over every timed phase's
+    LAST attempt (reruns keep earlier attempts in `phases` as evidence)."""
+    last = {p["phase"]: p for p in phases if p["phase"] != "warmup"}
+    result["steal_budget_pct"] = STEAL_BUDGET
+    result["foreign_budget_pct"] = FOREIGN_BUDGET
     result["load1_before"] = load1_before
-    result["load_budget"] = load_budget
+    result["load_budget"] = LOAD_BUDGET
     result["clean"] = all(
         p["steal_pct"] is not None
-        and p["steal_pct"] <= steal_budget
-        and (p.get("foreign_cpu_pct") is None or p["foreign_cpu_pct"] <= foreign_budget)
+        and p["steal_pct"] <= STEAL_BUDGET
+        and (p.get("foreign_cpu_pct") is None or p["foreign_cpu_pct"] <= FOREIGN_BUDGET)
         for p in last.values()
-        if p["phase"] != "warmup"  # untimed; stamped for evidence only
-    ) and (load1_before is not None and load1_before <= load_budget)
+    ) and (load1_before is not None and load1_before <= LOAD_BUDGET)
     result["phases"] = phases
-    # Clean-pair provenance (r9 post-mortem): a dirty official artifact with
-    # no baseline number is useless on its own — the judge had to hunt
-    # BASELINE.md prose for the honest ratio. Every clean run with a real
-    # baseline refreshes bench_results/clean_pair_latest.json; every run
-    # that is NOT both clean and paired embeds that file's summary so the
-    # official artifact is self-contained evidence either way.
+
+
+def pair_with_last_clean(result: dict, n_queries: int, out_dir: Path) -> None:
+    """Clean-pair provenance (r9): a clean run with a real baseline refreshes
+    clean_pair_latest.json; any other run embeds that file's summary, so the
+    artifact is self-contained evidence either way."""
     pair_file = out_dir / "clean_pair_latest.json"
-    paired = result.get("duckdb_conc_total") is not None
-    if result["clean"] and paired:
-        pair_file.write_text(
-            json.dumps(
-                {
-                    "recorded_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%S", time.gmtime()
-                    ),
-                    "sf": result["sf"],
-                    "n_queries": len(times),
-                    "spark_total_sec": total,
-                    "duckdb_conc_total": result["duckdb_conc_total"],
-                    "ratio": round(total / result["duckdb_conc_total"], 3)
-                    if result["duckdb_conc_total"]
-                    else None,
-                    "steal_pct": steal_pct,
-                    "foreign_cpu_pct": foreign_pct,
-                },
-                indent=2,
-            )
-            + "\n"
-        )
-    else:
-        try:
-            result["last_clean_pair"] = json.loads(pair_file.read_text())
-        except Exception:
-            result["last_clean_pair"] = None
-    (out_dir / "latest.json").write_text(json.dumps(result, indent=2) + "\n")
-    sys.stderr.flush()
-    # The driver stores only a bounded (~2000-char) tail of stdout and parses
-    # the FINAL line as JSON — the full 111-query map made that line 2.8k chars
-    # and truncated the head (BENCH_r01/r02 recorded parsed=null). Emit a line
-    # guaranteed < 1800 chars: totals + failures always; per-query times only
-    # for the slowest queries that still fit. The complete map lives in
-    # bench_results/latest.json.
-    line = json.dumps(result, separators=(",", ":"))
-    if len(line) > 1750:
-        compact = {
-            k: v
-            for k, v in result.items()
-            if k not in ("queries", "err", "solo_warm", "phases")
+    duck_total = result.get("duckdb_conc_total")
+    if result["clean"] and duck_total is not None:
+        pair = {
+            "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
+            "sf": result["sf"],
+            "n_queries": n_queries,
+            "spark_total_sec": result["value"],
+            "duckdb_conc_total": duck_total,
+            "ratio": round(result["value"] / duck_total, 3) if duck_total else None,
+            "steal_pct": result["steal_pct"],
+            "foreign_cpu_pct": result["foreign_cpu_pct"],
         }
-        # failed/retried are unbounded in a mass-failure run (a dead gateway
-        # fails all 116 queries → >5 KB of names); the compact line keeps
-        # counts + a bounded sample, full lists stay in latest.json
-        for key in ("failed", "retried"):
-            names = compact.get(key) or []
-            compact[f"n_{key}"] = len(names)
-            compact[key] = names[:10]
-        compact["queries_file"] = "bench_results/latest.json"
-        by_cost = sorted(times.items(), key=lambda kv: -kv[1])
-        shown: dict[str, float] = {}
-        for name, t in by_cost:
-            shown[name] = t
-            compact["queries"] = shown
-            if len(json.dumps(compact, separators=(",", ":"))) > 1700:
-                shown.pop(name)
-                break
+        pair_file.write_text(json.dumps(pair, indent=2) + "\n")
+        return
+    try:
+        result["last_clean_pair"] = json.loads(pair_file.read_text())
+    except Exception:
+        result["last_clean_pair"] = None
+
+
+def emit(result: dict, times: dict[str, float], out_dir: Path) -> str:
+    """Write the full result to out_dir/latest.json and return the stdout
+    line. The consumer keeps only a bounded (~2000-char) tail of stdout and
+    parses the FINAL line as JSON (a 111-query map made that line 2.8k chars
+    and truncated the head: BENCH_r01/r02 recorded parsed=null), so the line
+    stays under 1800 chars: totals and failure counts always, per-query
+    times only for the slowest queries that still fit."""
+    (out_dir / "latest.json").write_text(json.dumps(result, indent=2) + "\n")
+    line = json.dumps(result, separators=(",", ":"))
+    if len(line) <= 1750:
+        return line
+    compact = {k: v for k, v in result.items() if k not in ("queries", "err", "solo_warm", "phases")}
+    # failed/retried are unbounded in a mass-failure run (a dead gateway
+    # fails every query): counts plus a bounded sample
+    for key in ("failed", "retried"):
+        names = compact.get(key) or []
+        compact[f"n_{key}"] = len(names)
+        compact[key] = names[:10]
+    compact["queries_file"] = "bench_results/latest.json"
+    shown: dict[str, float] = {}
+    for name, t in sorted(times.items(), key=lambda kv: -kv[1]):
+        shown[name] = t
         compact["queries"] = shown
-        compact["queries_shown"] = f"{len(shown)}/{len(times)} slowest"
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line, flush=True)
-    if scratch:
-        _shutil.rmtree(scratch, ignore_errors=True)
+        if len(json.dumps(compact, separators=(",", ":"))) > 1700:
+            shown.pop(name)
+            break
+    compact["queries"] = shown
+    compact["queries_shown"] = f"{len(shown)}/{len(times)} slowest"
+    return json.dumps(compact, separators=(",", ":"))
+
+
+def main() -> None:
+    cfg = load_config()
+    scratch = make_scratch(cfg.scratch_root)
+    try:
+        load1_before = settle(PRERUN_SETTLE_S, LOAD_BUDGET)
+        spark = bench_session(cfg, scratch)
+        from templatedb_spark.operators.dedup import clear_dedup_caches
+        from templatedb_spark.suite import all_specs
+
+        out_dir = ROOT / "bench_results"
+        try:
+            prev_art = json.loads((out_dir / "latest.json").read_text())
+        except Exception:
+            prev_art = {}  # cold start: static seed only
+        specs = all_specs()
+        plan = plan_suite(specs, _positive(prev_art.get("queries")))
+        phases = [{"phase": "warmup", "attempt": 1, "total_sec": warmup(spark, plan, cfg.sf_dir),
+                   "steal_pct": None, "foreign_cpu_pct": None}]
+        suite, _ = run_phase("spark_suite", lambda: timed_suite(spark, plan, cfg.sf_dir), phases)
+        suite.update(steal_pct=phases[-1]["steal_pct"], foreign_cpu_pct=phases[-1]["foreign_cpu_pct"])
+        solo = solo_warm_audit(spark, specs, cfg.sf_dir, suite["times"], _positive(prev_art.get("solo_warm")))
+        result = suite_result(cfg, suite, *solo)
+        # drop the dedup family's cached intermediates before teardown, then
+        # stop the JVM so no late log output can interleave into the line
+        clear_dedup_caches(spark)
+        spark.stop()
+        out_dir.mkdir(exist_ok=True)
+        duck = duckdb_baseline(cfg.sf_dir, cfg.baseline_timeout_s, phases)
+        if duck is None:
+            print("BASELINE RUN FAILED: duckdb baseline never completed within its attempts", file=sys.stderr)
+            result["duckdb_conc_total"] = None
+        else:
+            (out_dir / "duckdb_conc_latest.json").write_text(json.dumps(duck, indent=2) + "\n")
+            result["duckdb_conc_total"] = duck.get("total_sec")
+            result["duckdb_conc_steal_pct"] = duck.get("steal_pct")
+        verdict(result, phases, load1_before)
+        pair_with_last_clean(result, len(suite["times"]), out_dir)
+        line = emit(result, suite["times"], out_dir)
+        sys.stderr.flush()
+        print(line, flush=True)
+    finally:
+        if scratch:
+            shutil.rmtree(scratch, ignore_errors=True)
 
 
 if __name__ == "__main__":

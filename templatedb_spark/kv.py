@@ -61,6 +61,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
 
 from templatedb_spark.sources.memory import empty_df, local_df
 
@@ -137,13 +138,15 @@ def _bucket_ids(root: Path) -> list[int]:
     return sorted(int(b.name.split("=")[1]) for b in root.glob("bucket=*") if b.is_dir())
 
 
-def _concurrently(calls: list) -> list:
+def _concurrently(spark: SparkSession, calls: list) -> list:
     """Run independent Spark writes one thread each (guide §2.6: the next
     write's tasks back-fill the tail of the previous one) and return their
-    results in order. A lone call runs inline, in the caller's thread and
-    so in its job group."""
+    results in order. Each call is wrapped in the caller's thread, so its
+    jobs carry the caller's local properties: job group, description and
+    scheduler pool. A lone call runs inline, in the caller's thread."""
     if len(calls) <= 1:
         return [c() for c in calls]
+    calls = [inheritable_thread_target(spark)(c) for c in calls]
     with ThreadPoolExecutor(max_workers=len(calls)) as pool:
         return [f.result() for f in [pool.submit(c) for c in calls]]
 
@@ -766,7 +769,7 @@ class KVTable:
         recorded with the version (single-batch callers). The hints describe
         the change rows, so they are dropped where a version holds a whole
         state instead. Returns the committed versions."""
-        v0 = self.latest_version() + 1
+        v0 = self._next_version()
         changes: list[DataFrame | None] = list(batches)
         if self._complete_states:
             # a whole-state version of an empty batch still holds the
@@ -778,6 +781,7 @@ class KVTable:
         rows = self._version_rows(changes)
         todo = [(v0 + i, r) for i, r in enumerate(rows) if r is not None]
         metas = _concurrently(
+            self.spark,
             [
                 functools.partial(
                     self._write_version,
@@ -817,6 +821,14 @@ class KVTable:
     def latest_version(self) -> int:
         vs = self._versions()
         return vs[-1] if vs else -1
+
+    def _next_version(self, state: dict[int, dict] | None = None) -> int:
+        """The first free version number: above every live version and never
+        below the compaction FLOOR. After a compaction that leaves no live
+        version the manifest is empty, and a number below the floor would be
+        quarantined as retired by a later manifest recovery."""
+        state = self._load_manifest() if state is None else state
+        return max(max(state, default=-1) + 1, self._read_floor() or 0)
 
     # -- writes (each call is one atomic batch == one new version) ----------
     @_locked
@@ -1131,7 +1143,7 @@ class KVTable:
                 rows, nv, known_range=known, rewrite_of=(o, carried)
             )
 
-        v = max(mstate) + 1
+        v = self._next_version(mstate)
         hits = self._resolve(start=start, end=end)
         base = (
             self.snapshot(key_range=(start, end))
@@ -1158,7 +1170,7 @@ class KVTable:
             numbers.append(nv)
             writes.append(functools.partial(rewrite, o, hits[o], nv, meta))
         state = {
-            nv: meta for nv, meta in zip(numbers, _concurrently(writes)) if meta is not None
+            nv: meta for nv, meta in zip(numbers, _concurrently(self.spark, writes)) if meta is not None
         }
         for o, nv, meta in clones:
             self._clear_orphan(nv)

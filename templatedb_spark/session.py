@@ -11,7 +11,10 @@ this module centralizes the configuration we want everywhere:
   the built-in functions can express the semantics).
 - **Shuffle partitions** default to the local core count for tests; a real cluster
   deployment overrides via `EngineConfig(shuffle_partitions=...)` — with AQE coalescing
-  enabled the initial number only needs to be an upper bound.
+  enabled the initial number only needs to be an upper bound. `sized_session`, the
+  session of `bench.py` and the tools, sizes them to the input (`input_partitions`).
+- **Local cores** come from `SPARK_GRAFT_CPUS`, default the host's core count
+  (`local_cpus`, the one place that reads it).
 - **Broadcast threshold** left at default 10 MB; dimension tables (region/nation/
   supplier/part at TPC-H shape) broadcast automatically, and operators that *know*
   a side is dimension-sized hint `broadcast()` explicitly.
@@ -31,8 +34,34 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+
+def local_cpus(environ=os.environ) -> int:
+    """SPARK_GRAFT_CPUS: the cores of a local[N] session, default the
+    host's core count. A malformed value raises ValueError naming it."""
+    raw = environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS={raw!r}: expected a positive number of cores")
+    return n
+
+
+def input_partitions(sf_dir: str | None, cpus: int) -> int:
+    """Initial shuffle-partition count sized to the input volume: ~32 MB per
+    partition (the granularity of files.maxPartitionBytes), clamped to
+    [8, cpus]. AQE coalesces post-shuffle partitions at runtime, but the
+    initial count still drives task-scheduling overhead: at sf0.1 (~60 MB)
+    8 is right; at cluster scale the cap is the core count times whatever
+    oversubscription the deployment wants."""
+    files = Path(sf_dir).glob("*.parquet") if sf_dir else ()
+    total = sum(f.stat().st_size for f in files if f.is_file())
+    return max(8, min(cpus, total // (32 << 20) or 8))
 
 
 @dataclass
@@ -42,7 +71,7 @@ class EngineConfig:
 
     master: str | None = None  # None → respect existing session / spark-submit
     app_name: str = "templatedb-spark"
-    shuffle_partitions: int = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    shuffle_partitions: int = field(default_factory=local_cpus)
     ui_enabled: bool = False
     # local[N] runs driver AND all executor threads in ONE JVM whose heap
     # defaults to 1g — under 16-way concurrent query submission that
@@ -108,6 +137,33 @@ def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
 def build_session(config: EngineConfig | None = None) -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
     config = config or EngineConfig(
-        master=os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        master=os.environ.get("SPARK_GRAFT_MASTER", f"local[{local_cpus()}]")
     )
     return config.builder().getOrCreate()
+
+
+def sized_session(
+    sf_dir: str | None = None,
+    *,
+    cpus: int | None = None,
+    ui: bool = False,
+    extra: dict[str, str] | None = None,
+) -> SparkSession:
+    """The session `bench.py` and the tools measure on: local[cpus]
+    (default `local_cpus()`), shuffle partitions sized to the parquet input
+    in sf_dir (`input_partitions`; no dir sizes as an empty input), log
+    level ERROR, and parquet nanosecond timestamps read as longs (the
+    events table has shipped them), set once before any worker thread
+    runs a query."""
+    cpus = cpus or local_cpus()
+    spark = build_session(
+        EngineConfig(
+            master=f"local[{cpus}]",
+            shuffle_partitions=input_partitions(sf_dir, cpus),
+            ui_enabled=ui,
+            extra=extra or {},
+        )
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark

@@ -8,6 +8,9 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+# the shared order-insensitive result normalization of the oracle checks
+from tools.check_oracle import normalize as normalize_pdf  # noqa: E402,F401
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 FIXTURES = str(REPO / "tests" / "fixtures")
@@ -53,25 +56,3 @@ def engine(spark):
     eng.register_csv_dir(FIXTURES)
     return eng
 
-
-def normalize_pdf(pdf) -> list[tuple]:
-    """Shared order-insensitive normalization (same rules as tools/check_oracle)."""
-    import math
-
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = []
-    for row in pdf.itertuples(index=False):
-        vals = []
-        for v in row:
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                vals.append("NULL")
-            elif isinstance(v, float):
-                vals.append(f"{v:.10g}")
-            elif hasattr(v, "isoformat"):
-                vals.append(str(v)[:19])
-            else:
-                vals.append(str(v))
-        rows.append(tuple(vals))
-    rows.sort()
-    return rows

@@ -133,8 +133,7 @@ def test_point_read_scans_single_bucket(kv):
 
 def _group_jobs(spark, fn):
     """Run fn under a fresh Spark job group; return (fn's result, the ids
-    of the jobs the group ran). Jobs started by other Python threads (the
-    concurrent compact_range rewrites) do not inherit the group."""
+    of the jobs the group ran)."""
     import uuid
 
     sc = spark.sparkContext
@@ -736,6 +735,39 @@ def test_compact_range_empty_in_range_set(kv):
     assert v >= -1
     assert kv.get("x") is None
     assert kv.scan().count() == 0
+
+
+def test_versions_after_an_empty_compaction_start_at_the_floor(kv):
+    """A compaction that leaves no live version publishes an empty manifest
+    and a FLOOR. The next write must take a number at or above the floor:
+    one below it is retired to recovery, so losing the MANIFEST would
+    quarantine a committed write."""
+    import os
+
+    kv.put("x", "1")
+    kv.delete("x")
+    kv.compact_range("a", "zz")
+    v = kv.put("y", "value")
+    floor = kv._read_floor()
+    assert floor is None or v >= floor
+    os.remove(str(kv._manifest))
+    reopened = type(kv)(kv.spark, kv.path)
+    assert reopened.get("y") == "value"
+    assert not os.path.exists(os.path.join(kv.path, "quarantine"))
+
+
+def test_concurrent_compact_range_writes_keep_the_callers_job_group(spark):
+    """compact_range writes its base and every rewrite from worker threads;
+    their jobs must run in the caller's job group (and so in its scheduler
+    pool), like the inline write of a lone version does."""
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d)
+        kv.write_batch(puts={"a1": "x", "m1": "x", "z1": "x"})
+        kv.write_batch(puts={"a2": "y", "m2": "y", "z2": "y"})
+        _, jobs = _group_jobs(spark, lambda: kv.compact_range("m", "n"))
+        assert len(kv._versions()) == 3  # the base and two rewrites
+        assert jobs
+        assert sorted(r.key for r in kv.scan().collect()) == ["a1", "a2", "m1", "m2", "z1", "z2"]
 
 
 # ---------------------------------------------------------------------------

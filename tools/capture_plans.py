@@ -24,12 +24,10 @@ def main() -> None:
     names = sys.argv[3:]
     outdir.mkdir(parents=True, exist_ok=True)
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
     from templatedb_spark.suite import all_specs
 
-    spark = build_session(EngineConfig(master="local[8]", shuffle_partitions=8))
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = sized_session(sf_dir)
 
     specs = all_specs()
     if names:

@@ -15,8 +15,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def normalize(df) -> list[tuple]:
@@ -45,7 +46,7 @@ def normalize(df) -> list[tuple]:
 def main() -> int:
     import duckdb
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
     from templatedb_spark.suite import all_specs
 
     argv = sys.argv[1:]
@@ -60,8 +61,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    spark = build_session(EngineConfig(master="local[8]", shuffle_partitions=8))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = sized_session(sf_dir)
     con = duckdb.connect()
     from templatedb_spark.catalog import SF_TABLES
 

@@ -22,10 +22,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_root = Path(sys.argv[2]) if len(sys.argv) > 2 else Path(tempfile.mkdtemp(prefix="codec_"))
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
 
-    spark = build_session(EngineConfig(master="local[8]", shuffle_partitions=8))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = sized_session(sf_dir)
     src = spark.read.parquet(f"{sf_dir}/lineitem.parquet").cache()
     n = src.count()  # materialize once so write timing excludes the scan
 

@@ -2,15 +2,20 @@
 correctness gate. Loads __spark_entry__ by file path (as the driver does),
 builds a VANILLA SparkSession (no engine config — catches any hidden
 dependency on our tuned session), runs every queries() entry at sf0.01, and
-compares to oracle_sql() via DuckDB with order-insensitive value comparison.
+compares to oracle_sql() via DuckDB with order-insensitive value comparison
+(tools/check_oracle.normalize).
 
-Usage: python tools/dress_rehearsal.py   (expect: "0 failures / 191 queries")
+Usage: python tools/dress_rehearsal.py   (expect: "0 failures / <all> queries")
 """
-import importlib.util, math, sys
-spec = importlib.util.spec_from_file_location('__spark_entry__', '/root/repo/__spark_entry__.py')
+import importlib.util, sys
+from pathlib import Path
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+spec = importlib.util.spec_from_file_location('__spark_entry__', str(ROOT / '__spark_entry__.py'))
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession
 import duckdb
+from tools.check_oracle import normalize
 
 SF = "/root/testdata/sf0.01"
 spark = SparkSession.builder.master("local[8]").config("spark.ui.enabled", "false").getOrCreate()
@@ -18,18 +23,6 @@ spark.sparkContext.setLogLevel("ERROR")
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def norm(df):
-    cols = sorted(df.columns); df = df[cols]; rows=[]
-    for row in df.itertuples(index=False):
-        vals=[]
-        for v in row:
-            if v is None or (isinstance(v,float) and math.isnan(v)): vals.append("NULL")
-            elif isinstance(v,float): vals.append(f"{v:.10g}")
-            elif hasattr(v,"isoformat"): vals.append(str(v)[:19])
-            else: vals.append(str(v))
-        rows.append(tuple(vals))
-    return sorted(rows)
 
 qs, os_ = mod.queries(), mod.oracle_sql()
 entry_rows = mod.entry(spark).collect()
@@ -42,7 +35,7 @@ for name, fn in qs.items():
             print(f"ROWSONLY {name}: {len(sdf)}"); continue
         ddf = con.sql(os_[name]).df()
         ok_cols = sorted(sdf.columns) == sorted(ddf.columns)
-        s, d = norm(sdf), norm(ddf)
+        s, d = normalize(sdf), normalize(ddf)
         if ok_cols and s == d:
             pass
         else:

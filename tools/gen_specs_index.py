@@ -10,7 +10,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -32,7 +33,7 @@ def main() -> None:
         mod = spec.spark.__module__.replace("templatedb_spark.", "")
         kind = "exact SQL" if spec.oracle else "rows-only"
         lines.append(f"| {i} | `{name}` | `{mod}` | {kind} | {spec.doc} |")
-    Path("/root/repo/SPECS.md").write_text("\n".join(lines) + "\n")
+    (ROOT / "SPECS.md").write_text("\n".join(lines) + "\n")
     print(f"SPECS.md: {len(specs)} rows")
 
 

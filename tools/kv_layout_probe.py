@@ -64,10 +64,9 @@ def main():
     n_versions = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n_keys = int(sys.argv[2]) if len(sys.argv) > 2 else 40_000
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
 
-    spark = build_session(EngineConfig(master="local[8]", shuffle_partitions=8))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = sized_session()
     out = {"versions": n_versions, "keys": n_keys, "layouts": {}}
     lo, hi = f"k{int(n_keys*0.50):06d}", f"k{int(n_keys*0.55):06d}"  # 5% window
     for layout in ("hash", "range"):

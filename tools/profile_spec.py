@@ -8,6 +8,7 @@ generates different code from run to run.
 
 Usage: python tools/profile_spec.py name [name ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+       SPARK_GRAFT_CPUS   (default: the host's core count)
 """
 
 from __future__ import annotations
@@ -26,25 +27,15 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from templatedb_spark.session import EngineConfig, build_session, codegen_compiles
+    from templatedb_spark.session import codegen_compiles, sized_session
     from templatedb_spark.suite import all_specs
+    from tools.iso_time import noop
 
-    spark = build_session(
-        EngineConfig(
-            master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-            shuffle_partitions=8,
-            ui_enabled=True,
-        )
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = sized_session(sf_dir, ui=True)
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
     specs = all_specs()
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
 
     for name in names:
         # warm once (page cache, codegen, shared caches), then measure

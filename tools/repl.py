@@ -54,7 +54,7 @@ def read_sql() -> str | None:
 
 def main() -> None:
     from templatedb_spark.slt import SltSession
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
 
     os.makedirs(os.path.dirname(HISTORY), exist_ok=True)
     try:
@@ -63,8 +63,7 @@ def main() -> None:
         print("No previous history.")
     atexit.register(readline.write_history_file, HISTORY)
 
-    spark = build_session(EngineConfig(master="local[8]", shuffle_partitions=8))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = sized_session(sys.argv[1] if len(sys.argv) > 1 else None)
     session = SltSession(spark, base_dir=os.getcwd(), strict=False)
     if len(sys.argv) > 1:
         session.engine.register_parquet_dir(sys.argv[1])

@@ -1,6 +1,7 @@
 """Empirical scaling probe: replicate the driver's sf0.1 tables k× by
 key-offset (pyarrow, no Spark) and time a set of headline specs at
 k = 1, 2, 4, 8 — the measured answer to "would this plan survive a scale-up".
+Each spec is timed warm at each k through tools/iso_time.py's loop.
 
 Replication semantics: every copy offsets its table's keys past the max, so
 counts scale exactly k× while join/grain structure is preserved for the
@@ -18,7 +19,6 @@ import json
 import os
 import shutil
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -69,22 +69,16 @@ def main() -> None:
     root = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scaletest"
     dirs = build_dirs(root)
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
     from templatedb_spark.suite import all_specs
+    from tools.iso_time import time_spec
 
-    spark = build_session(EngineConfig(master="local[32]", shuffle_partitions=32))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = sized_session(dirs[max(dirs)])
     specs = all_specs()
-    result: dict[str, dict[str, float]] = {}
-    for name in SPECS:
-        row: dict[str, float] = {}
-        for k in sorted(dirs):
-            fn = specs[name].spark
-            fn(spark, dirs[k]).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.time()
-            fn(spark, dirs[k]).write.format("noop").mode("overwrite").save()
-            row[f"x{k}"] = round(time.time() - t0, 2)
-        result[name] = row
+    result = {
+        name: {f"x{k}": round(time_spec(spark, specs[name], dirs[k], 1)[1][0], 2) for k in sorted(dirs)}
+        for name in SPECS
+    }
     spark.stop()
     print(json.dumps({"probe": "scale", "base": "sf0.1", "warm_sec": result}))
 

@@ -8,7 +8,7 @@ events.rocksdb_state_conf, which every gate clone inherits.
 Usage: python tools/stream_probe.py [default|rocksdb] [chain ...]
        chains: join winlate ingest sessionize   (default: all)
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default 32)
+       SPARK_GRAFT_CPUS   (default: the host's core count)
 """
 
 from __future__ import annotations
@@ -33,18 +33,12 @@ def main() -> None:
     ]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from templatedb_spark.session import EngineConfig, build_session
+    from templatedb_spark.session import sized_session
     from templatedb_spark.streaming import gate
     from templatedb_spark.streaming.drain import drain, run
     from templatedb_spark.streaming.events import rocksdb_state_conf
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    extra = rocksdb_state_conf() if provider == "rocksdb" else {}
-    spark = build_session(
-        EngineConfig(master=f"local[{cpus}]", shuffle_partitions=8, extra=extra)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = sized_session(sf_dir, extra=rocksdb_state_conf() if provider == "rocksdb" else None)
 
     if provider == "rocksdb":  # the clones must inherit the SparkConf provider
         clone_conf = gate._stream_session(spark, sf_dir).conf
