@@ -472,8 +472,9 @@ def warmup(spark, plan: SuitePlan, sf_dir: str) -> float:
         name, spec = item
         try:
             _run_noop(spark, plan.pool(name), spec, sf_dir)
-        except Exception:
-            pass  # warmup never fails the bench
+        except Exception as e:  # warmup never fails the bench, but says which query failed
+            first = (str(e).strip().splitlines() or [""])[0]
+            print(f"warmup: {name} failed: {type(e).__name__}: {first}", file=sys.stderr)
 
     t0 = time.time()
     two_tier(plan, warm_one)
@@ -706,8 +707,7 @@ def main() -> None:
     try:
         load1_before = settle(PRERUN_SETTLE_S, LOAD_BUDGET)
         spark = bench_session(cfg, scratch)
-        from templatedb_spark.operators.dedup import clear_dedup_caches
-        from templatedb_spark.suite import all_specs
+        from templatedb_spark.suite import all_specs, clear_memos
 
         out_dir = ROOT / "bench_results"
         try:
@@ -722,9 +722,10 @@ def main() -> None:
         suite.update(steal_pct=phases[-1]["steal_pct"], foreign_cpu_pct=phases[-1]["foreign_cpu_pct"])
         solo = solo_warm_audit(spark, specs, cfg.sf_dir, suite["times"], _positive(prev_art.get("solo_warm")))
         result = suite_result(cfg, suite, *solo)
-        # drop the dedup family's cached intermediates before teardown, then
-        # stop the JVM so no late log output can interleave into the line
-        clear_dedup_caches(spark)
+        # release the operators' memoized and cached intermediates before
+        # teardown, then stop the JVM so no late log output can interleave
+        # into the line
+        clear_memos(spark)
         spark.stop()
         out_dir.mkdir(exist_ok=True)
         duck = duckdb_baseline(cfg.sf_dir, cfg.baseline_timeout_s, phases)

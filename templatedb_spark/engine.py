@@ -32,27 +32,6 @@ class StrictTypeError(ValueError):
     """Raised in strict mode for comparisons the reference's binder rejects."""
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on `sep` at paren/quote depth 0."""
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif ch == sep and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
-
-
 class Engine:
     """Session + catalog + sql() entry. The reference's `Database::run(sql)`
     (src/query_engine/src/db.rs:125-168) equivalent, where stages 2-6 are Catalyst.

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from templatedb_spark.suite import QuerySpec, register, table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2):
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from templatedb_spark.suite import QuerySpec, _dec, register, table
 
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -1571,8 +1567,8 @@ for spec in [
 # wins (measured r10 at sf0.1: window 1.55 s vs distributed sweep 2.25 s —
 # the range shuffle + offset joins cost more than sorting 65k-row groups);
 # above it, one-task-per-group becomes the straggler and the sweep takes
-# over. Same size-tier pattern as similarity._use_ann_kernel; both paths
-# are bit-identical (max is order-insensitive) and test-pinned equal.
+# over. Both paths are bit-identical (max is order-insensitive) and
+# test-pinned equal.
 _PARETO_SWEEP_MIN_BYTES = 100 << 20
 
 

@@ -53,7 +53,7 @@ from pyspark.sql.window import Window
 
 from templatedb_spark.functions.hashing import md5_long, md5_long_sql
 from templatedb_spark.operators.dedup import _TOKENS_SQL, tokenized
-from templatedb_spark.suite import QuerySpec, register, table
+from templatedb_spark.suite import QuerySpec, memo, register, table
 
 # ---------------------------------------------------------------------------
 # Exact substring dedup: shared W-token windows.
@@ -790,22 +790,15 @@ def _bpe_step(s: DataFrame, it: int):
     return nxt_s, out
 
 
-_BPE_MEMO: dict = {}
-_BPE_LOCK = __import__("threading").Lock()
-
-
 def _bpe_state(spark: SparkSession, sf_dir: str):
     """(final symbol relation, merge rules) — the learn chain, run ONCE per
-    (application, sf_dir) and localCheckpoint'd. Both consumers replay the
-    same iteration machinery otherwise (learn needs the per-iteration best
-    pairs, encode needs the final per-word symbol sequences); the lock keeps
-    the bench's concurrent submitters from double-building. Evicted by
-    dedup.clear_dedup_caches()."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _BPE_LOCK:
-        cached = _BPE_MEMO.get(key)
-        if cached is not None:
-            return cached
+    (application, sf_dir) through suite.memo and localCheckpoint'd. Both
+    consumers replay the same iteration machinery otherwise (learn needs the
+    per-iteration best pairs, encode needs the final per-word symbol
+    sequences); the memo's per-key lock keeps the bench's concurrent
+    submitters from double-building. Released by suite.clear_memos()."""
+
+    def build():
         vocab = (
             tokenized(spark, sf_dir)
             .select(F.explode("t").alias("word"))
@@ -824,9 +817,9 @@ def _bpe_state(spark: SparkSession, sf_dir: str):
         res = merges[0]
         for df in merges[1:]:
             res = res.unionByName(df)
-        state = (s.localCheckpoint(eager=True), res.localCheckpoint(eager=True))
-        _BPE_MEMO[key] = state
-        return state
+        return s.localCheckpoint(eager=True), res.localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "bpe-state", build)
 
 
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

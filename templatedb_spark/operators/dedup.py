@@ -54,55 +54,6 @@ def tokens_col(text: Column) -> Column:
 _TOKENS_SQL = f"regexp_extract_all(lower(text), '{_TOKEN_RE}')"
 
 
-def clear_dedup_caches(spark: SparkSession) -> None:
-    """Unpersist the dedup family's shared cached intermediates.
-
-    shingles()/hashed_shingles()/the capped intermediate cache themselves so
-    concurrent dedup queries share one tokenization pass; nothing unpersists
-    them mid-session (MEMORY_AND_DISK spills rather than OOMs). Long-lived
-    sessions (REPL, bench loops) should call this after the dedup family
-    completes to drop the retained relations. Also evicts the similarity
-    tier's per-(app, sf) centroid/count caches and pipeline.py's label memo,
-    which pins localCheckpoint'd DataFrames — without this, regenerating data
-    at the same sf_dir within one session would silently serve stale labels
-    (ADVICE r2).
-    """
-    from templatedb_spark.operators import pipeline, similarity
-
-    # localCheckpoint'd DataFrames pin executor blocks that clearCache()
-    # does NOT release (it only drops cached relations); without an explicit
-    # unpersist they linger until JVM GC + ContextCleaner get around to them
-    # (ADVICE r3). Release them eagerly before dropping the memo references.
-    for labels in pipeline._LABELS_MEMO.values():
-        unpersist_local_checkpoint(labels)
-    pipeline._LABELS_MEMO.clear()
-    similarity.clear_ann_caches()
-    from templatedb_spark.operators import curation
-
-    with curation._BPE_LOCK:
-        for state in curation._BPE_MEMO.values():
-            for df in state:
-                unpersist_local_checkpoint(df)
-        curation._BPE_MEMO.clear()
-    spark.catalog.clearCache()
-
-
-def unpersist_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor blocks behind a localCheckpoint'd DataFrame.
-
-    `Dataset.localCheckpoint` rewrites the plan to a LogicalRDD over the
-    materialized RDD; that RDD (not anything clearCache sees) holds the
-    storage. Reach it through the analyzed plan root and unpersist. A no-op
-    for non-checkpoint plans or if the JVM refuses — eviction must never
-    throw."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            node.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, t): the tokenized corpus — the shared base relation of every
     token-level operator in the repo (dedup shingles, vocabulary, TF-IDF,
@@ -568,14 +519,6 @@ def minhash_signatures_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MERSENNE_31)).alias(f"mh_{i}")
             for i, (a, b) in enumerate(_PERMS)
         ]
-    )
-
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Narrow (doc_id, i, mh) form — the unpivot the LSH band join wants."""
-    stack_expr = ", ".join(f"{i}, mh_{i}" for i in range(_MINHASH_K))
-    return minhash_signatures_wide(spark, sf_dir).selectExpr(
-        "doc_id", f"stack({_MINHASH_K}, {stack_expr}) AS (i, mh)"
     )
 
 

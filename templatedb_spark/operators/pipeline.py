@@ -33,7 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from templatedb_spark.operators.dedup import _TOKENS_SQL, tokenized
-from templatedb_spark.suite import QuerySpec, fused_topk, register, table
+from templatedb_spark.suite import (
+    QuerySpec,
+    fused_topk,
+    memo,
+    register,
+    table,
+    unpersist_local_checkpoint,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -570,38 +577,32 @@ WHERE c_custkey BETWEEN {_CDC_VIEW_LO} AND {_CDC_VIEW_HI} - 1
 _CLUSTER_MAX_ROUNDS = 20
 
 
-_FUNNEL_MEMO: dict[tuple[str, str], DataFrame] = {}
-_FUNNEL_PARTS_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _funnel_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(keep, pairs): the funnel's two shared intermediates, memoized once per
-    (application, sf_dir) — `keep` = (doc_id, keep_id) exact-fingerprint
-    assignment (lazy: one cheap window, recomputed per consumer action) and
-    `pairs` = survivor-restricted LSH pairs (checkpointed: the one expensive
-    stage, computed once for funnel_pair_graph AND dedup_cascade instead of
-    twice per suite run)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FUNNEL_PARTS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
+    (application, sf_dir) through suite.memo — `keep` = (doc_id, keep_id)
+    exact-fingerprint assignment (lazy: one cheap window, recomputed per
+    consumer action) and `pairs` = survivor-restricted LSH pairs
+    (checkpointed: the one expensive stage, computed once for
+    funnel_pair_graph AND dedup_cascade instead of twice per suite run)."""
     from templatedb_spark.operators.dedup import dedup_minhash_lsh
 
-    d = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    fp = d.select("doc_id", F.md5(norm).alias("fingerprint"))
-    keep = fp.select(
-        "doc_id",
-        F.min("doc_id").over(Window.partitionBy("fingerprint")).alias("keep_id"),
-    )
-    surv = keep.filter(F.col("doc_id") == F.col("keep_id")).select("doc_id")
-    pairs = (
-        dedup_minhash_lsh(spark, sf_dir, restrict=surv)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    _FUNNEL_PARTS_MEMO[memo_key] = (keep, pairs)
-    return keep, pairs
+    def build():
+        d = table(spark, sf_dir, "documents")
+        norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
+        fp = d.select("doc_id", F.md5(norm).alias("fingerprint"))
+        keep = fp.select(
+            "doc_id",
+            F.min("doc_id").over(Window.partitionBy("fingerprint")).alias("keep_id"),
+        )
+        surv = keep.filter(F.col("doc_id") == F.col("keep_id")).select("doc_id")
+        pairs = (
+            dedup_minhash_lsh(spark, sf_dir, restrict=surv)
+            .select("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
+        )
+        return keep, pairs
+
+    return memo(spark, sf_dir, "funnel-parts", build)
 
 
 def funnel_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,25 +628,23 @@ def funnel_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
          UNCHANGED; pagerank/BFS oracles compute the same funnel graph in
          SQL (degrees/hop counts differ from the raw graph by design).
 
-    Memoized + checkpointed: three specs consume it; edges are one row per
-    dup relation (tiny relative to the corpus).
+    Memoized (suite.memo) + checkpointed: three specs consume it; edges are
+    one row per dup relation (tiny relative to the corpus).
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _FUNNEL_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    keep, pairs = _funnel_parts(spark, sf_dir)
-    stars = keep.filter(F.col("doc_id") != F.col("keep_id")).select(
-        F.col("keep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    und = pairs.unionAll(stars)
-    edges = (
-        und.unionAll(und.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    _FUNNEL_MEMO[memo_key] = edges
-    return edges
+
+    def build():
+        keep, pairs = _funnel_parts(spark, sf_dir)
+        stars = keep.filter(F.col("doc_id") != F.col("keep_id")).select(
+            F.col("keep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
+        )
+        und = pairs.unionAll(stars)
+        return (
+            und.unionAll(und.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+
+    return memo(spark, sf_dir, "funnel-edges", build)
 
 
 _FUNNEL_SQL_PREFIX = r"""
@@ -690,50 +689,50 @@ und AS (SELECT doc_a, doc_b FROM spairs UNION SELECT doc_a, doc_b FROM stars),
 edges AS (SELECT doc_a AS src, doc_b AS dst FROM und UNION SELECT doc_b, doc_a FROM und)"""
 
 
-_LABELS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, label) for every document in the LSH dup-pair graph — label =
     the component's minimum doc_id after iterative min-label propagation.
 
-    Memoized per (application, sf_dir): the iterative loop drives eager
-    checkpoint jobs at build time, which Spark's subtree-equality cache cannot
-    deduplicate, so both consumers (dedup_dup_clusters, dedup_keep_policy)
-    would otherwise each run the full propagation. The checkpointed result is
-    tiny (one row per dup-graph member)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LABELS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    # funnel feed (round 5): connected components over the funnel graph are
-    # provably identical to the raw pair graph's — the oracle is unchanged —
-    # while the quadratic banding stage only ever sees exact-dedup survivors
-    edges = funnel_pair_graph(spark, sf_dir)
-    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("label")
-    )
-    for _ in range(_CLUSTER_MAX_ROUNDS):
-        msgs = edges.join(labels, F.col("doc_a") == F.col("doc_id")).select(
-            F.col("doc_b").alias("doc_id"), F.col("label")
+    Memoized per (application, sf_dir) through suite.memo: the iterative
+    loop drives eager checkpoint jobs at build time, which Spark's
+    subtree-equality cache cannot deduplicate, so both consumers
+    (dedup_dup_clusters, dedup_keep_policy) would otherwise each run the full
+    propagation. The checkpointed result is tiny (one row per dup-graph
+    member); each superseded round's checkpoint is released as soon as the
+    next one exists, so only the memoized result pins executor blocks."""
+
+    def build():
+        # funnel feed (round 5): connected components over the funnel graph
+        # are provably identical to the raw pair graph's — the oracle is
+        # unchanged — while the quadratic banding stage only ever sees
+        # exact-dedup survivors
+        edges = funnel_pair_graph(spark, sf_dir)
+        labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
+            "doc_id", F.col("doc_id").alias("label")
         )
-        new_labels = (
-            labels.unionAll(msgs)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("n"), "doc_id")
-            .filter(F.col("o.label") != F.col("n.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    _LABELS_MEMO[memo_key] = labels
-    return labels
+        for _ in range(_CLUSTER_MAX_ROUNDS):
+            msgs = edges.join(labels, F.col("doc_a") == F.col("doc_id")).select(
+                F.col("doc_b").alias("doc_id"), F.col("label")
+            )
+            new_labels = (
+                labels.unionAll(msgs)
+                .groupBy("doc_id")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=True)  # truncate per-round lineage
+            )
+            changed = (
+                labels.alias("o")
+                .join(new_labels.alias("n"), "doc_id")
+                .filter(F.col("o.label") != F.col("n.label"))
+                .count()
+            )
+            unpersist_local_checkpoint(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+        return labels
+
+    return memo(spark, sf_dir, "cluster-labels", build)
 
 
 def dedup_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,20 +1199,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _bm25_ranked_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bm25_topk's ≤K-row result, checkpointed + memoized per (application,
-    sf_dir) for downstream consumers (rrf_fusion), which would otherwise
-    re-run the whole tf/idf chain as a subtree of their own plans. The spec
-    itself stays un-memoized so its plan pins see the live fused top-k."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BM25_MEMO.get(memo_key)
-    if cached is None:
-        cached = bm25_topk(spark, sf_dir).localCheckpoint(eager=True)
-        _BM25_MEMO[memo_key] = cached
-    return cached
+    sf_dir) through suite.memo for downstream consumers (rrf_fusion), which
+    would otherwise re-run the whole tf/idf chain as a subtree of their own
+    plans. The spec itself stays un-memoized so its plan pins see the live
+    fused top-k."""
+    return memo(
+        spark, sf_dir, "bm25-ranked", lambda: bm25_topk(spark, sf_dir).localCheckpoint(eager=True)
+    )
 
 
 def _bm25_oracle() -> str:

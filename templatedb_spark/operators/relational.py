@@ -24,11 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from templatedb_spark.suite import QuerySpec, register, table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2):
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from templatedb_spark.suite import QuerySpec, _dec, register, table
 
 
 # ---------------------------------------------------------------------------

@@ -189,7 +189,7 @@ FROM zb GROUP BY 1
 """
 
 
-from templatedb_spark.suite import QuerySpec, register  # noqa: E402
+from templatedb_spark.suite import QuerySpec, memo, register  # noqa: E402
 
 register(
     QuerySpec(
@@ -542,27 +542,20 @@ register(
 # inputFiles). The layout is written once per (app, sf) and reused — real
 # warehouses pay the partitioned write once at ingest.
 # ---------------------------------------------------------------------------
-import threading as _threading
-
-_LAYOUT_MEMO: dict[tuple[str, str, str], str] = {}
-_LAYOUT_LOCK = _threading.Lock()
-
-
 def _memo_layout(spark: SparkSession, sf_dir: str, prefix: str, write) -> str:
     """A dir that `write(dir)` fills once per (app, sf_dir, prefix) and every
     later call reuses. The dir outlives every lazy DataFrame built on it, so
-    it comes from drain.output_dir (removed at process exit). The write runs
-    under the lock: concurrent clients wait for one copy instead of each
+    it comes from drain.output_dir (removed at process exit). The write is
+    the memo's build: concurrent clients wait for one copy instead of each
     writing their own."""
     from templatedb_spark.streaming.drain import output_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir, prefix)
-    with _LAYOUT_LOCK:
-        if key not in _LAYOUT_MEMO:
-            out = output_dir(prefix)
-            write(out)
-            _LAYOUT_MEMO[key] = out
-    return _LAYOUT_MEMO[key]
+    def build() -> str:
+        out = output_dir(prefix)
+        write(out)
+        return out
+
+    return memo(spark, sf_dir, prefix, build)
 
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:

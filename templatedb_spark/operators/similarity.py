@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from templatedb_spark.suite import QuerySpec, register, table
+from templatedb_spark.suite import QuerySpec, memo, register, table
 
 
 def _vec_double(col: str) -> Column:
@@ -269,42 +269,6 @@ _IVF_NPROBE_SQL = f"""SELECT CASE WHEN COUNT(*) <= {_IVF_NPROBE_SMALL_N} THEN {_
     CEIL(COUNT(*) / GREATEST({_IVF_CENTROID_STEP}.0, CEIL(COUNT(*) / {_IVF_MAX_CELLS}.0)))
     / {_IVF_PROBE_FRAC_DEN}.0) AS BIGINT)) END FROM embeddings"""
 
-# Per-(applicationId, sf_dir) broadcast of the centroid matrix. Centroids are
-# tiny (N / _IVF_CENTROID_STEP rows) and immutable for a given sf_dir, so one
-# collect per app amortizes to nothing; the broadcast handle keeps the matrix
-# off the closure-serialization path for every subsequent task.
-# _CACHE_LOCK serializes the build paths: the bench submits ann_ivf_topk and
-# semantic_dedup (same memo key) from 16 threads concurrently — an unlocked
-# check-then-set would build and cache the full-corpus kernel twice.
-import threading
-
-_CACHE_LOCK = threading.Lock()
-_IVF_CENT_CACHE: dict[tuple[str, str], object] = {}
-
-
-def clear_ann_caches() -> None:
-    """Evict the similarity tier's caches (called by dedup.clear_dedup_caches).
-    Broadcasts are explicitly unpersisted — catalog.clearCache() only drops
-    DataFrame cache entries, so dict-clearing alone would leak the centroid
-    broadcasts for the app lifetime in a regen-looping session."""
-    with _CACHE_LOCK:
-        for bc in _IVF_CENT_CACHE.values():
-            try:
-                bc.unpersist()
-            except Exception:
-                pass  # a dead SparkContext at teardown is fine
-        _IVF_CENT_CACHE.clear()
-        _LSH_N_CACHE.clear()
-        _ANN_MEMO.clear()
-
-# Below this parquet size the corpus is so small that kernel/Arrow spin-up
-# costs more than the interpreted expression path it replaces. All driver sf
-# dirs are above it (sf0.001's embeddings ≈ 190 KB), so the kernel path is the
-# one the correctness gate audits; the expression fallback is equivalence-
-# tested against it in tests/test_similarity.py.
-_IVF_KERNEL_MIN_BYTES = 128 << 10
-
-
 def _seq_norms(mat):
     """Row norms via a dimension-ordered sequential fold — bit-identical to
     F.aggregate's left fold and DuckDB's list_dot_product accumulation, unlike
@@ -329,27 +293,27 @@ def _seq_matmul(a, b_t):
 
 
 def _ivf_centroids_bc(spark: SparkSession, sf_dir: str):
+    """Broadcast of the centroid matrix, built once per (application, sf_dir)
+    through suite.memo. Centroids are tiny (N / _IVF_CENTROID_STEP rows) and
+    immutable for a given sf_dir, so one collect per app amortizes to
+    nothing; the broadcast handle keeps the matrix off the
+    closure-serialization path for every subsequent task."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # step BEFORE taking the lock: _corpus_count acquires _CACHE_LOCK itself
-    # (non-reentrant) — computing it inside the held block deadlocks
-    step = ivf_step_for(_corpus_count(spark, sf_dir))
-    with _CACHE_LOCK:
-        bc = _IVF_CENT_CACHE.get(key)
-        if bc is None:
-            rows = (
-                spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet")
-                .filter(F.col("vec_id") % step == 0)
-                .select("vec_id", "embedding")
-                .collect()
-            )
-            rows.sort(key=lambda r: r.vec_id)  # cid-ascending → argmax tiebreak = min cid
-            cids = np.array([r.vec_id for r in rows], dtype="int64")
-            cmat = np.array([list(r.embedding) for r in rows], dtype="float64")
-            bc = spark.sparkContext.broadcast((cids, cmat, _seq_norms(cmat)))
-            _IVF_CENT_CACHE[key] = bc
-    return bc
+    def build():
+        step = ivf_step_for(_corpus_count(spark, sf_dir))
+        rows = (
+            spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet")
+            .filter(F.col("vec_id") % step == 0)
+            .select("vec_id", "embedding")
+            .collect()
+        )
+        rows.sort(key=lambda r: r.vec_id)  # cid-ascending → argmax tiebreak = min cid
+        cids = np.array([r.vec_id for r in rows], dtype="int64")
+        cmat = np.array([list(r.embedding) for r in rows], dtype="float64")
+        return spark.sparkContext.broadcast((cids, cmat, _seq_norms(cmat)))
+
+    return memo(spark, sf_dir, "ivf-centroids", build)
 
 
 def _ivf_assign_kernel(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
@@ -381,31 +345,13 @@ def _ivf_assign_kernel(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFr
                 }
             )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf-assign")
-    return _ann_memo(
-        key,
+    return memo(
+        spark,
+        sf_dir,
+        "ivf-assign",
         lambda: e.mapInPandas(
             assign, schema="vec_id long, v array<double>, norm double, cid long"
-        ),
-    )
-
-
-def _ivf_assign_expr(e_normed: DataFrame, cent: DataFrame) -> DataFrame:
-    """Small-corpus assignment: broadcast-join + interpreted dot expression.
-    Same semantics as the kernel; cheaper when the corpus is a few hundred rows
-    (no Arrow worker spin-up, no centroid collect job)."""
-    assigned_scored = e_normed.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "v",
-        "norm",
-        "cid",
-        F.round(dot(F.col("v"), F.col("cv")) / (F.col("norm") * F.col("cnorm")), 6).alias("csim"),
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cid").asc())
-    return (
-        assigned_scored.withColumn("crank", F.row_number().over(wa))
-        .filter(F.col("crank") == 1)
-        .select("vec_id", "v", "norm", "cid")
+        ).cache(),
     )
 
 
@@ -418,10 +364,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = e.filter(F.col("vec_id") % step == 0).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm")
     )
-    if _use_ann_kernel(sf_dir):
-        assigned = _ivf_assign_kernel(spark, sf_dir, raw)
-    else:
-        assigned = _ivf_assign_expr(e, cent)
+    assigned = _ivf_assign_kernel(spark, sf_dir, raw)
     # queries probe their IVF_NPROBE closest centroids (10 rows — expression
     # path is fine; its norms are bit-identical to the kernel's by fold order)
     q = e.filter(F.col("vec_id") < _TOPK_NQUERY).select(
@@ -565,30 +508,12 @@ def lsh_bits_for(n: int) -> int:
     return _LSH_MAX_BITS
 
 
-def _lsh_bits_col(n: Column) -> Column:
-    expr = F.when(n <= (_LSH_TARGET_BUCKET << _LSH_MIN_BITS), _LSH_MIN_BITS)
-    for b in range(_LSH_MIN_BITS + 1, _LSH_MAX_BITS):
-        expr = expr.when(n <= (_LSH_TARGET_BUCKET << b), b)
-    return expr.otherwise(_LSH_MAX_BITS)
-
-
 def _lsh_bits_sql(n_expr: str) -> str:
     arms = " ".join(
         f"WHEN {n_expr} <= {_LSH_TARGET_BUCKET << b} THEN {b}"
         for b in range(_LSH_MIN_BITS, _LSH_MAX_BITS)
     )
     return f"(CASE {arms} ELSE {_LSH_MAX_BITS} END)"
-
-
-def _lsh_sig_col(vec: Column, bits: Column, seed: int = _LSH_SEED) -> Column:
-    sig = F.lit(0)
-    for i, row in enumerate(lsh_hyperplanes(seed=seed)):
-        w = F.array(*[F.lit(float(c)) for c in row])
-        bit = F.when(
-            (F.lit(i) < bits) & (dot(vec, w) > 0.0), F.lit(1 << i)
-        ).otherwise(F.lit(0))
-        sig = sig + bit
-    return sig.cast("long")
 
 
 def _lsh_sig_sql(vec_expr: str, bits_expr: str, seed: int = _LSH_SEED) -> str:
@@ -602,36 +527,21 @@ def _lsh_sig_sql(vec_expr: str, bits_expr: str, seed: int = _LSH_SEED) -> str:
     return "(" + " + ".join(terms) + ")::BIGINT"
 
 
-_LSH_N_CACHE: dict[tuple[str, str], int] = {}
-
-# Kernel outputs are deterministic per (app, sf[, table spec]) and referenced
-# several times within one query plan (corpus side + query side + rep side) —
-# and across queries (ann_ivf_topk and semantic_dedup share one assignment).
-# Without this memo the mapInPandas kernel re-executes per reference (the
-# banded plan showed 4 MapInPandas nodes). Mirrors dedup.py's shingle-cache
-# contract; cleared by clear_dedup_caches().
-_ANN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _ann_memo(key: tuple, build) -> DataFrame:
-    with _CACHE_LOCK:
-        df = _ANN_MEMO.get(key)
-        if df is None:
-            df = build().cache()
-            _ANN_MEMO[key] = df
-        return df
-
-
+# The ANN kernel outputs (ivf-assign, lsh, km-quant) go through suite.memo as
+# lazy .cache()'d DataFrames: each is deterministic per (app, sf[, table
+# spec]) and referenced several times within one query plan (corpus side +
+# query side + rep side) and across queries (ann_ivf_topk and semantic_dedup
+# share one assignment). Without the memo the mapInPandas kernel re-executes
+# per reference (the banded plan showed 4 MapInPandas nodes).
 def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    """Embeddings row count, cached per (app, sf) — a parquet-metadata-only
+    """Embeddings row count, memoized per (app, sf) — a parquet-metadata-only
     job, so at 100 TB it reads footers, not data."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _CACHE_LOCK:
-        if key not in _LSH_N_CACHE:
-            _LSH_N_CACHE[key] = spark.read.parquet(
-                f"{sf_dir.rstrip('/')}/embeddings.parquet"
-            ).count()
-        return _LSH_N_CACHE[key]
+    return memo(
+        spark,
+        sf_dir,
+        "corpus-count",
+        lambda: spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet").count(),
+    )
 
 
 def _lsh_sig_kernel(
@@ -678,35 +588,14 @@ def _lsh_sig_kernel(
     raw = table(spark, sf_dir, "embeddings").select(
         "vec_id", _vec_double("embedding").alias("v")
     )
-    key = (spark.sparkContext.applicationId, sf_dir, "lsh", tuple(tables))
-    return _ann_memo(
-        key,
+    return memo(
+        spark,
+        sf_dir,
+        f"lsh {tables}",
         lambda: raw.mapInPandas(
             kern, schema="vec_id long, v array<double>, norm double, t int, sig long"
-        ),
+        ).cache(),
     )
-
-
-def _lsh_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus with norm and adaptive bit width (expression fallback path)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vec_double("embedding").alias("v")
-    )
-    n = e.agg(F.count("*").cast("long").alias("n"))
-    return (
-        with_norm(e)
-        .crossJoin(F.broadcast(n))
-        .withColumn("bits", _lsh_bits_col(F.col("n")))
-        .drop("n")
-    )
-
-
-def _use_ann_kernel(sf_dir: str) -> bool:
-    from templatedb_spark.suite import input_bytes
-
-    # directory-aware size (a parquet DIRECTORY's own stat is ~4 KB and
-    # would misclassify a huge table as small — ADVICE r10)
-    return input_bytes(sf_dir, "embeddings") >= _IVF_KERNEL_MIN_BYTES
 
 
 def _ann_rank(cand: DataFrame) -> DataFrame:
@@ -723,39 +612,7 @@ def _ann_rank(cand: DataFrame) -> DataFrame:
     ).filter(F.col("rank") <= _TOPK_K)
 
 
-def _ann_lsh_topk_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-corpus fallback: signatures as gated interpreted expressions,
-    bits as a column from a count aggregate (equivalence-tested vs kernel)."""
-    e = _lsh_base(spark, sf_dir).withColumn(
-        "sig", _lsh_sig_col(F.col("v"), F.col("bits"))
-    )
-    q = e.filter(F.col("vec_id") < _TOPK_NQUERY).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("sig").alias("qsig"),
-        "bits",
-    )
-    # multi-probe: own bucket + each single-bit flip of an ACTIVE bit
-    # (bits+1 probes per query); pos 0 = no flip, pos k flips bit k-1
-    flips = F.array(*([F.lit(0)] + [F.lit(1 << i) for i in range(_LSH_MAX_BITS)]))
-    probes = (
-        q.select("qid", "qv", "qnorm", "qsig", "bits", F.posexplode(flips).alias("pos", "flip"))
-        .filter((F.col("pos") == 0) | (F.col("pos") <= F.col("bits")))
-        .select("qid", "qv", "qnorm", (F.col("qsig").bitwiseXOR(F.col("flip"))).alias("probe"))
-    )
-    cand = (
-        e.join(F.broadcast(probes), e.sig == probes.probe)
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "qv", "qnorm", "vec_id", "v", "norm")
-        .distinct()
-    )
-    return _ann_rank(cand)
-
-
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if not _use_ann_kernel(sf_dir):
-        return _ann_lsh_topk_expr(spark, sf_dir)
     bits = lsh_bits_for(_corpus_count(spark, sf_dir))
     e = _lsh_sig_kernel(spark, sf_dir, [(0, bits, _LSH_SEED)]).drop("t")
     q = e.filter(F.col("vec_id") < _TOPK_NQUERY).select(
@@ -820,18 +677,13 @@ SELECT qid, vec_id, cosine, rank FROM (
 # probability multiplies across L. The corpus side is exploded L× (map-only);
 # the join key is (table, sig) so tables never cross-match.
 # ---------------------------------------------------------------------------
-
-
-def _lsh_band_bits(bits: Column) -> Column:
-    return F.greatest(F.lit(_LSH_MIN_BITS), bits - F.lit(2))
-
-
 _LSH_BAND_BITS_SQL = f"GREATEST({_LSH_MIN_BITS}, bits - 2)"
 
 
-def _band_join_rank(e: DataFrame) -> DataFrame:
-    """Shared tail of both banded paths: (vec_id, v, norm, t, sig) → OR-of-
-    tables candidate join → exact rerank."""
+def ann_lsh_banded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, norm, t, sig) per table → OR-of-tables candidate join →
+    exact rerank."""
+    e = _lsh_sig_kernel(spark, sf_dir, _lsh_band_tables_for(spark, sf_dir))
     q = e.filter(F.col("vec_id") < _TOPK_NQUERY).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
@@ -846,34 +698,6 @@ def _band_join_rank(e: DataFrame) -> DataFrame:
         .distinct()
     )
     return _ann_rank(cand)
-
-
-def _ann_lsh_banded_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _lsh_base(spark, sf_dir).withColumn("bbits", _lsh_band_bits(F.col("bits")))
-    sigs = [
-        _lsh_sig_col(F.col("v"), F.col("bbits"), seed=_LSH_SEED + t * _LSH_SEED_STRIDE)
-        for t in range(_LSH_BAND_TABLES)
-    ]
-    tagged = F.explode(
-        F.array(*[F.struct(F.lit(t).alias("t"), sigs[t].alias("sig")) for t in range(_LSH_BAND_TABLES)])
-    )
-    e = base.select("vec_id", "v", "norm", tagged.alias("ts")).select(
-        "vec_id", "v", "norm", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig")
-    )
-    return _band_join_rank(e)
-
-
-def ann_lsh_banded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if not _use_ann_kernel(sf_dir):
-        return _ann_lsh_banded_expr(spark, sf_dir)
-    bits = lsh_bits_for(_corpus_count(spark, sf_dir))
-    bbits = max(_LSH_MIN_BITS, bits - 2)
-    e = _lsh_sig_kernel(
-        spark,
-        sf_dir,
-        [(t, bbits, _LSH_SEED + t * _LSH_SEED_STRIDE) for t in range(_LSH_BAND_TABLES)],
-    )
-    return _band_join_rank(e)
 
 
 def _ann_lsh_banded_oracle() -> str:
@@ -944,29 +768,7 @@ def dedup_embedding_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    tables = _lsh_band_tables_for(spark, sf_dir)
-    if _use_ann_kernel(sf_dir):
-        sigs = _lsh_sig_kernel(spark, sf_dir, tables)
-    else:
-        # tiny-corpus expression fallback: same construction as the banded
-        # ANN expression path (equivalence-tested there)
-        base = _lsh_base(spark, sf_dir).withColumn(
-            "bbits", _lsh_band_bits(F.col("bits"))
-        )
-        cols = [
-            _lsh_sig_col(F.col("v"), F.col("bbits"), seed=seed) for _, _, seed in tables
-        ]
-        tagged = F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("t"), cols[t].alias("sig"))
-                    for t, _, _ in tables
-                ]
-            )
-        )
-        sigs = base.select("vec_id", "v", "norm", tagged.alias("ts")).select(
-            "vec_id", "v", "norm", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig")
-        )
+    sigs = _lsh_sig_kernel(spark, sf_dir, _lsh_band_tables_for(spark, sf_dir))
 
     def bucket_tile(key, pdf):
         del key
@@ -1052,21 +854,10 @@ _SEMDEDUP_THRESHOLD = 0.30
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = with_norm(
-        table(spark, sf_dir, "embeddings").select("vec_id", _vec_double("embedding").alias("v"))
-    )
-    cent = e.filter(
-        F.col("vec_id") % ivf_step_for(_corpus_count(spark, sf_dir)) == 0
-    ).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm")
-    )
     raw = table(spark, sf_dir, "embeddings").select(
         "vec_id", _vec_double("embedding").alias("v")
     )
-    if _use_ann_kernel(sf_dir):
-        assigned = _ivf_assign_kernel(spark, sf_dir, raw)
-    else:
-        assigned = _ivf_assign_expr(e, cent)
+    assigned = _ivf_assign_kernel(spark, sf_dir, raw)
     rep_ids = assigned.groupBy("cid").agg(F.min("vec_id").alias("rep_id")).select(
         F.col("cid").alias("mcid"), "rep_id"
     )
@@ -1307,12 +1098,13 @@ _KM_QSQL = "list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 127) A
 
 
 def _km_quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "km-quant")
-    return _ann_memo(
-        key,
-        lambda: table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.expr(_KM_QEXPR).alias("q")
-        ),
+    return memo(
+        spark,
+        sf_dir,
+        "km-quant",
+        lambda: table(spark, sf_dir, "embeddings")
+        .select("vec_id", F.expr(_KM_QEXPR).alias("q"))
+        .cache(),
     )
 
 

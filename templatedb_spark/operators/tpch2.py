@@ -32,20 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from templatedb_spark.operators.tpch import _REV, _dec, _rev_col
-from templatedb_spark.suite import QuerySpec, register, table
+from templatedb_spark.operators.tpch import _REV, _rev_col
+from templatedb_spark.suite import QuerySpec, _dec, register, table
 
 
-def _supply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The partsupp surrogate: observed (part, supplier) pairs with their
-    minimum unit price as supply cost. Double division is bit-identical in
-    both engines, and min() over identical doubles is order-independent."""
-    l = table(spark, sf_dir, "lineitem")
-    return l.groupBy(
-        F.col("l_partkey").alias("ps_partkey"), F.col("l_suppkey").alias("ps_suppkey")
-    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("ps_supplycost"))
-
-
+# the partsupp surrogate: observed (part, supplier) pairs with their minimum
+# unit price as supply cost
 _SUPPLY_PAIRS_SQL = """
   SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
          MIN(l_extendedprice / l_quantity) AS ps_supplycost

@@ -65,10 +65,6 @@ def uses_python_udf(df: DataFrame) -> bool:
     return "BatchEvalPython" in plan  # row-at-a-time Python UDF (the slow path)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def global_sort_window_lines(plan: str) -> list[str]:
     """Plan lines of ordered-but-UNPARTITIONED Window nodes whose input is not
     a TakeOrderedAndProject prefilter — the top-k scale-killer detector.

@@ -30,8 +30,9 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from templatedb_spark import sqlparse
 from templatedb_spark.ddl import Catalog
-from templatedb_spark.engine import Engine, _split_top_level
+from templatedb_spark.engine import Engine
 
 # Our engine persona when emulating the reference's v2 run (DatabaseWrapperV2).
 V2 = "template_query_v2"
@@ -159,28 +160,20 @@ def _parse_literal(tok: str):
         return float(tok)
 
 
+def _split_sql(text: str, sep: str = ",") -> list[str]:
+    """The non-empty pieces of `text` between top-level `sep` tokens: split on
+    the sqlparse tokens, so a `sep` or quote inside a string literal or a
+    comment splits nothing, and comments outside the pieces are dropped."""
+    pieces = sqlparse.split_top_level(sqlparse.tokenize(text), sep)
+    return [text[p[0].start : p[-1].end] for p in pieces if p]
+
+
 def _parse_values_rows(values_text: str) -> list[tuple]:
-    rows = []
-    depth, cur, in_str = 0, [], False
-    for ch in values_text:
-        if ch == "'":
-            in_str = not in_str
-            cur.append(ch)
-        elif not in_str and ch == "(":
-            depth += 1
-            if depth == 1:
-                cur = []
-                continue
-            cur.append(ch)
-        elif not in_str and ch == ")":
-            depth -= 1
-            if depth == 0:
-                rows.append(tuple(_parse_literal(t) for t in _split_top_level("".join(cur))))
-                continue
-            cur.append(ch)
-        else:
-            cur.append(ch)
-    return rows
+    """`(v, ...), (v, ...)` -> one tuple of literals per parenthesized row."""
+    return [
+        tuple(_parse_literal(v) for v in _split_sql(row[1:-1]))
+        for row in _split_sql(values_text)
+    ]
 
 
 class SltSession:
@@ -195,10 +188,8 @@ class SltSession:
         """Execute a (possibly multi-statement) SQL block; return the last
         statement's DataFrame, or None for DDL/DML."""
         result = None
-        for stmt in _split_top_level(sql_block, ";"):
-            stmt = stmt.strip()
-            if stmt:
-                result = self._run_one(stmt)
+        for stmt in _split_sql(sql_block, ";"):
+            result = self._run_one(stmt)
         return result
 
     def _run_one(self, stmt: str):
@@ -211,11 +202,11 @@ class SltSession:
             self.catalog.create_table(stmt)
             return None
         if m := _VALUES_RE.match(stmt):
-            cols = _split_top_level(m.group(3)) if m.group(3) else None
+            cols = _split_sql(m.group(3)) if m.group(3) else None
             self.catalog.insert(m.group(1), _parse_values_rows(m.group(4)), columns=cols)
             return None
         if m := _INSERT_SELECT_RE.match(stmt):
-            cols = _split_top_level(m.group(3)) if m.group(3) else None
+            cols = _split_sql(m.group(3)) if m.group(3) else None
             self.catalog.insert(m.group(1), self.engine.sql(m.group(4)), columns=cols)
             return None
         if m := _COPY_RE.match(stmt):

@@ -18,6 +18,7 @@ conventions below are load-bearing:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -110,6 +111,14 @@ def all_specs() -> dict[str, QuerySpec]:
     return dict(ordered)
 
 
+def _dec(col: str, prec: int = 12, scale: int = 2):
+    """A money column as DECIMAL: the exact, order-independent sum convention
+    of the module docstring."""
+    from pyspark.sql import functions as F
+
+    return F.col(col).cast(f"decimal({prec},{scale})")
+
+
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to a session-timezone TIMESTAMP.
 
@@ -198,3 +207,76 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# ---------------------------------------------------------------------------
+# The operators' shared intermediates: one memo per (application, sf_dir,
+# name). A value is built once per Spark application and sf dir (centroid
+# broadcasts, ANN kernel outputs, the funnel/label/BPE/BM25 checkpoints, the
+# written partition layouts) and reused by every later query of the session.
+# ---------------------------------------------------------------------------
+_MEMO: dict[tuple[str, str, str], object] = {}
+_MEMO_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+_MEMO_LOCKS_GUARD = threading.Lock()
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object]):
+    """`build()`'s value, built once per (application, sf_dir, name).
+
+    Builds are locked per key: concurrent first callers of one key run
+    `build` once and the others wait for its value, while different keys
+    build in parallel, so a build may itself call `memo` for another key. A
+    build that raises stores nothing; the next call builds again. Released
+    by clear_memos."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    with _MEMO_LOCKS_GUARD:
+        lock = _MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _MEMO:
+            _MEMO[key] = build()
+        return _MEMO[key]
+
+
+def unpersist_local_checkpoint(df: DataFrame) -> None:
+    """Release the executor blocks behind a localCheckpoint'd DataFrame.
+
+    `Dataset.localCheckpoint` rewrites the plan to a LogicalRDD over the
+    materialized RDD; that RDD (not anything clearCache sees) holds the
+    storage. Reach it through the analyzed plan root and unpersist. A no-op
+    for non-checkpoint plans or if the JVM refuses — eviction must never
+    throw."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            node.rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+def _release(value) -> None:
+    from pyspark import Broadcast
+
+    if isinstance(value, tuple):
+        for v in value:
+            _release(v)
+    elif isinstance(value, DataFrame):
+        unpersist_local_checkpoint(value)
+    elif isinstance(value, Broadcast):
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # a dead SparkContext at teardown is fine
+
+
+def clear_memos(spark: SparkSession) -> None:
+    """Empty the memo and release what its values pin, then drop every cached
+    relation (the lazy `.cache()` intermediates: tokenized corpus, shingles,
+    ANN kernel outputs). Checkpointed DataFrames and broadcasts hold executor
+    blocks that clearCache does not see, so they are released explicitly;
+    counts and layout dirs are just dropped (drain.output_dir removes the
+    dirs at exit). Long-lived sessions (REPL, bench loops) call this when
+    done, and a session that regenerates data at the same sf_dir must call it
+    or later queries read the old intermediates."""
+    while _MEMO:
+        _release(_MEMO.popitem()[1])
+    spark.catalog.clearCache()

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -228,20 +229,106 @@ def test_threshold_sweep_mass_equals_pairs(spark):
 
 
 def test_bpe_memo_eviction_unpersists_checkpoints(spark):
-    """clear_dedup_caches must release the executor blocks behind the BPE
-    memo's localCheckpoint'd state, not just drop the Python references
-    (ADVICE r3) — otherwise checkpointed RDDs accumulate over cache cycles."""
-    from templatedb_spark.operators import curation
-    from templatedb_spark.operators.dedup import clear_dedup_caches
+    """clear_memos must release the executor blocks behind every memoized
+    localCheckpoint'd intermediate (BPE state, funnel pairs and edges, cluster
+    labels, BM25 top-k), not just drop the Python references (ADVICE r3) —
+    otherwise checkpointed RDDs accumulate over cache cycles, and a rebuild
+    after the clear would read the old funnel edges."""
+    from templatedb_spark import suite
+    from templatedb_spark.operators import curation, pipeline
 
-    curation._bpe_state(spark, SF_SMALL)  # populate the memo (checkpoints)
-    assert curation._BPE_MEMO
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    assert before > 0
-    clear_dedup_caches(spark)
-    assert not curation._BPE_MEMO
-    assert jsc.getPersistentRDDs().size() < before
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    suite.clear_memos(spark)
+    before = persisted()
+    curation._bpe_state(spark, SF_SMALL)
+    pipeline.cluster_labels(spark, SF_SMALL)
+    pipeline._bm25_ranked_memo(spark, SF_SMALL)
+    assert len(suite._MEMO) >= 5
+    assert persisted() - before
+    suite.clear_memos(spark)
+    assert not suite._MEMO
+    # Spark's ContextCleaner may drop older RDDs meanwhile, never add one
+    assert persisted() <= before
+
+
+def test_memo_builds_once_per_key_nests_and_retries(spark):
+    """suite.memo: concurrent first callers of one key run `build` once; a
+    build may memo another key; a build that raises stores nothing."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from templatedb_spark.suite import _MEMO, memo
+
+    sf = "/memo-test"
+    calls = []
+    # a build waits here for a second build; with the per-key lock there is
+    # none (the other caller waits on the lock), so the wait times out
+    barrier = threading.Barrier(2, timeout=3)
+
+    def build():
+        calls.append(1)
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return "value"
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(memo, spark, sf, "once", build) for _ in range(2)]
+        assert [f.result(timeout=60) for f in futs] == ["value", "value"]
+    assert len(calls) == 1
+
+    # stress: more threads than cores and a short switch interval; a lost
+    # check-then-set would build some key twice
+    builds = []
+
+    def build_named(name):
+        builds.append(name)
+        time.sleep(0.05)  # widen the window between the check and the set
+        return name
+
+    def hit(i):
+        name = f"stress-{i % 4}"
+        return memo(spark, sf, name, lambda: build_named(name))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            got = list(pool.map(hit, range(400), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [f"stress-{i % 4}" for i in range(400)]
+    assert sorted(builds) == sorted(f"stress-{k}" for k in range(4))
+
+    # nested: a build that memos another key returns; the daemon thread and
+    # the join timeout turn a deadlock into a failure instead of a hang
+    nested = []
+    t = threading.Thread(
+        target=lambda: nested.append(
+            memo(spark, sf, "outer", lambda: memo(spark, sf, "inner", lambda: 1) + 1)
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive() and nested == [2]
+
+    # a raising build leaves no entry; the next call builds again
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        memo(spark, sf, "flaky", boom)
+    key = (spark.sparkContext.applicationId, sf, "flaky")
+    assert key not in _MEMO
+    assert memo(spark, sf, "flaky", lambda: "rebuilt") == "rebuilt"
+    for k in [k for k in _MEMO if k[1] == sf]:
+        del _MEMO[k]
 
 
 # ---------------------------------------------------------------------------

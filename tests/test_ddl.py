@@ -171,3 +171,20 @@ def test_memory_helpers_parse_decimal_schema(spark):
     # the optimizer turns the empty base into an empty LocalRelation, which
     # drops out of a union
     assert "Union" not in _optimized_plan(empty.unionByName(df))
+
+
+def test_slt_session_splits_statements_on_tokens(spark):
+    """A quote inside a `--` comment opens no string: the block is three
+    statements and the last one's row comes back (a character splitter took
+    the comment's quote as a string start and ran the rest as one statement).
+    The same tokens split INSERT column lists and VALUES rows."""
+    from templatedb_spark.slt import SltSession
+
+    sess = SltSession(spark, base_dir=".")
+    df = sess.run("SELECT 1 AS x; -- it's a note\nSELECT 2 AS x; SELECT 3 AS x")
+    assert [tuple(r) for r in df.collect()] == [(3,)]
+
+    sess.run("CREATE TABLE split_t (a INT, b VARCHAR); -- it's a table")
+    sess.run("INSERT INTO split_t (b, a) VALUES ('x, (y); z', 1), ('it''s', 2)")
+    got = sorted(tuple(r) for r in spark.table("split_t").collect())
+    assert got == [(1, "x, (y); z"), (2, "it's")]

@@ -76,11 +76,11 @@ def test_lsh_recall_and_boundedness(spark, sf_dir):
     (b) the candidate set is genuinely bounded — no query scores anywhere
     near the whole corpus (the property that makes LSH the scale path)."""
     from templatedb_spark.operators.similarity import (
+        _LSH_SEED,
+        _lsh_sig_kernel,
         ann_cosine_topk,
         ann_lsh_topk,
         lsh_bits_for,
-        _lsh_sig_col,
-        _vec_double,
     )
     from templatedb_spark.suite import table
     from pyspark.sql import functions as F
@@ -95,9 +95,7 @@ def test_lsh_recall_and_boundedness(spark, sf_dir):
     # small fraction of the corpus
     total = table(spark, sf_dir, "embeddings").count()
     bits = lsh_bits_for(total)
-    e = table(spark, sf_dir, "embeddings").select(
-        _lsh_sig_col(_vec_double("embedding"), F.lit(bits)).alias("sig")
-    )
+    e = _lsh_sig_kernel(spark, sf_dir, [(0, bits, _LSH_SEED)]).select("sig")
     biggest = e.groupBy("sig").count().agg(F.max("count")).collect()[0][0]
     assert biggest < total * 0.25, (biggest, total)
 
@@ -158,37 +156,78 @@ def test_lsh_no_knife_edge_projections(sf_dir):
         assert min_abs > 1e-6, f"knife-edge projection: table {t}, |dot|={min_abs}"
 
 
-def test_ivf_kernel_matches_expression_path(spark):
-    """The BLAS assignment kernel and the interpreted expression fallback
-    must be interchangeable: the kernel's sequential-fold accumulation is
-    designed to reproduce F.aggregate's left fold bit-for-bit."""
-    from pyspark.sql import functions as F
+def _left_fold_dot(a, b) -> float:
+    """Dimension-ordered dot product: the engines' accumulation order."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def test_ivf_kernel_assigns_nearest_centroid(spark):
+    """The BLAS assignment kernel gives every vector the centroid a plain
+    left-fold reference picks: highest round(cosine, 6), smallest cid on
+    ties, over the vec_id % step == 0 centroid set."""
+    import math
 
     from templatedb_spark.operators.similarity import (
-        _ivf_assign_expr,
         _ivf_assign_kernel,
-        _IVF_CENTROID_STEP,
         _vec_double,
-        with_norm,
+        ivf_step_for,
     )
     from templatedb_spark.suite import table
 
     raw = table(spark, SF_SMALL, "embeddings").select(
         "vec_id", _vec_double("embedding").alias("v")
     )
-    e = with_norm(raw)
-    cent = e.filter(F.col("vec_id") % _IVF_CENTROID_STEP == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm")
+    vecs = {r.vec_id: list(r.v) for r in raw.collect()}
+    norms = {i: math.sqrt(_left_fold_dot(v, v)) for i, v in vecs.items()}
+    step = ivf_step_for(len(vecs))
+    cids = sorted(i for i in vecs if i % step == 0)
+    expected = {}
+    for i, v in vecs.items():
+        sims = [
+            (-round(_left_fold_dot(v, vecs[c]) / (norms[i] * norms[c]), 6), c)
+            for c in cids
+        ]
+        expected[i] = min(sims)[1]
+
+    got = {r.vec_id: r for r in _ivf_assign_kernel(spark, SF_SMALL, raw).collect()}
+    assert got.keys() == expected.keys()
+    assert {i: r.cid for i, r in got.items()} == expected
+    assert all(r.norm == norms[i] for i, r in got.items())
+
+
+def test_lsh_kernel_signatures_match_plane_signs(spark):
+    """The numpy signature kernel sets bit i of table t's signature exactly
+    when the vector's left-fold dot with plane i of that table is positive."""
+    from templatedb_spark.operators.similarity import (
+        _lsh_band_tables_for,
+        _lsh_sig_kernel,
+        _vec_double,
+        lsh_hyperplanes,
     )
-    via_expr = {
-        (r.vec_id, r.cid, round(r.norm, 9))
-        for r in _ivf_assign_expr(e, cent).collect()
+    from templatedb_spark.suite import table
+
+    tables = _lsh_band_tables_for(spark, SF_SMALL)[:3]
+    vecs = {
+        r.vec_id: list(r.v)
+        for r in table(spark, SF_SMALL, "embeddings")
+        .select("vec_id", _vec_double("embedding").alias("v"))
+        .collect()
     }
-    via_kernel = {
-        (r.vec_id, r.cid, round(r.norm, 9))
-        for r in _ivf_assign_kernel(spark, SF_SMALL, raw).collect()
+    expected = set()
+    for t, bits, seed in tables:
+        planes = lsh_hyperplanes(seed=seed)[:bits]
+        for i, v in vecs.items():
+            sig = sum(1 << b for b, p in enumerate(planes) if _left_fold_dot(v, p) > 0.0)
+            expected.add((i, t, sig))
+
+    got = {
+        (r.vec_id, r.t, r.sig)
+        for r in _lsh_sig_kernel(spark, SF_SMALL, tables).select("vec_id", "t", "sig").collect()
     }
-    assert via_expr == via_kernel
+    assert got == expected
 
 
 def test_png_roundtrip_all_filters():
@@ -271,25 +310,6 @@ def test_decode_image_dispatches_png():
 
     png = encode_png(bytes(range(16)), 4, 4)
     assert decode_image(png) == [list(range(i * 4, i * 4 + 4)) for i in range(4)]
-
-
-def test_lsh_kernel_matches_expression_path(spark):
-    """The numpy signature kernel and the gated-expression fallback must
-    produce identical top-k (sign decisions share the engines' fold order)."""
-    from templatedb_spark.operators.similarity import (
-        _ann_lsh_banded_expr,
-        _ann_lsh_topk_expr,
-        ann_lsh_banded_topk,
-        ann_lsh_topk,
-    )
-
-    for kernel_fn, expr_fn in [
-        (ann_lsh_topk, _ann_lsh_topk_expr),
-        (ann_lsh_banded_topk, _ann_lsh_banded_expr),
-    ]:
-        via_kernel = {tuple(r) for r in kernel_fn(spark, SF_SMALL).collect()}
-        via_expr = {tuple(r) for r in expr_fn(spark, SF_SMALL).collect()}
-        assert via_kernel == via_expr, kernel_fn.__name__
 
 
 def test_semantic_dedup_properties(spark):
@@ -655,25 +675,3 @@ def test_lsh_cosine_dedup_recall_vs_exact(spark, sf_dir):
     assert lsh <= exact, f"LSH emitted non-pairs: {sorted(lsh - exact)[:5]}"
     recall = len(lsh) / len(exact)
     assert recall >= 0.8, f"LSH near-dup recall collapsed: {recall:.3f}"
-
-
-def test_lsh_cosine_dedup_kernel_matches_expression_path(spark):
-    """The Arrow signature-kernel path and the tiny-corpus expression fallback
-    must emit the identical pair set (mirrors the banded-ANN equivalence
-    contract)."""
-    import templatedb_spark.operators.similarity as sim
-
-    kern = {
-        (r.vec_a, r.vec_b, r.cosine)
-        for r in sim.dedup_embedding_lsh_cosine(spark, SF_SMALL).collect()
-    }
-    orig = sim._IVF_KERNEL_MIN_BYTES
-    try:
-        sim._IVF_KERNEL_MIN_BYTES = 1 << 60  # force the expression fallback
-        expr = {
-            (r.vec_a, r.vec_b, r.cosine)
-            for r in sim.dedup_embedding_lsh_cosine(spark, SF_SMALL).collect()
-        }
-    finally:
-        sim._IVF_KERNEL_MIN_BYTES = orig
-    assert kern == expr
