@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from templatedb_spark.catalog import register_csv_dir, register_parquet_dir
-from templatedb_spark.functions.registry import register_builtin_functions
 
 
 class StrictTypeError(ValueError):
@@ -48,7 +47,7 @@ class Engine:
         self.base_dir = base_dir
         self.catalog = catalog
         self._view_n = 0
-        register_builtin_functions(spark)
+        self._query_views: list[str] = []  # this query's TVF views, dropped once it is planned
 
     # -- catalog -----------------------------------------------------------
     def register_parquet_dir(self, sf_dir: str):
@@ -62,6 +61,7 @@ class Engine:
         self._view_n += 1
         name = f"__{prefix}_{self._view_n}"
         df.createOrReplaceTempView(name)
+        self._query_views.append(name)
         return name
 
     def _resolve(self, path: str) -> str:
@@ -248,6 +248,22 @@ class Engine:
 
     # -- query -------------------------------------------------------------
     def sql(self, query: str) -> DataFrame:
+        # The TVF rewrites register one temp view per call; spark.sql analyzes
+        # eagerly, so the returned DataFrame holds the views' plans and the
+        # views are dropped once it is planned (or planning failed). A temp
+        # view defined over a TVF keeps them: Spark re-resolves its text.
+        from templatedb_spark import sqlparse
+
+        try:
+            return self._sql(query)
+        finally:
+            head = [t.lower for t in sqlparse.tokenize(query)[:6]]
+            if not (head[:1] == ["create"] and "view" in head):
+                for view in self._query_views:
+                    self.spark.catalog.dropTempView(view)
+            self._query_views.clear()
+
+    def _sql(self, query: str) -> DataFrame:
         from templatedb_spark import sqlparse
 
         if self.strict:

@@ -51,6 +51,12 @@ def h32(col: Column) -> Column:
     return md5_long(col) % F.lit(MERSENNE_31)
 
 
+def normalized_text(col: str = "text") -> Column:
+    """The exact-dup normalization: lowercase, every whitespace run one space.
+    Its DuckDB twin stays spelled out in each oracle (the reference side)."""
+    return F.regexp_replace(F.lower(F.col(col)), r"\s+", " ")
+
+
 # -- DuckDB side ------------------------------------------------------------
 
 def md5_long_sql(expr: str) -> str:

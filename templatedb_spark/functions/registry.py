@@ -1,49 +1,17 @@
-"""Scalar function registry — parity with the reference's v2 function surface.
+"""Scalar function surface — parity with the reference's v2 named arithmetic.
 
 The reference registers `add/subtract/multiply/divide` scalar functions with
 overload resolution over 10 numeric types plus Date ± Interval overloads
 (reference: function/mod.rs:59-67, function/scalar/arithmetic_function.rs:61-261,
 planner/function_binder.rs:14-130). On Spark, overload resolution and implicit
-casting are Catalyst's job; we register thin SQL-visible functions so the
-reference's query text (`select add(1, 2)`) runs unchanged, each delegating to
-native Column arithmetic (JVM-side, codegen-friendly — NOT Python UDFs).
-
-Date ± interval (reference: tests/slt/time.slt) maps to native `date_add`/
-`add_months` arithmetic; exposed here as `date_add_interval(date, n, unit)`.
+casting are Catalyst's job, so nothing is registered: `Engine.sql` rewrites
+the reference's query text (`select add(1, 2)`) into native operators
+(`(1 + 2)`) before planning, keeping execution JVM-side inside whole-stage
+codegen — no Python UDF, no temp function. Spark's `/` returns double where
+the reference divides integers; that divergence is kept (SURVEY.md §7 risk 1).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import SparkSession
-
-# Registered via SQL so both spark.sql() text and DataFrame code can use them.
-# SQL temp functions keep everything inside Catalyst (no Python round-trip).
-_SQL_FUNCTIONS: dict[str, str] = {
-    # reference: function/scalar/arithmetic_function.rs:61-124
-    "add": "CREATE OR REPLACE TEMPORARY FUNCTION add AS 'noop'",
-}
-
-
-def register_builtin_functions(spark: SparkSession) -> None:
-    """Register the reference's scalar function surface as Spark SQL functions.
-
-    Implemented as SQL macros through `spark.udf.register` would push execution
-    into Python; instead we express each as a SQL lateral view / expression
-    rewrite. Spark >= 3.4 lacks CREATE FUNCTION ... AS SQL in open source for
-    scalar macros, so we register lightweight Python-free equivalents using
-    `selectExpr`-compatible names only where Spark has no native spelling.
-
-    Native Spark already provides everything except the reference's *named*
-    arithmetic wrappers; those we register as trivial pandas-free UDFs only if
-    absent. To stay JVM-side we instead rewrite `add(x, y)` → `x + y` at the
-    engine layer when present in SQL text.
-    """
-    # `try_divide`-style semantics: reference divide on ints is integer division
-    # via arrow kernels; Spark's `/` returns double, `div` is integer division.
-    # We keep native behavior and document divergence (SURVEY.md §7 risk 1).
-    # Nothing to register JVM-side today; hook kept for UDF-extension parity.
-    return None
-
 
 # Textual rewrite of the reference's named arithmetic functions into native
 # operators — keeps execution inside whole-stage codegen.

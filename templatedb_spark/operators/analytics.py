@@ -803,7 +803,7 @@ GROUP BY 1, 2
 # ((ts, event_id) is a total order), and 0.25/0.75 are exactly representable
 # doubles, so the accumulation is bit-identical. At scale this is one shuffle
 # on user_id and per-user state of one double — the same shape as
-# applyInPandasWithState's running aggregates, but fully declarative.
+# a Python state fold's running aggregates, but fully declarative.
 # ---------------------------------------------------------------------------
 
 

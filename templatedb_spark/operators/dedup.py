@@ -37,6 +37,7 @@ from templatedb_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
     minhash_params,
+    normalized_text,
 )
 from templatedb_spark.suite import QuerySpec, fan_out, register, table
 
@@ -190,9 +191,8 @@ SELECT * FROM directed WHERE containment >= {_CONTAINMENT_T}
 # ---------------------------------------------------------------------------
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     return (
-        d.select("doc_id", F.md5(norm).alias("fingerprint"))
+        d.select("doc_id", F.md5(normalized_text()).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

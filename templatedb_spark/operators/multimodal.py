@@ -1,8 +1,9 @@
 """Multimodal columns: binary payloads with typed metadata.
 
 Extension tier: image/audio/video payloads are opaque `binary` columns plus a
-metadata struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas functions over `mapInPandas`. Decode is REAL for the
+metadata struct; decode / feature-extract / resize / frame-sample are plain
+per-row Python functions, run over Arrow batches by `functions/pyrows.map_rows`
+(one `mapInPandas` node per stage). Decode is REAL for the
 formats a no-dependency container can honestly parse: binary PGM (full netpbm
 header parse), 8-bit PCM WAV (stdlib wave), and COMPRESSED grayscale PNG
 (stdlib zlib: CRC-verified chunk walk, inflate, all five scanline filters) —
@@ -11,7 +12,7 @@ specs, which encode real file bytes in one Arrow stage and decode them in the
 next. Only codecs that truly need external libraries (JPEG/ffmpeg formats)
 remain NotImplementedError.
 
-Scale: mapInPandas streams Arrow batches through one Python worker per core —
+Scale: each stage streams Arrow batches through one Python worker per core —
 payload bytes never pass through the driver, and batch size is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch` so executor memory stays flat
 regardless of corpus size.
@@ -19,10 +20,10 @@ regardless of corpus size.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from templatedb_spark.functions.pyrows import map_rows
 
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, payload binary, "
@@ -273,30 +274,22 @@ def decode_audio(payload: bytes) -> dict:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """Per-payload features via Arrow-batched mapInPandas (no driver round-trip)."""
-    import pandas as pd
+    """Per-payload features as a row map over Arrow batches (no driver round-trip)."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(lambda b: b[0] if len(b) else -1).astype("int64"),
-                    "byte_sum_mod": payloads.map(lambda b: sum(b) % 997).astype("int64"),
-                    "fake_pixel_mean": payloads.map(
-                        lambda b: float(
-                            sum(sum(r) for r in decode_image(b, codec="fake")) / 16.0
-                        )
-                    ),
-                }
-            )
-            yield out
+    def feats(doc_id, payload):
+        fake_px = decode_image(payload, codec="fake")
+        yield (
+            doc_id,
+            len(payload),
+            payload[0] if len(payload) else -1,
+            sum(payload) % 997,
+            sum(sum(r) for r in fake_px) / 16.0,
+        )
 
-    return media.mapInPandas(
+    return map_rows(
+        media.select("doc_id", "payload"),
         feats,
-        schema="doc_id long, n_bytes long, first_byte long, byte_sum_mod long, fake_pixel_mean double",
+        "doc_id long, n_bytes long, first_byte long, byte_sum_mod long, fake_pixel_mean double",
     )
 
 
@@ -321,49 +314,56 @@ FROM documents
 
 # ---------------------------------------------------------------------------
 # Real-codec roundtrip: documents → PGM / WAV file bytes (encode stage) →
-# decode stage parses the actual container format back → features. Both stages
-# are Arrow-batched mapInPandas; payload bytes never touch the driver.
+# decode stage parses the actual container format back → features. Each stage
+# is a per-row function over Arrow batches (`functions/pyrows.map_rows`), the
+# stages consecutive map-only mapInPandas nodes; payload bytes never touch the
+# driver.
 # ---------------------------------------------------------------------------
 _IMG_W = _IMG_H = 4  # 16 pixels from each doc's leading bytes
 _WAV_RATE = 8000
 _WAV_SAMPLES = 32
 
+_PAYLOAD = "doc_id long, payload binary"
+_GRAY_STATS = "doc_id long, width int, height int, pixel_mean double, pixel_max int"
+
+
+def _leading(raw: bytes, n: int, fill: bytes = b"\x00") -> bytes:
+    """The first n bytes of `raw`, padded with `fill` to exactly n."""
+    return (raw[:n] + fill * n)[:n]
+
+
+def _encoded_documents(spark: SparkSession, sf_dir: str, encode, *stages) -> DataFrame:
+    """documents → `encode(doc_id, text)` yielding (doc_id, payload) → each
+    further (fn, schema) row stage in turn."""
+    from templatedb_spark.suite import table
+
+    df = map_rows(table(spark, sf_dir, "documents").select("doc_id", "text"), encode, _PAYLOAD)
+    for fn, schema in stages:
+        df = map_rows(df, fn, schema)
+    return df
+
+
+def _gray_stats(decode):
+    """Row stage: decode a grayscale payload → (doc_id, width, height,
+    pixel_mean, pixel_max)."""
+
+    def stats(doc_id, payload):
+        px = decode(payload)
+        flat = [v for row in px for v in row]
+        yield doc_id, len(px[0]), len(px), sum(flat) / len(flat), max(flat)
+
+    return stats
+
 
 def multimodal_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each document into a real binary PGM image, decode it with the
     pure-Python netpbm parser, and emit pixel statistics."""
-    import pandas as pd
+    n = _IMG_W * _IMG_H
 
-    from templatedb_spark.suite import table
+    def encode(doc_id, text):
+        yield doc_id, encode_pgm(_leading(text.encode("utf-8"), n), _IMG_W, _IMG_H)
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _IMG_W * _IMG_H
-        for pdf in batches:
-            payloads = [
-                encode_pgm((t.encode("utf-8")[:n] + b"\x00" * n)[:n], _IMG_W, _IMG_H)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                flat = [v for row in px for v in row]
-                rows.append(
-                    (doc_id, len(px[0]), len(px), sum(flat) / len(flat), max(flat))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "pixel_mean", "pixel_max"]
-            )
-
-    return d.mapInPandas(encode, schema="doc_id long, payload binary").mapInPandas(
-        decode,
-        schema="doc_id long, width int, height int, pixel_mean double, pixel_max int",
-    )
+    return _encoded_documents(spark, sf_dir, encode, (_gray_stats(decode_image), _GRAY_STATS))
 
 
 # Oracle: pixels are the first 16 utf-8 bytes of the (ASCII) text zero-padded to
@@ -393,38 +393,12 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     inflate/unfilter pipeline, and emit pixel statistics. Proves the Arrow
     plumbing carries a genuinely compressed codec, not just containerized raw
     bytes (VERDICT r2 item 7)."""
-    import pandas as pd
+    n = _PNG_W * _PNG_H
 
-    from templatedb_spark.suite import table
+    def encode(doc_id, text):
+        yield doc_id, encode_png(_leading(text.encode("utf-8"), n), _PNG_W, _PNG_H)
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _PNG_W * _PNG_H
-        for pdf in batches:
-            payloads = [
-                encode_png((t.encode("utf-8")[:n] + b"\x00" * n)[:n], _PNG_W, _PNG_H)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_png(bytes(payload))
-                flat = [v for row in px for v in row]
-                rows.append(
-                    (doc_id, len(px[0]), len(px), sum(flat) / len(flat), max(flat))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "pixel_mean", "pixel_max"]
-            )
-
-    return d.mapInPandas(encode, schema="doc_id long, payload binary").mapInPandas(
-        decode,
-        schema="doc_id long, width int, height int, pixel_mean double, pixel_max int",
-    )
+    return _encoded_documents(spark, sf_dir, encode, (_gray_stats(decode_png), _GRAY_STATS))
 
 
 # Oracle: a correct encode→decode roundtrip reproduces the source pixels — the
@@ -452,53 +426,33 @@ def multimodal_decode_png_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-tripped through the full chunk/CRC/inflate/unfilter pipeline with
     per-pixel-stepped filters, and reduced to per-channel means — the stats a
     vision-data curation pass computes per image."""
-    import pandas as pd
+    npx = _PNG_W * _PNG_H
 
-    from templatedb_spark.suite import table
+    def encode(doc_id, text):
+        raw = _leading(text.encode("utf-8"), npx * 3)
+        yield doc_id, encode_png(raw, _PNG_W, _PNG_H, channels=3)
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+    def decode(doc_id, payload):
+        px = decode_png(payload)
+        flat = [v for row in px for v in row]
+        yield (
+            doc_id,
+            len(px[0]) // 3,
+            len(px),
+            sum(flat[0::3]) / npx,
+            sum(flat[1::3]) / npx,
+            sum(flat[2::3]) / npx,
+            max(flat),
+        )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _PNG_W * _PNG_H * 3
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    (t.encode("utf-8")[:n] + b"\x00" * n)[:n], _PNG_W, _PNG_H, channels=3
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        npx = _PNG_W * _PNG_H
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_png(bytes(payload))
-                flat = [v for row in px for v in row]
-                rows.append(
-                    (
-                        doc_id,
-                        len(px[0]) // 3,
-                        len(px),
-                        sum(flat[0::3]) / npx,
-                        sum(flat[1::3]) / npx,
-                        sum(flat[2::3]) / npx,
-                        max(flat),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "r_mean", "g_mean", "b_mean", "pixel_max",
-                ],
-            )
-
-    return d.mapInPandas(encode, schema="doc_id long, payload binary").mapInPandas(
-        decode,
-        schema=(
+    return _encoded_documents(
+        spark,
+        sf_dir,
+        encode,
+        (
+            decode,
             "doc_id long, width int, height int, "
-            "r_mean double, g_mean double, b_mean double, pixel_max int"
+            "r_mean double, g_mean double, b_mean double, pixel_max int",
         ),
     )
 
@@ -556,58 +510,27 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-weighted checksum (sum of (k+1)·p[k] over the row-major resized
     raster) — any misplacement, transposition, or wrong source mapping flips
     the checksum even when the mean survives."""
-    import pandas as pd
-
-    from templatedb_spark.suite import table
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     n = _RSZ_SRC * _RSZ_SRC
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_pgm((t.encode("utf-8")[:n] + b"\x00" * n)[:n], _RSZ_SRC, _RSZ_SRC)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id, text):
+        yield doc_id, encode_pgm(_leading(text.encode("utf-8"), n), _RSZ_SRC, _RSZ_SRC)
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for payload in pdf["payload"]:
-                px = resize_nearest(decode_image(bytes(payload)), _RSZ_OUT, _RSZ_OUT)
-                payloads.append(
-                    encode_pgm(bytes(v for row in px for v in row), _RSZ_OUT, _RSZ_OUT)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def resize(doc_id, payload):
+        px = resize_nearest(decode_image(payload), _RSZ_OUT, _RSZ_OUT)
+        yield doc_id, encode_pgm(bytes(v for row in px for v in row), _RSZ_OUT, _RSZ_OUT)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                flat = [v for row in px for v in row]
-                rows.append(
-                    (
-                        doc_id,
-                        len(px[0]),
-                        len(px),
-                        sum(flat) / len(flat),
-                        sum((k + 1) * v for k, v in enumerate(flat)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "pixel_mean", "checksum"]
-            )
+    def stats(doc_id, payload):
+        px = decode_image(payload)
+        flat = [v for row in px for v in row]
+        checksum = sum((k + 1) * v for k, v in enumerate(flat))
+        yield doc_id, len(px[0]), len(px), sum(flat) / len(flat), checksum
 
-    binary = "doc_id long, payload binary"
-    return (
-        d.mapInPandas(encode, schema=binary)
-        .mapInPandas(resize, schema=binary)
-        .mapInPandas(
-            stats,
-            schema="doc_id long, width int, height int, pixel_mean double, checksum bigint",
-        )
+    return _encoded_documents(
+        spark,
+        sf_dir,
+        encode,
+        (resize, _PAYLOAD),
+        (stats, "doc_id long, width int, height int, pixel_mean double, checksum bigint"),
     )
 
 
@@ -640,40 +563,19 @@ FROM rs
 def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each document into a real 8-bit mono PCM WAV (stdlib wave),
     decode it back, and emit sample statistics."""
-    import pandas as pd
 
-    from templatedb_spark.suite import table
+    def encode(doc_id, text):
+        yield doc_id, encode_wav(_leading(text.encode("utf-8"), _WAV_SAMPLES, b"\x80"), _WAV_RATE)
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+    def decode(doc_id, payload):
+        a = decode_audio(payload)
+        yield doc_id, a["sample_rate"], a["n_samples"], sum(a["samples"]) / len(a["samples"])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _WAV_SAMPLES
-        for pdf in batches:
-            payloads = [
-                encode_wav((t.encode("utf-8")[:n] + b"\x80" * n)[:n], _WAV_RATE)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                a = decode_audio(bytes(payload))
-                rows.append(
-                    (
-                        doc_id,
-                        a["sample_rate"],
-                        a["n_samples"],
-                        sum(a["samples"]) / len(a["samples"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_rate", "n_samples", "amp_mean"]
-            )
-
-    return d.mapInPandas(encode, schema="doc_id long, payload binary").mapInPandas(
-        decode, schema="doc_id long, sample_rate int, n_samples long, amp_mean double"
+    return _encoded_documents(
+        spark,
+        sf_dir,
+        encode,
+        (decode, "doc_id long, sample_rate int, n_samples long, amp_mean double"),
     )
 
 
@@ -700,7 +602,7 @@ FROM s
 # header and strides every SAMPLE_STRIDE-th frame — the standard
 # video-preprocessing shape (decode only the frames you keep; at 100 TB the
 # stride is what turns petabytes of video into a trainable frame set).
-# Both stages are Arrow-batched mapInPandas; container bytes never leave
+# Both stages are per-row maps over Arrow batches; container bytes never leave
 # the executors. The oracle reproduces the sampled frames' pixel stats from
 # the ASCII byte ↔ codepoint identity (guard-tested for this corpus).
 # ---------------------------------------------------------------------------
@@ -736,38 +638,22 @@ def decode_video_frames(payload: bytes, stride: int = 1) -> list[tuple[int, byte
 
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from templatedb_spark.suite import table
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     plane = _VID_W * _VID_H
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                raw = t.encode("utf-8")
-                frames = [
-                    (raw[k * plane : (k + 1) * plane] + b"\x00" * plane)[:plane]
-                    for k in range(_VID_FRAMES)
-                ]
-                payloads.append(encode_video(frames, _VID_W, _VID_H))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id, text):
+        raw = text.encode("utf-8")
+        frames = [_leading(raw[k * plane :], plane) for k in range(_VID_FRAMES)]
+        yield doc_id, encode_video(frames, _VID_W, _VID_H)
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for k, fr in decode_video_frames(bytes(payload), _VID_STRIDE):
-                    rows.append((doc_id, k, sum(fr) / len(fr), max(fr)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "pixel_mean", "pixel_max"]
-            )
+    def sample(doc_id, payload):
+        for k, fr in decode_video_frames(payload, _VID_STRIDE):
+            yield doc_id, k, sum(fr) / len(fr), max(fr)
 
-    return d.mapInPandas(encode, schema="doc_id long, payload binary").mapInPandas(
-        sample,
-        schema="doc_id long, frame_idx long, pixel_mean double, pixel_max long",
+    return _encoded_documents(
+        spark,
+        sf_dir,
+        encode,
+        (sample, "doc_id long, frame_idx long, pixel_mean double, pixel_max long"),
     )
 
 

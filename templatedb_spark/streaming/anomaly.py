@@ -1,10 +1,11 @@
-"""Custom stateful streaming operator: running z-score anomaly detection with
-applyInPandasWithState.
+"""Custom stateful streaming operator: running z-score anomaly detection as a
+keyed state fold (`functions/pyrows.fold_by_key`).
 
 Per-user state is the running (n, sum, sum-of-squares) of event values in
 event order; each incoming event is scored against the distribution of the
 events BEFORE it (z = (v - mean) / stddev_samp), flagged when |z| crosses the
-threshold after a warmup count, then folded into the state. The batch twin
+threshold after a warmup count, then folded into the state. The fold reads
+each user's (ts µs, event_id, value) rows in that order. The batch twin
 (operators/pipeline.anomaly_zscore — an exact-oracle spec) computes the same
 quantities with running window sums over the identical (ts, event_id) order,
 and both sides evaluate the identical arithmetic expression, so stream and
@@ -18,10 +19,10 @@ every online feature/monitoring job a 100 TB event pipeline runs.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from templatedb_spark.functions.pyrows import fmt_us, fold_by_key
 
 Z_THRESHOLD = 3.0
 MIN_PRIOR = 12  # events observed before scoring starts
@@ -30,29 +31,11 @@ _OUTPUT_SCHEMA = "user_id long, ts string, value double, n_prior long, z double"
 _STATE_SCHEMA = "n long, s double, q double"
 
 
-def _fmt_us(us: int) -> str:
-    import datetime
-
-    return datetime.datetime.utcfromtimestamp(us / 1_000_000).strftime(
-        "%Y-%m-%d %H:%M:%S.%f"
-    )
-
-
-def _anomaly_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
-    import pandas as pd
-
+def _anomaly_fold(key: tuple, state: tuple | None, rows: list) -> tuple:
     (user_id,) = key
-    n, s, q = state.get if state.exists else (0, 0.0, 0.0)
-
-    events: list[tuple[int, int, float]] = []
-    for pdf in pdfs:
-        # unit-safe: datetime64[ns] or [us] both land on epoch-µs
-        us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64").tolist()
-        events += list(zip(us, pdf["event_id"].tolist(), pdf["value"].tolist()))
-    events.sort()
-
+    n, s, q = state or (0, 0.0, 0.0)
     out = []
-    for ts_us, _eid, v in events:
+    for ts_us, _eid, v in rows:
         if n >= MIN_PRIOR:
             # identical expression to the batch twin / oracle:
             # var = (q - s*s/n) / (n-1), z = (v - s/n) / sqrt(var)
@@ -60,29 +43,19 @@ def _anomaly_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
             if var > 0:
                 z = round((v - s / n) / math.sqrt(var), 6)
                 if abs(z) >= Z_THRESHOLD:
-                    out.append(
-                        {
-                            "user_id": user_id,
-                            "ts": _fmt_us(ts_us),
-                            "value": v,
-                            "n_prior": n,
-                            "z": z,
-                        }
-                    )
+                    out.append((user_id, fmt_us(ts_us, "%Y-%m-%d %H:%M:%S.%f"), v, n, z))
         n += 1
         s += v
         q += v * v
-
-    state.update((n, s, q))
-    yield pd.DataFrame(out, columns=["user_id", "ts", "value", "n_prior", "z"])
+    return (n, s, q), out
 
 
 def stream_anomaly_zscore(events: DataFrame) -> DataFrame:
     """Streaming running z-score anomaly detection; emits flagged events."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _anomaly_group,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        events.select("user_id", "ts", "event_id", "value"),
+        ["user_id"],
+        _anomaly_fold,
+        _OUTPUT_SCHEMA,
+        _STATE_SCHEMA,
     )

@@ -1,7 +1,10 @@
-"""Stateful streaming last-touch attribution with applyInPandasWithState.
+"""Stateful streaming last-touch attribution as a keyed state fold
+(`functions/pyrows.fold_by_key`).
 
 Per-user state is the most recent touch (epoch-µs timestamp + type). Events
-are applied in (ts, event_id) order: clicks/views update the state, purchases
+are applied in (ts, event_id) order — the fold's rows are (ts µs, event_id,
+event_type, value) sorted as whole tuples, which is that order because
+event_id is unique in the feed: clicks/views update the state, purchases
 emit an attribution row — the touch type when the stored touch falls inside
 the 7-day lookback, else 'direct'. The batch twin is
 operators/analytics.attributed_purchases (the pre-rollup relation of the
@@ -16,10 +19,9 @@ watermarking bounds state exactly as in streaming/stateful.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from templatedb_spark.functions.pyrows import fold_by_key
 
 LOOKBACK_US = 7 * 86_400 * 1_000_000
 
@@ -27,22 +29,11 @@ _OUTPUT_SCHEMA = "user_id long, event_id long, touch string, value double"
 _STATE_SCHEMA = "touch_ts long, touch_type string"
 
 
-def _attr_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
-    import pandas as pd
-
+def _attr_fold(key: tuple, state: tuple | None, rows: list) -> tuple:
     (user_id,) = key
-    touch_ts, touch_type = state.get if state.exists else (-1, "")
-
-    events: list[tuple[int, int, str, float]] = []
-    for pdf in pdfs:
-        us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64").tolist()
-        events += list(
-            zip(us, pdf["event_id"].tolist(), pdf["event_type"].tolist(), pdf["value"].tolist())
-        )
-    events.sort(key=lambda e: (e[0], e[1]))
-
+    touch_ts, touch_type = state or (-1, "")
     out = []
-    for ts_us, eid, etype, value in events:
+    for ts_us, eid, etype, value in rows:
         if etype in ("click", "view"):
             touch_ts, touch_type = ts_us, etype
         elif etype == "purchase":
@@ -51,20 +42,16 @@ def _attr_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
                 if touch_ts >= 0 and touch_ts >= ts_us - LOOKBACK_US
                 else "direct"
             )
-            out.append(
-                {"user_id": user_id, "event_id": eid, "touch": attributed, "value": value}
-            )
-
-    state.update((touch_ts, touch_type))
-    yield pd.DataFrame(out, columns=["user_id", "event_id", "touch", "value"])
+            out.append((user_id, eid, attributed, value))
+    return (touch_ts, touch_type), out
 
 
 def stream_attribution_last_touch(events: DataFrame) -> DataFrame:
     """Streaming per-purchase last-touch attribution."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _attr_group,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        events.select("user_id", "ts", "event_id", "event_type", "value"),
+        ["user_id"],
+        _attr_fold,
+        _OUTPUT_SCHEMA,
+        _STATE_SCHEMA,
     )

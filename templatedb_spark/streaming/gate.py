@@ -139,7 +139,7 @@ def _stream_session(spark: SparkSession, stage_dir: str) -> SparkSession:
 
 def _python_state_session(spark: SparkSession) -> SparkSession:
     """Clone the session for a Python-stateful trigger chain (sessionize's
-    applyInPandasWithState).
+    `pyrows.fold_by_key` fold).
 
     The OPPOSITE regime from the JVM-state chains `_stream_session`
     shrinks: the chain is bound by serial per-group Python calls inside
@@ -228,7 +228,7 @@ register(
 
 # ---------------------------------------------------------------------------
 # Second gated streaming spec: the CUSTOM STATEFUL operator
-# (applyInPandasWithState gap-sessionization, streaming/stateful.py) under
+# (gap-sessionization as a Python state fold, streaming/stateful.py) under
 # the same oracle discipline, on the `_python_state_session` clone (its
 # partition rule is measured there). The stream drains the 3-micro-batch
 # staging (state spans batch boundaries — a session opened in batch 1
@@ -372,7 +372,7 @@ register(
 # Fourth gated streaming spec (round 6, VERDICT r5 #7): the streaming
 # NEAR-DUP operator (streaming/neardup.py) — the one streaming operator that
 # was pytest-only. Documents drain as 2 doc_id-ordered micro-batches through
-# the per-band applyInPandasWithState pair matcher; a batch-2 doc colliding
+# the per-band state-fold pair matcher; a batch-2 doc colliding
 # with a batch-1 doc's signature exercises exactly the cross-batch band
 # state the operator exists for. Determinism argument: signatures are
 # row-local projections (no aggregation state), per-band matching is

@@ -10,7 +10,7 @@ fingerprint seen within the watermark horizon; rows older than the watermark
 delay are evicted by the state store itself).
 
 Contrast with streaming/neardup.py: near-dup needs custom per-band state
-(applyInPandasWithState) because Spark has no banded-LSH operator; EXACT
+(a `pyrows.fold_by_key` fold) because Spark has no banded-LSH operator; EXACT
 dedup is expressible with a built-in stateful operator, so we use it — no
 Python state function on the hot path, and the state store (RocksDB on a
 real cluster) handles eviction, checkpointing, and recovery for free.
@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from templatedb_spark.functions.hashing import normalized_text
+
 # Arrival clock base for staged micro-batches (any fixed epoch works; the
 # watermark only ever compares event times to each other).
 _ARRIVAL_EPOCH = 1_700_000_000
@@ -54,9 +56,8 @@ def stream_dedup_ingest(docs: DataFrame, delay: str = "1 hour") -> DataFrame:
     The fingerprint expression is BIT-IDENTICAL to the batch dedup_exact /
     DuckDB oracle expression: md5(regexp_replace(lower(text),'\\s+',' ')).
     """
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     return (
-        docs.withColumn("fingerprint", F.md5(norm))
+        docs.withColumn("fingerprint", F.md5(normalized_text()))
         .withColumn(
             "arrival_ts",
             F.timestamp_seconds(

@@ -6,22 +6,23 @@ self-join. This is its online twin for a document firehose:
 1. **Signatures are a row-local map** — the k=16 minhash values are computed
    per incoming document with the SAME md5-derived universal-hash family the
    batch path aggregates over exploded shingles (`functions/hashing.py`),
-   here as an Arrow-batched `mapInPandas` (hashlib md5 + one numpy matrix op
-   for all 16 affine mins). No streaming aggregation is needed to build a
-   signature; it happens map-side in the micro-batch. Why Python and not a
-   SQL expression: the batch path's explode+groupBy shape is whole-stage
-   codegen, but a streaming micro-batch can't put an aggregation before the
+   here as a per-row function over Arrow batches (`functions/pyrows.map_rows`:
+   hashlib md5 + one numpy matrix op per doc for all 16 affine mins). No
+   streaming aggregation is needed to build a signature; it happens map-side
+   in the micro-batch. Why Python and not a SQL expression: the batch
+   path's explode+groupBy shape is whole-stage codegen, but a streaming micro-batch can't put an aggregation before the
    stateful operator, and the in-row SQL alternatives are higher-order
    functions (transform/aggregate lambdas) that Spark evaluates INTERPRETED
    — measured ~9 s per 2500-doc trigger vs well under 1 s for the
-   vectorized pandas map. mapInPandas also acts as a materialization
+   Python map. The map (a mapInPandas node) also acts as a materialization
    barrier, so banding's posexplode fans out computed values, never the
    expression tree (CollapseProject re-inlines projections through
    repartition, so a repartition is NOT such a barrier — measured).
 2. **Banding is an explode** — each doc emits k rows keyed by (band index,
    minhash value); docs colliding on a band key are near-dup candidates.
-3. **Pairing is sharded band state** (`applyInPandasWithState` keyed by
-   (band, mh % _STATE_SHARDS)): state holds the (mh, doc_id, full signature)
+3. **Pairing is sharded band state** (a `functions/pyrows.fold_by_key` fold
+   keyed by (band, mh % _STATE_SHARDS), over each shard's (doc_id, mh, sig)
+   rows in doc_id order): state holds the (mh, doc_id, full signature)
    of every earlier doc seen in the shard; each arrival is scored against
    the earlier docs with the SAME mh (its true LSH bucket — the shard is
    only a packing unit) by matching-position count >= 8 of 16, i.e.
@@ -55,13 +56,11 @@ same DuckDB oracle discipline as the exact twin (streaming/gate.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from templatedb_spark.functions.hashing import MERSENNE_31
+from templatedb_spark.functions.pyrows import fold_by_key, map_rows
 from templatedb_spark.operators.dedup import _MINHASH_MATCH_MIN, _PERMS
 
 _OUTPUT_SCHEMA = "doc_a long, doc_b long, matches long"
@@ -75,7 +74,8 @@ _STATE_SHARDS = 16  # state groups = 16 bands × this; see module docstring
 
 
 def signature_projection(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig): k=16 minhash signature as an Arrow-batched row-local map.
+    """(doc_id, sig): k=16 minhash signature as a row-local map
+    (`functions/pyrows.map_rows`).
 
     Identical values to the batch `minhash_signatures_wide` (which MINs the
     same md5-derived hash over the exploded shingle stream): min over a set
@@ -90,47 +90,28 @@ def signature_projection(docs: DataFrame) -> DataFrame:
     explodes fan out VALUES, never the expression tree. See the module
     docstring for why the SQL-expression formulation lost by ~10×.
     """
+    import hashlib
+    import re
+
     import numpy as np
 
     a_vec = np.array([a for a, _ in _PERMS], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in _PERMS], dtype=np.int64)[:, None]
+    tok = re.compile(r"[a-z0-9]+")
 
-    def compute(batches):
-        import hashlib
-        import re
+    def signature(doc_id, text):
+        toks = tok.findall((text or "").lower())
+        if len(toks) < 3:
+            return
+        shs = {f"{toks[i]} {toks[i + 1]} {toks[i + 2]}" for i in range(len(toks) - 2)}
+        hs = np.fromiter(
+            (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % MERSENNE_31 for s in shs),
+            dtype=np.int64,
+            count=len(shs),
+        )
+        yield doc_id, ((a_vec * hs[None, :] + b_vec) % MERSENNE_31).min(axis=1).tolist()
 
-        import numpy as np
-        import pandas as pd
-
-        tok = re.compile(r"[a-z0-9]+")
-        for pdf in batches:
-            out_ids: list[int] = []
-            out_sigs: list[list[int]] = []
-            for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-                toks = tok.findall((text or "").lower())
-                if len(toks) < 3:
-                    continue
-                shs = {
-                    f"{toks[i]} {toks[i + 1]} {toks[i + 2]}"
-                    for i in range(len(toks) - 2)
-                }
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                        % MERSENNE_31
-                        for s in shs
-                    ),
-                    dtype=np.int64,
-                    count=len(shs),
-                )
-                sig = ((a_vec * hs[None, :] + b_vec) % MERSENNE_31).min(axis=1)
-                out_ids.append(int(doc_id))
-                out_sigs.append([int(x) for x in sig])
-            yield pd.DataFrame({"doc_id": out_ids, "sig": out_sigs})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        compute, "doc_id long, sig array<bigint>"
-    )
+    return map_rows(docs.select("doc_id", "text"), signature, "doc_id long, sig array<bigint>")
 
 
 def banded(sigs: DataFrame) -> DataFrame:
@@ -143,16 +124,9 @@ def banded(sigs: DataFrame) -> DataFrame:
     ).select("band", "mh", "doc_id", "sig")
 
 
-def _band_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
-    import pandas as pd
-
-    if state.exists:
-        mhs, doc_ids, sigs = state.get
-        mhs = list(mhs)
-        doc_ids = list(doc_ids)
-        sigs = [list(s) for s in sigs]
-    else:
-        mhs, doc_ids, sigs = [], [], []
+def _band_fold(key: tuple, state: tuple | None, rows: list) -> tuple:
+    mhs, doc_ids, sigs = state or ([], [], [])
+    mhs, doc_ids, sigs = list(mhs), list(doc_ids), [list(s) for s in sigs]
 
     # mh -> earlier (doc_id, sig) in THIS shard: the true LSH bucket index,
     # so a shard never compares docs that don't actually share the band value
@@ -160,36 +134,25 @@ def _band_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
     for m, d, s in zip(mhs, doc_ids, sigs):
         seen.setdefault(m, []).append((d, s))
 
-    arrivals: list[tuple[int, int, list[int]]] = []
-    for pdf in pdfs:
-        for m, doc, sig in zip(
-            pdf["mh"].tolist(), pdf["doc_id"].tolist(), pdf["sig"].tolist()
-        ):
-            arrivals.append((int(doc), int(m), [int(x) for x in sig]))
-    arrivals.sort()
-
     out = []
-    for doc, m, sig in arrivals:
+    for doc, m, sig in rows:
         for prev_doc, prev_sig in seen.get(m, ()):
             if prev_doc == doc:
                 continue
             matches = sum(1 for x, y in zip(sig, prev_sig) if x == y)
             if matches >= _MINHASH_MATCH_MIN:
-                a, b = sorted((prev_doc, doc))
-                out.append({"doc_a": a, "doc_b": b, "matches": matches})
+                out.append((*sorted((prev_doc, doc)), matches))
         seen.setdefault(m, []).append((doc, sig))
         mhs.append(m)
         doc_ids.append(doc)
         sigs.append(sig)
-
-    state.update((mhs, doc_ids, sigs))
-    yield pd.DataFrame(out, columns=["doc_a", "doc_b", "matches"])
+    return (mhs, doc_ids, sigs), out
 
 
-def _band_group_reps(
-    key: tuple, pdfs: Iterator, state: GroupState, evict_horizon: int | None = None
-) -> Iterator:
-    """Representative-election twin of _band_group — the BOUNDED-STATE
+def _band_fold_reps(
+    key: tuple, state: tuple | None, rows: list, evict_horizon: int | None = None
+) -> tuple:
+    """Representative-election twin of _band_fold — the BOUNDED-STATE
     production policy (module docstring). Per bucket (mh) the state holds
     exactly ONE (doc_id, sig): the first arrival, `semantic_dedup`'s
     earliest-wins election applied online. Later arrivals are scored against
@@ -204,28 +167,12 @@ def _band_group_reps(
     re-elects itself instead of pairing (watermark semantics), and stale
     entries are dropped from state after the batch. Deterministic for an
     ordered stage, unlike wall-clock timeouts."""
-    import pandas as pd
-
-    if state.exists:
-        mhs, doc_ids, sigs, last_docs = state.get
-        reps: dict[int, list] = {
-            m: [d, list(s), lb]
-            for m, d, s, lb in zip(mhs, doc_ids, sigs, last_docs)
-        }
-    else:
-        reps = {}
-
-    arrivals: list[tuple[int, int, list[int]]] = []
-    for pdf in pdfs:
-        for m, doc, sig in zip(
-            pdf["mh"].tolist(), pdf["doc_id"].tolist(), pdf["sig"].tolist()
-        ):
-            arrivals.append((int(doc), int(m), [int(x) for x in sig]))
-    arrivals.sort()
-
+    reps: dict[int, list] = {
+        m: [d, list(s), lb] for m, d, s, lb in zip(*(state or ([], [], [], [])))
+    }
     out = []
     clock = 0
-    for doc, m, sig in arrivals:
+    for doc, m, sig in rows:
         clock = max(clock, doc)
         rep = reps.get(m)
         if rep is not None and evict_horizon is not None and rep[2] < doc - evict_horizon:
@@ -237,23 +184,20 @@ def _band_group_reps(
         if rep_doc != doc:
             matches = sum(1 for x, y in zip(sig, rep_sig) if x == y)
             if matches >= _MINHASH_MATCH_MIN:
-                a, b = sorted((rep_doc, doc))
-                out.append({"doc_a": a, "doc_b": b, "matches": matches})
+                out.append((*sorted((rep_doc, doc)), matches))
         rep[2] = doc  # the bucket was touched: refresh its eviction clock
 
     if evict_horizon is not None:
         reps = {m: r for m, r in reps.items() if r[2] >= clock - evict_horizon}
 
     items = sorted(reps.items())
-    state.update(
-        (
-            [m for m, _ in items],
-            [r[0] for _, r in items],
-            [r[1] for _, r in items],
-            [r[2] for _, r in items],
-        )
+    new_state = (
+        [m for m, _ in items],
+        [r[0] for _, r in items],
+        [r[1] for _, r in items],
+        [r[2] for _, r in items],
     )
-    yield pd.DataFrame(out, columns=["doc_a", "doc_b", "matches"])
+    return new_state, out
 
 
 def stream_neardup_pairs(
@@ -268,7 +212,9 @@ def stream_neardup_pairs(
     (unbounded per-bucket state — the audit twin of dedup_minhash_lsh).
     mode="representatives": the bounded-state production policy — one
     elected representative per bucket, optional `evict_horizon` lifetime
-    bound (see _band_group_reps)."""
+    bound (see _band_fold_reps)."""
+    import functools
+
     if mode not in ("exact", "representatives"):
         raise ValueError(f"unknown near-dup mode: {mode!r}")
     if evict_horizon is not None and mode != "representatives":
@@ -279,24 +225,12 @@ def stream_neardup_pairs(
     sigs = signature_projection(docs_stream.repartition("doc_id"))
     b = banded(sigs)
     shard = F.pmod(F.col("mh"), F.lit(_STATE_SHARDS)).alias("shard")
-    grouped = b.select("band", shard, "mh", "doc_id", "sig").groupBy("band", "shard")
+    # rows (doc_id, mh, sig): each shard's arrivals fold in doc_id order
+    rows = b.select("band", shard, "doc_id", "mh", "sig")
     if mode == "representatives":
-        import functools
-
-        return grouped.applyInPandasWithState(
-            functools.partial(_band_group_reps, evict_horizon=evict_horizon),
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_REPS_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return grouped.applyInPandasWithState(
-        _band_group,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        fold = functools.partial(_band_fold_reps, evict_horizon=evict_horizon)
+        return fold_by_key(rows, ["band", "shard"], fold, _OUTPUT_SCHEMA, _REPS_STATE_SCHEMA)
+    return fold_by_key(rows, ["band", "shard"], _band_fold, _OUTPUT_SCHEMA, _STATE_SCHEMA)
 
 
 def read_documents_stream(spark: SparkSession, stage_dir: str) -> DataFrame:

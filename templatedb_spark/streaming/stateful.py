@@ -1,5 +1,5 @@
-"""Custom stateful streaming operator: sessionization with
-applyInPandasWithState.
+"""Custom stateful streaming operator: gap sessionization as a keyed state
+fold (`functions/pyrows.fold_by_key`).
 
 The batch twin is operators/analytics.sessionize (gap-based sessions). In
 streaming, per-user session state (start, last-seen, count, value) lives in the
@@ -7,7 +7,9 @@ state store; a session CLOSES when an event arrives more than `gap` after the
 previous one, and the closed session is emitted. The in-flight session stays in
 state (with a real event-time timeout it would flush on watermark expiry; the
 availableNow harness drains the backlog in one pass, so tests compare closed
-sessions only).
+sessions only). The fold is plain Python over each user's (ts µs, value)
+rows in time order; the Arrow/pandas plumbing and the state API live in
+pyrows.
 
 Scale: state is O(active users), keyed and partitioned by user_id; Arrow
 batches flow per group — this is the Spark-native replacement for the per-user
@@ -16,11 +18,9 @@ driver loop that cannot exist at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from templatedb_spark.functions.pyrows import fmt_us, fold_by_key
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -31,67 +31,33 @@ _OUTPUT_SCHEMA = (
 _STATE_SCHEMA = "start_us long, last_us long, n long, value double"
 
 
-def _fmt(us: int) -> str:
-    import datetime
-
-    return datetime.datetime.utcfromtimestamp(us / 1_000_000).strftime("%Y-%m-%d %H:%M:%S")
-
-
-def _sessionize_group(key: tuple, pdfs: Iterator, state: GroupState) -> Iterator:
-    import pandas as pd
-
+def _sessionize_fold(key: tuple, state: tuple | None, rows: list) -> tuple:
     (user_id,) = key
-    if state.exists:
-        start_us, last_us, n, value = state.get
-    else:
-        start_us = last_us = -1
-        n, value = 0, 0.0
-
-    closed: list[dict[str, Any]] = []
-    events: list[tuple[int, float]] = []
-    for pdf in pdfs:
-        # unit-safe: datetime64[ns] or [us] both land on epoch-µs
-        us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64").tolist()
-        events += list(zip(us, pdf["value"].tolist()))
-    events.sort()
-
-    for ts_us, val in events:
+    start_us, last_us, n, value = state or (-1, -1, 0, 0.0)
+    closed = []
+    for ts_us, val in rows:
         if last_us >= 0 and ts_us - last_us > SESSION_GAP_US:
-            closed.append(
-                {
-                    "user_id": user_id,
-                    "session_start": _fmt(start_us),
-                    "session_end": _fmt(last_us),
-                    "n_events": n,
-                    "session_value": round(value, 2),
-                }
-            )
+            closed.append((user_id, fmt_us(start_us), fmt_us(last_us), n, round(value, 2)))
             start_us, n, value = ts_us, 0, 0.0
         if start_us < 0:
             start_us = ts_us
         last_us = ts_us
         n += 1
         value += val
-
-    state.update((start_us, last_us, n, value))
-    # most groups close nothing in a given trigger: skip the pandas
-    # construction entirely (measured: ~0.2-0.5 ms/group × groups/trigger —
-    # a visible slice of the chain's python-bound wall)
-    if closed:
-        yield pd.DataFrame(closed, columns=["user_id", "session_start", "session_end", "n_events", "session_value"])
+    return (start_us, last_us, n, value), closed
 
 
 def stream_sessionize(events: DataFrame) -> DataFrame:
     """Streaming gap-sessionization; emits sessions as they close."""
-    # Project to the three columns the group function reads BEFORE the
-    # stateful operator: applyInPandasWithState is opaque to column pruning,
-    # so without this the full event row (event_id, event_type and the
-    # props payload string) crosses the JVM->Arrow->Python boundary every
-    # trigger for nothing (guide §4.1).
-    return events.select("user_id", "ts", "value").groupBy("user_id").applyInPandasWithState(
-        _sessionize_group,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # Project to the three columns the fold reads BEFORE the stateful
+    # operator: the Python state fold is opaque to column pruning, so
+    # without this the full event row (event_id, event_type and the props
+    # payload string) crosses the JVM->Arrow->Python boundary every trigger
+    # for nothing (guide §4.1).
+    return fold_by_key(
+        events.select("user_id", "ts", "value"),
+        ["user_id"],
+        _sessionize_fold,
+        _OUTPUT_SCHEMA,
+        _STATE_SCHEMA,
     )

@@ -12,6 +12,7 @@ from tests.conftest import SF_SMALL
 from templatedb_spark.plans.explain import (
     has_pushed_filters,
     join_strategies,
+    physical_plan,
     read_schema_columns,
     uses_python_udf,
 )
@@ -250,16 +251,47 @@ def test_embedding_cosine_no_driver_materialization(spark):
     assert "FlatMapGroupsInPandas" in plan
 
 
-def test_multimodal_decode_pipelines_without_shuffle(spark):
-    """encode→decode are consecutive map-only Arrow stages: two MapInPandas
-    nodes, zero Exchange — payload bytes stream executor-local end to end."""
-    from templatedb_spark.plans.explain import formatted_plan
+_MULTIMODAL_MAP_STAGES = {
+    "multimodal_features": 1,
+    "multimodal_decode_image": 2,
+    "multimodal_decode_png": 2,
+    "multimodal_decode_png_rgb": 2,
+    "multimodal_resize": 3,
+    "multimodal_decode_audio": 2,
+    "multimodal_frame_sample": 2,
+}
 
+
+def _state_chain(spark, tmp_path, chain: str):
+    """The streaming DataFrame of a state chain over a one-file stage."""
+    import shutil
+
+    from templatedb_spark.streaming.events import read_events_stream
+    from templatedb_spark.streaming.neardup import read_documents_stream, stream_neardup_pairs
+    from templatedb_spark.streaming.stateful import stream_sessionize
+
+    src = "events" if chain == "sessionize" else "documents"
+    shutil.copy(f"{SF_SMALL}/{src}.parquet", tmp_path / "part-0.parquet")
+    if chain == "sessionize":
+        return stream_sessionize(read_events_stream(spark, str(tmp_path)))
+    return stream_neardup_pairs(read_documents_stream(spark, str(tmp_path)), mode=chain)
+
+
+def test_multimodal_decode_pipelines_without_shuffle(spark, tmp_path):
+    """Each multimodal spec is consecutive map-only Arrow stages — one
+    MapInPandas node per row stage, zero Exchange — so payload bytes stream
+    executor-local end to end. Each state chain (sessionize, near-dup exact
+    and representatives) plans exactly one stateful Python fold."""
     specs = all_specs()
-    for name in ("multimodal_decode_image", "multimodal_decode_audio", "multimodal_frame_sample"):
-        plan = formatted_plan(specs[name].spark(spark, SF_SMALL))
-        assert plan.count("MapInPandas") >= 2, name
+    for name, stages in _MULTIMODAL_MAP_STAGES.items():
+        plan = physical_plan(specs[name].spark(spark, SF_SMALL))
+        assert plan.count("MapInPandas") == stages, name
         assert "Exchange" not in plan, name
+    for chain in ("sessionize", "exact", "representatives"):
+        stage = tmp_path / chain
+        stage.mkdir()
+        plan = _state_chain(spark, stage, chain)._jdf.queryExecution().analyzed().toString()
+        assert plan.count("FlatMapGroupsInPandasWithState") == 1, chain
 
 
 def test_modulo_partial_aggregation(spark):

@@ -229,6 +229,36 @@ def test_read_csv_named_path_arg(spark, tmp_path):
     ] == [(1, 2), (3, 4)]
 
 
+def test_tvf_queries_leave_no_temp_views(spark):
+    """read_csv(...), FROM 'f.csv' and template_query_*() register a helper
+    view per query; each is dropped once the query is planned, and the
+    returned DataFrames still collect and union. A temp view defined over a
+    TVF keeps its helper view, so it stays readable."""
+    from tests.conftest import FIXTURES
+
+    eng = Engine(spark, base_dir=FIXTURES)
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    kept = []
+    for _ in range(3):
+        kept.append(eng.sql("select * from read_csv('t2.csv')"))
+        kept.append(eng.sql("select * from 't2.csv'"))
+        kept.append(eng.sql("select table_name from template_query_tables()"))
+    assert views() == before
+    n = kept[0].count()
+    assert n > 0 and kept[0].union(kept[1]).count() == 2 * n
+    assert kept[2].count() == kept[5].count()
+
+    eng.sql("create or replace temp view tvf_backed as select * from read_csv('t2.csv')")
+    try:
+        assert spark.table("tvf_backed").count() == n
+    finally:
+        spark.catalog.dropTempView("tvf_backed")
+
+
 # -------------------------------------------------------- r5 ADVICE fixes ----
 
 

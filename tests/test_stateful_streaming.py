@@ -1,6 +1,6 @@
-"""Custom stateful streaming operator (applyInPandasWithState sessionization)
-validated against its batch twin: the stream's closed sessions must equal the
-batch sessions minus each user's final (still-open) session."""
+"""Custom stateful streaming operators (keyed state folds, pyrows.fold_by_key)
+validated against their batch twins: e.g. the stream's closed sessions must
+equal the batch sessions minus each user's final (still-open) session."""
 
 from __future__ import annotations
 
@@ -215,103 +215,60 @@ def test_stream_attribution_matches_batch(spark, tmp_path):
     assert len({t for (_, _, t, _) in want_set}) > 1  # multiple touch classes
 
 
-class _FakeState:
-    """Minimal GroupState stand-in for function-level state assertions."""
-
-    def __init__(self):
-        self._value = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, value):
-        self._value = value
-
-
-def _rep_batch(rows, state, horizon=None):
-    """Drive _band_group_reps once with [(doc_id, mh, sig), ...] rows."""
-    import pandas as pd
-
-    from templatedb_spark.streaming.neardup import _band_group_reps
-
-    pdf = pd.DataFrame(
-        {
-            "mh": [m for _, m, _ in rows],
-            "doc_id": [d for d, _, _ in rows],
-            "sig": [s for _, _, s in rows],
-        }
-    )
-    out = list(_band_group_reps((0, 0), iter([pdf]), state, evict_horizon=horizon))
-    return [
-        (int(r.doc_a), int(r.doc_b), int(r.matches)) for r in out[0].itertuples()
-    ]
-
-
-def test_neardup_reps_state_is_bounded_per_bucket(spark):
+def test_neardup_reps_state_is_bounded_per_bucket():
     """The r6 verdict's one remaining 100-TB asterisk: exact-twin state grows
     one resident per DOC per bucket. The representative mode must hold it at
     one resident per DISTINCT bucket no matter how many docs collide — a
     k-copy dup group costs 1, not k."""
-    from templatedb_spark.streaming.neardup import _band_group
+    from templatedb_spark.streaming.neardup import _band_fold, _band_fold_reps
 
     sig_a = [7] * 16  # all docs share bucket mh=7 and are exact sig twins
     k = 50
     rows = [(d, 7, sig_a) for d in range(1, k + 1)]
 
-    exact_state = _FakeState()
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {"mh": [m for _, m, _ in rows], "doc_id": [d for d, _, _ in rows],
-         "sig": [s for _, _, s in rows]}
-    )
-    list(_band_group((0, 0), iter([pdf]), exact_state))
-    mhs_exact = exact_state.get[0]
+    exact_state, _ = _band_fold((0, 0), None, rows)
+    mhs_exact = exact_state[0]
     assert len(mhs_exact) == k  # exact twin: state grows with docs (by design)
 
-    rep_state = _FakeState()
-    pairs = _rep_batch(rows, rep_state)
-    mhs, doc_ids, sigs, last_docs = rep_state.get
+    rep_state, pairs = _band_fold_reps((0, 0), None, rows)
+    mhs, doc_ids, sigs, last_docs = rep_state
     assert len(mhs) == 1 and doc_ids == [1]  # ONE resident: the elected rep
     # every later doc paired against the representative, never each other
     assert pairs == [(1, d, 16) for d in range(2, k + 1)]
 
     # a second batch keeps the bound: state still one resident per bucket
-    pairs2 = _rep_batch([(d, 7, sig_a) for d in range(100, 110)], rep_state)
-    mhs, doc_ids, _, _ = rep_state.get
+    rep_state, pairs2 = _band_fold_reps((0, 0), rep_state, [(d, 7, sig_a) for d in range(100, 110)])
+    mhs, doc_ids, _, _ = rep_state
     assert len(mhs) == 1 and doc_ids == [1]
     assert pairs2 == [(1, d, 16) for d in range(100, 110)]
 
 
-def test_neardup_reps_eviction_horizon(spark):
+def test_neardup_reps_eviction_horizon():
     """evict_horizon bounds bucket LIFETIME: a representative untouched for
     more than `horizon` doc_ids of stream progress is stale — the next
     arrival re-elects instead of pairing, and stale entries leave state."""
+    import functools
+
+    from templatedb_spark.streaming.neardup import _band_fold_reps
+
+    fold = functools.partial(_band_fold_reps, (0, 0), evict_horizon=100)
     sig = [3] * 16
-    state = _FakeState()
     # docs 1, 2 are close; doc 1000 is past the horizon of the rep's last touch
-    pairs = _rep_batch([(1, 3, sig), (2, 3, sig), (1000, 3, sig)], state, horizon=100)
+    state, pairs = fold(None, [(1, 3, sig), (2, 3, sig), (1000, 3, sig)])
     assert pairs == [(1, 2, 16)]  # (1, 1000) suppressed: rep was stale
-    mhs, doc_ids, _, last_docs = state.get
+    mhs, doc_ids, _, last_docs = state
     assert doc_ids == [1000] and last_docs == [1000]  # re-elected, old rep gone
 
     # cross-batch: an idle bucket is dropped once the clock passes it
-    state2 = _FakeState()
-    _rep_batch([(1, 3, sig)], state2, horizon=100)
-    _rep_batch([(500, 9, [9] * 16)], state2, horizon=100)  # other bucket only
-    mhs, doc_ids, _, _ = state2.get
+    state2, _ = fold(None, [(1, 3, sig)])
+    state2, _ = fold(state2, [(500, 9, [9] * 16)])  # other bucket only
+    mhs, doc_ids, _, _ = state2
     assert 3 not in mhs and doc_ids == [500]  # bucket 3's rep evicted
 
     # activity refreshes the clock: a touched bucket survives the same span
-    state3 = _FakeState()
-    _rep_batch([(1, 3, sig)], state3, horizon=100)
-    _rep_batch([(90, 3, sig)], state3, horizon=100)
-    got = _rep_batch([(170, 3, sig)], state3, horizon=100)
+    state3, _ = fold(None, [(1, 3, sig)])
+    state3, _ = fold(state3, [(90, 3, sig)])
+    state3, got = fold(state3, [(170, 3, sig)])
     assert got == [(1, 170, 16)]  # rep 1 still live: touched at 90, 170-90 < 100
 
 
@@ -403,8 +360,8 @@ def test_streaming_signature_parity_with_batch_sql(spark):
 
 def test_stream_neardup_reps_eviction_end_to_end(spark, tmp_path):
     """Drives evict_horizon through the REAL streaming machinery (the
-    functools.partial-wrapped applyInPandasWithState path the function-level
-    tests bypass): identical texts at doc_ids 1, 50, 5000 staged as two
+    functools.partial-wrapped fold through pyrows.fold_by_key, which the
+    function-level tests bypass): identical texts at doc_ids 1, 50, 5000 staged as two
     micro-batches. With horizon=100, (1, 50) pairs in batch 1; by doc 5000
     the representative is stale — batch 2 re-elects instead of pairing. The
     control run without a horizon emits both pairs."""
