@@ -257,11 +257,12 @@ class Engine:
         try:
             return self._sql(query)
         finally:
-            head = [t.lower for t in sqlparse.tokenize(query)[:6]]
-            if not (head[:1] == ["create"] and "view" in head):
-                for view in self._query_views:
-                    self.spark.catalog.dropTempView(view)
-            self._query_views.clear()
+            if self._query_views:
+                head = [t.lower for t in sqlparse.tokenize(query)[:6]]
+                if not (head[:1] == ["create"] and "view" in head):
+                    for view in self._query_views:
+                        self.spark.catalog.dropTempView(view)
+                self._query_views.clear()
 
     def _sql(self, query: str) -> DataFrame:
         from templatedb_spark import sqlparse

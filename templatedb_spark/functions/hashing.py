@@ -41,9 +41,14 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
 
 # -- Spark side -------------------------------------------------------------
 
+def hex_long(hex_col: Column) -> Column:
+    """Bigint of the first 15 hex chars of an md5 hex string — Spark side."""
+    return F.conv(F.substring(hex_col, 1, 15), 16, 10).cast("long")
+
+
 def md5_long(col: Column) -> Column:
     """H(s): bigint of first 15 hex chars of md5 — Spark side."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+    return hex_long(F.md5(col))
 
 
 def h32(col: Column) -> Column:
@@ -51,10 +56,11 @@ def h32(col: Column) -> Column:
     return md5_long(col) % F.lit(MERSENNE_31)
 
 
-def normalized_text(col: str = "text") -> Column:
-    """The exact-dup normalization: lowercase, every whitespace run one space.
-    Its DuckDB twin stays spelled out in each oracle (the reference side)."""
-    return F.regexp_replace(F.lower(F.col(col)), r"\s+", " ")
+def exact_fingerprint() -> Column:
+    """The exact-dup fingerprint of `text`: md5 hex of the text lowercased with
+    every whitespace run made one space. Its DuckDB twin stays spelled out in
+    each oracle (the reference side)."""
+    return F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
 
 
 # -- DuckDB side ------------------------------------------------------------

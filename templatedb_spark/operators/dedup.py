@@ -32,12 +32,12 @@ from pyspark.sql.window import Window
 
 from templatedb_spark.functions.hashing import (
     MERSENNE_31,
+    exact_fingerprint,
     h32,
     h32_sql,
     md5_long,
     md5_long_sql,
     minhash_params,
-    normalized_text,
 )
 from templatedb_spark.suite import QuerySpec, fan_out, register, table
 
@@ -192,7 +192,7 @@ SELECT * FROM directed WHERE containment >= {_CONTAINMENT_T}
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.md5(normalized_text()).alias("fingerprint"))
+        d.select("doc_id", exact_fingerprint().alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from templatedb_spark.functions.hashing import normalized_text
+from templatedb_spark.functions.hashing import exact_fingerprint
 from templatedb_spark.operators.dedup import _TOKENS_SQL, tokenized
 from templatedb_spark.suite import (
     QuerySpec,
@@ -589,7 +589,7 @@ def _funnel_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 
     def build():
         d = table(spark, sf_dir, "documents")
-        fp = d.select("doc_id", F.md5(normalized_text()).alias("fingerprint"))
+        fp = d.select("doc_id", exact_fingerprint().alias("fingerprint"))
         keep = fp.select(
             "doc_id",
             F.min("doc_id").over(Window.partitionBy("fingerprint")).alias("keep_id"),

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from templatedb_spark.functions.hashing import normalized_text
+from templatedb_spark.functions.hashing import exact_fingerprint
 from templatedb_spark.suite import QuerySpec, register, table
 
 
@@ -464,7 +464,7 @@ def dataset_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from templatedb_spark.operators.dedup import tokenized
 
     d = table(spark, sf_dir, "documents")
-    base = d.select("doc_id", "source", "lang", "n_chars", F.md5(normalized_text()).alias("fp"))
+    base = d.select("doc_id", "source", "lang", "n_chars", exact_fingerprint().alias("fp"))
     toks = tokenized(spark, sf_dir).select("doc_id", F.size("t").alias("n_tok"))
     base = base.join(toks, "doc_id")
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from templatedb_spark.functions.hashing import h32, h32_sql, md5_long, md5_long_sql, normalized_text
+from templatedb_spark.functions.hashing import exact_fingerprint, h32, h32_sql, hex_long, md5_long, md5_long_sql
 from templatedb_spark.operators.dedup import _TOKENS_SQL
 from templatedb_spark.suite import QuerySpec, fused_topk, register, table
 
@@ -171,12 +171,12 @@ FROM documents
 # ---------------------------------------------------------------------------
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    norm = normalized_text()
+    fp = exact_fingerprint()
     return d.select(
         "doc_id",
-        F.md5(norm).alias("fp_hex"),
-        md5_long(norm).alias("fp_long"),
-        (md5_long(norm) % 1024).alias("fp_shard"),  # shard key for partitioned dedup
+        fp.alias("fp_hex"),
+        hex_long(fp).alias("fp_long"),
+        (hex_long(fp) % 1024).alias("fp_shard"),  # shard key for partitioned dedup
     )
 
 

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from templatedb_spark.functions.hashing import normalized_text
+from templatedb_spark.functions.hashing import exact_fingerprint
 
 # Arrival clock base for staged micro-batches (any fixed epoch works; the
 # watermark only ever compares event times to each other).
@@ -57,7 +57,7 @@ def stream_dedup_ingest(docs: DataFrame, delay: str = "1 hour") -> DataFrame:
     DuckDB oracle expression: md5(regexp_replace(lower(text),'\\s+',' ')).
     """
     return (
-        docs.withColumn("fingerprint", F.md5(normalized_text()))
+        docs.withColumn("fingerprint", exact_fingerprint())
         .withColumn(
             "arrival_ts",
             F.timestamp_seconds(
