@@ -31,6 +31,27 @@ class StrictTypeError(ValueError):
     """Raised in strict mode for comparisons the reference's binder rejects."""
 
 
+def _view_statement(query: str) -> tuple[str, str] | None:
+    """(verb, view name) of a `CREATE ... VIEW` or `DROP VIEW` statement on
+    an unqualified name, else None. The name is lowercased, as Spark
+    resolves it."""
+    from templatedb_spark import sqlparse
+
+    toks = sqlparse.tokenize(query)[:12]
+    words = [t.lower for t in toks]
+    j = 1
+    while j < len(words) and words[j] in ("or", "replace", "global", "temp", "temporary"):
+        j += 1
+    if words[:1] not in (["create"], ["drop"]) or words[j : j + 1] != ["view"]:
+        return None
+    j += 1
+    while j < len(words) and words[j] in ("if", "not", "exists"):
+        j += 1
+    if j >= len(toks) or (j + 1 < len(toks) and toks[j + 1].text == "."):
+        return None  # a qualified name: a global temp or persistent view
+    return words[0], toks[j].text.strip('`"').lower()
+
+
 class Engine:
     """Session + catalog + sql() entry. The reference's `Database::run(sql)`
     (src/query_engine/src/db.rs:125-168) equivalent, where stages 2-6 are Catalyst.
@@ -48,6 +69,7 @@ class Engine:
         self.catalog = catalog
         self._view_n = 0
         self._query_views: list[str] = []  # this query's TVF views, dropped once it is planned
+        self._view_helpers: dict[str, list[str]] = {}  # TVF views kept by the view defined over them
 
     # -- catalog -----------------------------------------------------------
     def register_parquet_dir(self, sf_dir: str):
@@ -251,18 +273,25 @@ class Engine:
         # The TVF rewrites register one temp view per call; spark.sql analyzes
         # eagerly, so the returned DataFrame holds the views' plans and the
         # views are dropped once it is planned (or planning failed). A temp
-        # view defined over a TVF keeps them: Spark re-resolves its text.
-        from templatedb_spark import sqlparse
-
+        # view defined over a TVF keeps them, since Spark re-resolves its
+        # text on every read: they are recorded under its name and dropped
+        # when a later statement drops or replaces that view.
+        planned = False
         try:
-            return self._sql(query)
+            df = self._sql(query)
+            planned = True
+            return df
         finally:
-            if self._query_views:
-                head = [t.lower for t in sqlparse.tokenize(query)[:6]]
-                if not (head[:1] == ["create"] and "view" in head):
-                    for view in self._query_views:
-                        self.spark.catalog.dropTempView(view)
-                self._query_views.clear()
+            views, self._query_views = self._query_views, []
+            stmt = _view_statement(query) if planned and (views or self._view_helpers) else None
+            if stmt is not None:
+                verb, name = stmt
+                old = self._view_helpers.pop(name, [])
+                if verb == "create" and views:
+                    self._view_helpers[name], views = views, []
+                views += old
+            for view in views:
+                self.spark.catalog.dropTempView(view)
 
     def _sql(self, query: str) -> DataFrame:
         from templatedb_spark import sqlparse

@@ -16,8 +16,12 @@ ordered map + atomic batch + MVCC snapshot reads — not an LSM re-implementatio
 - **snapshot(v)** = reading pinned at an old version (MVCC; the reference's
   `Snapshot` holds a sequence number);
 - **scan(start, end)** = ordered range read (`iter` over the merged view);
-- **compact()** = rewrite the merged state as a single base version and drop
-  history — the reference's `compact_range` (db_impl/template_impl.rs:180-194).
+- **compact_range(start, end)** = merge whole every version (range layout:
+  every bucket) whose key range overlaps [start, end), closed over the
+  merged key span, into one base version in one Spark write; every other
+  version is hardlinked unchanged — the reference's `compact_range`
+  (db_impl/template_impl.rs:180-194), LevelDB's CompactRange. **compact()**
+  is compact_range with no bounds: one base, no history.
 
 Version discovery is a MANIFEST edit log (see KVTable._load_manifest) — the
 reference's VersionSet MANIFEST (manager/version_set.rs:178) — so read-path
@@ -40,8 +44,8 @@ file-listing job. Compaction bounds the number of deltas merged per read,
 same role it plays in the LSM.
 
 Both backends share one protocol. Every version — a batch write, a
-compaction base, a compact_range rewrite, a MergeKVTable state — is written
-by KVTable._write_version and committed by one manifest record; every read
+compaction base, a MergeKVTable state — is written by
+KVTable._write_version and committed by one manifest record; every read
 opens what KVTable._resolve picks from the manifest; both compactions
 publish through KVTable._publish. MergeKVTable differs only in the rows a
 version holds (_version_rows) and in reading just its latest version.
@@ -50,6 +54,7 @@ version holds (_version_rows) and in reading just its latest version.
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
 import shutil
@@ -82,6 +87,26 @@ def _range_intersects(rng, start: str | None, end: str | None) -> bool:
     if end is not None and kmin >= end:
         return False
     return True
+
+
+def _span(ranges: list) -> tuple[str | None, str | None]:
+    """The [start, end) bounds of the union of inclusive key ranges, for
+    _range_intersects: (None, None) when any range is unknown. The end is
+    the largest kmax plus "\x00", the least string above it."""
+    if any(not r or r[0] is None or r[1] is None for r in ranges):
+        return None, None
+    return min(r[0] for r in ranges), max(r[1] for r in ranges) + "\x00"
+
+
+def _newest_puts(deltas: DataFrame) -> DataFrame:
+    """Merge-on-read: each key's newest row, kept if it is a put, as
+    (key, value) — newest sequence wins, a tombstone shadows."""
+    w = Window.partitionBy("key").orderBy(F.col("version").desc())
+    return (
+        deltas.withColumn("rn", F.row_number().over(w))
+        .filter((F.col("rn") == 1) & (F.col("op") == "put"))
+        .select("key", "value")
+    )
 
 
 def _locked(fn):
@@ -406,10 +431,10 @@ class KVTable:
         kmin/kmax are the per-version key range — the LSM's per-SSTable
         smallest/largest FileMetaData (reference: manager/version_edit.rs
         keeps smallest/largest per file) — recorded at write time and used
-        to prune whole versions out of range scans, point reads, and
-        compact_range rewrites. Absent metadata (legacy records, recovered
-        manifests) means "unknown", which every consumer treats as
-        intersects-everything — pruning degrades, correctness doesn't.
+        to prune whole versions out of range scans and point reads, and to
+        pick what compact_range merges. Absent metadata (legacy records,
+        recovered manifests) means "unknown", which every consumer treats
+        as intersects-everything — pruning degrades, correctness doesn't.
 
         A torn record (crash mid-append) is SKIPPED: it was never a commit —
         its version number stays unassigned (latest_version won't count it)
@@ -484,8 +509,8 @@ class KVTable:
         The FLOOR marker closes the mirror-image window at the BOTTOM: a
         version dir below the compaction floor is retired garbage whose
         post-compaction rmtree never finished — resurrecting it would splice
-        pre-compaction history (whose in-range tombstones compact_range
-        provably elided) back under the merged base, corrupting state (the
+        pre-compaction history (whose tombstones the merged base provably
+        elided) back under the merged base, corrupting state (the
         r7 'double failure' residual). Such dirs are quarantined too.
         Recovered records carry no kmin/kmax (the ranges lived only in the
         lost manifest); consumers treat that as unknown-range, so pruning
@@ -651,7 +676,6 @@ class KVTable:
         known_range: tuple[str, str] | None = None,
         n_rows_hint: int | None = None,
         allow_empty: bool = False,
-        rewrite_of: tuple[int, list[int]] | None = None,
     ) -> dict | None:
         """Write version v from (key, value, op) `rows` — the one version
         write of both backends — and return its manifest meta ({"buckets",
@@ -665,7 +689,7 @@ class KVTable:
         hash layout: crc32(key) % B shuffle with no partition count, which
         AQE sizes to the data; the key range rides the write job as an
         Observation (zero extra jobs) unless the caller knows it
-        (driver-side dict batches, rewrites of a recorded version).
+        (driver-side dict batches).
         range layout: repartitionByRange(key) + sortWithinPartitions(key) —
         each bucket is a key-sorted, range-disjoint run (the sorted
         SSTable); per-bucket smallest/largest are harvested from the
@@ -676,24 +700,12 @@ class KVTable:
         _KV_BUCKETS-task shuffle (~400 ms of task overhead per micro-write
         in the streaming KV chains); the bucket count is per-version
         metadata, so fewer buckets only coarsen pruning. Hash writes ignore
-        the hint.
-
-        rewrite_of=(o, carried) makes this a compact_range rewrite of
-        version o: every row keeps the bucket id it was read with, so
-        rewritten and carried buckets share one id space and a range bucket
-        stays range-disjoint, and o's `carried` bucket dirs are hardlinked
-        in unchanged (see _link)."""
+        the hint."""
         root = Path(f"{self.path}/version={v}")
         self._clear_orphan(v)
-        out = rows.select(
-            *_kv_cols(),
-            F.lit(v).cast("long").alias("version"),
-            *(["bucket"] if rewrite_of else []),
-        )
+        out = rows.select(*_kv_cols(), F.lit(v).cast("long").alias("version"))
         obs: Observation | None = None
-        if rewrite_of:
-            out = out.repartition(F.col("bucket")).sortWithinPartitions("bucket", "key")
-        elif self.layout == "range":
+        if self.layout == "range":
             width = (
                 _KV_BUCKETS
                 if n_rows_hint is None
@@ -716,8 +728,6 @@ class KVTable:
             # while the task count follows the data size
             out = out.repartition(F.col("bucket"))
         out.write.mode("errorifexists").partitionBy("bucket").parquet(str(root))
-        if rewrite_of:
-            self._link(rewrite_of[0], v, rewrite_of[1])
         buckets = _bucket_ids(root)
         if not buckets:
             if allow_empty:
@@ -735,20 +745,20 @@ class KVTable:
         kmin, kmax = known_range or (_obs_range(obs) if obs else (None, None))
         return {"buckets": buckets, "kmin": kmin, "kmax": kmax}
 
-    def _link(self, o: int, v: int, buckets: list[int] | None = None) -> None:
-        """Hardlink version=o's files under version=v (same filesystem —
-        both live in the table dir): the whole version for buckets=None,
-        else only those bucket dirs. The version of a row is read from the
-        directory name (see _read), so the link IS the renumbered version.
-        Linking into an existing version dir is fine: the Spark write that
-        created it owns disjoint bucket ids."""
+    def _link(self, o: int, v: int, buckets: list[int]) -> None:
+        """Hardlink version=o's `buckets` dirs and its own files (the
+        _SUCCESS marker manifest recovery looks for) under version=v (same
+        filesystem — both live in the table dir). The version of a row is
+        read from the directory name (see _read), so the link IS the
+        renumbered version."""
         src, dst = Path(f"{self.path}/version={o}"), Path(f"{self.path}/version={v}")
-        for r in [src] if buckets is None else [src / f"bucket={b}" for b in buckets]:
-            for sdir, _dirs, files in os.walk(r):
-                ddir = dst / Path(sdir).relative_to(src)
-                ddir.mkdir(parents=True, exist_ok=True)
-                for fn in files:
-                    os.link(Path(sdir) / fn, ddir / fn)
+        for sdir, dirs, files in os.walk(src):
+            if Path(sdir) == src:
+                dirs[:] = [f"bucket={b}" for b in buckets]
+            ddir = dst / Path(sdir).relative_to(src)
+            ddir.mkdir(parents=True, exist_ok=True)
+            for fn in files:
+                os.link(Path(sdir) / fn, ddir / fn)
 
     def _commit(
         self,
@@ -1015,12 +1025,7 @@ class KVTable:
             return empty_df(self.spark, "key string, value string")
         if self._complete_states:
             return deltas.select("key", "value")
-        w = Window.partitionBy("key").orderBy(F.col("version").desc())
-        return (
-            deltas.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") == "put"))
-            .select("key", "value")
-        )
+        return _newest_puts(deltas)
 
     def _point_deltas(self, key: str, as_of: int | None = None) -> DataFrame | None:
         """Every row for `key` at or below as_of, read from ONLY the key's
@@ -1089,93 +1094,82 @@ class KVTable:
     @_locked
     def compact_range(self, start: str | None = None, end: str | None = None) -> int:
         """Keyed-subrange compaction — parity with the reference's
-        compact_range(start, end) (db_impl/template_impl.rs:180-194), which
-        compacts only the SSTables overlapping a key range. Here: history
-        for keys in [start, end) collapses into ONE merged base (tombstones
-        elided — safe, because every in-range row is also dropped from the
-        rewritten history, so no older put can resurrect), while
-        out-of-range keys keep their full delta history and its relative
-        shadowing order, rewritten under fresh ascending version numbers.
-        Returns the base's version number; an empty table returns -1.
+        compact_range(start, end) (db_impl/template_impl.rs:180-194), which,
+        like LevelDB's CompactRange, merges WHOLE every file that overlaps
+        the range. A unit is what the manifest records a key range for: a
+        range-layout (version, bucket) with a recorded bucket range (the
+        SSTable), else the whole version with its kmin/kmax; an unknown
+        range overlaps everything. The units that intersect [start, end)
+        are closed over their key span: every unit that intersects
+        [min kmin, max kmax] of the set joins it, until it stops growing.
+        Without the closure an older unit disjoint from [start, end) but
+        inside the span would be renumbered above the base and shadow a
+        merged value, or resurrect a key whose tombstone the base dropped.
 
-        Per old version, from its manifest record: a version whose recorded
-        key range lies wholly inside [start, end) — every version when both
-        bounds are None, which is compact() — is retired without a rewrite
-        (the base holds what is left of its keys). A version that no read of
-        [start, end) would open (see _resolve) is HARDLINK-cloned under its
-        new number (metadata-only, no data IO, no Spark job) — the
-        reference's ordered SSTables skipping non-overlapping files
-        (version_edit smallest/largest). The rest is rewritten without its
-        in-range rows; in the range layout only its buckets that overlap
-        [start, end) are read and rewritten and the others are hardlinked
-        into the new version (the LSM rewriting only the SSTables the range
-        touches). Versions without range metadata (legacy/recovered) are
-        conservatively rewritten. Clones, not renames, keep the OLD
-        directories untouched until the manifest snapshot publishes, so a
-        crash at any point pre-publish leaves the previous state intact.
+        The closed set is merged into ONE base (one Spark write, tombstones
+        elided — safe, because every row of every key in the span is in the
+        set) under the next version number. Every other version is
+        HARDLINK-cloned under a number above the base, in its old order
+        (metadata-only, no data IO, no Spark job — the reference's ordered
+        SSTables skipping non-overlapping files); a range-layout version
+        that lost only some buckets to the base keeps the rest with their
+        recorded ranges. So keys outside the span keep their full history.
+        In the hash layout a unit is a whole version, and versions of
+        scattered keys all overlap, so the closure is usually every version
+        and the result is compact()'s. Clones, not
+        renames, keep the OLD directories untouched until _publish, so a
+        crash at any point before it leaves the previous state intact.
 
-        Version numbers are assigned in one serial pass (each old version
-        takes the next number whether or not it survives); the base write
-        and the rewrites then run concurrently — they read only
-        pre-compaction dirs and write disjoint new dirs, and nothing
-        publishes until _publish, so the crash states are exactly a serial
-        loop's: invisible orphans. The operation invalidates as_of reads of
-        pre-compaction versions."""
+        Returns the base's version number; an empty table returns -1, and a
+        range no unit overlaps changes nothing and returns the latest
+        version. The operation invalidates as_of reads of pre-compaction
+        versions."""
         mstate = self._load_manifest()
-        if not mstate:
-            return -1
-
-        def in_range(col: Column) -> Column:
-            cond = F.lit(True)
-            if start is not None:
-                cond = cond & (col >= start)
-            if end is not None:
-                cond = cond & (col < end)
-            return cond
-
-        def rewrite(o: int, hit: list[int] | None, nv: int, meta: dict) -> dict | None:
-            carried = [] if hit is None else [b for b in meta["buckets"] if b not in hit]
-            lo, hi = meta.get("kmin"), meta.get("kmax")
-            # the old range is a superset of the kept rows' range: sound
-            known = (lo, hi) if lo is not None and hi is not None else None
-            rows = self._read({o: hit}).filter(~in_range(F.col("key")))
-            return self._write_version(
-                rows, nv, known_range=known, rewrite_of=(o, carried)
-            )
-
-        v = self._next_version(mstate)
-        hits = self._resolve(start=start, end=end)
-        base = (
-            self.snapshot(key_range=(start, end))
-            .filter(in_range(F.col("key")))
-            .withColumn("op", F.lit("put"))
-        )
-        numbers = [v]
-        writes = [
-            functools.partial(
-                self._write_version, base, v, allow_empty=start is None and end is None
-            )
-        ]
-        clones: list[tuple[int, int, dict]] = []
-        for nv, (o, meta) in enumerate(sorted(mstate.items()), start=v + 1):
-            lo, hi = meta.get("kmin"), meta.get("kmax")
-            if not meta["buckets"] or (
-                (start is None or (lo is not None and lo >= start))
-                and (end is None or (hi is not None and hi < end))
-            ):
-                continue  # no row outside [start, end): retired
-            if o not in hits:
-                clones.append((o, nv, meta))
-                continue
-            numbers.append(nv)
-            writes.append(functools.partial(rewrite, o, hits[o], nv, meta))
-        state = {
-            nv: meta for nv, meta in zip(numbers, _concurrently(self.spark, writes)) if meta is not None
+        # (version, bucket) -> the key range of the unit that bucket is in
+        units = {
+            (o, b): meta["bucket_ranges"].get(b)
+            if meta.get("bucket_ranges")
+            else (meta.get("kmin"), meta.get("kmax"))
+            for o, meta in mstate.items()
+            for b in meta["buckets"]
         }
-        for o, nv, meta in clones:
+        merged = {u for u, rng in units.items() if _range_intersects(rng, start, end)}
+        while merged:
+            span = _span([units[u] for u in merged])
+            grown = {u for u, rng in units.items() if _range_intersects(rng, *span)}
+            if grown == merged:
+                break
+            merged = grown
+        if not merged:
+            return max(mstate, default=-1)
+        plan: dict[int, list[int] | None] = {}
+        for o, b in sorted(merged):
+            plan.setdefault(o, []).append(b)
+        for o, bs in plan.items():
+            if len(bs) == len(mstate[o]["buckets"]):
+                plan[o] = None  # the whole version: one root (see _read)
+        v = self._next_version(mstate)
+        base = _newest_puts(self._read(plan)).withColumn("op", F.lit("put"))
+        written = self._write_version(base, v, allow_empty=start is None and end is None)
+        state = {} if written is None else {v: written}
+        numbers = itertools.count(v + 1)
+        for o, meta in sorted(mstate.items()):
+            keep = [b for b in meta["buckets"] if (o, b) not in merged]
+            if not keep:
+                continue  # every row is in the base: retired
+            nv = next(numbers)
             self._clear_orphan(nv)
-            self._link(o, nv)
-            state[nv] = meta  # the clone holds exactly o's rows and range
+            self._link(o, nv, keep)
+            if len(keep) < len(meta["buckets"]):  # range layout: the rest went to the base
+                ranges = {b: meta["bucket_ranges"][b] for b in keep}
+                meta = dict(
+                    meta,
+                    buckets=keep,
+                    bucket_ranges=ranges,
+                    kmin=min(r[0] for r in ranges.values()),
+                    kmax=max(r[1] for r in ranges.values()),
+                )
+            state[nv] = meta
         self._publish(state, v, mstate)
         return v
 

@@ -533,13 +533,14 @@ register(
 # The CDC feed is written as THREE disjoint-key atomic versions (user_id % 3
 # routing — each key's full history lands in one version, so the multi-
 # version merge is exact regardless of apply order), then
-# compact_range("145", "155") collapses the in-range keys' history into one
-# base while out-of-range keys keep theirs. The audited invariant: the
-# merged state after a keyed-subrange compaction equals the whole-feed
-# net-effect compaction — the SAME oracle as the streaming CDC gate. Any
-# compact_range bug (key leaking across the range boundary, tombstone
-# resurrection, lost out-of-range history, manifest mis-publish) changes
-# the final state and hash-mismatches.
+# compact_range("145", "155") merges whole every unit that overlaps the
+# range, closed over the merged key span, into one base. In the hash layout
+# the unit is a version, and the % 3 routing spreads each version over the
+# whole keyspace, so all three merge. The audited invariant: the merged
+# state after a keyed-subrange compaction equals the whole-feed net-effect
+# compaction — the SAME oracle as the streaming CDC gate. Any compact_range
+# bug (a unit missing from the merge, tombstone resurrection, a lost clone,
+# manifest mis-publish) changes the final state and hash-mismatches.
 # ---------------------------------------------------------------------------
 def _range_compacted_kv(spark: SparkSession, sf_dir: str, prefix: str, layout: str):
     """The events CDC feed's net effect written as three disjoint-key KV
@@ -616,12 +617,14 @@ register(
 # subrange compaction and the final range scan prune at bucket granularity
 # before any file is opened. The audited invariant: a pruned scan over
 # [start, end) on a range-layout table that was subrange-compacted equals
-# the whole-feed net-effect state restricted to the same key range. The
-# scan window (142..152) deliberately straddles the compaction boundary
-# (145): its result merges the in-range compacted base, rewritten
-# out-of-range history, AND hardlink-cloned untouched buckets — a pruning
-# bug on any of the three (bucket range mis-recorded after clone, footer
-# stats mis-harvested, boundary off-by-one in _range_intersects)
+# the whole-feed net-effect state restricted to the same key range. Here a
+# compaction unit is a (version, bucket): compact_range merges the buckets
+# whose range overlaps its range (closed over their span) and hardlinks
+# every other bucket under a new version number with its recorded range.
+# The scan window (142..152) deliberately straddles the compaction boundary
+# (145): its result merges the compacted base AND hardlink-cloned untouched
+# buckets — a pruning bug on either (bucket range mis-recorded after clone,
+# footer stats mis-harvested, boundary off-by-one in _range_intersects)
 # hash-mismatches.
 # ---------------------------------------------------------------------------
 def kv_range_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -195,7 +195,8 @@ def test_bucket_dirs_hold_one_file_after_aqe_sized_writes(spark):
     """Hash-bucket writes shuffle by bucket with no partition count: AQE
     sizes the write (no stage pays a fixed B-task fan-out; the test session
     runs 8 shuffle partitions) and each bucket dir still gets exactly one
-    parquet file, for a write, a compact() and a compact_range."""
+    parquet file, for a write, a compact() and a compact_range base next to
+    a hardlinked clone."""
     import glob
 
     from templatedb_spark.kv import _KV_BUCKETS
@@ -209,7 +210,9 @@ def test_bucket_dirs_hold_one_file_after_aqe_sized_writes(spark):
         stages = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
         assert jobs and max(i.numTasks for i in stages if i is not None) < _KV_BUCKETS
         kv.write_batch(puts={f"k{j:03d}": "c" for j in range(40, 60)})
+        kv.write_batch(puts={f"z{j:03d}": "z" for j in range(10)})  # disjoint: cloned
         kv.compact_range("k010", "k020")
+        assert len(kv._versions()) == 2  # the merged base and the clone
         dirs = glob.glob(f"{d}/version=*/bucket=*")
         assert len(dirs) > _KV_BUCKETS
         for b in dirs:
@@ -217,7 +220,8 @@ def test_bucket_dirs_hold_one_file_after_aqe_sized_writes(spark):
         assert kv.get("k001") is None
         assert kv.get("k003") == "b"
         assert kv.get("k045") == "c"
-        assert kv.approximate_size() == 59
+        assert kv.get("z004") == "z"
+        assert kv.approximate_size() == 69
 
 
 def test_merge_get_ignores_keys_deleted_in_latest_state(spark):
@@ -684,33 +688,27 @@ def test_compact_range_preserves_state(kv):
     assert [r.key for r in kv.scan().collect()] == ["a", "b", "c", "z"]
 
 
-def test_compact_range_collapses_only_in_range_history(spark):
+def test_compact_range_merges_overlapping_versions_whole(spark):
+    """Every version whose key range overlaps [start, end) is merged WHOLE
+    into one base — its out-of-range keys too (LevelDB's CompactRange
+    merges whole files) — and keeps no history; a version disjoint from
+    the merged span is left as it was."""
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d)
         for i in range(4):
             kv.write_batch(puts={"in1": f"i{i}", "out1": f"o{i}"})
-        n_before = len(kv._versions())
-        assert n_before == 4
+        kv.write_batch(puts={"x1": "x"})  # [x1, x1] misses the span [in1, out1]
         kv.compact_range("in", "io")  # only in1 is in range
-        # out-of-range history survives version-per-version (rewritten under
-        # fresh numbers); in-range history is one merged base
         versions = kv._load_manifest()
-        assert len(versions) == 5  # 1 base + 4 rewritten history versions
+        assert len(versions) == 2  # the base and the clone of the x1 version
+        base_v = min(versions)
+        assert (versions[base_v]["kmin"], versions[base_v]["kmax"]) == ("in1", "out1")
+        # the base holds each merged key once, at its newest value
+        rows = kv._read({base_v: None}).collect()
+        assert sorted((r.key, r.value) for r in rows) == [("in1", "i3"), ("out1", "o3")]
         assert kv.get("in1") == "i3"
         assert kv.get("out1") == "o3"
-        # the in-range key now resolves from exactly one version: deleting
-        # every history version that still holds out1 must not affect in1
-        import shutil as _sh
-
-        base_v = min(versions)
-        for v in versions:
-            if v != base_v:
-                _sh.rmtree(f"{d}/version={v}", ignore_errors=True)
-        from templatedb_spark.kv import bucket_of
-
-        assert (
-            _leaves(kv, bucket=bucket_of("in1"))[0].startswith(f"{d}/version={base_v}")
-        )
+        assert kv.get("x1") == "x"
 
 
 def test_compact_range_open_bounds(spark):
@@ -756,18 +754,123 @@ def test_versions_after_an_empty_compaction_start_at_the_floor(kv):
     assert not os.path.exists(os.path.join(kv.path, "quarantine"))
 
 
-def test_concurrent_compact_range_writes_keep_the_callers_job_group(spark):
-    """compact_range writes its base and every rewrite from worker threads;
-    their jobs must run in the caller's job group (and so in its scheduler
-    pool), like the inline write of a lone version does."""
+def test_compact_range_writes_in_the_callers_job_group(spark):
+    """compact_range makes one write, from the caller's thread: every job it
+    starts runs in the caller's job group (and so in its scheduler pool)."""
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d)
         kv.write_batch(puts={"a1": "x", "m1": "x", "z1": "x"})
         kv.write_batch(puts={"a2": "y", "m2": "y", "z2": "y"})
+        st = spark.sparkContext.statusTracker()
+        ungrouped = set(st.getJobIdsForGroup(None))
         _, jobs = _group_jobs(spark, lambda: kv.compact_range("m", "n"))
-        assert len(kv._versions()) == 3  # the base and two rewrites
         assert jobs
+        assert set(st.getJobIdsForGroup(None)) <= ungrouped
+        assert len(kv._versions()) == 1  # both versions overlap [m, n)
         assert sorted(r.key for r in kv.scan().collect()) == ["a1", "a2", "m1", "m2", "z1", "z2"]
+
+
+def test_compact_range_jobs_do_not_grow_with_versions(spark):
+    """Merging N mutually overlapping hash-layout versions is one write:
+    compacting five of them starts as many Spark jobs as compacting two."""
+
+    def compaction_jobs(n: int) -> int:
+        with tempfile.TemporaryDirectory() as d:
+            kv = KVTable(spark, d)
+            for i in range(n):
+                puts = {f"k{j:02d}": str(i) for j in range(i, 40, n)}
+                kv.write_batch(puts={**puts, "a": str(i), "z": str(i)})
+            _, jobs = _group_jobs(spark, lambda: kv.compact_range("k10", "k20"))
+            assert len(kv._versions()) == 1
+            assert kv.get("a") == str(n - 1) and kv.scan().count() == 42
+            return len(jobs)
+
+    compaction_jobs(2)  # warm
+    assert compaction_jobs(5) == compaction_jobs(2)
+
+
+# The merged set is closed over its key span: an older version disjoint from
+# [start, end) but inside the span of what is merged must be merged too, or
+# its clone (numbered above the base) would shadow the base.
+@pytest.mark.parametrize("layout", ["hash", "range"])
+def test_compact_range_closure_keeps_the_newest_value(spark, layout):
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d, layout=layout)
+        kv.write_batch(puts={"m": "0"})  # misses [a, b), inside the span [a, m]
+        kv.write_batch(puts={"a": "1", "m": "1"})
+        kv.compact_range("a", "b")
+        assert kv.get("m") == "1"
+        assert {(r.key, r.value) for r in kv.snapshot().collect()} == {("a", "1"), ("m", "1")}
+
+
+@pytest.mark.parametrize("layout", ["hash", "range"])
+def test_compact_range_closure_keeps_a_dropped_tombstone(spark, layout):
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d, layout=layout)
+        kv.write_batch(puts={"m": "0"})
+        kv.write_batch(puts={"a": "1"}, deletes=["m"])
+        kv.compact_range("a", "b")  # the base drops m's tombstone
+        assert kv.get("m") is None
+        assert [r.key for r in kv.scan().collect()] == ["a"]
+
+
+_FUZZ_CLUSTERS = "abcd"
+_FUZZ_KEYS = [f"{c}{i}" for c in _FUZZ_CLUSTERS for i in range(3)]
+
+
+def _random_range(rng) -> tuple[str | None, str | None]:
+    """[start, end) over the fuzz keyspace: mostly one cluster or one key,
+    else two keys apart, and either bound may be open."""
+    lo, hi = sorted(rng.sample(_FUZZ_KEYS, 2))
+    c = rng.choice(_FUZZ_CLUSTERS)
+    return rng.choice(
+        [(c, c + "~")] * 3 + [(lo, lo + "\x00"), (lo, hi), (lo, None), (None, hi), (None, None)]
+    )
+
+
+def _check_model(kv, model: dict, rng) -> None:
+    """get, scan and snapshot of kv against a dict model."""
+    for k in rng.sample(_FUZZ_KEYS, 2):
+        assert kv.get(k) == model.get(k), k
+    start, end = _random_range(rng)
+    want = sorted(
+        (k, v)
+        for k, v in model.items()
+        if (start is None or k >= start) and (end is None or k < end)
+    )
+    assert [(r.key, r.value) for r in kv.scan(start, end).collect()] == want, (start, end)
+    assert {(r.key, r.value) for r in kv.snapshot().collect()} == set(model.items())
+
+
+@pytest.mark.parametrize("layout", ["hash", "range"])
+@pytest.mark.parametrize("seed", range(3))
+def test_compact_range_fuzz(spark, layout, seed):
+    """Random put/delete batches over clustered key ranges (most batches
+    touch one cluster, so many versions are disjoint from others) mixed
+    with compact_range over random bounds, open ones included; after every
+    op get, scan and snapshot match a dict model."""
+    import random
+
+    rng = random.Random(seed)
+    model: dict = {}
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d, layout=layout)
+        for step in range(14):
+            if step > 1 and rng.random() < 0.3:
+                kv.compact_range(*_random_range(rng))
+            else:
+                touched = {
+                    f"{c}{rng.randint(0, 2)}"
+                    for c in rng.sample(_FUZZ_CLUSTERS, rng.choice([1, 1, 2]))
+                    for _ in range(rng.randint(1, 2))
+                }
+                dels = {k for k in touched if rng.random() < 0.3}
+                puts = {k: f"s{step}" for k in touched - dels}
+                kv.write_batch(puts=puts, deletes=sorted(dels))
+                model.update(puts)
+                for k in dels:
+                    model.pop(k, None)
+            _check_model(kv, model, rng)
 
 
 # ---------------------------------------------------------------------------
@@ -894,7 +997,7 @@ def test_floor_marker_monotonic(spark):
 
 
 def test_compact_range_clones_nonintersecting_versions(spark):
-    """A version whose recorded key range misses [start, end) must be
+    """A version whose recorded key range misses the merged span must be
     HARDLINK-cloned, not rewritten: its parquet part files keep their exact
     names (a Spark rewrite would mint fresh job-UUID names), and its
     manifest kmin/kmax carry over verbatim."""
@@ -903,9 +1006,9 @@ def test_compact_range_clones_nonintersecting_versions(spark):
 
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d)
-        kv.write_batch(puts={"x1": "1", "z1": "2"})  # v0: entirely out of range
+        kv.write_batch(puts={"x1": "1", "z1": "2"})  # v0: misses the span [a1, m1]
         kv.write_batch(puts={"a1": "3", "b1": "4"})  # v1: entirely in range
-        kv.write_batch(puts={"a2": "5", "y1": "6"})  # v2: straddles → rewrite
+        kv.write_batch(puts={"a2": "5", "m1": "6"})  # v2: straddles → merged whole
         before = {
             os.path.basename(p)
             for p in glob.glob(os.path.join(d, "version=0", "bucket=*", "*.parquet"))
@@ -927,8 +1030,9 @@ def test_compact_range_clones_nonintersecting_versions(spark):
         }
         assert after == before  # same part files → cloned, not rewritten
         assert state[cv]["kmax"] == "z1"
-        # semantics intact across clone + rewrite + merged base
-        for k, val in {"x1": "1", "z1": "2", "a1": "3", "b1": "4", "a2": "5", "y1": "6"}.items():
+        assert set(state) == {min(state), cv} and min(state) < cv  # base, then clone
+        # semantics intact across the clone and the merged base
+        for k, val in {"x1": "1", "z1": "2", "a1": "3", "b1": "4", "a2": "5", "m1": "6"}.items():
             assert kv.get(k) == val
 
 
@@ -1094,11 +1198,11 @@ def test_range_layout_point_read_prunes(spark):
 
 
 def test_range_layout_compact_range_clones_untouched_buckets(spark):
-    """compact_range on a range-layout table rewrites ONLY the buckets whose
-    recorded range intersects [start, end); every other bucket of the same
-    version is hardlink-cloned (identical part filenames — no Spark job
-    touched it). Hash layout must rewrite all buckets (a key range maps to
-    every hash bucket)."""
+    """compact_range on a range-layout table merges ONLY the buckets whose
+    recorded range intersects [start, end) (closed over their span); every
+    other bucket of the same version is hardlink-cloned with its recorded
+    range (identical part filenames — no Spark job touched it). In the hash
+    layout a version is one unit (a key range maps to every hash bucket)."""
     with tempfile.TemporaryDirectory() as d:
         kv = KVTable(spark, d, layout="range")
         v1 = kv.write_batch(puts={f"k{i:03d}": "old" for i in range(200)})
@@ -1119,16 +1223,21 @@ def test_range_layout_compact_range_clones_untouched_buckets(spark):
         }
         kv.compact_range("k040", "k060")
         state = kv._load_manifest()
-        # v1's renumbered successor still carries every original bucket id;
-        # untouched buckets kept their exact part files (clone, not rewrite)
-        succ = [
-            v
-            for v, m in state.items()
-            if set(m["buckets"]) == set(meta1["buckets"])
-            and (m.get("kmin"), m.get("kmax")) == (meta1["kmin"], meta1["kmax"])
-        ]
-        assert len(succ) == 1
-        sv = succ[0]
+        assert len(state) == 2  # the base and v1's clone
+        base_v, sv = sorted(state)
+        # the base holds exactly the keys of v1's touched buckets (v2's keys
+        # all lie inside them), each once
+        base_keys = [r.key for r in kv._read({base_v: None}).collect()]
+        assert sorted(base_keys) == sorted(
+            f"k{i:03d}"
+            for i in range(200)
+            if any(meta1["bucket_ranges"][b][0] <= f"k{i:03d}" <= meta1["bucket_ranges"][b][1] for b in touched)
+        )
+        # v1's successor keeps its untouched buckets, their ranges and their
+        # exact part files (clone, not rewrite), and recovery can find it
+        assert set(state[sv]["buckets"]) == untouched
+        assert state[sv]["bucket_ranges"] == {b: meta1["bucket_ranges"][b] for b in untouched}
+        assert Path(f"{d}/version={sv}/_SUCCESS").exists()
         for b in untouched:
             after = sorted(
                 f.name

@@ -18,6 +18,16 @@ For every seed the final scan must equal the net-effect dict oracle, and for
 post_commit + tagged batches the replay must return the already-committed
 version without writing a new one.
 
+Compaction kill points (compact_range publishes through KVTable._publish):
+  post_base     — the base written and the clones linked, no manifest
+                  snapshot yet (every new dir is an invisible orphan)
+  post_snapshot — the new manifest durable, FLOOR not yet bumped
+  post_floor    — FLOOR bumped, the retired versions not yet removed
+
+Each is recovered through a fresh handle with the MANIFEST kept and again
+with it removed (the directory walk of _recover_manifest): the state must
+equal the oracle and no version live at the crash may be quarantined.
+
 Reference semantics under test: WriteBatch atomicity
 (src/storage_engine/src/db_trait.rs:13-47) — an acknowledged batch is fully
 visible, an unacknowledged one fully invisible, across crashes.
@@ -26,6 +36,7 @@ visible, an unacknowledged one fully invisible, across crashes.
 from __future__ import annotations
 
 import json
+import os
 import random
 import tempfile
 
@@ -157,3 +168,78 @@ def test_write_batch_df_crash_fuzz_merge(spark, seed):
     window matters more here, not less."""
     with tempfile.TemporaryDirectory() as d:
         _run_seed(spark, MergeKVTable, seed, d)
+
+
+_COMPACT_POINTS = ["post_base", "post_snapshot", "post_floor"]
+
+
+def _crashing_compaction(kv, point: str, start, end) -> None:
+    """Run compact_range with a bomb planted at `point` of its publish."""
+    name = "_write_manifest_snapshot" if point == "post_base" else "_bump_floor"
+    real = getattr(kv, name)
+
+    def bomb(*a, **k):
+        if point == "post_floor":
+            real(*a, **k)
+        raise InjectedCrash(point)
+
+    setattr(kv, name, bomb)
+    try:
+        with pytest.raises(InjectedCrash):
+            kv.compact_range(start, end)
+    finally:
+        del kv.__dict__[name]
+
+
+def _quarantined(d: str) -> set[int]:
+    q = os.path.join(d, "quarantine")
+    names = os.listdir(q) if os.path.isdir(q) else []
+    return {int(n.split("=")[1].split(".")[0]) for n in names}
+
+
+@pytest.mark.parametrize("drop_manifest", [False, True], ids=["manifest", "no_manifest"])
+@pytest.mark.parametrize("point", _COMPACT_POINTS)
+@pytest.mark.parametrize("seed", range(2))
+def test_compact_range_crash_fuzz(spark, seed, point, drop_manifest):
+    """Seeded batches over clustered keys in a seeded layout, one earlier
+    compaction, then a compaction killed at `point`; a fresh handle (after
+    the MANIFEST is removed, for drop_manifest) must read the oracle's
+    state and must not quarantine a version that was live at the crash,
+    and the table must stay writable and compactable."""
+    rng = random.Random(seed)
+    layout = rng.choice(["hash", "range"])
+    oracle: dict = {}
+    with tempfile.TemporaryDirectory() as d:
+        kv = KVTable(spark, d, layout=layout)
+
+        def write(b: int) -> str:
+            """One random batch; returns its smallest key."""
+            keys = {f"{c}{rng.randint(0, 2)}" for c in rng.sample("abcd", rng.choice([1, 2]))}
+            rows = [(k, None, "del") if rng.random() < 0.3 else (k, f"v{b}", "put") for k in sorted(keys)]
+            kv.write_batch(
+                puts={k: v for k, v, op in rows if op == "put"},
+                deletes=[k for k, _, op in rows if op == "del"],
+            )
+            _apply_oracle(oracle, rows)
+            return rows[0][0]
+
+        for b in range(rng.randint(3, 5)):
+            start = write(b)
+            if b == 1:
+                kv.compact_range("b", "c")
+        # the last batch's version holds `start`, so the compaction merges
+        # at least that version and reaches the publish
+        _crashing_compaction(kv, point, start, rng.choice([None, start[0] + "~"]))
+        live = set(kv._load_manifest())
+        if drop_manifest:
+            os.remove(kv._manifest)
+        kv = KVTable(spark, d)  # the restart
+        assert kv.layout == layout
+        got = {r.key: r.value for r in kv.snapshot().collect()}
+        assert got == oracle, f"seed {seed} point {point}: {got} != {oracle}"
+        assert not _quarantined(d) & live, "a live version was quarantined"
+        write(9)
+        kv.compact_range("a", "b")
+        write(10)
+        got = {r.key: r.value for r in kv.snapshot().collect()}
+        assert got == oracle, f"seed {seed} point {point} after recovery: {got} != {oracle}"

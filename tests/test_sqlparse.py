@@ -259,6 +259,33 @@ def test_tvf_queries_leave_no_temp_views(spark):
         spark.catalog.dropTempView("tvf_backed")
 
 
+def test_tvf_backed_view_helpers_go_with_the_view(spark):
+    """A temp view defined over a TVF keeps its helper views only while it
+    exists: replacing it drops the old helpers, dropping it drops the
+    current ones, so create/replace/drop cycles leave the temp-view set
+    where it started while the view stays readable at every step."""
+    from tests.conftest import FIXTURES
+
+    eng = Engine(spark, base_dir=FIXTURES)
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    n = eng.sql("select * from read_csv('t2.csv')").count()
+    for _ in range(3):
+        eng.sql("create temp view tvf_cycle as select * from read_csv('t2.csv')")
+        assert spark.table("tvf_cycle").count() == n
+        grown = views()
+        eng.sql("create or replace temp view tvf_cycle as select * from 't2.csv' where true")
+        assert spark.table("tvf_cycle").count() == n
+        assert len(views()) == len(grown)  # the old helper went, the new one came
+        eng.sql("select count(*) from tvf_cycle").collect()  # a plain query keeps them
+        assert spark.table("tvf_cycle").count() == n
+        eng.sql("drop view tvf_cycle")
+        assert views() == before
+
+
 # -------------------------------------------------------- r5 ADVICE fixes ----
 
 

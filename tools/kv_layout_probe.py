@@ -6,10 +6,11 @@ then measures, per layout:
 
   - point get: pruned delta paths (dirs opened) + wall
   - 5% range scan: pruned delta paths + wall
-  - compact_range over the same 5% window: wall + bytes rewritten vs cloned
-    (hardlinked files keep st_nlink > 1 while their source version lives;
-    we count rewritten parquet bytes as files with nlink == 1 in rewritten
-    versions — the range layout should clone most of the volume)
+  - compact_range over the same 5% window: wall + bytes rewritten (the
+    merged base version) vs hardlink-cloned (every other version) — the
+    hash layout merges every version whose key range spans the window, the
+    range layout only the buckets that overlap it, so it should clone most
+    of the volume
 
 The hash layout can prune a point read (bucket = crc32(key) % B) but NEVER a
 range scan (a key range maps to every hash bucket); the range layout prunes
@@ -83,17 +84,17 @@ def main():
             point_wall = time.monotonic() - t0
             scan_paths, scan_rows, scan_wall = paths_and_wall(kv, lo, hi)
             t0 = time.monotonic()
-            kv.compact_range(lo, hi)
+            base = kv.compact_range(lo, hi)
             cr_wall = time.monotonic() - t0
-            # post-compaction physical accounting: hardlink-cloned parquet
-            # files vs freshly rewritten ones across surviving versions
+            # post-compaction physical accounting: the base is the one
+            # version the compaction wrote, every other one is a hardlink
+            # clone (the old dirs are gone, so st_nlink cannot tell them apart)
             cloned = rewritten = 0
             for f in Path(d).glob("version=*/bucket=*/*.parquet"):
-                sz = f.stat().st_size
-                if f.stat().st_nlink > 1:
-                    cloned += sz
+                if f.parent.parent.name == f"version={base}":
+                    rewritten += f.stat().st_size
                 else:
-                    rewritten += sz
+                    cloned += f.stat().st_size
             out["layouts"][layout] = {
                 "point_paths": pp,
                 "point_wall_s": round(point_wall, 3),

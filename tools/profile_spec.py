@@ -1,8 +1,9 @@
 """Stage-level profile of one or more QuerySpecs.
 
 Runs each named spec (noop sink) in a UI-enabled warm session, then dumps
-per-stage wall/task metrics from the UI REST API — the closest local[] gets
-to the Spark UI's Stages tab (guide §7.1) without a browser — and the Janino
+its job and stage counts and per-stage wall/task metrics from the UI REST
+API — the closest local[] gets to the Spark UI's Stages tab (guide §7.1)
+without a browser — and the Janino
 compiles of the measured (warm) run: a spec that still compiles when warm
 generates different code from run to run.
 
@@ -46,6 +47,8 @@ def main() -> None:
             continue
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
             seen = {s["stageId"] for s in json.load(r)}
+        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs") as r:
+            seen_jobs = {j["jobId"] for j in json.load(r)}
         spark.sparkContext.setJobDescription(f"profile:{name}")
         compiles0, compile_ms0 = codegen_compiles(spark)
         t0 = time.time()
@@ -55,8 +58,10 @@ def main() -> None:
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
             stages = json.load(r)
         fresh = [s for s in stages if s["stageId"] not in seen]
+        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs") as r:
+            jobs = [j for j in json.load(r) if j["jobId"] not in seen_jobs]
         fresh.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(fresh)} stages ===")
+        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs, {len(fresh)} stages ===")
         print(
             f"{'stage':>6} {'run_ms':>8} {'cpu_ms':>9} {'tasks':>5} {'in_MB':>7} "
             f"{'sh_r_MB':>8} {'sh_w_MB':>8}  name"
