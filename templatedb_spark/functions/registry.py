@@ -13,8 +13,8 @@ the reference divides integers; that divergence is kept (SURVEY.md §7 risk 1).
 
 from __future__ import annotations
 
-# Textual rewrite of the reference's named arithmetic functions into native
-# operators — keeps execution inside whole-stage codegen.
+# The reference's named arithmetic functions and the native operators they
+# are rewritten into — keeps execution inside whole-stage codegen.
 _NAMED_ARITH = {
     "add": "+",
     "subtract": "-",
@@ -24,42 +24,29 @@ _NAMED_ARITH = {
 
 
 def rewrite_named_arithmetic(sql: str) -> str:
-    """Rewrite `add(a, b)` → `(a + b)` etc., innermost-first with balanced-paren
-    argument scanning (reference function registry parity)."""
-    import re
+    """Rewrite `add(a, b)` → `(a + b)` etc. on the lexed query: calls inside
+    literals, comments or qualified names (`t.add(`) are left alone, and the
+    arguments of each outermost two-argument call are rewritten first
+    (reference function registry parity). Unbalanced parentheses leave the
+    text to Spark's parser."""
+    from templatedb_spark.sqlparse import SqlSyntaxError, apply_edits, find_calls
 
-    head = re.compile(r"(?i)\b(add|subtract|multiply|divide)\s*\(")
-    changed = True
-    out = sql
-    while changed:
-        changed = False
-        for m in head.finditer(out):
-            # scan the balanced argument list starting after the open paren
-            depth, args, cur = 1, [], []
-            i = m.end()
-            while i < len(out) and depth > 0:
-                ch = out[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                elif ch == "," and depth == 1:
-                    args.append("".join(cur))
-                    cur = []
-                    i += 1
-                    continue
-                cur.append(ch)
-                i += 1
-            if depth != 0:
-                continue  # unbalanced; leave untouched
-            args.append("".join(cur))
-            if len(args) != 2:
-                continue
-            op = _NAMED_ARITH[m.group(1).lower()]
-            a, b = (rewrite_named_arithmetic(x.strip()) for x in args)
-            out = out[: m.start()] + f"({a} {op} {b})" + out[i + 1 :]
-            changed = True
-            break
-    return out
+    low = sql.lower()
+    try:
+        calls = sorted(
+            (start, end, name, args)
+            for name in _NAMED_ARITH
+            if name in low
+            for start, end, args in find_calls(sql, name)
+            if len(args) == 2 and all(args)
+        )
+    except SqlSyntaxError:
+        return sql
+    edits, reach = [], -1
+    for start, end, name, args in calls:
+        if start < reach:
+            continue  # nested: rewritten with the call that encloses it
+        a, b = (rewrite_named_arithmetic(sql[x[0].start : x[-1].end]) for x in args)
+        edits.append((start, end, f"({a} {_NAMED_ARITH[name]} {b})"))
+        reach = end
+    return apply_edits(sql, edits)

@@ -1071,19 +1071,23 @@ class KVTable:
         return self.scan(start, end).count()
 
     # -- maintenance --------------------------------------------------------
-    def _publish(self, state: dict[int, dict], floor: int, old_versions) -> None:
+    def _publish(self, state: dict[int, dict], floor: int) -> None:
         """Publish a compaction, in the order crash recovery relies on: the
         manifest SNAPSHOT first (atomic rename, the version_set.rs
         WriteSnapshot analogue — a crash afterwards leaves only invisible
         orphan dirs, never a manifest pointing at deleted data), then the
         FLOOR marker (a manifest lost mid-cleanup must not resurrect the
         retired versions, see _bump_floor), and only then the rmtree of
-        every old version the new state no longer lists."""
+        every version dir below the floor that the new state does not list.
+        The dirs are found by listing the table, not from the old manifest,
+        so the retired dirs of an earlier compaction that crashed before
+        its own rmtree are reclaimed too."""
         self._write_manifest_snapshot(state)
         self._bump_floor(floor)
-        for o in old_versions:
-            if o not in state:
-                shutil.rmtree(f"{self.path}/version={o}", ignore_errors=True)
+        for p in Path(self.path).glob("version=*"):
+            o = int(p.name.split("=")[1])
+            if o < floor and o not in state:
+                shutil.rmtree(p, ignore_errors=True)
 
     def compact(self) -> int:
         """Collapse history into a single base version (compact_range parity):
@@ -1170,7 +1174,7 @@ class KVTable:
                     kmax=max(r[1] for r in ranges.values()),
                 )
             state[nv] = meta
-        self._publish(state, v, mstate)
+        self._publish(state, v)
         return v
 
 
@@ -1225,5 +1229,5 @@ class MergeKVTable(KVTable):
         if not state:
             return -1
         v = max(state)
-        self._publish({v: state[v]}, v, state)
+        self._publish({v: state[v]}, v)
         return v

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from templatedb_spark.sources.memory import local_df
 from templatedb_spark.suite import QuerySpec, memo, register, table
 
 
@@ -142,8 +143,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", (F.col("vec_id") % B).cast("int").alias("blk")
     )
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(B) for j in range(i, B)], "bi int, bj int"
+    block_pairs = local_df(
+        spark, [(i, j) for i in range(B) for j in range(i, B)], "bi int, bj int"
     )
     # Replicate each vector to every block-pair it participates in: side 0 for
     # pairs where its block is the left element, side 1 for the right. The
@@ -1189,7 +1190,8 @@ def kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("inertia").cast("long").alias("inertia"),
         )
     )
-    fps = spark.createDataFrame(
+    fps = local_df(
+        spark,
         [(j, ",".join(str(int(v)) for v in c)) for j, c in enumerate(cents)],
         "cluster long, cstr string",
     )

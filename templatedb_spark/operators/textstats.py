@@ -277,12 +277,12 @@ FROM n WHERE n_copies >= 1
 
 # ---------------------------------------------------------------------------
 # Count-min sketch heavy hitters (sketch tier, alongside HLL distinct and
-# sketch percentiles): d=4 salted hash rows x W=512 buckets. Deterministic
+# sketch percentiles): d=4 salted hash rows x W buckets. Deterministic
 # md5-derived bucket hashes make the SKETCH ITSELF bit-identical across
 # engines, so unlike most sketch implementations this one has an EXACT
 # oracle. The sketch is built from the aggregated (token, count) relation -
 # the token stream is shuffled once (the same shared tokenize pass as
-# vocab/tfidf), and the 4xW=2048-cell sketch is a broadcast-sized relation
+# vocab/tfidf), and the 4xW-cell sketch is a broadcast-sized relation
 # at ANY corpus size; estimates are min over the 4 rows. Output: the true
 # top-K tokens with their CMS estimates and overestimation error (>= 0 by
 # construction - the classic CMS guarantee).
@@ -292,12 +292,10 @@ _CMS_W = 8  # tiny W: the synthetic vocab is 31 tokens - W=8 forces real collisi
 _CMS_K = 20
 
 
-def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from templatedb_spark.operators.dedup import tokenized
-
-    tok = tokenized(spark, sf_dir).select(F.explode("t").alias("tok"))
-    tf = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    bucket_structs = F.array(
+def _cms_cells(df: DataFrame) -> DataFrame:
+    """`df`'s rows, one per sketch cell (j, b) their `tok` hashes to: the
+    d salted-hash rows' buckets."""
+    cells = F.array(
         *[
             F.struct(
                 F.lit(j).alias("j"),
@@ -306,25 +304,40 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(_CMS_D)
         ]
     )
-    buckets = tf.select("tok", "n", F.explode(bucket_structs).alias("jb")).select(
-        "tok", "n", F.col("jb.j").alias("j"), F.col("jb.b").alias("b")
-    )
-    sketch = buckets.groupBy("j", "b").agg(F.sum("n").alias("cnt"))
+    return df.select("*", F.explode(cells).alias("jb")).select(*df.columns, "jb.j", "jb.b")
+
+
+def cms_sketch(tf: DataFrame) -> DataFrame:
+    """The (j, b, cnt) sketch of a (tok, n) term-frequency relation — also
+    one micro-batch's partial sketch in the streaming gate, since cells
+    merge by sum."""
+    return _cms_cells(tf).groupBy("j", "b").agg(F.sum("n").cast("long").alias("cnt"))
+
+
+def cms_top_k(tf: DataFrame, sketch: DataFrame) -> DataFrame:
+    """The exact top-K tokens of `tf` with their `sketch` estimates (min
+    over the d cells) and the overestimate."""
     cand = tf.orderBy(F.col("n").desc(), F.col("tok").asc()).limit(_CMS_K)
-    cand_b = cand.select(
-        F.col("tok").alias("ctok"), F.col("n").alias("true_n"), F.explode(bucket_structs).alias("jb")
-    ).select("ctok", "true_n", F.col("jb.j").alias("j"), F.col("jb.b").alias("b"))
     est = (
-        cand_b.join(F.broadcast(sketch), ["j", "b"])
-        .groupBy("ctok", "true_n")
+        _cms_cells(cand)
+        .join(F.broadcast(sketch), ["j", "b"])
+        .groupBy("tok", "n")
         .agg(F.min("cnt").cast("long").alias("cms_n"))
     )
     return est.select(
-        F.col("ctok").alias("tok"),
-        "true_n",
+        "tok",
+        F.col("n").alias("true_n"),
         "cms_n",
-        (F.col("cms_n") - F.col("true_n")).cast("long").alias("overestimate"),
+        (F.col("cms_n") - F.col("n")).cast("long").alias("overestimate"),
     )
+
+
+def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from templatedb_spark.operators.dedup import tokenized
+
+    tok = tokenized(spark, sf_dir).select(F.explode("t").alias("tok"))
+    tf = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return cms_top_k(tf, cms_sketch(tf))
 
 
 def _cms_oracle() -> str:

@@ -1,9 +1,10 @@
 """In-memory tables (reference: storage/memory.rs InMemoryTable;
 VALUES / ExpressionScan: execution/volcano_executor/expression_scan.rs).
 
-Every driver-side row set outside `operators/` enters Spark here: catalog
-tables (`ddl.Catalog` CREATE TABLE and INSERT ... VALUES), the introspection
-table functions, KV write batches and the gated chains' KV state writes.
+Every driver-side row set enters Spark here: catalog tables (`ddl.Catalog`
+CREATE TABLE and INSERT ... VALUES), the introspection table functions, KV
+write batches and the operators' small broadcast relations (the cosine
+block pairs, the k-means centroid fingerprints).
 Each becomes a JVM-side `LocalRelation`, so evaluating it never starts a
 Python worker.
 """

@@ -749,7 +749,9 @@ def rewrite_qualify(
 
 
 def find_calls(sql: str, func_name: str) -> list[tuple[int, int, list[list[Token]]]]:
-    """All calls `func_name( args )`: (start, end, top-level-split arg tokens)."""
+    """All calls `func_name( args )`: (start, end, top-level-split arg tokens).
+    Literals and comments are tokens of their own, so a name inside them is
+    never a call, and neither is a qualified `x.func_name(`."""
     tokens = tokenize(sql)
     out = []
     for i, t in enumerate(tokens):
@@ -758,6 +760,7 @@ def find_calls(sql: str, func_name: str) -> list[tuple[int, int, list[list[Token
             and t.lower == func_name
             and i + 1 < len(tokens)
             and tokens[i + 1].text == "("
+            and (i == 0 or tokens[i - 1].text != ".")
         ):
             close = match_paren(tokens, i + 1)
             args = split_top_level(tokens[i + 2 : close])

@@ -27,12 +27,13 @@ original doubles, not formatted strings.
 
 from __future__ import annotations
 
+import operator
 import os
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from templatedb_spark.sources.memory import local_df
 from templatedb_spark.streaming.cdc import CDC_KEY_OFFSET
 from templatedb_spark.streaming.drain import drain, output_dir, run, run_memory
 from templatedb_spark.suite import QuerySpec, register
@@ -924,71 +925,103 @@ register(
 
 
 # ---------------------------------------------------------------------------
+# The KV-state chains' one sink. The last four gates (HLL registers, CMS
+# cells and two materialized join views) each keep a view in KV. A
+# micro-batch reduces to a partial state keyed like the view, and
+# `_merge_into_kv` folds it into the stored state once, under a (query,
+# batch_id) tag, entirely on the executors: the partial LEFT-JOINs the
+# decoded pre-batch snapshot on the view key, each value merges by the
+# view's monoid (max for HLL, + for the rest), and the merged rows commit
+# through write_batch_df. No row reaches the driver, so a view keyed by
+# user_id at 100 TB takes the same path as a 64-register sketch. A replayed
+# batch finds its tag and is a no-op; on the SUM monoids that check is
+# correctness, not hygiene (a replay would double-count).
+# ---------------------------------------------------------------------------
+class _KVView(NamedTuple):
+    """A KV-persisted view: `delta` reduces a micro-batch to its partial
+    state, whose `keys` and `vals` columns ((name, type) pairs in encoding
+    order) merge into the stored state by `combine`."""
+
+    delta: Callable[[DataFrame], DataFrame]
+    keys: list[tuple[str, str]]
+    vals: list[tuple[str, str]]
+    combine: Callable[[Column, Column], Column]
+
+
+def _decode_kv(rows: DataFrame, keys: list, vals: list) -> DataFrame:
+    """KV rows ('k1|k2…' → 'v1|v2…') decoded to the view's typed columns."""
+
+    def cols(col: str, fields: list) -> list:
+        parts = F.split(F.col(col), r"\|", len(fields))
+        return [parts.getItem(i).cast(t).alias(n) for i, (n, t) in enumerate(fields)]
+
+    return rows.select(*cols("key", keys), *cols("value", vals))
+
+
+def _merge_into_kv(kv, view: _KVView, batch_df: DataFrame, tag: str) -> None:
+    """Fold one micro-batch into the view's KV state under `tag` (see
+    above). snapshot() resolves its version paths now, before this batch's
+    version commits, so the plan reads exactly the pre-batch state."""
+    if kv.has_tag(tag):
+        return  # replayed micro-batch: already committed
+    keys = [n for n, _ in view.keys]
+    delta = view.delta(batch_df).select(
+        *[F.col(n).cast(t).alias(n) for n, t in view.keys + view.vals]
+    )
+    # the stored values decode as n0 next to the partial's n
+    cur = _decode_kv(kv.snapshot(), view.keys, [(f"{n}0", t) for n, t in view.vals])
+    vals = [
+        F.coalesce(view.combine(F.col(n), F.col(f"{n}0")), F.col(n)).cast("string")
+        for n, _ in view.vals
+    ]
+    merged = delta.join(cur, keys, "left").select(
+        F.concat_ws("|", *keys).alias("key"),
+        F.concat_ws("|", *vals).alias("value"),
+        F.lit("put").alias("op"),
+    )
+    kv.write_batch_df(merged, tag=tag)
+
+
+def _sketch_drain(
+    spark: SparkSession, prefix: str, stage_fn, read_stream, view: _KVView
+) -> DataFrame:
+    """Drain the staged feed on the state-store clone into a fresh KV, one
+    `_merge_into_kv` per micro-batch; returns the view's decoded state."""
+    from templatedb_spark.kv import KVTable
+
+    kv = KVTable(spark, output_dir(f"{prefix}_kv_"))
+    with drain(spark, prefix, stage_fn) as dr:
+        stream = read_stream(_stream_session(spark, dr.stage), dr.stage)
+        writer = stream.writeStream.foreachBatch(
+            lambda bdf, bid: _merge_into_kv(kv, view, bdf, f"{dr.name}:b{bid}")
+        )
+        run(writer, dr.name, dr.ckpt)
+    return _decode_kv(kv.snapshot(), view.keys, view.vals)
+
+
+# ---------------------------------------------------------------------------
 # Eleventh gated spec: MERGEABLE-SKETCH STREAMING STATE — the deterministic
 # HyperLogLog register vector maintained across micro-batches. This is the
 # species of streaming state none of the other gates exercise: not rows, not
 # per-key latest, but a BOUNDED commutative monoid (64 registers merged by
 # elementwise max). Each micro-batch computes its partial register vector
-# distributed (the same hll_partial_registers the batch spec uses), and
-# foreachBatch folds it into a KV-persisted vector under an exactly-once
+# distributed (the same hll_partial_registers the batch spec uses), and the
+# sink max-merges it into the KV-persisted vector under an exactly-once
 # batch tag. Because max-merge is associative/commutative and the register
 # derivation is md5-deterministic, the drained vector must be BIT-IDENTICAL
 # to the batch spec's single-pass vector — so the oracle is the batch HLL
 # oracle itself, fingerprint and all. A wrong merge, a lost batch, or a
 # double-applied replay flips the registers_fp hash.
-#
-# Driver-side state here is 64 longs per trigger (two ≤64-row collects) —
-# bounded by the sketch's m, never by the corpus; that boundedness is the
-# entire point of sketch-shaped state at 100 TB.
 # ---------------------------------------------------------------------------
-def _hll_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> None:
-    """Per-trigger HLL max-merge into KV under an exactly-once tag — the
-    committed-state cache re-reads the KV only on (re)start; the tag check
-    FIRST keeps a replayed batch from touching the cache. Module-level so
-    the replay fuzz (tests/test_streaming_replay_fuzz.py) drives the exact
-    sink code the gate runs."""
+def _hll_delta(batch_df: DataFrame) -> DataFrame:
     from templatedb_spark.operators.textstats import hll_partial_registers
 
-    if kv.has_tag(f"{qname}:b{batch_id}"):
-        return  # replayed batch: already committed, cache untouched
-    u = batch_df.select(F.col("user_id").cast("string").alias("u"))
-    partial = {r.reg: r.m for r in hll_partial_registers(u).collect()}
-    if not partial:
-        return
-    if cache["cur"] is None:
-        cache["cur"] = {
-            int(r.key): int(r.value) for r in kv.snapshot().collect()
-        }
-    cur = cache["cur"]
-    bumps = {
-        reg: m for reg, m in partial.items() if m > cur.get(reg, -1)
-    }
-    if not bumps:
-        return
-    rows = [(f"{reg:02d}", str(m), "put") for reg, m in sorted(bumps.items())]
-    kv.write_batch_df(
-        local_df(spark, rows, "key string, value string, op string"),
-        tag=f"{qname}:b{batch_id}",
+    return hll_partial_registers(
+        batch_df.select(F.col("user_id").cast("string").alias("u"))
     )
-    cur.update(bumps)
 
 
-def _sketch_drain(spark: SparkSession, prefix: str, stage_fn, read_stream, apply):
-    """Drain the staged feed on the state-store clone into a fresh KV, one
-    foreachBatch `apply(spark, kv, cache, qname, batch_df, batch_id)` per
-    micro-batch (`cache` is the committed-state cache: see _hll_apply);
-    returns the KV."""
-    from templatedb_spark.kv import KVTable
-
-    kv = KVTable(spark, output_dir(f"{prefix}_kv_"))
-    cache: dict = {"cur": None}
-    with drain(spark, prefix, stage_fn) as dr:
-        stream = read_stream(_stream_session(spark, dr.stage), dr.stage)
-        writer = stream.writeStream.foreachBatch(
-            lambda bdf, bid: apply(spark, kv, cache, dr.name, bdf, bid)
-        )
-        run(writer, dr.name, dr.ckpt)
-    return kv
+_HLL_VIEW = _KVView(_hll_delta, [("reg", "long")], [("m", "long")], F.greatest)
 
 
 def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,16 +1036,12 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max-merges into batch 0's committed registers); the third trigger
     # proved nothing extra and was ~1/3 of this serial chain's wall clock
     # (VERDICT r6 #4's fewer-larger-micro-batches lever).
-    kv = _sketch_drain(
+    regs = _sketch_drain(
         spark,
         "hll",
         lambda d: _stage_microbatches(sf_dir, d, n_batches=2),
         read_events_stream,
-        _hll_apply,
-    )
-    regs = kv.snapshot().select(
-        F.col("key").cast("long").alias("reg"),
-        F.col("value").cast("long").alias("m"),
+        _HLL_VIEW,
     )
     truth = (
         table(spark, sf_dir, "events")
@@ -1049,9 +1078,6 @@ register(
 # estimate the top-20 heavy hitters from the merged sketch. The oracle is
 # the batch CMS oracle verbatim — any duplicate apply, lost batch, or wrong
 # sum shifts cms_n/overestimate and hash-mismatches.
-#
-# Driver state per trigger: d*w = 32 cells (two <=32-row collects) — bounded
-# by the sketch dimensions, never the corpus.
 # ---------------------------------------------------------------------------
 def _stage_full_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
     """doc_id-ordered N-way split of the raw documents table (full corpus —
@@ -1062,110 +1088,43 @@ def _stage_full_doc_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) 
     _write_batches(out_dir, _split(_sorted(t, "doc_id"), n_batches))
 
 
-def _cms_cell_structs():
-    from templatedb_spark.functions.hashing import h32
-    from templatedb_spark.operators.textstats import _CMS_D, _CMS_W
-
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                (h32(F.concat(F.lit(f"cms{j}:"), F.col("tok"))) % _CMS_W).alias(
-                    "b"
-                ),
-            )
-            for j in range(_CMS_D)
-        ]
-    )
-
-
-def _cms_apply(spark, kv, cache: dict, qname: str, batch_df, batch_id: int) -> None:
-    """Per-trigger CMS SUM-merge into KV under an exactly-once tag. On this
-    SUM monoid a replayed batch that touched the cache would double-count —
-    the tag check FIRST is what correctness rests on. Module-level so the
-    replay fuzz drives the exact sink code the gate runs."""
+def _cms_delta(batch_df: DataFrame) -> DataFrame:
     from templatedb_spark.operators.dedup import tokens_col
+    from templatedb_spark.operators.textstats import cms_sketch
 
-    if kv.has_tag(f"{qname}:b{batch_id}"):
-        return  # replayed batch: already committed, cache untouched
     # tf FIRST, cells second: aggregating to term frequencies before the
     # d-way cell explode keeps the explode at vocab size instead of
-    # token-instance size (at sf10 that is ~thousands of rows ×4 vs
-    # ~20M instances ×4 per batch — the same order the batch spec uses)
-    tf_b = (
-        batch_df.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    cells = (
-        tf_b.select("n", F.explode(_cms_cell_structs()).alias("jb"))
-        .groupBy(F.col("jb.j").alias("j"), F.col("jb.b").alias("b"))
-        .agg(F.sum("n").cast("long").alias("cnt"))
-    )
-    partial = {(r.j, r.b): r.cnt for r in cells.collect()}  # <= d*w rows
-    if not partial:
-        return
-    if cache["cur"] is None:  # <= d*w rows, once per (re)start
-        cache["cur"] = {r.key: int(r.value) for r in kv.snapshot().collect()}
-    cur = cache["cur"]
-    merged = {
-        f"{j}:{b:03d}": cur.get(f"{j}:{b:03d}", 0) + cnt
-        for (j, b), cnt in sorted(partial.items())
-    }
-    kv.write_batch_df(
-        local_df(
-            spark,
-            [(k, str(v), "put") for k, v in merged.items()],
-            "key string, value string, op string",
-        ),
-        tag=f"{qname}:b{batch_id}",  # SUM-merge: the tag IS correctness
-    )
-    cur.update(merged)
+    # token-instance size (the same order the batch spec uses)
+    tok = batch_df.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
+    return cms_sketch(tok.groupBy("tok").agg(F.count(F.lit(1)).alias("n")))
+
+
+_CMS_VIEW = _KVView(
+    _cms_delta, [("j", "int"), ("b", "long")], [("cnt", "long")], operator.add
+)
 
 
 def stream_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from templatedb_spark.operators.textstats import _CMS_K
+    from templatedb_spark.operators.dedup import tokenized
+    from templatedb_spark.operators.textstats import cms_top_k
     from templatedb_spark.streaming.neardup import read_documents_stream
 
     # 2 triggers: minimum that proves the SUM-merge reads committed state
     # (and that a replayed tag cannot double-count) — see stream_hll_users
-    kv = _sketch_drain(
+    sketch = _sketch_drain(
         spark,
         "cms",
         lambda d: _stage_full_doc_microbatches(sf_dir, d, n_batches=2),
         read_documents_stream,
-        _cms_apply,
-    )
-    sketch = kv.snapshot().select(
-        F.split(F.col("key"), ":").getItem(0).cast("int").alias("j"),
-        F.split(F.col("key"), ":").getItem(1).cast("int").alias("b"),
-        F.col("value").cast("long").alias("cnt"),
+        _CMS_VIEW,
     )
     # candidate selection is the exact top-K over the full corpus (same as
     # the batch spec) — the streamed, audited artifact is the sketch itself.
     # Reuse the suite-wide CACHED tokenized relation (operators/dedup) so
     # this pass costs a cache read, not a third full-corpus tokenization.
-    from templatedb_spark.operators.dedup import tokenized
-
     tok = tokenized(spark, sf_dir).select(F.explode("t").alias("tok"))
     tf = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    cand = tf.orderBy(F.col("n").desc(), F.col("tok").asc()).limit(_CMS_K)
-    cand_b = cand.select(
-        F.col("tok").alias("ctok"),
-        F.col("n").alias("true_n"),
-        F.explode(_cms_cell_structs()).alias("jb"),
-    ).select("ctok", "true_n", F.col("jb.j").alias("j"), F.col("jb.b").alias("b"))
-    est = (
-        cand_b.join(F.broadcast(sketch), ["j", "b"])
-        .groupBy("ctok", "true_n")
-        .agg(F.min("cnt").cast("long").alias("cms_n"))
-    )
-    return est.select(
-        F.col("ctok").alias("tok"),
-        "true_n",
-        "cms_n",
-        (F.col("cms_n") - F.col("true_n")).cast("long").alias("overestimate"),
-    )
+    return cms_top_k(tf, sketch)
 
 
 def _stream_cms_oracle() -> str:
@@ -1185,24 +1144,23 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Thirteenth gated spec: STREAMING MATERIALIZED JOIN VIEW — the production
-# pattern that ties this round's machinery together. A materialized rollup
-# over orders JOIN customer is maintained INCREMENTALLY from an order
-# stream: each micro-batch dA contributes dA ⋈ B (B static, broadcast per
-# trigger — no stream shuffle, no join state), the delta rollup SUM-merges
-# into the KV-persisted view state under an exactly-once batch tag, and the
-# final state must equal the full-recompute oracle (the same SQL as the
-# batch mv_join_delta spec). This composes: stream-static join + delta
-# propagation + non-idempotent merge + transactional sink — a replayed or
-# lost batch, a wrong delta term, or a float-unsafe merge all flip the hash.
-# Money sums ride java.math-free: per-batch rollups are DECIMAL(12,2), the
-# merge accumulates in Python Decimal (exact), and only the final output
-# casts to DOUBLE — the same order-independence rule as the batch specs.
-#
-# Driver state per trigger is O(view group cardinality) (15 rows here —
-# two bounded collects); a view keyed wider than the driver swaps the merge
-# for the fully distributed KVTable.write_batch_df path the CDC gate uses,
-# same tags, same contract.
+# Thirteenth and fourteenth gated specs: STREAMING MATERIALIZED JOIN VIEWS —
+# the production pattern that ties this round's machinery together. A
+# materialized rollup over orders JOIN customer is maintained INCREMENTALLY
+# from an order stream: each micro-batch dA contributes dA ⋈ B (B static,
+# broadcast per trigger — no stream shuffle, no join state), and the sink
+# SUM-merges the delta rollup into the KV-persisted view under an
+# exactly-once batch tag. The final state must equal the full-recompute
+# oracle. This composes: stream-static join + delta propagation +
+# non-idempotent merge + transactional sink — a replayed or lost batch, a
+# wrong delta term, or a float-unsafe merge all flip the hash. Money sums
+# are DECIMAL end to end (per-batch DECIMAL(12,2) rollups, DECIMAL(38,2)
+# merges, exact and partitioning-independent); only the final output casts
+# to DOUBLE. One gate, two view keys: `stream_mv_join` keys the view by
+# (c_mktsegment, o_orderstatus) — 15 groups — and `stream_mv_join_wide` by
+# (c_mktsegment, o_custkey) — every customer. The o_orderkey-ordered 2-way
+# split puts nearly every custkey in BOTH batches, so a merge that failed
+# to read prior state flips the wide view's hash.
 # ---------------------------------------------------------------------------
 def _stage_order_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> None:
     """o_orderkey-ordered N-way split of orders (the arriving fact deltas)."""
@@ -1212,191 +1170,74 @@ def _stage_order_microbatches(sf_dir: str, out_dir: str, n_batches: int = 2) -> 
     _write_batches(out_dir, _split(_sorted(t, "o_orderkey"), n_batches))
 
 
-def _orders_stream(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
-    """File-source stream over the staged orders, one file per trigger."""
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+_MV_KEY_TYPES = {"o_orderstatus": "string", "o_custkey": "long"}
 
 
-def stream_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from decimal import Decimal
-
-    from templatedb_spark.kv import KVTable
-    from templatedb_spark.suite import table
-
-    kv = KVTable(spark, output_dir("mvj_kv_"))
-    dim = F.broadcast(
-        table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+def _mv_view(key: str) -> _KVView:
+    """The join view keyed by (c_mktsegment, `key`): order count and exact
+    revenue of the micro-batch's orders ⋈ customer rows."""
+    return _KVView(
+        lambda b: b.groupBy("c_mktsegment", key).agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("revenue"),
+        ),
+        [("c_mktsegment", "string"), (key, _MV_KEY_TYPES[key])],
+        [("n_orders", "long"), ("revenue", "decimal(38,2)")],
+        operator.add,
     )
 
-    # committed-state cache (see the HLL/CMS gates): KV re-read only on
-    # (re)start; tag check first so a replay can never reach the cache
-    cache: dict = {"cur": None}
 
-    def apply_batch(batch_df, tag: str) -> None:
-        if kv.has_tag(tag):
-            return  # replayed batch: already committed, cache untouched
-        delta = (
-            batch_df.join(dim, batch_df.o_custkey == dim.c_custkey)
-            .groupBy("c_mktsegment", "o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("rev"),
-            )
-        )
-        part = {
-            (r.c_mktsegment, r.o_orderstatus): (r.n, Decimal(str(r.rev)))
-            for r in delta.collect()  # bounded by the view's group count
-        }
-        if not part:
-            return
-        if cache["cur"] is None:  # bounded by the view's group count
-            cache["cur"] = {}
-            for r in kv.snapshot().collect():
-                n_s, rev_s = r.value.split("|", 1)
-                cache["cur"][tuple(r.key.split("|", 1))] = (int(n_s), Decimal(rev_s))
-        cur = cache["cur"]
-        rows = []
-        for key, (dn, drev) in sorted(part.items()):
-            n0, rev0 = cur.get(key, (0, Decimal("0")))
-            cur[key] = (n0 + dn, rev0 + drev)
-            rows.append((f"{key[0]}|{key[1]}", f"{cur[key][0]}|{cur[key][1]}", "put"))
-        kv.write_batch_df(
-            local_df(spark, rows, "key string, value string, op string"),
-            tag=tag,  # SUM-merge: replay would double-count
-        )
+def stream_mv_join(spark: SparkSession, sf_dir: str, key: str = "o_orderstatus") -> DataFrame:
+    from templatedb_spark.suite import table
+
+    def orders_x_customer(s2: SparkSession, stage: str) -> DataFrame:
+        # stream + dim + batch plans all live in the state-store-sized clone
+        schema = s2.read.parquet(f"{sf_dir}/orders.parquet").schema
+        orders = s2.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
+        dim = table(s2, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        return orders.join(F.broadcast(dim), orders.o_custkey == dim.c_custkey)
 
     # 2 triggers: the cross-batch delta merge is proven by batch 1 summing
     # into batch 0's committed view (same lever as the sketch gates)
-    with drain(spark, "mvj", lambda d: _stage_order_microbatches(sf_dir, d)) as dr:
-        writer = _orders_stream(spark, sf_dir, dr.stage).writeStream.foreachBatch(
-            lambda bdf, bid: apply_batch(bdf, f"{dr.name}:b{bid}")
-        )
-        run(writer, dr.name, dr.ckpt)
-    parts = F.split(F.col("key"), r"\|", 2)
-    vals = F.split(F.col("value"), r"\|", 2)
-    return kv.snapshot().select(
-        parts.getItem(0).alias("c_mktsegment"),
-        parts.getItem(1).alias("o_orderstatus"),
-        vals.getItem(0).cast("long").alias("n_orders"),
-        vals.getItem(1).cast("decimal(38,2)").cast("double").alias("revenue"),
+    state = _sketch_drain(
+        spark,
+        f"mv_{key}",
+        lambda d: _stage_order_microbatches(sf_dir, d),
+        orders_x_customer,
+        _mv_view(key),
     )
+    return state.withColumn("revenue", F.col("revenue").cast("double"))
 
 
-_STREAM_MV_JOIN_ORACLE = """
-SELECT c.c_mktsegment, o.o_orderstatus,
+def stream_mv_join_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return stream_mv_join(spark, sf_dir, key="o_custkey")
+
+
+def _mv_oracle(key: str) -> str:
+    return f"""
+SELECT c.c_mktsegment, o.{key},
        COUNT(*)::BIGINT AS n_orders,
        CAST(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1, 2
 """
+
 
 register(
     QuerySpec(
         "stream_mv_join",
         stream_mv_join,
-        _STREAM_MV_JOIN_ORACLE,
+        _mv_oracle("o_orderstatus"),
         "streaming materialized JOIN view: per-trigger dA broadcast-join + DECIMAL-exact delta rollup SUM-merged into KV under exactly-once tags vs full-recompute oracle",
     )
 )
 
 
-# ---------------------------------------------------------------------------
-# Fourteenth gated spec: WIDE-KEY streaming materialized JOIN view — the
-# FULLY DISTRIBUTED merge stream_mv_join's docstring promises for views keyed
-# wider than the driver. The view is keyed by (c_mktsegment, o_custkey) —
-# every customer, not 15 rollup groups — so the per-trigger merge must never
-# collect: each micro-batch's delta rollup LEFT-JOINs the KV snapshot on the
-# view key (executor-side merge-on-read), sums counts as BIGINT and revenue
-# as DECIMAL(38,2) (exact, partitioning-independent), and the merged rows
-# flow shuffle→parquet through write_batch_df under an exactly-once batch
-# tag. Driver state per trigger: ZERO rows — the contract that survives a
-# view keyed by user_id at 100 TB. A replayed batch would double-count (the
-# SUM-merge is non-idempotent), so the tag is correctness, not hygiene; and
-# the o_orderkey-ordered 2-way split puts nearly every custkey in BOTH
-# batches, so a merge that failed to read prior state flips the hash.
-# ---------------------------------------------------------------------------
-def _mvjw_apply(kv, dim: DataFrame, batch_df: DataFrame, tag: str) -> None:
-    """One micro-batch of the wide-key view: broadcast-join the delta, roll it
-    up exactly, LEFT-JOIN the pre-batch KV snapshot on the view key, and
-    commit the merged rows through the distributed sink under `tag`. No row
-    ever touches the driver; a replayed tag is a recognized no-op."""
-    if kv.has_tag(tag):
-        return  # replayed micro-batch: already committed
-    delta = (
-        batch_df.join(dim, batch_df.o_custkey == dim.c_custkey)
-        .groupBy("c_mktsegment", "o_custkey")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("dn"),
-            F.sum(F.col("o_totalprice").cast("decimal(12,2)"))
-            .cast("decimal(38,2)")
-            .alias("drev"),
-        )
-    )
-    # distributed read-merge: snapshot() resolves its version paths NOW
-    # (before this batch's version commits), so the plan below reads
-    # exactly the pre-batch state — no self-read window.
-    kparts = F.split(F.col("key"), r"\|", 2)
-    vparts = F.split(F.col("value"), r"\|", 2)
-    cur = kv.snapshot().select(
-        kparts.getItem(0).alias("c_mktsegment"),
-        kparts.getItem(1).cast("long").alias("o_custkey"),
-        vparts.getItem(0).cast("long").alias("n0"),
-        vparts.getItem(1).cast("decimal(38,2)").alias("rev0"),
-    )
-    merged = delta.join(cur, ["c_mktsegment", "o_custkey"], "left").select(
-        F.concat_ws("|", "c_mktsegment", "o_custkey").alias("key"),
-        F.concat_ws(
-            "|",
-            (F.coalesce(F.col("n0"), F.lit(0)) + F.col("dn")).cast("string"),
-            (
-                F.coalesce(F.col("rev0"), F.lit(0).cast("decimal(38,2)"))
-                + F.col("drev")
-            ).cast("decimal(38,2)").cast("string"),
-        ).alias("value"),
-        F.lit("put").alias("op"),
-    )
-    kv.write_batch_df(merged, tag=tag)  # executor-side shuffle→write
-
-
-def stream_mv_join_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from templatedb_spark.kv import KVTable
-    from templatedb_spark.suite import table
-
-    kv = KVTable(spark, output_dir("mvjw_kv_"))
-    with drain(spark, "mvjw", lambda d: _stage_order_microbatches(sf_dir, d)) as dr:
-        # stream + dim + batch plans all live in the state-store-sized clone
-        s2 = _stream_session(spark, dr.stage)
-        dim = F.broadcast(
-            table(s2, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        )
-        writer = _orders_stream(s2, sf_dir, dr.stage).writeStream.foreachBatch(
-            lambda bdf, bid: _mvjw_apply(kv, dim, bdf, f"{dr.name}:b{bid}")
-        )
-        run(writer, dr.name, dr.ckpt)
-    parts = F.split(F.col("key"), r"\|", 2)
-    vals = F.split(F.col("value"), r"\|", 2)
-    return kv.snapshot().select(
-        parts.getItem(0).alias("c_mktsegment"),
-        parts.getItem(1).cast("long").alias("o_custkey"),
-        vals.getItem(0).cast("long").alias("n_orders"),
-        vals.getItem(1).cast("decimal(38,2)").cast("double").alias("revenue"),
-    )
-
-
-_STREAM_MV_JOIN_WIDE_ORACLE = """
-SELECT c.c_mktsegment, o.o_custkey,
-       COUNT(*)::BIGINT AS n_orders,
-       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY 1, 2
-"""
-
 register(
     QuerySpec(
         "stream_mv_join_wide",
         stream_mv_join_wide,
-        _STREAM_MV_JOIN_WIDE_ORACLE,
+        _mv_oracle("o_custkey"),
         "wide-key streaming materialized JOIN view: per-customer state maintained by a fully distributed per-trigger read-merge (delta LEFT JOIN snapshot -> write_batch_df, zero driver rows) under exactly-once tags",
     )
 )

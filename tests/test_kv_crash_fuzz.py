@@ -205,7 +205,8 @@ def test_compact_range_crash_fuzz(spark, seed, point, drop_manifest):
     compaction, then a compaction killed at `point`; a fresh handle (after
     the MANIFEST is removed, for drop_manifest) must read the oracle's
     state and must not quarantine a version that was live at the crash,
-    and the table must stay writable and compactable."""
+    and the table must stay writable and compactable, its next compaction
+    leaving no version dir the manifest does not list."""
     rng = random.Random(seed)
     layout = rng.choice(["hash", "range"])
     oracle: dict = {}
@@ -243,3 +244,7 @@ def test_compact_range_crash_fuzz(spark, seed, point, drop_manifest):
         write(10)
         got = {r.key: r.value for r in kv.snapshot().collect()}
         assert got == oracle, f"seed {seed} point {point} after recovery: {got} != {oracle}"
+        # one more compaction reclaims every dir the crash left behind
+        kv.compact()
+        dirs = {int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("version=")}
+        assert dirs == set(kv._load_manifest()), f"seed {seed} point {point}: stray version dirs"

@@ -96,6 +96,30 @@ def test_find_calls_nested_parens():
     calls = sp.find_calls("select f(g(1, 2), 3) from t", "f")
     assert len(calls) == 1
     assert len(calls[0][2]) == 2
+    # a qualified name is not the table function
+    assert sp.find_calls("select * from s.read_csv('a.csv')", "read_csv") == []
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("select add(1, 2)", "select (1 + 2)"),
+        ("select add(add(1,2),3)", "select ((1 + 2) + 3)"),
+        ("select multiply(subtract(5, 2), 3)", "select ((5 - 2) * 3)"),
+        ("select add(add(1, 2), 3, 4)", "select add((1 + 2), 3, 4)"),
+        # literals, comments and qualified names are not calls
+        ("SELECT 'add(1, 2)' AS s", "SELECT 'add(1, 2)' AS s"),
+        ("select a -- add(a, b)\nfrom t", "select a -- add(a, b)\nfrom t"),
+        ("select a /* divide(a, b) */ from t", "select a /* divide(a, b) */ from t"),
+        ("select t.add(1,2) from t", "select t.add(1,2) from t"),
+        # unbalanced: left to Spark's parser
+        ("select add(1, 2", "select add(1, 2"),
+    ],
+)
+def test_named_arithmetic_rewrite_is_token_level(sql, want):
+    from templatedb_spark.functions.registry import rewrite_named_arithmetic
+
+    assert rewrite_named_arithmetic(sql) == want
 
 
 def test_tokenizer_handles_escaped_quotes():

@@ -3,6 +3,7 @@ when the stream drains the full backlog (availableNow)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -366,61 +367,63 @@ def test_event_values_format_safe():
         assert not bad, f"{sf}: values in the Java/Python format-divergence zone: {bad[:5]}"
 
 
-def test_mv_join_wide_distributed_merge_and_replay(spark, tmp_path):
-    """The wide-key MV gate's per-batch merge (_mvjw_apply) is fully
-    distributed and exactly-once: after two o_orderkey-ordered halves the KV
-    state equals the batch rollup (keys straddling both halves prove the
-    read-merge actually read prior state), and replaying either batch under
-    its committed tag adds zero versions and changes nothing."""
-    from templatedb_spark.kv import KVTable
-    from templatedb_spark.streaming.gate import _mvjw_apply
+def _merge_view_feed(spark, view: str):
+    """(KV view, its whole feed, the column the feed arrives ordered by) of
+    one of the four KV-state gates, over the SF_SMALL tables."""
+    from templatedb_spark.streaming import gate
     from templatedb_spark.suite import table
-    from tests.conftest import SF_SMALL
 
+    if view == "hll":
+        return gate._HLL_VIEW, table(spark, SF_SMALL, "events"), "event_id"
+    if view == "cms":
+        return gate._CMS_VIEW, table(spark, SF_SMALL, "documents"), "doc_id"
     orders = table(spark, SF_SMALL, "orders")
-    n = orders.count()
-    half = (
-        orders.orderBy("o_orderkey")
-        .limit(n // 2)
-        .select(F.max("o_orderkey"))
-        .first()[0]
-    )
-    b0 = orders.filter(F.col("o_orderkey") <= half)
-    b1 = orders.filter(F.col("o_orderkey") > half)
-    # non-vacuity: the split must leave customers with orders in BOTH halves,
-    # otherwise batch 1's merge never exercises the state read
-    straddle = b0.select("o_custkey").intersect(b1.select("o_custkey")).count()
+    dim = table(spark, SF_SMALL, "customer").select("c_custkey", "c_mktsegment")
+    feed = orders.join(F.broadcast(dim), orders.o_custkey == dim.c_custkey)
+    key = "o_orderstatus" if view == "mv" else "o_custkey"
+    return gate._mv_view(key), feed, "o_orderkey"
+
+
+@pytest.mark.parametrize("view", ["hll", "cms", "mv", "mv_wide"])
+def test_mv_join_wide_distributed_merge_and_replay(spark, tmp_path, view):
+    """The KV-state gates' per-batch merge (_merge_into_kv) is fully
+    distributed and exactly-once, for each of the four views: after two
+    ordered halves the decoded KV state equals the whole feed's state (keys
+    in both halves prove the read-merge actually read prior state), and
+    replaying either batch under its committed tag adds zero versions and
+    changes nothing."""
+    from templatedb_spark.kv import KVTable
+    from templatedb_spark.streaming.gate import _decode_kv, _merge_into_kv
+
+    v, feed, order = _merge_view_feed(spark, view)
+    n = feed.count()
+    half = feed.orderBy(order).limit(n // 2).select(F.max(order)).first()[0]
+    b0 = feed.filter(F.col(order) <= half)
+    b1 = feed.filter(F.col(order) > half)
+    # non-vacuity: some view key must take rows from BOTH halves, otherwise
+    # batch 1's merge never exercises the state read
+    keys = [k for k, _ in v.keys]
+    straddle = v.delta(b0).select(keys).intersect(v.delta(b1).select(keys)).count()
     assert straddle > 0
 
-    dim = F.broadcast(
-        table(spark, SF_SMALL, "customer").select("c_custkey", "c_mktsegment")
-    )
     kv = KVTable(spark, str(tmp_path / "kv"))
-    _mvjw_apply(kv, dim, b0, "q:b0")
-    _mvjw_apply(kv, dim, b1, "q:b1")
+    _merge_into_kv(kv, v, b0, "q:b0")
+    _merge_into_kv(kv, v, b1, "q:b1")
     v_done = kv.latest_version()
     state = sorted((r.key, r.value) for r in kv.snapshot().collect())
-
-    expect = sorted(
-        (
-            f"{r.c_mktsegment}|{r.o_custkey}",
-            f"{r.n}|{r.rev}",
+    got = sorted(map(tuple, _decode_kv(kv.snapshot(), v.keys, v.vals).collect()))
+    assert got == sorted(map(tuple, v.delta(feed).collect()))
+    if view == "mv_wide":  # the KV encoding: seg|custkey -> n|rev
+        rev = F.sum(F.col("o_totalprice").cast("decimal(12,2)")).cast("decimal(38,2)")
+        expect = feed.groupBy("c_mktsegment", "o_custkey").agg(
+            F.concat_ws("|", F.count(F.lit(1)), rev.cast("string")).alias("value")
         )
-        for r in orders.join(dim, orders.o_custkey == dim.c_custkey)
-        .groupBy("c_mktsegment", "o_custkey")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(12,2)"))
-            .cast("decimal(38,2)")
-            .cast("string")
-            .alias("rev"),
+        assert state == sorted(
+            (f"{r.c_mktsegment}|{r.o_custkey}", r.value) for r in expect.collect()
         )
-        .collect()
-    )
-    assert state == expect
 
     # replay both batches (restart without checkpoint): tags must no-op
-    _mvjw_apply(kv, dim, b0, "q:b0")
-    _mvjw_apply(kv, dim, b1, "q:b1")
+    _merge_into_kv(kv, v, b0, "q:b0")
+    _merge_into_kv(kv, v, b1, "q:b1")
     assert kv.latest_version() == v_done
     assert sorted((r.key, r.value) for r in kv.snapshot().collect()) == state

@@ -139,53 +139,36 @@ def _drain(spark, stage_dir: str, op: str, tag: str) -> frozenset:
             (r.window_start, r.event_type, r.n_events, r.sum_uid, r.min_eid, r.max_eid)
             for r in rows
         )
-    if op == "mv_wide":
+    if op in ("mv_wide", "hll", "cms"):
+        # the three KV-state gates' sink, driven exactly as the gates drive it
         import shutil
 
         from templatedb_spark.kv import KVTable
-        from templatedb_spark.streaming.gate import _mvjw_apply
-        from templatedb_spark.suite import table
-
-        kv_dir = tempfile.mkdtemp(prefix=f"replay_mvjw_{tag}_")
-        kv = KVTable(spark, kv_dir)
-        dim = F.broadcast(
-            table(spark, SF_SMALL, "customer").select("c_custkey", "c_mktsegment")
-        )
-        schema = spark.read.parquet(f"{SF_SMALL}/orders.parquet").schema
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-            .writeStream.foreachBatch(
-                lambda bdf, bid: _mvjw_apply(kv, dim, bdf, f"t_replay_mvjw_{tag}:b{bid}")
-            )
-            .queryName(f"t_replay_mvjw_{tag}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = frozenset((r.key, r.value) for r in kv.snapshot().collect())
-        shutil.rmtree(kv_dir, ignore_errors=True)
-        return out
-    if op == "hll" or op == "cms":
-        import shutil
-
-        from templatedb_spark.kv import KVTable
-        from templatedb_spark.streaming.gate import _cms_apply, _hll_apply
+        from templatedb_spark.streaming import gate
         from templatedb_spark.streaming.neardup import read_documents_stream
+        from templatedb_spark.suite import table
 
         kv_dir = tempfile.mkdtemp(prefix=f"replay_{op}_{tag}_")
         kv = KVTable(spark, kv_dir)
-        cache: dict = {"cur": None}
         qname = f"t_replay_{op}_{tag}"
         if op == "hll":
-            src = read_events_stream(spark, stage_dir)
-            apply = lambda bdf, bid: _hll_apply(spark, kv, cache, qname, bdf, bid)  # noqa: E731
+            src, view = read_events_stream(spark, stage_dir), gate._HLL_VIEW
+        elif op == "cms":
+            src, view = read_documents_stream(spark, stage_dir), gate._CMS_VIEW
         else:
-            src = read_documents_stream(spark, stage_dir)
-            apply = lambda bdf, bid: _cms_apply(spark, kv, cache, qname, bdf, bid)  # noqa: E731
+            dim = table(spark, SF_SMALL, "customer").select("c_custkey", "c_mktsegment")
+            schema = spark.read.parquet(f"{SF_SMALL}/orders.parquet").schema
+            orders = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(stage_dir)
+            )
+            src = orders.join(F.broadcast(dim), orders.o_custkey == dim.c_custkey)
+            view = gate._mv_view("o_custkey")
         q = (
-            src.writeStream.foreachBatch(apply)
+            src.writeStream.foreachBatch(
+                lambda bdf, bid: gate._merge_into_kv(kv, view, bdf, f"{qname}:b{bid}")
+            )
             .queryName(qname)
             .trigger(availableNow=True)
             .start()
